@@ -3,7 +3,9 @@ package graft.etl
 import java.nio.file.{Files, Paths, Path, StandardCopyOption}
 import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{IntegralDivide, Literal}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.{ColumnBridge, LocalDirBridge, ThreadBridge}
 import graft.operators.Normalize
 
 /** Shared mutable state for one ETL run (the reference's singleton
@@ -52,10 +54,53 @@ final class StoreInfo(val outputDir: String, val spark: SparkSession) {
     Seq("parser", "mapper", "loader").foreach(k => Files.deleteIfExists(logPath(k)))
 }
 
+/** The Spark halves of one batch of staging work, started on the
+  * [[org.apache.spark.sql.graftbridge.ThreadBridge]] daemon pool in call
+  * order. Each writes into its own temp dir under Spark's local scratch
+  * dir, never under the output dir, so a reader of the output dir only
+  * ever sees published files. At most `defaultParallelism` jobs run at
+  * once: a submit past the bound waits for the oldest job still running.
+  * The caller takes results in call order and publishes them; `close()`
+  * then waits for every job (their failures were already surfaced or are
+  * superseded) and deletes every temp dir, on success and failure alike.
+  * Driver-side, one caller thread. */
+private[etl] final class StagingQueue[T](spark: SparkSession) {
+  private val jobs = mutable.ArrayBuffer.empty[(Path, ThreadBridge.Pending[T])]
+  private val bound = math.max(1, spark.sparkContext.defaultParallelism)
+  private lazy val scratch = Paths.get(LocalDirBridge.localDir(spark))
+
+  def submit(prefix: String)(stage: Path => T): ThreadBridge.Pending[T] = {
+    val running = jobs.map(_._2).filterNot(_.isDone)
+    if (running.size >= bound) running.head.await()
+    val tmp = Files.createTempDirectory(scratch, prefix)
+    val job = ThreadBridge.async(spark)(stage(tmp))
+    jobs += tmp -> job
+    job
+  }
+
+  def all: Seq[ThreadBridge.Pending[T]] = jobs.map(_._2).toSeq
+
+  def close(): Unit = {
+    jobs.foreach(j => scala.util.Try(j._2.await()))
+    jobs.foreach(j => Context.deleteRecursively(j._1))
+    jobs.clear()
+  }
+}
+
 /** Per-parser staging context — the Spark re-expression of
-  * graph_etl/context.py. `saveNodes`/`saveEdges` run the normalization
-  * chain lazily and materialize it once, at the chunked CSV write; the
-  * catalog is updated from arithmetic on the total count (no per-chunk
+  * graph_etl/context.py. Each `saveNodes`/`saveEdges` call splits in two:
+  *   - the Spark half (normalize, size, write chunk files into a private
+  *     temp dir in Spark's scratch space) starts at once on a daemon pool,
+  *     so a parser's tables are staged as concurrent Spark jobs — at most
+  *     `defaultParallelism` in flight, a save past the bound waits for the
+  *     oldest one ([[StagingQueue]]);
+  *   - the publish half (chunk index from the context counter, rename into
+  *     the reference layout, catalog and stats update) runs in call order
+  *     when the parser body returns ([[GraphEtl]] calls `publish()`).
+  * So a parser's staged files and catalog entries become visible when its
+  * body returns, in call order. If the body or any save throws, nothing is
+  * published and every temp dir is removed.
+  * The catalog is updated from arithmetic on the counts (no per-chunk
   * driver collect — SURVEY §2.5 A3's `collect` replaced).
   *
   * Chunk-file layout matches the reference:
@@ -71,16 +116,33 @@ final class Context(
     edgeChunkSize: Long = Context.EdgeChunkSize,
     fastStaging: Boolean = false) {
 
-  private def writeStaged(
-      df: DataFrame, dir: Path, fileName: Long => String,
-      chunkSize: Long, startChunk: Long): Seq[(String, Long)] =
-    if (fastStaging) Context.writeChunkedCsvFast(df, dir, fileName, chunkSize, startChunk)
-    else Context.writeChunkedCsv(df, dir, fileName, chunkSize, startChunk)
+  /** Each save's Spark half returns its publish half. */
+  private val saves = new StagingQueue[() => Unit](store.spark)
+
+  /** Start staging `df`; `publish` later gets its chunk files, in chunk
+    * order with their row counts. */
+  private def stage(df: DataFrame, chunkSize: Long)(publish: Seq[(Path, Long)] => Unit): Unit =
+    saves.submit("graft-staging-") { tmp =>
+      val chunks =
+        if (fastStaging) Context.stageChunkedCsvFast(df, tmp, chunkSize)
+        else Context.stageChunkedCsv(df, tmp, chunkSize)
+      () => publish(chunks)
+    }
 
   // per-context monotonically increasing chunk counters so file suffixes
-  // stay unique across multiple save_* calls (context.py:15-16,155,250)
+  // stay unique across multiple save_* calls (context.py:15-16,155,250);
+  // advanced at publish, in call order
   private var lastNodeChunk: Long = 0L
   private var lastEdgeChunk: Long = 0L
+
+  /** Rename a save's chunk files into `dir` as `fileName(start + i)`. */
+  private def rename(
+      chunks: Seq[(Path, Long)], dir: Path, fileName: Long => String, start: Long): Seq[(String, Long)] =
+    chunks.zipWithIndex.map { case ((part, count), i) =>
+      val name = fileName(start + i)
+      Files.move(part, dir.resolve(name), StandardCopyOption.REPLACE_EXISTING)
+      (name, count)
+    }
 
   /** Normalize, chunk, and stage a node table (context.py:61-155). */
   def saveNodes(
@@ -95,21 +157,19 @@ final class Context(
     store.callbacks.foreach(_.onSaveNodes(
       label, Catalog.schemaTypes(nodes.schema), metadatas, primaryKey, allConstraints, indexs))
 
-    val normalized = Normalize.normalize(nodes, Seq(primaryKey))
-    val written = writeStaged(
-      normalized, store.nodesDir, n => s"FILE_${uuid}_${label}_$n.csv",
-      nodeChunkSize, lastNodeChunk)
-    lastNodeChunk += written.size
-
     // catalog types come from the PRE-flatten schema (context.py:112 runs
     // before the normalize chain): array columns are recorded List(Utf8)
     // so the Neo4j/TigerGraph loaders emit arraySep/LIST<STRING> handling
     val propTypes = Catalog.schemaTypes(nodes.schema)
-    written.foreach { case (fname, count) =>
-      store.catalog = store.catalog.withNodeFile(
-        label, primaryKey, allConstraints, indexs.toList, propTypes, fname, metadatas, count)
+    stage(Normalize.normalize(nodes, Seq(primaryKey)), nodeChunkSize) { chunks =>
+      val written = rename(chunks, store.nodesDir, n => s"FILE_${uuid}_${label}_$n.csv", lastNodeChunk)
+      lastNodeChunk += written.size
+      written.foreach { case (fname, count) =>
+        store.catalog = store.catalog.withNodeFile(
+          label, primaryKey, allConstraints, indexs.toList, propTypes, fname, metadatas, count)
+      }
+      store.stats("nodes") = store.stats.getOrElse("nodes", 0L) + written.map(_._2).sum
     }
-    store.stats("nodes") = store.stats.getOrElse("nodes", 0L) + written.map(_._2).sum
   }
 
   /** Normalize, chunk, and stage an edge table (context.py:157-250).
@@ -130,20 +190,18 @@ final class Context(
     store.callbacks.foreach(_.onSaveEdges(
       edgeType, startLabel, endLabel, metadatas, Catalog.schemaTypes(edges.schema)))
 
-    val normalized = Normalize.normalize(edges, Seq("start", "end"))
-    val written = writeStaged(
-      normalized, store.edgesDir,
-      n => s"FILE_${uuid}_${startLabel}$edgeType${endLabel}_$n.csv",
-      edgeChunkSize, lastEdgeChunk)
-    lastEdgeChunk += written.size
-
     // pre-flatten schema, like saveNodes (context.py:222)
     val propTypes = Catalog.schemaTypes(edges.schema)
-    written.foreach { case (fname, count) =>
-      store.catalog = store.catalog.withEdgeFile(
-        edgeType, fname, startId, endId, propTypes, ignoreMapping, metadatas, count)
+    stage(Normalize.normalize(edges, Seq("start", "end")), edgeChunkSize) { chunks =>
+      val written = rename(chunks, store.edgesDir,
+        n => s"FILE_${uuid}_${startLabel}$edgeType${endLabel}_$n.csv", lastEdgeChunk)
+      lastEdgeChunk += written.size
+      written.foreach { case (fname, count) =>
+        store.catalog = store.catalog.withEdgeFile(
+          edgeType, fname, startId, endId, propTypes, ignoreMapping, metadatas, count)
+      }
+      store.stats("edges") = store.stats.getOrElse("edges", 0L) + written.map(_._2).sum
     }
-    store.stats("edges") = store.stats.getOrElse("edges", 0L) + written.map(_._2).sum
   }
 
   /** Register an explicit ID mapping for `idToMap` = `"{Label}:{prop}"`
@@ -156,96 +214,89 @@ final class Context(
       s"mapIds($idToMap): mapping must have columns old_value/new_value, got ${mapping.columns.mkString(",")}")
     store.mappings(idToMap) = mapping.select(col("old_value"), col("new_value"))
   }
+
+  /** Wait for every save of this context and publish them in call order.
+    * If a save failed, its own exception is rethrown and nothing is
+    * published. Called once, after the parser body returned; `discard()`
+    * must follow either way. */
+  private[etl] def publish(): Unit = saves.all.map(_.await()).foreach(_())
+
+  /** Wait for the running saves and delete every temp dir. */
+  private[etl] def discard(): Unit = saves.close()
 }
 
 object Context {
   val NodeChunkSize = 200000L // context.py:127
   val EdgeChunkSize = 500000L // context.py:231
+  private val ChunkCol = "__graft_chunk"
 
-  /** Stage `df` as `;`-separated CSV files of at most `chunkSize` rows with
-    * deterministic sequential chunk membership, one file per chunk, named by
-    * `fileName(chunkIndex)`. Returns (fileName, rowCount) per file.
+  /** Write `df` into the empty dir `tmp` as `;`-separated CSV files of at
+    * most `chunkSize` rows with deterministic sequential chunk membership:
+    * every file but the last holds exactly `chunkSize` rows. Returns the
+    * files in chunk order with their row counts.
     *
-    * Single distributed pass: zipWithIndex assigns contiguous row ids
-    * without a shuffle; `repartition(n, chunk)` co-locates each chunk in
-    * exactly one task so `partitionBy("chunk")` emits exactly one part file
-    * per chunk; files are then renamed into the reference layout. Per-file
-    * counts come from arithmetic on the total (ids are contiguous), not a
-    * per-chunk collect.
+    * About three jobs: the input is persisted and sized by one
+    * per-partition count job (which also fills the cache); a row's chunk is
+    * `(offset of its partition + its index in the partition) div chunkSize`,
+    * evaluated as Catalyst expressions over the cached partitions;
+    * `repartition(n, chunk)` then co-locates each chunk in exactly one task
+    * so `partitionBy("chunk")` emits one part file per chunk. A table that
+    * fits one chunk skips that shuffle and is written by one task. Counts
+    * come from arithmetic on the partition sizes, not a per-chunk collect.
     */
-  def writeChunkedCsv(
-      df: DataFrame,
-      dir: Path,
-      fileName: Long => String,
-      chunkSize: Long,
-      startChunk: Long): Seq[(String, Long)] = {
-    // persist the INPUT before withChunkIds: zipWithIndex's partition-size
-    // job runs eagerly at construction — before any cache of the chunked
-    // frame could fill — so without this the whole normalize plan executed
-    // twice per staging call (once for sizes, once for the count/write)
+  def stageChunkedCsv(df: DataFrame, tmp: Path, chunkSize: Long): Seq[(Path, Long)] = {
+    require(chunkSize > 0, s"chunkSize must be positive, got $chunkSize")
     val input = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val chunked = Normalize.withChunkIds(input, chunkSize).cache()
     try {
-      val total = chunked.count()
+      // a fresh plan over the cached relation: `input` may have been
+      // planned before the persist, and the sizing must read the very
+      // partitions the chunk ids are computed over
+      val cached = input.toDF(input.columns.toIndexedSeq: _*)
+      val sizes = cached.queryExecution.toRdd
+        .mapPartitions(it => Iterator.single(it.size.toLong)).collect()
+      val total = sizes.sum
       if (total == 0) return Nil
       val nChunks = ((total + chunkSize - 1) / chunkSize).toInt
-
-      val tmp = Files.createTempDirectory(dir, ".staging")
-      try {
-        chunked
-          .repartition(nChunks, col("chunk"))
-          .write
-          .partitionBy("chunk")
-          .option("sep", ";")
-          .option("header", "true")
-          .mode("overwrite")
-          .csv(tmp.toString)
-
+      val csv = (d: DataFrame) => d.write
+        .option("sep", ";").option("header", "true").mode("overwrite")
+      if (nChunks == 1) {
+        csv(cached.coalesce(1)).csv(tmp.toString)
+        Seq(partFile(tmp) -> total)
+      } else {
+        val offsets = sizes.scanLeft(0L)(_ + _).init.toSeq
+        val pid = spark_partition_id()
+        val row = element_at(typedLit(offsets), pid + 1) +
+          (monotonically_increasing_id() - shiftleft(pid.cast("long"), 33))
+        val chunk = ColumnBridge.column(IntegralDivide(
+          ColumnBridge.expression(row), Literal(chunkSize)))
+        csv(cached.withColumn(ChunkCol, chunk).repartition(nChunks, col(ChunkCol)))
+          .partitionBy(ChunkCol).csv(tmp.toString)
         (0 until nChunks).map { i =>
-          val chunkDir = tmp.resolve(s"chunk=$i")
-          val part = listDir(chunkDir).find(_.getFileName.toString.startsWith("part-"))
-            .getOrElse(throw new IllegalStateException(s"no part file for chunk $i"))
-          val name = fileName(startChunk + i)
-          Files.move(part, dir.resolve(name), StandardCopyOption.REPLACE_EXISTING)
           val count = if (i < nChunks - 1) chunkSize else total - chunkSize * (nChunks - 1)
-          (name, count)
+          partFile(tmp.resolve(s"$ChunkCol=$i")) -> count
         }
-      } finally deleteRecursively(tmp) // also on failure: no orphaned .staging dirs
-    } finally { chunked.unpersist(); input.unpersist() }
+      }
+    } finally input.unpersist()
   }
 
   /** Performance-path staging (SURVEY §2.6 W1 option (a)): one write pass
-    * bounded by `maxRecordsPerFile` — no zipWithIndex job, no repartition
+    * bounded by `maxRecordsPerFile` — no sizing job, no repartition
     * shuffle. File sizes are bounded-but-uneven rather than exactly-chunked
     * (task boundaries also split files), and per-file counts come from one
     * distributed line-count pass over the written files. Preferred at scale;
     * the faithful path keeps the reference's exact chunk geometry. */
-  def writeChunkedCsvFast(
-      df: DataFrame,
-      dir: Path,
-      fileName: Long => String,
-      chunkSize: Long,
-      startChunk: Long): Seq[(String, Long)] = {
-    val spark = df.sparkSession
-    val tmp = Files.createTempDirectory(dir, ".staging")
-    val renamed = try {
-      df.write
-        .option("maxRecordsPerFile", chunkSize)
-        .option("sep", ";")
-        .option("header", "true")
-        .mode("overwrite")
-        .csv(tmp.toString)
-      val parts = listDir(tmp).filter(_.getFileName.toString.startsWith("part-")).sortBy(_.toString)
-      parts.zipWithIndex.map { case (p, i) =>
-        val name = fileName(startChunk + i)
-        Files.move(p, dir.resolve(name), StandardCopyOption.REPLACE_EXISTING)
-        name
-      }
-    } finally deleteRecursively(tmp) // also on failure: no orphaned .staging dirs
-    if (renamed.isEmpty) return Nil
+  def stageChunkedCsvFast(df: DataFrame, tmp: Path, chunkSize: Long): Seq[(Path, Long)] = {
+    df.write
+      .option("maxRecordsPerFile", chunkSize)
+      .option("sep", ";")
+      .option("header", "true")
+      .mode("overwrite")
+      .csv(tmp.toString)
+    val parts = listDir(tmp).filter(_.getFileName.toString.startsWith("part-")).sortBy(_.toString)
+    if (parts.isEmpty) return Nil
     // one distributed pass for per-file counts (minus the header line each)
     import org.apache.spark.sql.functions.{input_file_name, count => cnt, lit}
-    val counts = spark.read.text(renamed.map(n => dir.resolve(n).toString): _*)
+    val counts = df.sparkSession.read.text(parts.map(_.toString): _*)
       .groupBy(input_file_name().as("f")).agg(cnt(lit(1)).as("n"))
       .collect()
       .map(r => {
@@ -255,12 +306,15 @@ object Context {
         val path = try new java.net.URI(f).getPath catch { case _: Exception => f }
         path.substring(path.lastIndexOf('/') + 1) -> (r.getLong(1) - 1)
       }).toMap
-    renamed.map { n =>
-      val c = counts.getOrElse(n,
-        throw new IllegalStateException(s"no line count for staged file $n"))
-      n -> c
+    parts.map { p =>
+      val n = p.getFileName.toString
+      p -> counts.getOrElse(n, throw new IllegalStateException(s"no line count for staged file $n"))
     }
   }
+
+  private def partFile(dir: Path): Path =
+    listDir(dir).find(_.getFileName.toString.startsWith("part-"))
+      .getOrElse(throw new IllegalStateException(s"no part file in $dir"))
 
   /** Directory listing that closes its stream (a bare `Files.list` leaks a
     * directory fd until finalization). */

@@ -1,10 +1,8 @@
 package graft.etl
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import graft.operators.Mapping
 
 /** Registered parser metadata + body — the reference's `@Parser` decorator
@@ -23,6 +21,13 @@ final case class RegisteredParser(
   *
   * One instance per ETL run; holds the driver-side store (catalog, mappings,
   * logs). All data movement is Spark jobs; everything here is metadata.
+  *
+  * A parser's saves run as concurrent Spark jobs (at most
+  * `defaultParallelism` in flight, see [[Context]]); its staged files and
+  * catalog entries become visible when its body returns, in call order,
+  * before the parser is resume-logged. A body or save that throws
+  * publishes nothing and is not logged complete. The mapping rewrites of
+  * [[mapProperties]] likewise run concurrently and commit in catalog order.
   *
   * @param strictCompat reproduce the reference's full-outer ghost-edge
   *   mapping joins bug-for-bug (SURVEY §2.12.1); default fixed (left-outer).
@@ -81,16 +86,7 @@ final class GraphEtl(
     val t0 = System.nanoTime()
     parsers.values.foreach { p =>
       val filtered = store.filter.exists(_.skipParse(p.metadatas))
-      if (!filtered && !shouldSkip(p)) {
-        val ctx = new Context(store, p.metadatas, java.util.UUID.randomUUID().toString.take(8),
-          nodeChunkSize, edgeChunkSize, fastStaging)
-        val tp = System.nanoTime()
-        p.body(ctx)
-        // per-parser wall time (utils.py:80-97 save_parser_infos logging)
-        store.stats(s"parser_time_ms_${p.name}") = (System.nanoTime() - tp) / 1000000
-        store.logAppend("parser", p.name)
-        store.persistCatalog()
-      }
+      if (!filtered && !shouldSkip(p)) runParser(p.name, p.metadatas, p.body)
     }
     if (useMapper) mapProperties()
     store.stats("parse_time_ms") = (System.nanoTime() - t0) / 1000000
@@ -111,67 +107,35 @@ final class GraphEtl(
       ignore: Boolean = false)(body: Context => Unit): Unit = {
     if (!initialized) init()
     if (!shouldSkip(RegisteredParser(name, metadatas, sourcesPath, ignore, body))) {
-      val ctx = new Context(store, metadatas, java.util.UUID.randomUUID().toString.take(8),
-        nodeChunkSize, edgeChunkSize, fastStaging)
-      // resume marker + mapping only on success — a parser body that threw
-      // must re-run on resume, not be skipped as complete. (The reference's
-      // __exit__ runs these even on exception, utils.py:278-283; that marks
-      // half-staged parsers done, which we deliberately fix.)
-      val tp = System.nanoTime()
-      body(ctx)
-      store.stats(s"parser_time_ms_$name") = (System.nanoTime() - tp) / 1000000
-      store.logAppend("parser", name)
-      store.persistCatalog()
+      runParser(name, metadatas, body)
       mapProperties()
     }
+  }
+
+  /** Run one parser body, then publish its saves in call order. The
+    * resume marker is written only on success — a parser whose body or
+    * save threw must re-run on resume, not be skipped as complete. (The
+    * reference's __exit__ runs these even on exception, utils.py:278-283;
+    * that marks half-staged parsers done, which we deliberately fix.) */
+  private def runParser(name: String, metadatas: Map[String, String], body: Context => Unit): Unit = {
+    val ctx = new Context(store, metadatas, java.util.UUID.randomUUID().toString.take(8),
+      nodeChunkSize, edgeChunkSize, fastStaging)
+    val tp = System.nanoTime()
+    try { body(ctx); ctx.publish() } finally ctx.discard()
+    // per-parser wall time (utils.py:80-97 save_parser_infos logging)
+    store.stats(s"parser_time_ms_$name") = (System.nanoTime() - tp) / 1000000
+    store.logAppend("parser", name)
+    store.persistCatalog()
   }
 
   // ------------------------------------------------------------------
   // Mapping passes (pipeline.py:48-122)
   // ------------------------------------------------------------------
 
-  /** Header order from the file itself (cheap: one line), falling back to
-    * the catalog key order — S8's header probe without a data scan. */
-  private def headerColumns(p: java.nio.file.Path, fallback: => List[String]): List[String] =
-    if (Files.exists(p)) {
-      val src = scala.io.Source.fromFile(p.toFile)
-      try {
-        val it = src.getLines()
-        if (it.hasNext) it.next().split(";", -1).toList else fallback
-      } finally src.close()
-    } else fallback
-
-  /** One staged CSV read with a schema in ITS OWN header order — with
-    * `header=true` + explicit schema Spark binds columns positionally, so
-    * the schema must follow each file's header, never another file's. A
-    * header column missing from the catalog falls back to string (happens
-    * when resuming from a crash between a mapping rewrite and the catalog
-    * persist — the read stays usable and the mapping re-run is idempotent). */
-  private def readStagedFile(
-      p: java.nio.file.Path, propertiesType: Map[String, String]): DataFrame = {
-    val cols = headerColumns(p, propertiesType.keys.toList)
-    val schema = StructType(cols.map(c =>
-      StructField(c, propertiesType.get(c).map(Catalog.sparkType).getOrElse(StringType))))
-    spark.read.option("sep", ";").option("header", "true").schema(schema).csv(p.toString)
-  }
-
   /** Read a staged edge file with the catalog-recorded schema — no second
     * inference pass (improvement over pipeline.py:53's 100k-row re-infer). */
   private[etl] def readStagedEdges(fname: String, cfg: EdgeFileConfig): DataFrame =
-    readStagedFile(store.edgesDir.resolve(fname), cfg.properties_type)
-
-  /** Rewrite one staged edge file in place: temp dir + atomic rename
-    * (Spark cannot overwrite its own input — SURVEY §2.2 K3). */
-  private def rewriteEdgeFile(fname: String, df: DataFrame): Unit = {
-    val tmp = Files.createTempDirectory(store.edgesDir, ".rewrite")
-    df.coalesce(1).write
-      .option("sep", ";").option("header", "true")
-      .mode("overwrite").csv(tmp.toString)
-    val part = Context.listDir(tmp).find(_.getFileName.toString.startsWith("part-"))
-      .getOrElse(throw new IllegalStateException(s"rewrite of $fname produced no file"))
-    Files.move(part, store.edgesDir.resolve(fname), StandardCopyOption.REPLACE_EXISTING)
-    Context.deleteRecursively(tmp)
-  }
+    StagedCsv.readFile(spark, store.edgesDir.resolve(fname), cfg.properties_type)
 
   /** Both mapping passes over every staged edge file (pipeline.py:48-122).
     *
@@ -180,85 +144,114 @@ final class GraphEtl(
     * Pass B — automatic pk resolution: endpoints addressing a non-primary
     * property are rewritten to the node primary key; the catalog endpoint is
     * repointed to `Label:{pk}` and the column retyped (pipeline.py:110-111).
+    *
+    * Every unmapped file is planned on this thread (the pass A/B frames are
+    * lazy); the dirty files' dedup/count/write then run as concurrent Spark
+    * jobs, each into a temp dir (Spark cannot overwrite its own input —
+    * SURVEY §2.2 K3), at most `defaultParallelism` at once. Commits happen
+    * in catalog order: per file the rename over the staged file, then the
+    * catalog persist, then the mapper-log line.
     */
   def mapProperties(): Unit = {
     val mapped = store.logEntries("mapper")
     // pass-B auto-mappings are identical for every edge file addressing the
     // same (label, prop) — build each once, not per file
     val autoMappings = mutable.Map.empty[(String, String), DataFrame]
-    store.catalog.edges.foreach { case (edgeType, files) =>
-      files.foreach { case (fname, cfg0) =>
-        if (!mapped.contains(fname)) {
-          var cfg = cfg0
-          var df = readStagedEdges(fname, cfg)
-          var dirty = false
+    val rewrites = new StagingQueue[() => Unit](spark)
+    try {
+      val planned = for {
+        (edgeType, files) <- store.catalog.edges.toSeq
+        (fname, cfg0) <- files.toSeq if !mapped.contains(fname)
+      } yield {
+        var cfg = cfg0
+        var df = readStagedEdges(fname, cfg)
+        var dirty = false
 
-          // -- pass A: explicit mappings (pipeline.py:49-72), gated on
-          // ignore_mapping like the reference (pipeline.py:52). The
-          // reference keeps the pre-mapping values under `mapped_from`
-          // (pipeline.py:64); we suffix per-endpoint so mapping both
-          // endpoints can't collide.
-          if (!cfg.ignore_mapping) {
-            Seq(("start", cfg.start), ("end", cfg.end)).foreach { case (colName, spec) =>
-              store.mappings.get(spec).foreach { mapping =>
-                val target = s"${colName}_mapped_from"
-                val remapped = Mapping.applyMapping(df, mapping, colName, strictCompat)
-                // idempotent re-map: a crash between load() (which clears
-                // the mapper log) and the next parse() re-enters this pass
-                // on an already-mapped file — overwrite the provenance
-                // column instead of duplicating it
-                df = (if (remapped.columns.contains(target)) remapped.drop(target) else remapped)
-                  .withColumnRenamed("mapped_from", target)
-                dirty = true
-              }
+        // -- pass A: explicit mappings (pipeline.py:49-72), gated on
+        // ignore_mapping like the reference (pipeline.py:52). The
+        // reference keeps the pre-mapping values under `mapped_from`
+        // (pipeline.py:64); we suffix per-endpoint so mapping both
+        // endpoints can't collide.
+        if (!cfg.ignore_mapping) {
+          Seq(("start", cfg.start), ("end", cfg.end)).foreach { case (colName, spec) =>
+            store.mappings.get(spec).foreach { mapping =>
+              val target = s"${colName}_mapped_from"
+              val remapped = Mapping.applyMapping(df, mapping, colName, strictCompat)
+              // idempotent re-map: a crash between load() (which clears
+              // the mapper log) and the next parse() re-enters this pass
+              // on an already-mapped file — overwrite the provenance
+              // column instead of duplicating it
+              df = (if (remapped.columns.contains(target)) remapped.drop(target) else remapped)
+                .withColumnRenamed("mapped_from", target)
+              dirty = true
             }
           }
-
-          // -- pass B: auto pk resolution (pipeline.py:75-111); guard quirk
-          // SURVEY §2.12.2: runs for any endpoint whose addressed property is
-          // not the node's primary key, unless ignore_mapping
-          if (!cfg.ignore_mapping) {
-            Seq(("start", cfg.start), ("end", cfg.end)).foreach { case (colName, spec) =>
-              val Array(label, prop) = spec.split(":", 2)
-              store.catalog.nodes.get(label) match {
-                case Some(nodeCfg) if prop != nodeCfg.primary_key =>
-                  val mapping = autoMappings.getOrElseUpdate((label, prop),
-                    Mapping.autoMapping(readStagedNodes(label, nodeCfg), nodeCfg.primary_key, prop))
-                  // pass B drops the pre-mapping column (pipeline.py:106)
-                  df = Mapping.applyMapping(df, mapping, colName, strictCompat)
-                    .drop("mapped_from")
-                  dirty = true
-                  // catalog endpoint repointed to the primary key (pipeline.py:110-111)
-                  cfg = if (colName == "start") cfg.copy(start = s"$label:${nodeCfg.primary_key}")
-                        else cfg.copy(end = s"$label:${nodeCfg.primary_key}")
-                case Some(_) => // already keyed by the primary key
-                case None => // reference raises KeyError (pipeline.py:94); fixed: warn+skip
-                  System.err.println(s"[graft] auto-mapping: node label '$label' not in catalog; skipping $fname/$colName")
-              }
-            }
-          }
-
-          if (dirty) {
-            val deduped = Mapping.dedupEndpoints(df).cache()
-            val newCount = deduped.count()
-            rewriteEdgeFile(fname, deduped)
-            deduped.unpersist()
-            // record the post-mapping schema (pipeline.py:69,110 retype)
-            cfg = cfg.copy(count = newCount,
-              properties_type = Catalog.schemaTypes(deduped.schema))
-            store.catalog = store.catalog.copy(edges = store.catalog.edges +
-              (edgeType -> (store.catalog.edges(edgeType) + (fname -> cfg))))
-            // persist BEFORE the resume marker: a crash between the file
-            // rewrite and here is recovered by the idempotent re-map; a
-            // marker without a persisted catalog would strand a mapped file
-            // behind a stale schema forever
-            store.persistCatalog()
-          }
-          store.logAppend("mapper", fname)
         }
+
+        // -- pass B: auto pk resolution (pipeline.py:75-111); guard quirk
+        // SURVEY §2.12.2: runs for any endpoint whose addressed property is
+        // not the node's primary key, unless ignore_mapping
+        if (!cfg.ignore_mapping) {
+          Seq(("start", cfg.start), ("end", cfg.end)).foreach { case (colName, spec) =>
+            val Array(label, prop) = spec.split(":", 2)
+            store.catalog.nodes.get(label) match {
+              case Some(nodeCfg) if prop != nodeCfg.primary_key =>
+                val mapping = autoMappings.getOrElseUpdate((label, prop),
+                  Mapping.autoMapping(readStagedNodes(label, nodeCfg), nodeCfg.primary_key, prop))
+                // pass B drops the pre-mapping column (pipeline.py:106)
+                df = Mapping.applyMapping(df, mapping, colName, strictCompat)
+                  .drop("mapped_from")
+                dirty = true
+                // catalog endpoint repointed to the primary key (pipeline.py:110-111)
+                cfg = if (colName == "start") cfg.copy(start = s"$label:${nodeCfg.primary_key}")
+                      else cfg.copy(end = s"$label:${nodeCfg.primary_key}")
+              case Some(_) => // already keyed by the primary key
+              case None => // reference raises KeyError (pipeline.py:94); fixed: warn+skip
+                System.err.println(s"[graft] auto-mapping: node label '$label' not in catalog; skipping $fname/$colName")
+            }
+          }
+        }
+
+        val rewrite =
+          if (dirty) Some(rewrites.submit("graft-rewrite-")(stageRewrite(edgeType, fname, df, cfg)))
+          else None
+        (fname, rewrite)
       }
-    }
+
+      planned.foreach { case (fname, rewrite) =>
+        rewrite.foreach(_.await()())
+        store.logAppend("mapper", fname)
+      }
+    } finally rewrites.close()
     store.persistCatalog()
+  }
+
+  /** The Spark half of one edge file's rewrite: dedup, count and write the
+    * mapped frame into `tmp`. Returns the commit, which runs on the caller
+    * thread in catalog order. */
+  private def stageRewrite(edgeType: String, fname: String, df: DataFrame, cfg: EdgeFileConfig)(
+      tmp: Path): () => Unit = {
+    val deduped = Mapping.dedupEndpoints(df).cache()
+    try {
+      val newCount = deduped.count()
+      deduped.coalesce(1).write
+        .option("sep", ";").option("header", "true")
+        .mode("overwrite").csv(tmp.toString)
+      val part = Context.listDir(tmp).find(_.getFileName.toString.startsWith("part-"))
+        .getOrElse(throw new IllegalStateException(s"rewrite of $fname produced no file"))
+      // record the post-mapping schema (pipeline.py:69,110 retype)
+      val mappedCfg = cfg.copy(count = newCount, properties_type = Catalog.schemaTypes(deduped.schema))
+      () => {
+        Files.move(part, store.edgesDir.resolve(fname), StandardCopyOption.REPLACE_EXISTING)
+        store.catalog = store.catalog.copy(edges = store.catalog.edges +
+          (edgeType -> (store.catalog.edges(edgeType) + (fname -> mappedCfg))))
+        // persist BEFORE the resume marker: a crash between the file
+        // rewrite and here is recovered by the idempotent re-map; a
+        // marker without a persisted catalog would strand a mapped file
+        // behind a stale schema forever
+        store.persistCatalog()
+      }
+    } finally deduped.unpersist()
   }
 
   /** Concatenated staged node table for a label (used by pass B and the
@@ -274,15 +267,10 @@ final class GraphEtl(
   private[etl] def readStagedNodes(label: String, cfg: NodeConfig): DataFrame =
     cfg.files.keys.toList
       .map(f => store.nodesDir.resolve(f))
-      .groupBy(p => headerColumns(p, cfg.properties_type.keys.toList))
+      .groupBy(p => StagedCsv.header(p, cfg.properties_type.keys.toList))
       .toList
       .sortBy(_._2.head.toString) // deterministic union order
-      .map { case (cols, paths) =>
-        val schema = StructType(cols.map(c =>
-          StructField(c, cfg.properties_type.get(c).map(Catalog.sparkType).getOrElse(StringType))))
-        spark.read.option("sep", ";").option("header", "true").schema(schema)
-          .csv(paths.map(_.toString): _*)
-      }
+      .map { case (cols, paths) => StagedCsv.read(spark, cols, cfg.properties_type, paths) }
       .reduce(_.unionByName(_, allowMissingColumns = true))
 
   // ------------------------------------------------------------------

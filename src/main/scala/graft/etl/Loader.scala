@@ -85,15 +85,6 @@ final class SparkGraphLoader(
 
   override def markNodesSkipped(label: String): Unit = skippedLabels += label
 
-  private def readCsv(path: String, propertiesType: Map[String, String]): DataFrame = {
-    val df0 = spark.read.option("sep", ";").option("header", "true").csv(path)
-    // apply catalog types by name; header order comes from the file
-    val cols = df0.columns.map { c =>
-      propertiesType.get(c).map(t => col(c).cast(Catalog.sparkType(t)).as(c)).getOrElse(col(c))
-    }
-    df0.select(cols.toIndexedSeq: _*)
-  }
-
   override def loadNodes(
       filePath: String, label: String, primaryKey: String,
       metadatas: Map[String, String], propertiesType: Map[String, String],
@@ -112,7 +103,7 @@ final class SparkGraphLoader(
   private def ingestNodes(
       filePath: String, label: String, primaryKey: String,
       metadatas: Map[String, String], propertiesType: Map[String, String]): DataFrame = {
-    val df0 = readCsv(filePath, propertiesType)
+    val df0 = StagedCsv.readFile(spark, java.nio.file.Paths.get(filePath), propertiesType)
       .withColumn("id", col(primaryKey).cast(StringType)) // §2.12.3 canonical id
     // already merged by this instance (restored, or a prior load() whose log
     // was cleared): report the per-file frame for counting, mutate nothing
@@ -186,7 +177,7 @@ final class SparkGraphLoader(
       propertiesType: Map[String, String]): DataFrame = {
     val startLabel = start.split(":")(0)
     val endLabel = end.split(":")(0)
-    val df = readCsv(filePath, propertiesType)
+    val df = StagedCsv.readFile(spark, java.nio.file.Paths.get(filePath), propertiesType)
       .where(col("start").isNotNull && col("end").isNotNull &&
         col("start").cast(StringType) =!= "" && col("end").cast(StringType) =!= "") // P8
       .withColumn("src", col("start").cast(StringType))

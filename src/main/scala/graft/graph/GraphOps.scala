@@ -3,6 +3,7 @@ package graft.graph
 import org.apache.spark.graphx.{Edge, Graph, VertexId}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ThreadBridge
 import org.apache.spark.storage.StorageLevel
 
 /** GraphX materialization of the staged property graph and the graph
@@ -364,14 +365,16 @@ object GraphOps {
     // slices — overlap them from a second thread (guide §2.6; the pin
     // clone registry is synchronized and the session-local pin test
     // exercises concurrent pins), which takes one pin's wall off the
-    // critical path (~0.2 s of the board's #1 query).
-    val eDstFut = edgesByDst.map { d =>
+    // critical path (~0.2 s of the board's #1 query). The thread carries
+    // the caller's local properties, and a failed pin rethrows its own
+    // exception.
+    val eDstPin = edgesByDst.map { d =>
       val d0 = d.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      java.util.concurrent.CompletableFuture.supplyAsync(() =>
+      ThreadBridge.async(edges.sparkSession)(
         loopFrame(pinKeepingLayout(if (assumeDistinct) d0 else d0.distinct())))
     }
     val e = loopFrame(pinKeepingLayout(if (assumeDistinct) e0 else e0.distinct()))
-    val eDst = eDstFut.map(_.join()).getOrElse(e)
+    val eDst = eDstPin.map(_.await()).getOrElse(e)
     // hub seed from the SCAN, not the pin: the distinct-source set of the
     // raw slice equals the pinned frame's (dedup commutes with the src
     // projection), and the bucketed scan folds the distinct in place for

@@ -3,6 +3,7 @@ package graft.etl
 import java.nio.file.Files
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.LocalDirBridge
 
 /** Ports of the reference's parser tests (graph_etl/tests/test_parser.py)
   * against the fixed catalog layout — see SURVEY §5 for why the original
@@ -243,14 +244,129 @@ class EtlPipelineSpec extends SparkSpec {
     assert(got.select(col("start").cast("long")).as[Long].collect().toSet == Set(1L, 2L))
   }
 
+  /** Temp dirs a staging or mapping job could leave, in Spark's scratch
+    * dir or under the output dir. */
+  private def leftoverTempDirs(etl: GraphEtl): Seq[String] =
+    Seq(etl.outputDir, LocalDirBridge.localDir(spark)).flatMap { root =>
+      val s = Files.walk(java.nio.file.Paths.get(root))
+      try scala.jdk.CollectionConverters.IteratorHasAsScala(s.iterator()).asScala
+        .map(_.getFileName.toString)
+        .filter(n => n.startsWith("graft-staging-") || n.startsWith("graft-rewrite-")).toList
+      finally s.close()
+    }
+
+  private def stagedFiles(etl: GraphEtl): Seq[String] =
+    Seq(etl.store.nodesDir, etl.store.edgesDir).flatMap(Context.listDir)
+      .map(_.getFileName.toString).filter(_.endsWith(".csv"))
+
   test("a throwing parser body is not marked complete and re-runs") {
     val etl = newEtl()
-    intercept[RuntimeException] {
-      etl.withParser("boom")(_ => throw new RuntimeException("parser failed"))
+    val e = intercept[RuntimeException] {
+      etl.withParser("boom") { ctx =>
+        ctx.saveNodes(Seq((1L, "A")).toDF("id", "name"), "N")
+        throw new RuntimeException("parser failed")
+      }
     }
+    assert(e.getMessage == "parser failed")
+    // the save that ran before the throw is neither published nor left behind
+    assert(!etl.store.logEntries("parser").contains("boom"))
+    assert(etl.store.catalog.nodes.isEmpty)
+    assert(stagedFiles(etl).isEmpty)
+    assert(leftoverTempDirs(etl).isEmpty)
     var ran = false
     etl.withParser("boom") { _ => ran = true } // would be skipped if logged as done
     assert(ran)
+    etl.clear()
+  }
+
+  test("concurrent saves keep the chunk geometry, call-order indices and exact counts") {
+    val etl = new GraphEtl(spark, Files.createTempDirectory("graft-geometry").toString,
+      nodeChunkSize = 7L, edgeChunkSize = 4L)
+    // the first save is the largest (and sorts its input), so its Spark
+    // half finishes last; publication must still follow call order
+    etl.parser("three", Map("source" -> "t")) { ctx =>
+      ctx.saveNodes(spark.range(0, 200, 1, 8).orderBy(col("id").desc)
+        .select(col("id"), concat(lit("a"), col("id")).as("name")), "A")
+      ctx.saveNodes(spark.range(1000, 1020, 1, 3)
+        .select(col("id"), concat(lit("b"), col("id")).as("name")), "B")
+      ctx.saveNodes(Seq((5000L, "c")).toDF("id", "name"), "C")
+      ctx.saveEdges(spark.range(0, 30, 1, 4)
+        .select(col("id").as("start"), concat(lit("b"), col("id") + 1000).as("end")),
+        "LIKES", "A:id", "B:name")
+    }
+    etl.parse()
+
+    def lines(p: java.nio.file.Path): Long = {
+      val s = Files.lines(p)
+      try s.count() finally s.close()
+    }
+    def index(f: String): Int = f.stripSuffix(".csv").split("_").last.toInt
+    val nodes = etl.store.catalog.nodes
+    val byLabel = Seq("A", "B", "C").map(l => l -> nodes(l).files.keys.toSeq.sortBy(index))
+    assert(byLabel.map(_._2.size) == Seq(29, 3, 1)) // ceil(200/7), ceil(20/7), 1
+    // node file indices run contiguously in call order across the labels
+    assert(byLabel.flatMap(_._2).map(index) == (0 until 33))
+    byLabel.foreach { case (label, files) =>
+      val counts = files.map(f => lines(etl.store.nodesDir.resolve(f)) - 1)
+      assert(counts.init.forall(_ == 7L), s"$label: $counts")
+      assert(counts == files.map(nodes(label).files(_).count), label)
+    }
+    // the mapped edge files (auto pk resolution) are rewritten in place,
+    // and their catalog counts follow the rewritten contents
+    val edges = etl.store.catalog.edges("LIKES")
+    assert(edges.keys.toSeq.map(index).sorted == (0 until 8))
+    edges.foreach { case (f, cfg) =>
+      assert(cfg.end == "B:id")
+      assert(lines(etl.store.edgesDir.resolve(f)) - 1 == cfg.count, f)
+    }
+    // unmatched ends (b1020..b1029 name no B node) keep their value
+    assert(edges.values.map(_.count).sum == 30)
+    assert(leftoverTempDirs(etl).isEmpty)
+    etl.clear()
+  }
+
+  test("a failing body or save fails parse with its own exception and publishes nothing") {
+    val etl = newEtl()
+    def good(ctx: Context): Unit = {
+      ctx.saveNodes(Seq((1L, "A"), (2L, "B")).toDF("id", "name"), "N")
+      ctx.saveEdges(Seq((1L, 2L)).toDF("start", "end"), "E", "N:id", "N:id")
+    }
+    def assertNothingPublished(): Unit = {
+      assert(!etl.store.logEntries("parser").contains("p"))
+      assert(etl.store.catalog.nodes.isEmpty && etl.store.catalog.edges.isEmpty)
+      assert(stagedFiles(etl).isEmpty)
+      assert(leftoverTempDirs(etl).isEmpty)
+    }
+
+    // (a) the body throws after two saves
+    etl.parser("p") { ctx => good(ctx); throw new IllegalStateException("body failed") }
+    val a = intercept[IllegalStateException](etl.parse())
+    assert(a.getMessage == "body failed")
+    assertNothingPublished()
+
+    // (b) a save whose frame fails when its Spark half runs; the saves
+    // around it succeed
+    val boom = udf((x: Long) => { if (x == 3L) throw new ArithmeticException("bad row"); x })
+    etl.parser("p") { ctx =>
+      good(ctx)
+      ctx.saveNodes(spark.range(10).select(boom(col("id")).as("id")), "Bad")
+      ctx.saveNodes(Seq((9L, "Z")).toDF("id", "name"), "Z")
+    }
+    val b = intercept[Exception](etl.parse())
+    // the Spark job's own exception, not the pool's wrapper
+    assert(b.isInstanceOf[org.apache.spark.SparkException], b.getClass.getName)
+    assert(Iterator.iterate[Throwable](b)(_.getCause).takeWhile(_ != null)
+      .exists(c => c.isInstanceOf[ArithmeticException] && c.getMessage == "bad row"), b)
+    assertNothingPublished()
+
+    // a re-run succeeds and stages every row exactly once
+    etl.parser("p")(good)
+    etl.parse()
+    assert(etl.store.logEntries("parser").contains("p"))
+    assert(etl.store.catalog.nodes.keySet == Set("N"))
+    assert(etl.store.catalog.nodes("N").files.values.map(_.count).sum == 2)
+    assert(etl.store.catalog.edges("E").values.map(_.count).sum == 1)
+    assert(leftoverTempDirs(etl).isEmpty)
     etl.clear()
   }
 
