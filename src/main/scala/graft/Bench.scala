@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** 1-minute loadavg at call time, -1.0 when unreadable (non-Linux) —
     * recorded INTO the board so a drift-state run (the r14 218 s board
@@ -16,47 +15,8 @@ object Bench {
     SparkEntry.initStaging()
     val loadStart = loadAvg1m()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // codegen CLASS cache (static conf, default 100 entries): the 254-
-      // query suite generates ~4-6k whole-stage-codegen units, so at the
-      // default size every query's classes are evicted by its ~15
-      // successors and BOTH timed passes re-run janino compilation for
-      // every stage — the warm-up passes exist precisely to take
-      // compilation out of the timed numbers, and the default cache size
-      // silently defeated them. 5000 entries keeps every class of the
-      // suite resident (~250 MB driver heap, measured stable under the
-      // 8 GiB driver); the timed passes then measure execution, not the
-      // compiler. r15 A/B, full board: 165.1 -> 138.4 s (-16%), median
-      // per-query ratio 0.72 on the 42-query probe, no query regressed
-      // beyond noise. Scale-neutral: compiled-code caching is JIT warmth,
-      // not data caching — every run still computes from parquet.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      // AQE coalescing floor (default 1m): with parallelismFirst the
-      // coalesced partition size is clamped BELOW by this floor, so any
-      // shuffle under ~32 MB collapses to a handful of tasks — which
-      // serializes the engine's compute-heavy, byte-light reducers (HLL
-      // merges, jaccard verifies, posting folds: 100s of ms of CPU per
-      // MB, vs ~ms of per-task overhead). 128k keeps those at full
-      // parallelism; the floor never binds at cluster scale (it is
-      // irrelevant once totalBytes/parallelism > 1 MB), so this is
-      // scale-neutral. r15 A/B (two interleaved pairs, 46-query subset):
-      // board-neutral median, consistent wins on q_prefix_join
-      // (−35-45%), q_web_corpus_funnel (−20-25%), q_inverted_index
-      // (−20%), q_approx_distinct (−15-18%); no consistent loser.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "128k"))
-      .config("spark.ui.enabled", "false")
-      // default is 30min — far longer than a bench session, so broadcast/
-      // shuffle cleanup would otherwise never run between queries
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .getOrCreate()
+    val cpus = GraftSession.cpus(32)
+    val spark = GraftSession.build(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // SPARK_GRAFT_ONLY=q_a,q_b isolates queries for regression bisection —
     // a query timed alone vs inside the 82-query session separates its own
@@ -72,11 +32,14 @@ object Bench {
     // not steady-state throughput
     val warmDirs = sys.env.get("SPARK_GRAFT_WARM_DIR").map(Seq(_))
       .getOrElse(Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01"))
+    // a failure is printed with its cause and never swallowed
+    def reportFailure(name: String, e: Throwable): Unit =
+      System.err.println(s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
     warmDirs.foreach { warmDir =>
       var failed = 0
-      benchQueries.foreach { case (_, fn) =>
+      benchQueries.foreach { case (name, fn) =>
         try { fn(spark, warmDir).queryExecution.toRdd.count(): Unit }
-        catch { case _: Throwable => failed += 1 }
+        catch { case e: Throwable => reportFailure(name, e); failed += 1 }
       }
       // a silently-dead warm dir would make the timed pass measure JIT/
       // codegen compilation — the exact distortion warm-up exists to avoid
@@ -132,7 +95,8 @@ object Bench {
     def timeAll(): Map[String, Double] = benchQueries.map { case (name, fn) =>
       System.gc()
       val t0 = System.nanoTime()
-      val ok = try { runFully(fn); true } catch { case _: Throwable => false }
+      val ok = try { runFully(fn); true }
+        catch { case e: Throwable => reportFailure(name, e); false }
       // failures are reported as -1, never as a (fast-looking) elapsed time
       name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
     }
@@ -165,7 +129,9 @@ object Bench {
     }
     // failed queries (-1 sentinels) must not DEFLATE the total
     val total = results.values.filter(_ >= 0).sum
-    val failed = results.values.count(_ < 0)
+    val failedQueries = results.collect { case (n, v) if v < 0 => n }.toSeq.sorted
+    val failed = failedQueries.size
+    val failedJson = failedQueries.map(n => "\"" + n + "\"").mkString("[", ",", "]")
     // the total goes in a short FINAL line: the driver keeps only a
     // bounded tail of stdout, and a short last line survives any tail
     // window. prev_round_same_host_control is the previous round's commit
@@ -232,7 +198,7 @@ object Bench {
       "[bench] WARNING: no per-query control map matched (SPARK_GRAFT_CONTROL_MAP " +
         "unset and no bench_queries_r<N>control.json with >=10 shared queries) — " +
         "omitting median_ratio_vs_control; the board cannot self-describe host drift")
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"failed":$failed,"staging_build_sec":${fmt(stagingBuildSec)},"late_staged":${lateStaged.size}$controlField$hostFields,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"failed":$failed,"staging_build_sec":${fmt(stagingBuildSec)},"late_staged":${lateStaged.size}$controlField$hostFields,"sf":"$sfDir","failed_queries":$failedJson}""")
     // the bounded-stdout tail holds ~2.5 of the 7 chunk lines at 200
     // queries (r7 recovered 50/200 timings), so the COMPLETE per-query map
     // also goes to a FILE in the working tree: the driver's artifact stays
@@ -251,7 +217,7 @@ object Bench {
       val qj = results.toSeq.sortBy(_._1)
         .map { case (k, v) => s"\"$k\":${fmt(v)}" }.mkString("{", ",", "}")
       val body =
-        s"""{"total_sec":${fmt(total)},"n_queries":${results.size},"failed":$failed,"staging_build_sec":${fmt(stagingBuildSec)},"late_staged":${lateStaged.size}$controlField$hostFields,"cpus":$cpus,"sf":"$sfDir","queries":$qj}""" + "\n"
+        s"""{"total_sec":${fmt(total)},"n_queries":${results.size},"failed":$failed,"staging_build_sec":${fmt(stagingBuildSec)},"late_staged":${lateStaged.size}$controlField$hostFields,"cpus":$cpus,"sf":"$sfDir","failed_queries":$failedJson,"queries":$qj}""" + "\n"
       java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_queries.json"), body)
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(s"bench_queries_c$cpus.json"), body)

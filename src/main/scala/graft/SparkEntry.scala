@@ -193,11 +193,6 @@ object SparkEntry {
         .groupBy(col("l_returnflag"), col("l_extendedprice"))
         .agg(count(lit(1)).as("cnt")))
 
-  /** Probe hook for tools/PctlProbe (percentile-form A/B); never used by
-    * query paths. */
-  private[graft] def stagedPriceCountsForProbe(s: SparkSession, dir: String): DataFrame =
-    stagedPriceCounts(s, dir)
-
   /** The exact brute-force cosine top-10 over the shared retrieval
     * fixture (full embeddings corpus, `vec_id % 50 == 0` query set)
     * STAGED once per (JVM, input dir). Five retrieval-evaluation queries

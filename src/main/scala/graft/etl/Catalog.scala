@@ -65,9 +65,6 @@ final case class Catalog(
     val entry = EdgeFileConfig(start, end, propertiesType, ignoreMapping, metadatas, count)
     copy(edges = edges + (edgeType -> (files + (fileName -> entry))))
   }
-
-  def nodesCount: Long = nodes.values.flatMap(_.files.values.map(_.count)).sum
-  def edgesCount: Long = edges.values.flatMap(_.values.map(_.count)).sum
 }
 
 object Catalog {

@@ -113,8 +113,7 @@ final class Context(
     val metadatas: Map[String, String],
     val uuid: String,
     nodeChunkSize: Long = Context.NodeChunkSize,
-    edgeChunkSize: Long = Context.EdgeChunkSize,
-    fastStaging: Boolean = false) {
+    edgeChunkSize: Long = Context.EdgeChunkSize) {
 
   /** Each save's Spark half returns its publish half. */
   private val saves = new StagingQueue[() => Unit](store.spark)
@@ -123,9 +122,7 @@ final class Context(
     * order with their row counts. */
   private def stage(df: DataFrame, chunkSize: Long)(publish: Seq[(Path, Long)] => Unit): Unit =
     saves.submit("graft-staging-") { tmp =>
-      val chunks =
-        if (fastStaging) Context.stageChunkedCsvFast(df, tmp, chunkSize)
-        else Context.stageChunkedCsv(df, tmp, chunkSize)
+      val chunks = Context.stageChunkedCsv(df, tmp, chunkSize)
       () => publish(chunks)
     }
 
@@ -277,39 +274,6 @@ object Context {
         }
       }
     } finally input.unpersist()
-  }
-
-  /** Performance-path staging (SURVEY §2.6 W1 option (a)): one write pass
-    * bounded by `maxRecordsPerFile` — no sizing job, no repartition
-    * shuffle. File sizes are bounded-but-uneven rather than exactly-chunked
-    * (task boundaries also split files), and per-file counts come from one
-    * distributed line-count pass over the written files. Preferred at scale;
-    * the faithful path keeps the reference's exact chunk geometry. */
-  def stageChunkedCsvFast(df: DataFrame, tmp: Path, chunkSize: Long): Seq[(Path, Long)] = {
-    df.write
-      .option("maxRecordsPerFile", chunkSize)
-      .option("sep", ";")
-      .option("header", "true")
-      .mode("overwrite")
-      .csv(tmp.toString)
-    val parts = listDir(tmp).filter(_.getFileName.toString.startsWith("part-")).sortBy(_.toString)
-    if (parts.isEmpty) return Nil
-    // one distributed pass for per-file counts (minus the header line each)
-    import org.apache.spark.sql.functions.{input_file_name, count => cnt, lit}
-    val counts = df.sparkSession.read.text(parts.map(_.toString): _*)
-      .groupBy(input_file_name().as("f")).agg(cnt(lit(1)).as("n"))
-      .collect()
-      .map(r => {
-        // input_file_name() is a URI (percent-encoded) — decode before
-        // matching against the on-disk file names
-        val f = r.getString(0)
-        val path = try new java.net.URI(f).getPath catch { case _: Exception => f }
-        path.substring(path.lastIndexOf('/') + 1) -> (r.getLong(1) - 1)
-      }).toMap
-    parts.map { p =>
-      val n = p.getFileName.toString
-      p -> counts.getOrElse(n, throw new IllegalStateException(s"no line count for staged file $n"))
-    }
   }
 
   private def partFile(dir: Path): Path =

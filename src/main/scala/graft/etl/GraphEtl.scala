@@ -37,10 +37,7 @@ final class GraphEtl(
     val outputDir: String = "./output",
     val strictCompat: Boolean = false,
     nodeChunkSize: Long = Context.NodeChunkSize,
-    edgeChunkSize: Long = Context.EdgeChunkSize,
-    /** bounded-but-uneven chunk files via maxRecordsPerFile — one write
-      * pass, no shuffle; the default keeps the reference's exact geometry */
-    fastStaging: Boolean = false) {
+    edgeChunkSize: Long = Context.EdgeChunkSize) {
 
   val store = new StoreInfo(outputDir, spark)
   private val parsers = mutable.LinkedHashMap.empty[String, RegisteredParser]
@@ -119,7 +116,7 @@ final class GraphEtl(
     * that marks half-staged parsers done, which we deliberately fix.) */
   private def runParser(name: String, metadatas: Map[String, String], body: Context => Unit): Unit = {
     val ctx = new Context(store, metadatas, java.util.UUID.randomUUID().toString.take(8),
-      nodeChunkSize, edgeChunkSize, fastStaging)
+      nodeChunkSize, edgeChunkSize)
     val tp = System.nanoTime()
     try { body(ctx); ctx.publish() } finally ctx.discard()
     // per-parser wall time (utils.py:80-97 save_parser_infos logging)

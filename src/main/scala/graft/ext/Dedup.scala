@@ -40,28 +40,6 @@ object Dedup {
     df.withColumn("__rn", row_number().over(w)).where(col("__rn") === 1).drop("__rn")
   }
 
-  /** Per-doc MinHash signatures + LSH band hashes. numHashes must be
-    * divisible by bands. */
-  def minhashSignatures(
-      df: DataFrame, idCol: String, textCol: String,
-      shingleSize: Int = 5, numHashes: Int = 128, bands: Int = 32): DataFrame =
-    signaturesFor(df, idCol, NativeExpressions.charShingles(col(textCol), shingleSize),
-      numHashes, bands)
-
-  private def signaturesFor(
-      df: DataFrame, idCol: String, shingles: Column,
-      numHashes: Int, bands: Int): DataFrame = {
-    require(numHashes % bands == 0, s"numHashes ($numHashes) must be divisible by bands ($bands)")
-    // bands via the fused native expression — deriving them from the
-    // signature column with an HOF would re-evaluate the signature per band
-    // wherever Catalyst collapses the projections (see graft.plans)
-    df.select(
-      col(idCol).as("id"),
-      shingles.as("shingles"),
-      NativeExpressions.minhashSignature(shingles, numHashes).as("signature"),
-      NativeExpressions.minhashBands(shingles, numHashes, bands).as("bands"))
-  }
-
   /** Shared MinHash-LSH near-dup pipeline: band-bucket candidates over
     * (id, bucket) only, distinct pairs, exact shingle-Jaccard verify via
     * two id-joins. Returns (id_a, id_b, jaccard) with id_a < id_b. */

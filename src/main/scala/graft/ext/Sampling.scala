@@ -119,10 +119,6 @@ object Sampling {
     df.withColumn(splitCol, assigned)
   }
 
-  /** The hex gate boundary for a cumulative weight — exposed so external
-    * systems (SQL oracles, Python readers) can reproduce the assignment. */
-  def splitBoundary(cumulativeWeight: Double): String = hexThreshold(cumulativeWeight)
-
   /** Per-stratum quota: keep at most `maxPerStratum` rows per stratum,
     * chosen by hash order (md5 gate value, key as tie-break) so the kept
     * set is a stable pseudo-random draw — the "cap any one domain's share

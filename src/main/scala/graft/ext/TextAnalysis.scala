@@ -352,7 +352,7 @@ object TextAnalysis {
     * construction is the NATIVE WordShingles kernel (same semantics as the
     * HOF reference form, one tight loop per row) — the HOF chain costs
     * ~600 µs/doc in interpreted lambdas and dominated the whole operator
-    * when profiled (tools/ProfileContamination). */
+    * when profiled (SCALE.md). */
   def benchmarkOverlap(df: DataFrame, benchDf: DataFrame, idCol: String,
       textCol: String, n: Int = 5, flagAt: Double = 0.2): DataFrame =
     benchmarkOverlapGrams(df, benchGramSet(benchDf, textCol, n), idCol, textCol, n, flagAt)

@@ -54,8 +54,8 @@ object HashFunctions {
   /** MinHash signature: k independent hash family members h_i(s) =
     * xxhash64(i, s); signature[i] = min over shingles. One pass per row,
     * no shuffle. NOTE: portable HOF reference form — the Dedup pipelines
-    * use graft.plans.NativeExpressions.minhashSignature, whose (faster)
-    * affine family produces DIFFERENT signature values. */
+    * use graft.plans.MinHashBands, whose (faster) affine family produces
+    * DIFFERENT signature values. */
   def minhashSignature(shingles: Column, numHashes: Int): Column = {
     require(numHashes > 0, s"numHashes must be positive, got $numHashes")
     transform(

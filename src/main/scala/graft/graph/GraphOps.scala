@@ -198,13 +198,10 @@ object GraphOps {
   private[this] val pinClones =
     new scala.collection.mutable.WeakHashMap[SparkSession, SparkSession]
 
-  /** Probe/test hook for [[pinKeepingLayout]] — lets the scratch plan
-    * probes (tools/HitsProbe) replay one fixed-point round with the
-    * REAL pin semantics; never used by query paths. */
+  /** Test hook for [[pinKeepingLayout]] — lets PlanSpec replay one
+    * fixed-point round with the REAL pin semantics; never used by query
+    * paths. */
   private[graft] def pinForProbe(df: DataFrame): DataFrame = pinKeepingLayout(df)
-
-  /** Probe/test hook for [[loopFrame]] — same contract as [[pinForProbe]]. */
-  private[graft] def loopFrameForProbe(df: DataFrame): DataFrame = loopFrame(df)
 
   /** Re-bind a fixed-point loop's working frame onto a cached cloned
     * session with ADAPTIVE EXECUTION OFF — every per-round job the loop
@@ -226,11 +223,10 @@ object GraphOps {
     * SCALE GATE: AQE's per-round value (coalescing, skew splits, runtime
     * join re-selection) grows with the loop's working-set size, so the
     * rebind applies only when the frame's planner size estimate is under
-    * `SPARK_GRAFT_LOOP_AQE_OFF_MAX_BYTES` (default 4 GiB — rounds over
-    * inputs that small shuffle at most hundreds of MB, where fixed
-    * per-stage driver latency dominates anything AQE can recover). A
-    * 100 TB input fails the gate and loops under AQE exactly as before;
-    * 0 disables the rebind outright.
+    * [[LoopAqeOffMaxBytes]] (4 GiB — rounds over inputs that small
+    * shuffle at most hundreds of MB, where fixed per-stage driver latency
+    * dominates anything AQE can recover). A 100 TB input fails the gate
+    * and loops under AQE exactly as before.
     *
     * The clone shares the SparkContext and external catalog (staged
     * tables resolve; checkpointed RDD blocks are shared), owns its
@@ -243,12 +239,11 @@ object GraphOps {
     // (top-k candidate lists, sweep grids) — its planner estimate is
     // meaningless (corpus-sized lineage) but its materialized size is a
     // few thousand rows at any input scale, so the gate is skipped
-    val maxBytes = loopAqeOffMaxBytes
     val bytes = if (assumeBounded) 0L else {
       val st = df.queryExecution.optimizedPlan.stats.sizeInBytes
       if (st > BigInt(Long.MaxValue)) Long.MaxValue else st.toLong
     }
-    if (maxBytes <= 0L || bytes > maxBytes) df
+    if (bytes > LoopAqeOffMaxBytes) df
     else {
       val s = df.sparkSession
       // STATIC COALESCING: with AQE off the loop loses runtime partition
@@ -281,9 +276,7 @@ object GraphOps {
     }
   }
 
-  private[this] def loopAqeOffMaxBytes: Long =
-    sys.env.get("SPARK_GRAFT_LOOP_AQE_OFF_MAX_BYTES").map(_.toLong)
-      .getOrElse(4L << 30)
+  private val LoopAqeOffMaxBytes: Long = 4L << 30
 
   private[this] val loopClones = new scala.collection.mutable.WeakHashMap[
     SparkSession, scala.collection.mutable.Map[Int, SparkSession]]
@@ -300,10 +293,10 @@ object GraphOps {
     * scale step multiplies by 1e6 again — beyond ~1e6 max degree, widen
     * the multiply to decimal(38,0) (same plan shape).
     *
-    * Plan shape (r15, rebuilt from a probe of the EXECUTED round plan —
-    * tools/HitsProbe): each half-round pins its RAW frame
-    * (`localCheckpoint`, node-sized) and the scaled frame is a lazy
-    * projection over the pin. The previous shape left raw lazy and
+    * Plan shape (r15, rebuilt from a replay of the EXECUTED round plan —
+    * OPTIMIZATION_r15.md, `plans/r15/q_hits_*.txt`): each half-round
+    * pins its RAW frame (`localCheckpoint`, node-sized) and the scaled
+    * frame is a lazy projection over the pin. The previous shape left raw lazy and
     * relied on ReuseExchange to share the join+sum between the raw
     * frame's two references (its own 1-row max and the scaled
     * projection); the executed AQE plan shows that reuse NEVER fired
@@ -523,7 +516,7 @@ object GraphOps {
         // in-place fold), so they run on the AQE-off clone — one job per
         // broadcast build instead of one per AQE stage (r16)
         //
-        // eD is NOT pinned (r16, tools/PrProbe): each round reads the
+        // eD is NOT pinned (r16, OPTIMIZATION_r16.md): each round reads the
         // view exactly once, and the bucketed staged scan (~MBs of
         // parquet) beats re-reading ~100 MB of row-copy checkpoint
         // blocks — interleaved A/B 1.57 -> 1.27 s with the pin's
@@ -640,8 +633,8 @@ object GraphOps {
       case Some(dv) =>
         // contract (edgesByDst ⇒ assumeDistinct) already enforced at the
         // top of the function, before any job ran
-        // loopFrame + unpinned eD: same rationale as pageRankFixedPoint's
-        // (tools/PrProbe A/B)
+        // loopFrame + unpinned eD: same rationale (and A/B) as
+        // pageRankFixedPoint's
         val eD = loopFrame(
           dv.select(col(srcCol).as("src"), col(dstCol).as("dst")))
         val degP = loopFrame(pinKeepingLayout(deg))

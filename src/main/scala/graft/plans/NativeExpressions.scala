@@ -55,11 +55,6 @@ object NativeExpressions {
   /** Distinct lowercase word n-gram shingles (whitespace tokens). */
   def wordShingles(c: Column, n: Int): Column = toCol(WordShingles(toExpr(c), n))
 
-  /** MinHash signature over an array<string> of shingles: one xxhash64 per
-    * shingle + k affine derivations (h·a_k + b_k), min per slot. */
-  def minhashSignature(shingles: Column, numHashes: Int): Column =
-    toCol(MinHashSignature(toExpr(shingles), numHashes))
-
   /** LSH band hashes computed together with the MinHash signature in ONE
     * evaluation per row. Composing the signature expression inside a
     * banding `transform` lambda instead would let Catalyst's project

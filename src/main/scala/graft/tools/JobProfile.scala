@@ -1,8 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
-
 import scala.collection.mutable
 
 /** Scratch profiler (not part of the product surface): run named
@@ -19,20 +17,7 @@ object JobProfile {
     val names = args(1).split(',')
     val reps = args.drop(2).headOption.map(_.toInt).getOrElse(2)
     graft.SparkEntry.initStaging()
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // match Bench's codegen-class cache sizing (see Bench.scala)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      // match Bench's AQE coalescing floor (see Bench.scala)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "128k"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.build(graft.GraftSession.cpus(32))
     spark.sparkContext.setLogLevel("ERROR")
 
     case class StageAgg(var name: String = "", var tasks: Int = 0,

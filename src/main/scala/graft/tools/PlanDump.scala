@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Debug helper: print the executed physical plan of named SparkEntry
   * queries (the `.explain`-and-iterate loop PlanSpec pins are written
   * from). Usage: runMain graft.tools.PlanDump <sfDir> <q1,q2,...> */
@@ -9,19 +7,9 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val names = args(1).split(',')
-    // session matches Bench's (r16) so dumped plans carry the same
-    // partition counts / conf-dependent shapes the board measures
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "128k"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the shared session, so dumped plans carry the same partition counts
+    // and conf-dependent shapes the board measures
+    val spark = graft.GraftSession.build(graft.GraftSession.cpus(4))
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n===== $n =====")

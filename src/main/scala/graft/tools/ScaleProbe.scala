@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ext.{CorpusPipeline, Dedup, Sampling, Similarity, TextAnalysis}
 
@@ -56,19 +56,7 @@ object ScaleProbe {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     // fail-fast digest resolution + stale-staging GC before any Spark work
     graft.SparkEntry.initStaging()
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-scale-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // match Bench's codegen-class cache sizing (see Bench.scala)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      // match Bench's AQE coalescing floor (see Bench.scala)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "128k"))
-      .getOrCreate()
+    val spark = graft.GraftSession.build(graft.GraftSession.cpus(32))
     spark.sparkContext.setLogLevel("ERROR")
 
     val docs0 = spark.read.parquet(s"$dir/documents.parquet")

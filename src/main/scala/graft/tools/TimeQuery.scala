@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Debug helper: time named SparkEntry queries REP BY REP in one JVM
   * (Bench prints only the min of two passes — regression hunts need the
   * per-rep sequence to separate staging/JIT warm-up from steady state).
@@ -13,21 +11,7 @@ object TimeQuery {
     val reps = args.drop(2).headOption.map(_.toInt).getOrElse(4)
     // fail-fast digest resolution + stale-staging GC before any Spark work
     graft.SparkEntry.initStaging()
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // match Bench's codegen-class cache sizing (see Bench.scala) so
-      // isolated timings are comparable to board timings
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      // match Bench's AQE coalescing floor (see Bench.scala)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "128k"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.build(graft.GraftSession.cpus(32))
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       val times = (1 to reps).map { _ =>

@@ -5,14 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared session for the whole test run (getOrCreate reuses it). */
 object SparkTestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-tests")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.build(4)
 }
 
 trait SparkSpec extends AnyFunSuite {

@@ -384,21 +384,6 @@ class EtlPipelineSpec extends SparkSpec {
     etl1.clear()
   }
 
-  test("fast staging bounds file sizes and records exact per-file counts") {
-    val dir = Files.createTempDirectory("graft-fast").toString
-    val etl = new GraphEtl(spark, dir, nodeChunkSize = 10L, fastStaging = true)
-    etl.parser("fast", Map("source" -> "t")) { ctx =>
-      ctx.saveNodes(spark.range(25).toDF("id"), "N")
-    }
-    etl.parse()
-    val cfg = etl.store.catalog.nodes("N")
-    assert(cfg.files.values.map(_.count).sum == 25)
-    assert(cfg.files.values.forall(_.count <= 10))
-    // files are readable back with the catalog schema
-    assert(etl.readStagedNodes("N", cfg).count() == 25)
-    etl.clear()
-  }
-
   test("resume log skips an already-parsed parser on re-parse") {
     val etl = newEtl()
     var runs = 0
