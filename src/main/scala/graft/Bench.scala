@@ -1,4 +1,7 @@
 package graft
+
+import graft.staging.{StagedArtifacts, Staging}
+
 object Bench {
   /** 1-minute loadavg at call time, -1.0 when unreadable (non-Linux) —
     * recorded INTO the board so a drift-state run (the r14 218 s board
@@ -12,21 +15,22 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     // fail-fast digest resolution + stale-staging GC before any Spark work
-    SparkEntry.initStaging()
+    Staging.initStaging()
     val loadStart = loadAvg1m()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = GraftSession.cpus(32)
-    val spark = GraftSession.build(cpus)
-    spark.sparkContext.setLogLevel("WARN")
     // SPARK_GRAFT_ONLY=q_a,q_b isolates queries for regression bisection —
     // a query timed alone vs inside the 82-query session separates its own
-    // cost from cross-query JVM effects (GC, codegen-cache pressure)
+    // cost from cross-query JVM effects (GC, codegen-cache pressure). An
+    // unregistered name fails here, before the session starts.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val benchQueries = only match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
+      case Some(names) => SparkEntry.restrictTo(names)
       case None        => SparkEntry.queries
     }
+    val spark = GraftSession.build(cpus)
+    spark.sparkContext.setLogLevel("WARN")
     // sf0.01 runs every kernel long enough for the JIT to compile the hot
     // loops — without it the timed numbers measure first-run compilation,
     // not steady-state throughput
@@ -59,15 +63,15 @@ object Bench {
     // per-rep isolation reads warm-up from its own first reps instead
     val tStage0 = System.nanoTime()
     if (only.isEmpty)
-      try SparkEntry.prestageAll(spark, sfDir)
+      try StagedArtifacts.prestageAll(spark, sfDir)
       catch { case e: Throwable => System.err.println(
         s"[bench] WARNING: prestage failed (${e.getMessage}) — timed pass 1 may pay staging builds") }
     val stagingBuildSec = (System.nanoTime() - tStage0) / 1e9
     // self-audit: anything staged AFTER this point was first touched
-    // inside a timed pass — prestageAll drifted from the staged helpers
-    // (new helper added without a prestage entry); the board then hides
+    // inside a timed pass — something staged outside the artifacts
+    // StagedArtifacts records, so prestageAll missed it; the board then hides
     // that build inside pass 1 again. Loud, and counted in the JSON.
-    val preStaged = SparkEntry.stagedRefsSnapshot
+    val preStaged = Staging.stagedRefsSnapshot
 
     // force FULL evaluation of the query's own plan: a bare .count() wraps
     // it in Aggregate(count(1)) and column pruning then deletes the very
@@ -102,7 +106,7 @@ object Bench {
     }
     val pass1 = timeAll()
     val pass2 = timeAll()
-    val lateStaged = (SparkEntry.stagedRefsSnapshot -- preStaged).toSeq.sorted
+    val lateStaged = (Staging.stagedRefsSnapshot -- preStaged).toSeq.sorted
     if (lateStaged.nonEmpty) System.err.println(
       s"[bench] WARNING: ${lateStaged.size} staging(s) first touched inside the " +
         s"timed loop (prestageAll drift): ${lateStaged.mkString(", ")}")

@@ -1,26 +1,41 @@
 package graft
+
 import java.nio.file.{Files, Paths}
+
+import graft.staging.Staging
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  private val Usage =
+    "usage: graft.Verify <sfDir> <outDir> [onlyQuery1,onlyQuery2,...]"
+
   def main(args: Array[String]): Unit = {
+    val t0 = System.nanoTime()
     // args: sfDir outDir [onlyQuery1,onlyQuery2,...] — the optional third
     // arg restricts the dump to named queries (local spot checks; the
     // driver always passes exactly two args and gets the full dump)
     val (sfDir, outDir, only) = args match {
       case Array(s, o)    => (s, o, Set.empty[String])
-      case Array(s, o, f) => (s, o, f.split(',').toSet)
+      case Array(s, o, f) => (s, o, f.split(',').map(_.trim).filter(_.nonEmpty).toSet)
+      case _ =>
+        System.err.println(Usage)
+        sys.exit(2)
     }
-    val t0 = System.nanoTime()
+    // the registry is read once: this view drives both the dump and
+    // n_queries, and an unknown name fails here, before any Spark work
+    val selected = try SparkEntry.restrictTo(only)
+      catch { case e: IllegalArgumentException =>
+        System.err.println(s"[verify] ${e.getMessage}\n$Usage")
+        sys.exit(2)
+      }
     // fail-fast digest resolution + stale-staging GC before any Spark work
-    SparkEntry.initStaging()
+    Staging.initStaging()
     val spark = GraftSession.build(GraftSession.cpus(4))
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       // remove any pre-existing output FIRST: a stale parquet from an
       // earlier run must never pass verification for a query that now fails
       val target = Paths.get(s"$outDir/$name")
@@ -73,7 +88,7 @@ object Verify {
     // count so every correctness artifact carries the trend
     Files.writeString(Paths.get(s"$outDir/verify_meta.json"),
       s"""{"verify_wall_sec": ${(System.nanoTime() - t0) / 1e9}, """ +
-        s""""n_queries": ${SparkEntry.queries.count { case (n, _) => only.isEmpty || only(n) }}, """ +
+        s""""n_queries": ${selected.size}, """ +
         s""""n_failures": ${failures.size}, "sf_dir": ${q(sfDir)}}""")
     if (failures.nonEmpty) {
       System.err.println(s"[verify] ${failures.size} quer${if (failures.size == 1) "y" else "ies"} FAILED: ${failures.keys.mkString(", ")}")

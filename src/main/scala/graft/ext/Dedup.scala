@@ -777,7 +777,7 @@ object Dedup {
     * (__id, __g, payload…). The rank depends only on the record frame
     * and the sort key — not on the neighborhood `window` — so a caller
     * running repeated linkage passes over the same records stages THIS
-    * frame once (SparkEntry's q_er_pipeline does) and pays only the
+    * frame once (the q_er_pipeline query does) and pays only the
     * explode + rank equi-join per pass. Columns are the internal names
     * ([[sortedNeighborhoodPairsFromRanked]]'s input contract); the
     * payload-collision rules from [[sortedNeighborhoodPairs]] are
@@ -848,7 +848,7 @@ object Dedup {
     * because all four downstream consumers — both candidate sides and
     * both verify joins — read it. When the SAME corpus serves repeated
     * joins, stage [[dfRankedShingleDocs]] to parquet instead and call
-    * [[prefixPairsFromRanked]] per threshold (SparkEntry's q_prefix_join
+    * [[prefixPairsFromRanked]] per threshold (the q_prefix_join query
     * does exactly that): the dictionary pass, GlobalRank and the per-doc
     * ordering are corpus artifacts, not query work.
     *

@@ -432,7 +432,7 @@ object Multimodal {
     * product every image-similarity consumer shares: at 100 TB the
     * decode+hash pass is the expensive scan, so it runs ONCE and the
     * fingerprints (16 bytes/row) are what gets stored and re-joined
-    * (SparkEntry stages exactly this frame for the near-dup and cluster
+    * (StagedArtifacts stages exactly this frame for the near-dup and cluster
     * queries). Undecodable payloads keep a null fingerprint. */
   def imageFingerprints(media: DataFrame): DataFrame = {
     val spark = media.sparkSession

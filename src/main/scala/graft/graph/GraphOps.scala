@@ -27,7 +27,7 @@ object GraphOps {
     * below: the caller certifies `edges` is ALREADY the symmetric closure
     * of a distinct, loop-free undirected edge set — both orientations of
     * every edge present exactly once — PLUS one `(n, n)` self-loop per
-    * node (the staged bucketed layout `SparkEntry.stagedCoPurchaseSym`
+    * node (the staged bucketed layout `StagedArtifacts.stagedCoPurchaseSym`
     * writes). Under the contract each operator's internal edge derivation
     * collapses from a union + distinct (which re-EXCHANGES the edge frame
     * and destroys a bucketed scan's partitioning) to a scan-preserving
@@ -1449,7 +1449,7 @@ object GraphOps {
     * partition recompute. Acceptable for a frame that lives for a handful
     * of frontier joins; a long-running job should stage the adjacency to
     * reliable storage instead (the staged-projection pattern the
-    * SparkEntry graph queries use). */
+    * graph queries use). */
   private def rankedAdjacency(edges: DataFrame, srcCol: String,
       dstCol: String, assumeSymmetric: Boolean = false): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window

@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.scheduler._
 import scala.collection.mutable
 
+import graft.staging.Staging
+
 /** Scratch profiler (not part of the product surface): run named
   * SparkEntry queries with a listener and print the per-job / per-stage
   * decomposition — job wall clock, per-stage summed task time, shuffle
@@ -16,7 +18,7 @@ object JobProfile {
     val dir = args(0)
     val names = args(1).split(',')
     val reps = args.drop(2).headOption.map(_.toInt).getOrElse(2)
-    graft.SparkEntry.initStaging()
+    Staging.initStaging()
     val spark = graft.GraftSession.build(graft.GraftSession.cpus(32))
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ext.{CorpusPipeline, Dedup, Sampling, Similarity, TextAnalysis}
+import graft.staging.{StagedArtifacts, Staging}
 
 /** Scaling-curve probe for the heaviest pipelines: times them at 1x/2x/5x
   * the sf0.1 corpus to catch super-linear steps that single-SF numbers
@@ -55,7 +56,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     // fail-fast digest resolution + stale-staging GC before any Spark work
-    graft.SparkEntry.initStaging()
+    Staging.initStaging()
     val spark = graft.GraftSession.build(graft.GraftSession.cpus(32))
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -798,7 +799,7 @@ object ScaleProbe {
       // no sort), plain pays the two-sided shuffle + sort.
       if (groups("r13")) {
       val thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      val bkt = graft.SparkEntry.stagedBaskets(spark, base) // staged build outside timers
+      val bkt = StagedArtifacts.stagedBaskets(spark, base) // staged build outside timers
       val plainPath = s"$base/baskets_plain.parquet"
       graft.ext.MarketBasket.cappedBaskets(
           spark.read.parquet(s"$base/lineitem.parquet")
@@ -837,11 +838,11 @@ object ScaleProbe {
       // the fresh-JVM warm path, and the final call (refs warm again)
       // prices the in-process fast path.
       val tBuildHtml = tq("q_html_extract")
-      graft.SparkEntry.resetStagingRefsForTest()
+      Staging.resetStagingRefsForTest()
       val tXjvmHtml = tq("q_html_extract")
       val tInprocHtml = tq("q_html_extract")
       val tBuildPj = tq("q_prefix_join")
-      graft.SparkEntry.resetStagingRefsForTest()
+      Staging.resetStagingRefsForTest()
       val tXjvmPj = tq("q_prefix_join")
       val tInprocPj = tq("q_prefix_join")
       // (d) PageRank data-motion forms at scale: the exchange form ships
@@ -851,7 +852,7 @@ object ScaleProbe {
       // Board-neutral at sf0.1 (matched A/B r13) — this cell measures
       // whether the curves diverge as edges grow 20×. Bit-identical
       // ranks either way (GraphOpsSpec pins equality).
-      val symE = graft.SparkEntry.stagedBipartiteEdges(spark, base)
+      val symE = StagedArtifacts.stagedBipartiteEdges(spark, base)
       val tPrExch = time(force(graft.graph.GraphOps.pageRankFixedPoint(
         symE, "src", "dst", iterations = 5,
         assumeDistinct = true, assumeNoDangling = true)))
@@ -876,8 +877,8 @@ object ScaleProbe {
       // triangle wedge closure (adjacency self-joins on the bucket key).
       if (groups("r14")) {
       val thr14 = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      val c16 = graft.SparkEntry.stagedCoPurchaseSymBuckets(spark, base, 16, "b16t")
-      val c32 = graft.SparkEntry.stagedCoPurchaseSymBuckets(spark, base, 32, "b32t")
+      val c16 = StagedArtifacts.stagedCoPurchaseSymBuckets(spark, base, 16, "b16t")
+      val c32 = StagedArtifacts.stagedCoPurchaseSymBuckets(spark, base, 32, "b32t")
       var tLp16 = 0.0d; var tLp32 = 0.0d; var tTri16 = 0.0d; var tTri32 = 0.0d
       try {
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -893,8 +894,8 @@ object ScaleProbe {
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr14)
         // probe-only stagings carry the live code digest and would
         // survive every sweep of this build (r14 ADVICE) — reclaim now
-        Seq("b16t", "b32t").foreach(tag => graft.SparkEntry.dropProbeStaging(
-          spark, graft.SparkEntry.coPurchaseStagingBaseName(base, tag)))
+        Seq("b16t", "b32t").foreach(tag => Staging.dropProbeStaging(
+          spark, StagedArtifacts.coPurchaseStagingBaseName(base, tag)))
       }
       // (b) q_ppr form adjudication (r13 verdict "what's wrong" #1): the
       // board showed +16% after the switch to the broadcast-iteration
@@ -903,7 +904,7 @@ object ScaleProbe {
       // board swing is not. If bcast ≥ exchange in-session, q_ppr's
       // default flips back to the exchange form (the variant's win is
       // network-bound and local-neutral by the r13 measurement).
-      val symP = graft.SparkEntry.stagedBipartiteEdges(spark, base)
+      val symP = StagedArtifacts.stagedBipartiteEdges(spark, base)
       val seeds14 = symP.select(col("src").as("node"))
         .where(col("node") % 100 === 1).distinct()
       def pprExch() = time(force(graft.graph.GraphOps.personalizedPageRankFixedPoint(
@@ -932,8 +933,8 @@ object ScaleProbe {
       // cheap label-prop cells; probe stagings reclaimed in finally.
       if (groups("r15")) {
       val thr15 = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      val p16 = graft.SparkEntry.stagedCoPurchaseSymBuckets(spark, base, 16, "b16u")
-      val p32 = graft.SparkEntry.stagedCoPurchaseSymBuckets(spark, base, 32, "b32u")
+      val p16 = StagedArtifacts.stagedCoPurchaseSymBuckets(spark, base, 16, "b16u")
+      val p32 = StagedArtifacts.stagedCoPurchaseSymBuckets(spark, base, 32, "b32u")
       var lp16a = 0.0d; var lp16b = 0.0d; var lp32a = 0.0d; var lp32b = 0.0d
       var tri16 = 0.0d; var tri32 = 0.0d
       try {
@@ -948,8 +949,8 @@ object ScaleProbe {
           p32, "a", "b", assumeSymmetric = true)))
       } finally {
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr15)
-        Seq("b16u", "b32u").foreach(tag => graft.SparkEntry.dropProbeStaging(
-          spark, graft.SparkEntry.coPurchaseStagingBaseName(base, tag)))
+        Seq("b16u", "b32u").foreach(tag => Staging.dropProbeStaging(
+          spark, StagedArtifacts.coPurchaseStagingBaseName(base, tag)))
       }
       println(f"""SCALE_R15 {"factor":$f, "copurch_lp_b16_nobc":${math.min(lp16a, lp16b)}%.2f, "copurch_lp_b32_nobc":${math.min(lp32a, lp32b)}%.2f, "copurch_tri_b16_nobc":$tri16%.2f, "copurch_tri_b32_nobc":$tri32%.2f, "lp_reps":"16=$lp16a%.2f,$lp16b%.2f 32=$lp32a%.2f,$lp32b%.2f"}""")
       }

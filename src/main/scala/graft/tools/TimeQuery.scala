@@ -1,5 +1,7 @@
 package graft.tools
 
+import graft.staging.Staging
+
 /** Debug helper: time named SparkEntry queries REP BY REP in one JVM
   * (Bench prints only the min of two passes — regression hunts need the
   * per-rep sequence to separate staging/JIT warm-up from steady state).
@@ -10,7 +12,7 @@ object TimeQuery {
     val names = args(1).split(',')
     val reps = args.drop(2).headOption.map(_.toInt).getOrElse(4)
     // fail-fast digest resolution + stale-staging GC before any Spark work
-    graft.SparkEntry.initStaging()
+    Staging.initStaging()
     val spark = graft.GraftSession.build(graft.GraftSession.cpus(32))
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>

@@ -1,5 +1,7 @@
 package graft
 
+import graft.staging.{StagedArtifacts, Staging}
+
 /** Plan-shape regression tests: the physical plans the engine relies on for
   * scale must keep their key properties (pushdown, pruning, broadcast
   * strategy, pre-shuffle top-k pruning). String checks over the executed
@@ -324,7 +326,7 @@ class PlanSpec extends SparkSpec {
     // over it must read buckets in place — no exchange, bucket-aware scan
     val digest = java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    val tp = spark.table(SparkEntry.stagedTableName(s"graft_bipartite_$digest"))
+    val tp = spark.table(Staging.stagedTableName(s"graft_bipartite_$digest"))
       .groupBy(org.apache.spark.sql.functions.col("src")).count()
       .queryExecution.executedPlan.toString()
     assert(tp.contains("Bucketed: true"),
@@ -346,7 +348,7 @@ class PlanSpec extends SparkSpec {
     // folded IN PLACE. Zero hash exchange of any size, any round — the
     // 100 TB plan exactly.
     import org.apache.spark.sql.functions.col
-    val sym = SparkEntry.stagedBipartiteEdges(spark, dir)
+    val sym = StagedArtifacts.stagedBipartiteEdges(spark, dir)
     val df = graft.graph.GraphOps.pageRankFixedPoint(
       sym, "src", "dst", iterations = 5, assumeDistinct = true,
       assumeNoDangling = true,
@@ -401,7 +403,7 @@ class PlanSpec extends SparkSpec {
     // a bucket-keyed rollup repeatedly — every plan must stay
     // bucket-aware and the session flag must read true throughout.
     import org.apache.spark.sql.functions.col
-    val sym = SparkEntry.stagedCoPurchaseSymBuckets(spark, dir, 16, "")
+    val sym = StagedArtifacts.stagedCoPurchaseSymBuckets(spark, dir, 16, "")
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
     val err = new java.util.concurrent.atomic.AtomicReference[Throwable]()
     val pinner = new Thread(() => {
@@ -451,7 +453,7 @@ class PlanSpec extends SparkSpec {
     SparkEntry.queries("q_pagerank")(spark, dir).queryExecution.toRdd.count()
     val digest = java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    val e = spark.table(SparkEntry.stagedTableName(s"graft_bipartite_$digest"))
+    val e = spark.table(Staging.stagedTableName(s"graft_bipartite_$digest"))
     val asymmetric = e.select(col("dst").as("src"), col("src").as("dst"))
       .except(e.select(col("src"), col("dst")))
     assert(asymmetric.isEmpty,
@@ -479,7 +481,7 @@ class PlanSpec extends SparkSpec {
     // GraphOps derivation (degrees, adjacency windows, peel rounds) rides
     val digest = java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    val tp = spark.table(SparkEntry.stagedTableName(s"graft_copurch_$digest"))
+    val tp = spark.table(Staging.stagedTableName(s"graft_copurch_$digest"))
       .where(org.apache.spark.sql.functions.col("a") =!=
         org.apache.spark.sql.functions.col("b"))
       .groupBy(org.apache.spark.sql.functions.col("a")).count()
@@ -494,7 +496,7 @@ class PlanSpec extends SparkSpec {
     // adjacency before every walk batch)
     val wf = org.apache.spark.sql.expressions.Window
       .partitionBy(org.apache.spark.sql.functions.col("v"))
-    val ap = spark.table(SparkEntry.stagedTableName(s"graft_copurch_$digest"))
+    val ap = spark.table(Staging.stagedTableName(s"graft_copurch_$digest"))
       .where(org.apache.spark.sql.functions.col("a") =!=
         org.apache.spark.sql.functions.col("b"))
       .select(org.apache.spark.sql.functions.col("a").as("v"),
@@ -515,7 +517,7 @@ class PlanSpec extends SparkSpec {
     // over the existing location) must reattach WITHOUT rewriting data.
     val digest = java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    val name = SparkEntry.stagedTableName(s"graft_copurch_$digest")
+    val name = Staging.stagedTableName(s"graft_copurch_$digest")
     SparkEntry.queries("q_label_prop")(spark, dir).queryExecution.toRdd.count()
     val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     val loc = java.nio.file.Paths.get(wh, name)
@@ -560,7 +562,7 @@ class PlanSpec extends SparkSpec {
     val d = tmp.toString
     val digest = java.security.MessageDigest.getInstance("MD5")
       .digest(d.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    val name = SparkEntry.stagedTableName(s"graft_copurch_$digest")
+    val name = Staging.stagedTableName(s"graft_copurch_$digest")
     val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     val marker = java.nio.file.Paths.get(wh, name, "_GRAFT_STAGED.properties")
     def run(): Seq[String] = {
@@ -583,14 +585,14 @@ class PlanSpec extends SparkSpec {
     def dataFileTimes(): Map[String, java.nio.file.attribute.FileTime] = {
       val st = java.nio.file.Files.list(java.nio.file.Paths.get(wh, name))
       try st.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
-        .filter(p => p.getFileName.toString != SparkEntry.StagingMarkerName)
+        .filter(p => p.getFileName.toString != Staging.StagingMarkerName)
         .map(p => p.getFileName.toString ->
           java.nio.file.Files.getLastModifiedTime(p)).toMap
       finally st.close()
     }
     val files1 = dataFileTimes()
     // fresh process, untouched input -> reuse (staging files not rewritten)
-    SparkEntry.resetStagingRefsForTest()
+    Staging.resetStagingRefsForTest()
     spark.sql(s"DROP TABLE IF EXISTS $name")
     assert(run() == r1)
     assert(markerFp() == fp1)
@@ -603,29 +605,29 @@ class PlanSpec extends SparkSpec {
     java.nio.file.Files.setLastModifiedTime(li,
       java.nio.file.attribute.FileTime.fromMillis(
         java.nio.file.Files.getLastModifiedTime(li).toMillis + 5000))
-    SparkEntry.resetStagingRefsForTest()
+    Staging.resetStagingRefsForTest()
     spark.sql(s"DROP TABLE IF EXISTS $name")
     assert(run() == r1, "same bytes, new mtime: results must be unchanged")
     assert(markerFp() != fp1, "mutated input did not force a staging rebuild")
     // fresh process, same input, STALE CODE: the fingerprint's first
     // component is the digest of the compiled graft classes
-    // (SparkEntry.logicDigest), so a frame staged by an older build
+    // (Staging.logicDigest), so a frame staged by an older build
     // carries a different prefix — simulate one by rewriting the marker
     // with a bogus logic digest and prove the next probe REBUILDS
     // instead of serving the stale frame (the failure mode the manual
     // StagingEpoch constant could not rule out: builder edited, epoch
     // bump forgotten, stale frame served silently)
     val fp2 = markerFp()
-    assert(fp2.startsWith(SparkEntry.logicDigest + ":"),
+    assert(fp2.startsWith(Staging.logicDigest + ":"),
       s"staging fingerprint must lead with the code digest, got $fp2")
     val staleProps = new java.util.Properties()
     val in2 = java.nio.file.Files.newInputStream(marker)
     try staleProps.load(in2) finally in2.close()
     staleProps.setProperty("fp",
-      "0" * SparkEntry.logicDigest.length + fp2.drop(SparkEntry.logicDigest.length))
+      "0" * Staging.logicDigest.length + fp2.drop(Staging.logicDigest.length))
     val out2 = java.nio.file.Files.newOutputStream(marker)
     try staleProps.store(out2, null) finally out2.close()
-    SparkEntry.resetStagingRefsForTest()
+    Staging.resetStagingRefsForTest()
     spark.sql(s"DROP TABLE IF EXISTS $name")
     assert(run() == r1, "rebuild from current code: results must be unchanged")
     assert(markerFp() == fp2,
@@ -633,7 +635,7 @@ class PlanSpec extends SparkSpec {
     // leave the shared staging set coherent for later tests in this JVM,
     // and clear this test's throwaway catalog + warehouse entries (the
     // tmp-dir digest is random per run — leftovers would only accrete)
-    SparkEntry.resetStagingRefsForTest()
+    Staging.resetStagingRefsForTest()
     spark.sql(s"DROP TABLE IF EXISTS $name")
     graft.etl.Context.deleteRecursively(java.nio.file.Paths.get(wh, name))
     graft.etl.Context.deleteRecursively(tmp)
@@ -1108,7 +1110,7 @@ class PlanSpec extends SparkSpec {
     // key (the same contract q_bucket_join pins for the fact-dim join)
     val digest = java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    val bkt = spark.table(SparkEntry.stagedTableName(s"graft_baskets_$digest"))
+    val bkt = spark.table(Staging.stagedTableName(s"graft_baskets_$digest"))
     val gp = bkt.groupBy(org.apache.spark.sql.functions.col("g")).count()
       .queryExecution.executedPlan.toString()
     assert(gp.contains("Bucketed: true") && !gp.contains("Exchange"),
@@ -1193,7 +1195,7 @@ class PlanSpec extends SparkSpec {
     // candidate sub-plan the query actually executes: each pass must be
     // a parquet scan of its staged rank frame, with no Scan ExistingRDD
     // (GlobalRank's localCheckpoint signature = a per-call rank pass)
-    val (rankedName, rankedPkey) = SparkEntry.stagedErRanks(spark, dir)
+    val (rankedName, rankedPkey) = StagedArtifacts.stagedErRanks(spark, dir)
     for ((r, nm) <- Seq((rankedName, "errankname"), (rankedPkey, "errankpkey"))) {
       val p = graft.ext.Dedup
         .sortedNeighborhoodPairsFromRanked(r, window = 3, payload = Seq("name"))
@@ -1388,7 +1390,7 @@ class PlanSpec extends SparkSpec {
     // hitsFixedPoint itself — here the half-round plan must be
     // exchange-free and node-side-built).
     import org.apache.spark.sql.functions.{broadcast, col, lit, sum}
-    val sym = SparkEntry.stagedBipartiteEdges(spark, dir)
+    val sym = StagedArtifacts.stagedBipartiteEdges(spark, dir)
     val e = graft.graph.GraphOps.pinForProbe(
       sym.where(col("src") % 2 === 0).select(col("src"), col("dst")))
     val eDst = graft.graph.GraphOps.pinForProbe(

@@ -1,14 +1,15 @@
 package graft
 
-/** Pins [[SparkEntry.prestageAll]]'s completeness at TEST time (r13
+import graft.staging.{StagedArtifacts, Staging}
+
+/** Pins [[StagedArtifacts.prestageAll]]'s completeness at TEST time (r13
   * verdict #3): the runtime `late_staged` self-audit only fires when a
-  * Bench actually runs — a staged helper added without a prestage entry
-  * silently degrades the build/warm split until someone reads stderr.
-  * Here: prestage everything, snapshot the staged-ref set, CONSTRUCT
-  * every registered query (staging happens eagerly inside the query
-  * closures, so construction alone exercises every staged path), and
-  * assert the set did not grow. Commenting any entry out of
-  * [[SparkEntry.prestageAll]] fails this test. */
+  * Bench actually runs — a staging that bypasses the artifacts
+  * [[StagedArtifacts]] records silently degrades the build/warm split
+  * until someone reads stderr. Here: prestage everything, snapshot the
+  * staged-ref set, CONSTRUCT every registered query (staging happens
+  * eagerly inside the query closures, so construction alone exercises
+  * every staged path), and assert the set did not grow. */
 class PrestageSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
@@ -19,16 +20,16 @@ class PrestageSpec extends SparkSpec {
     // missing prestage entry (the ref is present before the snapshot) —
     // reset so this test exercises prestageAll from a clean set exactly
     // like a fresh Bench JVM does
-    SparkEntry.resetStagingRefsForTest()
-    SparkEntry.prestageAll(spark, dir)
-    val preStaged = SparkEntry.stagedRefsSnapshot
+    Staging.resetStagingRefsForTest()
+    StagedArtifacts.prestageAll(spark, dir)
+    val preStaged = Staging.stagedRefsSnapshot
     // construction only — the staged helpers run (and register) inside
     // the closures; executing 254 queries here would re-run Verify
     var seen = preStaged
     val lateByQuery = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
         fn(spark, dir): Unit
-        val now = SparkEntry.stagedRefsSnapshot
+        val now = Staging.stagedRefsSnapshot
         val late = now -- seen
         seen = now
         late.map(name -> _)
@@ -52,7 +53,7 @@ class PrestageSpec extends SparkSpec {
     val lateByExec = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
         fn(spark, dir).limit(1).queryExecution.toRdd.count(): Unit
-        val now = SparkEntry.stagedRefsSnapshot
+        val now = Staging.stagedRefsSnapshot
         val late = now -- seenExec
         seenExec = now
         late.map(name -> _)

@@ -1,5 +1,7 @@
 package graft
 
+import graft.staging.{StagedArtifacts, Staging}
+
 import java.nio.file.{Files, Path, Paths}
 import java.nio.file.attribute.FileTime
 
@@ -10,7 +12,7 @@ import java.nio.file.attribute.FileTime
   *     stagings and a rebuild under one digest never touches the
   *     other's files (the exact hazard round 12 fixed).
   *  2. GC — digest rotation strands the previous build's artifact set;
-  *     [[SparkEntry.sweepStaleStagings]] reaps stale-digest stagings
+  *     [[Staging.sweepStaleStagings]] reaps stale-digest stagings
   *     past the age guard while keeping the current build's and any
   *     recently-touched foreign build's (a live A/B partner refreshes
   *     its marker mtime on every reuse), so disk stays flat across
@@ -19,12 +21,12 @@ class StagingSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
   private val hour = 3600_000L
-  private def code8 = SparkEntry.logicDigest.take(8)
+  private def code8 = Staging.logicDigest.take(8)
 
   private def mkStaging(p: Path, markerAgeMillis: Long, now: Long): Path = {
     Files.createDirectories(p)
     Files.write(p.resolve("part-0.parquet"), "data".getBytes("UTF-8"))
-    val marker = p.resolve(SparkEntry.StagingMarkerName)
+    val marker = p.resolve(Staging.StagingMarkerName)
     Files.write(marker, "fp=test".getBytes("UTF-8"))
     Files.setLastModifiedTime(marker, FileTime.fromMillis(now - markerAgeMillis))
     p
@@ -57,12 +59,12 @@ class StagingSpec extends SparkSpec {
     // (the ADVICE r13 belt-and-braces guard)
     val ownedOddName = root.resolve("graft_z_cccccccc_deadbeef")
     Files.createDirectories(ownedOddName)
-    Files.write(ownedOddName.resolve(SparkEntry.StagingMarkerName),
-      s"fp=${SparkEntry.logicDigest}\\:abc123".getBytes("UTF-8"))
-    Files.setLastModifiedTime(ownedOddName.resolve(SparkEntry.StagingMarkerName),
+    Files.write(ownedOddName.resolve(Staging.StagingMarkerName),
+      s"fp=${Staging.logicDigest}\\:abc123".getBytes("UTF-8"))
+    Files.setLastModifiedTime(ownedOddName.resolve(Staging.StagingMarkerName),
       FileTime.fromMillis(now - 48 * hour))
 
-    val deleted = SparkEntry.sweepStaleStagings(Seq(root), maxAge, now).toSet
+    val deleted = Staging.sweepStaleStagings(Seq(root), maxAge, now).toSet
     assert(deleted == Set(staleOld, orphanOld, lockOld),
       s"sweep deleted the wrong set: $deleted")
     assert(Files.exists(current), "current-digest staging must survive any age")
@@ -75,7 +77,7 @@ class StagingSpec extends SparkSpec {
         "regardless of its name tail")
     assert(!Files.exists(staleOld) && !Files.exists(orphanOld) && !Files.exists(lockOld))
     // idempotent + disk-flat: a second sweep finds nothing
-    assert(SparkEntry.sweepStaleStagings(Seq(root), maxAge, now).isEmpty)
+    assert(Staging.sweepStaleStagings(Seq(root), maxAge, now).isEmpty)
     graft.etl.Context.deleteRecursively(root)
   }
 
@@ -94,12 +96,12 @@ class StagingSpec extends SparkSpec {
       java.nio.file.StandardOpenOption.WRITE)
     val held = ch.lock()
     try {
-      assert(SparkEntry.sweepStaleStagings(Seq(root), 12 * hour, now).isEmpty,
+      assert(Staging.sweepStaleStagings(Seq(root), 12 * hour, now).isEmpty,
         "sweep unlinked a HELD lock")
       assert(Files.exists(lock))
     } finally { held.release(); ch.close() }
     // nobody holds it now — the stale lock is inert and reapable
-    assert(SparkEntry.sweepStaleStagings(Seq(root), 12 * hour, now) == Seq(lock))
+    assert(Staging.sweepStaleStagings(Seq(root), 12 * hour, now) == Seq(lock))
     assert(!Files.exists(lock))
     graft.etl.Context.deleteRecursively(root)
   }
@@ -121,15 +123,15 @@ class StagingSpec extends SparkSpec {
       java.nio.file.StandardOpenOption.READ)
     try {
       // sweep reaps: tombstone write + unlink, all while holding tryLock
-      assert(SparkEntry.sweepStaleStagings(Seq(root), 12 * hour, now) == Seq(lock))
+      assert(Staging.sweepStaleStagings(Seq(root), 12 * hour, now) == Seq(lock))
       assert(!Files.exists(lock))
       // the contender now locks the ORPHANED inode — and must see the mark
       val l = ch1.lock()
       try {
-        val buf = java.nio.ByteBuffer.allocate(SparkEntry.LockTombstone.length)
+        val buf = java.nio.ByteBuffer.allocate(Staging.LockTombstone.length)
         val n = ch1.read(buf, 0L)
-        assert(n == SparkEntry.LockTombstone.length &&
-          java.util.Arrays.equals(buf.array(), SparkEntry.LockTombstone),
+        assert(n == Staging.LockTombstone.length &&
+          java.util.Arrays.equals(buf.array(), Staging.LockTombstone),
           "reaped inode carries no tombstone — the orphan window is open again")
       } finally l.release()
     } finally ch1.close()
@@ -145,9 +147,9 @@ class StagingSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft_tombretry_spec")
     val base = root.resolve("graft_x_bbbbbbbb_deadbeef")
     val lock = Paths.get(base.toString + ".lock")
-    Files.write(lock, SparkEntry.LockTombstone)
+    Files.write(lock, Staging.LockTombstone)
     var ran = false
-    val out = SparkEntry.withBuildLock(base.toString) { ran = true; 42 }
+    val out = Staging.withBuildLock(base.toString) { ran = true; 42 }
     assert(out == 42 && ran, "body did not run after the tombstone retry")
     assert(Files.exists(lock), "retry did not recreate a live lock file")
     assert(Files.size(lock) == 0L,
@@ -166,27 +168,27 @@ class StagingSpec extends SparkSpec {
     val classes = t.resolve("repo/target/scala-2.13/classes")
     Files.createDirectories(classes)
     Files.createDirectories(t.resolve("repo/spark-warehouse"))
-    assert(SparkEntry.warehouseFromCodeSource(classes)
+    assert(Staging.warehouseFromCodeSource(classes)
       .contains(t.resolve("repo/spark-warehouse")))
     // sbt-layout jar: <root>/target/scala-2.13/app.jar
     val sbtJar = t.resolve("repo2/target/scala-2.13/app.jar")
     Files.createDirectories(sbtJar.getParent)
     Files.write(sbtJar, Array[Byte](1))
     Files.createDirectories(t.resolve("repo2/spark-warehouse"))
-    assert(SparkEntry.warehouseFromCodeSource(sbtJar)
+    assert(Staging.warehouseFromCodeSource(sbtJar)
       .contains(t.resolve("repo2/spark-warehouse")))
     // deployed jar next to its warehouse: <dir>/app.jar + <dir>/spark-warehouse
     val appJar = t.resolve("deploy/app.jar")
     Files.createDirectories(appJar.getParent)
     Files.write(appJar, Array[Byte](1))
     Files.createDirectories(t.resolve("deploy/spark-warehouse"))
-    assert(SparkEntry.warehouseFromCodeSource(appJar)
+    assert(Staging.warehouseFromCodeSource(appJar)
       .contains(t.resolve("deploy/spark-warehouse")))
     // no warehouse anywhere → None (caller falls back loudly)
     val lost = t.resolve("elsewhere/lib/app.jar")
     Files.createDirectories(lost.getParent)
     Files.write(lost, Array[Byte](1))
-    assert(SparkEntry.warehouseFromCodeSource(lost).isEmpty)
+    assert(Staging.warehouseFromCodeSource(lost).isEmpty)
     graft.etl.Context.deleteRecursively(t)
   }
 
@@ -195,11 +197,11 @@ class StagingSpec extends SparkSpec {
     // reader (sweep root) must decode the SAME way or an encoded
     // warehouse path splits them — stagings written under the raw string,
     // sweep scanning the decoded one
-    assert(SparkEntry.warehousePathFromConf("file:/a/b") == Paths.get("/a/b"))
-    assert(SparkEntry.warehousePathFromConf("file:/a/with%20space/w")
+    assert(Staging.warehousePathFromConf("file:/a/b") == Paths.get("/a/b"))
+    assert(Staging.warehousePathFromConf("file:/a/with%20space/w")
       == Paths.get("/a/with space/w"))
-    assert(SparkEntry.warehousePathFromConf("/plain/path") == Paths.get("/plain/path"))
-    assert(SparkEntry.warehousePathFromConf("spark-warehouse")
+    assert(Staging.warehousePathFromConf("/plain/path") == Paths.get("/plain/path"))
+    assert(Staging.warehousePathFromConf("spark-warehouse")
       == Paths.get("spark-warehouse"))
   }
 
@@ -208,7 +210,7 @@ class StagingSpec extends SparkSpec {
     // the GC whenever the launcher's cwd is not the repo root (r13
     // verdict #5) — with a live session the root must BE the session's
     // configured warehouse dir, absolute
-    val wh = SparkEntry.sweepWarehouseRoot
+    val wh = Staging.sweepWarehouseRoot
     assert(wh.isAbsolute, s"warehouse sweep root is cwd-relative: $wh")
     val conf = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     assert(wh == Paths.get(conf),
@@ -223,7 +225,7 @@ class StagingSpec extends SparkSpec {
 
   test("coexisting code digests never clobber each other's stagings") {
     // a REAL staged artifact under the current digest
-    SparkEntry.stagedErRanks(spark, dir)._1.count()
+    StagedArtifacts.stagedErRanks(spark, dir)._1.count()
     val tmp = Paths.get("/tmp")
     val st = Files.list(tmp)
     val cur = try st.toArray.map(_.asInstanceOf[Path]).find(
@@ -244,14 +246,14 @@ class StagingSpec extends SparkSpec {
     // a REAL A/B partner's marker fingerprint leads with ITS digest, not
     // ours — rewrite it, or the sweep's marker-fp ownership guard would
     // (correctly) treat the copied marker as this build's own artifact
-    Files.write(partner.resolve(SparkEntry.StagingMarkerName),
+    Files.write(partner.resolve(Staging.StagingMarkerName),
       "fp=0abcde12ffffffffffffffffffffffff:test".getBytes("UTF-8"))
     val snapshot = listFiles(partner)
       .map(f => f.getFileName.toString -> Files.size(f)).toMap
     // drive the current build back through the cross-JVM probe (marker
     // re-check + potential rebuild) — the partner must be untouched
-    SparkEntry.resetStagingRefsForTest()
-    SparkEntry.stagedErRanks(spark, dir)._1.count()
+    Staging.resetStagingRefsForTest()
+    StagedArtifacts.stagedErRanks(spark, dir)._1.count()
     val after = listFiles(partner)
       .map(f => f.getFileName.toString -> Files.size(f)).toMap
     assert(after == snapshot,
@@ -272,7 +274,7 @@ class StagingSpec extends SparkSpec {
     val curCopy = copyInto(cur.get)
     val partnerCopy = copyInto(partner)
     val future = System.currentTimeMillis() + 100 * hour
-    val deleted = SparkEntry.sweepStaleStagings(Seq(gcRoot), 12 * hour, future)
+    val deleted = Staging.sweepStaleStagings(Seq(gcRoot), 12 * hour, future)
     assert(deleted == Seq(partnerCopy),
       s"sweep must reap exactly the stale partner, got: $deleted")
     assert(Files.exists(curCopy), "current staging reaped by its own sweep")

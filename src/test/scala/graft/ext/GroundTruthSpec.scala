@@ -346,7 +346,7 @@ class GroundTruthSpec extends SparkSpec {
 
   test("approx_percentile caps honor the sketch's rank-error bound (q_*_approx scale twins)") {
     val li = spark.read.parquet(s"$dir/lineitem.parquet")
-    val acc = 10000 // must match SparkEntry.PctSketchAccuracy
+    val acc = 10000 // must match RelationalQueries.PctSketchAccuracy
     val approx = li.groupBy(col("l_returnflag"))
       .agg(expr(s"approx_percentile(l_extendedprice, array(0.05, 0.5, 0.95), $acc)").as("caps"))
       .collect().map(r => r.getString(0) -> r.getSeq[Double](1)).toMap

@@ -3,7 +3,8 @@
 driver's DuckDB compare: register each test table as a view, run the oracle
 SQL, and compare to the Spark-written parquet with columns sorted by name
 and rows sorted. Exact value equality (no float tolerance) — if this
-passes, any reasonable hash compare passes."""
+passes, any reasonable hash compare passes. Every registered query has an
+oracle, so a Spark output directory without one is a FAIL too."""
 import sys, json, glob
 import duckdb
 import pandas as pd
@@ -15,7 +16,7 @@ def main(sf_dir: str, out_dir: str) -> int:
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-    failures = 0
+    failures = ok = 0
     for name in sorted(oracle):
         sql = oracle[name]
         files = glob.glob(f"{out_dir}/{name}/*.parquet")
@@ -40,12 +41,14 @@ def main(sf_dir: str, out_dir: str) -> int:
         try:
             pd.testing.assert_frame_equal(g, e, check_dtype=False, check_exact=True)
             print(f"OK   {name}: {len(g)} rows{dtype_note}")
+            ok += 1
         except AssertionError as ex:
             msg = str(ex).splitlines()
             print(f"FAIL {name}: values differ{dtype_note}: {' / '.join(msg[:3])}")
             failures += 1
-    extra = [q for q in glob.glob(f"{out_dir}/q_*") if q.split('/')[-1] not in oracle]
-    print(f"(rows-only, no oracle: {sorted(x.split('/')[-1] for x in extra)})")
+    for name in sorted({q.split('/')[-1] for q in glob.glob(f"{out_dir}/q_*")} - set(oracle)):
+        print(f"FAIL {name}: spark output has no oracle"); failures += 1
+    print(f"{ok} OK, {failures} FAIL")
     return failures
 
 if __name__ == "__main__":
