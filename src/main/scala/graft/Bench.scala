@@ -14,8 +14,6 @@ object Bench {
     catch { case _: Throwable => -1.0 }
 
   def main(args: Array[String]): Unit = {
-    // fail-fast digest resolution + stale-staging GC before any Spark work
-    Staging.initStaging()
     val loadStart = loadAvg1m()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = GraftSession.cpus(32)
@@ -30,6 +28,9 @@ object Bench {
       case None        => SparkEntry.queries
     }
     val spark = GraftSession.build(cpus)
+    // fail-fast digest resolution + stale-staging GC of /tmp and this
+    // session's warehouse, before any Spark work
+    Staging.initStaging(spark)
     spark.sparkContext.setLogLevel("WARN")
     // sf0.01 runs every kernel long enough for the JIT to compile the hot
     // loops — without it the timed numbers measure first-run compilation,

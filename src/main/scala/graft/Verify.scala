@@ -29,9 +29,10 @@ object Verify {
         System.err.println(s"[verify] ${e.getMessage}\n$Usage")
         sys.exit(2)
       }
-    // fail-fast digest resolution + stale-staging GC before any Spark work
-    Staging.initStaging()
     val spark = GraftSession.build(GraftSession.cpus(4))
+    // fail-fast digest resolution + stale-staging GC of /tmp and this
+    // session's warehouse, before any Spark work
+    Staging.initStaging(spark)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]

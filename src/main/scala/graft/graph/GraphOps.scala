@@ -147,7 +147,7 @@ object GraphOps {
     * non-bucketed inputs the whole move is a no-op.
     *
     * The disable is SESSION-LOCAL by construction: the pin re-plans the
-    * frame on a `cloneSession()` whose conf carries the flag off, so no
+    * frame on a cloned session whose conf carries the flag off, so no
     * planner on the caller's session can ever observe auto-bucketed-scan
     * disabled — there is no shared-conf flip, no restore window, and no
     * serialization lock (r14 flipped the shared conf under a lock, which
@@ -184,11 +184,8 @@ object GraphOps {
   private def pinKeepingLayout(df: DataFrame): DataFrame = {
     val s = df.sparkSession
     val clone = pinClones.synchronized {
-      pinClones.getOrElseUpdate(s, {
-        val c = org.apache.spark.sql.graftbridge.DatasetBridge.cloneSession(s)
-        c.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-        c
-      })
+      pinClones.getOrElseUpdate(s,
+        confClone(s, "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false"))
     }
     org.apache.spark.sql.graftbridge.DatasetBridge.localCheckpointKeepingLayout(
       org.apache.spark.sql.graftbridge.DatasetBridge
@@ -197,6 +194,21 @@ object GraphOps {
 
   private[this] val pinClones =
     new scala.collection.mutable.WeakHashMap[SparkSession, SparkSession]
+
+  /** A session on `s`'s SparkContext, shared state and extensions with a
+    * copy of `s`'s SQL conf plus `overrides` — the clone behind
+    * [[pinKeepingLayout]] and [[loopFrame]]. Built with `newSession`, not
+    * `cloneSession`: a cloned SessionState keeps its parent state and,
+    * through it, the parent session reachable, so a clone cached under
+    * its source session in a weak-keyed map would keep that key alive
+    * for the JVM's life. Only conf matters to the frames re-bound here:
+    * their plans arrive already analyzed. */
+  private def confClone(s: SparkSession, overrides: (String, String)*): SparkSession = {
+    val c = s.newSession()
+    s.conf.getAll.foreach { case (k, v) => if (c.conf.isModifiable(k)) c.conf.set(k, v) }
+    overrides.foreach { case (k, v) => c.conf.set(k, v) }
+    c
+  }
 
   /** Test hook for [[pinKeepingLayout]] — lets PlanSpec replay one
     * fixed-point round with the REAL pin semantics; never used by query
@@ -257,19 +269,16 @@ object GraphOps {
       val sessionParts = s.conf.get("spark.sql.shuffle.partitions", "200").toInt
       val derived = math.max(1L, bytes >> 20).min(sessionParts.toLong).toInt
       val npart = Integer.highestOneBit(derived) // quantize: bounded clone count
+      // the source session is often the PIN clone (pinned frames live
+      // there), which carries autoBucketedScan=false for its own
+      // checkpoint planning — restore the default here so any staged-
+      // table scan planned inside the loop keeps its bucket-aware read
       val clone = loopClones.synchronized {
-        loopClones.getOrElseUpdate(s,
-          scala.collection.mutable.Map.empty).getOrElseUpdate(npart, {
-          val c = org.apache.spark.sql.graftbridge.DatasetBridge.cloneSession(s)
-          c.conf.set("spark.sql.adaptive.enabled", "false")
-          c.conf.set("spark.sql.shuffle.partitions", npart.toString)
-          // the source session is often the PIN clone (pinned frames live
-          // there), which carries autoBucketedScan=false for its own
-          // checkpoint planning — restore the default here so any staged-
-          // table scan planned inside the loop keeps its bucket-aware read
-          c.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "true")
-          c
-        })
+        loopClones.getOrElseUpdate(s, scala.collection.mutable.Map.empty)
+          .getOrElseUpdate(npart, confClone(s,
+            "spark.sql.adaptive.enabled" -> "false",
+            "spark.sql.shuffle.partitions" -> npart.toString,
+            "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "true"))
       }
       org.apache.spark.sql.graftbridge.DatasetBridge.ofRows(
         clone, df.queryExecution.analyzed)

@@ -32,11 +32,11 @@ object Tables {
     * any catalog does, never rows or results.
     *
     * Safety: the cache is per-JVM and keyed by the absolute path. Raw
-    * fixture tables are immutable during a run; staged artifacts embed
-    * the code digest in their path, so a logic change that could alter
-    * the written schema also changes the cache key. The one conf that
-    * shapes inference (`nanosAsLong`) is fixed at session build by every
-    * entry point, before any read. */
+    * fixture tables are immutable during a run; a staged artifact's path
+    * is named by its input content and code digest and is written once,
+    * so anything that could alter the written schema also changes the
+    * cache key. The one conf that shapes inference (`nanosAsLong`) is
+    * fixed at session build by every entry point, before any read. */
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
 
@@ -47,12 +47,6 @@ object Tables {
       _ => spark.read.parquet(path).schema)
     spark.read.schema(sch).parquet(path)
   }
-
-  /** Drop a cached schema — called by the staging layer when it REBUILDS
-    * an artifact at an existing path (input mutation under the same code
-    * digest), the one case where a path's schema could legally change
-    * within a JVM. */
-  def invalidateSchema(path: String): Unit = schemaCache.remove(path): Unit
 
   /** Exact integer micros-since-epoch for an event-time column of ANY of
     * the shapes `ts` can arrive in (TIMESTAMP, TIMESTAMP_NTZ). The session

@@ -328,113 +328,58 @@ object StagedArtifacts {
       shingleSize = 5, numHashes = 128, bands = 16, threshold = 0.5))
   }
 
-  /** Stage documents HIVE-PARTITIONED by lang once per (JVM, input
-    * dir) — the standard 100 TB layout move for a column every query
+  /** Stage documents HIVE-PARTITIONED by lang once per (input content,
+    * code digest) — the standard 100 TB layout move for a column every query
     * filters on: `lang=en/` directories make the filter a PARTITION
     * filter, so a one-language query never opens the other languages'
     * files at all (directory-level pruning, cheaper than any row-group
     * zone map). q_partition_prune pins `PartitionFilters` non-empty in
     * its plan. */
   private[graft] val partitionedDocsPath: Staged[String] = staged("docsByLang") { (s, dir) =>
-    val digest = dirDigest(dir)
-    // code-digest tail even though this is a per-JVM rebuilt path: the
-    // GC classifies staleness by the trailing 8 hex, and a dir-digest
-    // tail would read as "stale" to every OTHER build's sweep — a
-    // long-lived idle JVM could have these files reaped under it while
-    // its stagedRefs entry still says they exist (ADVICE r13)
-    val path = s"/tmp/graft_docs_bylang_${digest}_${logicDigest.take(8)}"
-    if (stagedRefs.add(path))
-      try t(s, dir, "documents").write.mode("overwrite")
-        .partitionBy("lang").parquet(path)
-      catch { case t0: Throwable => stagedRefs.remove(path); throw t0 }
-    // no marker here (per-JVM rebuild path) — touch the dir itself so the
-    // GC age guard sees a live consumer
-    touchMarker(java.nio.file.Paths.get(path))
-    path
+    stagedPath("docs_bylang", dir, Seq("documents")) { tmp =>
+      t(s, dir, "documents").write.partitionBy("lang").parquet(tmp.toString)
+    }.toString
   }
 
-  /** Stage two SCHEMA-DRIFTED document snapshots once per (JVM, input
-    * dir): v1 carries (doc_id, text) only — an early export before the
+  /** Stage two SCHEMA-DRIFTED document snapshots once per (input
+    * content, code digest), as the `v1` and `v2` subdirs of one staging:
+    * v1 carries (doc_id, text) only — an early export before the
     * lang/source columns existed — v2 the full schema. The disjoint id
     * ranges make the union well-defined; q_schema_evolution reads both
     * with `mergeSchema` and the missing v1 columns surface as nulls,
     * the contract a long-lived 100 TB dataset's readers depend on as
     * its schema accretes columns. */
   private[graft] val schemaDriftPaths: Staged[(String, String)] = staged("schemaDrift") { (s, dir) =>
-    val digest = dirDigest(dir)
-    // code-digest tails for the same GC-classification reason as
-    // partitionedDocsPath: every live build's artifacts must read as
-    // "current" to its own sweep and as age-guarded stale to others'
-    val p1 = s"/tmp/graft_docs_v1_${digest}_${logicDigest.take(8)}"
-    val p2 = s"/tmp/graft_docs_v2_${digest}_${logicDigest.take(8)}"
-    if (stagedRefs.add(p1)) {
-      try {
-        val docs = t(s, dir, "documents")
-        docs.where(col("doc_id") % 10 < 8)
-          .select(col("doc_id"), col("text"))
-          .write.mode("overwrite").parquet(p1)
-        docs.where(col("doc_id") % 10 >= 8)
-          .select(col("doc_id"), col("text"), col("lang"), col("source"))
-          .write.mode("overwrite").parquet(p2)
-      } catch { case t0: Throwable => stagedRefs.remove(p1); throw t0 }
+    val p = stagedPath("docs_drift", dir, Seq("documents")) { tmp =>
+      val docs = t(s, dir, "documents")
+      docs.where(col("doc_id") % 10 < 8)
+        .select(col("doc_id"), col("text"))
+        .write.parquet(tmp.resolve("v1").toString)
+      docs.where(col("doc_id") % 10 >= 8)
+        .select(col("doc_id"), col("text"), col("lang"), col("source"))
+        .write.parquet(tmp.resolve("v2").toString)
     }
-    // per-JVM rebuild path, no marker — dir touch keeps the GC age guard
-    // honest for a long-lived consumer
-    touchMarker(java.nio.file.Paths.get(p1))
-    touchMarker(java.nio.file.Paths.get(p2))
-    (p1, p2)
+    (p.resolve("v1").toString, p.resolve("v2").toString)
   }
 
-  /** Stage the documents table as JSONL once per (JVM, input dir) — the
-    * q_jsonl_roundtrip fixture. Same staging discipline (and set) as
-    * [[bucketedRefTable]]: the one-time write is not charged to every
-    * timed pass, and the path carries the dir digest so SFs never mix. */
+  /** Stage the documents table as JSONL once per (input content, code
+    * digest) — the q_jsonl_roundtrip fixture: the one-time write is not
+    * charged to every timed pass. */
   private[graft] val jsonlStagePath: Staged[String] = staged("jsonl") { (s, dir) =>
-    val digest = dirDigest(dir)
-    val path = s"/tmp/graft_jsonl_${digest}_${logicDigest.take(8)}"
-    val marker = java.nio.file.Paths.get(path, StagingMarkerName)
-    if (stagedRefs.add(path)) {
-      try {
-        // same marker-gated cross-JVM reuse as stagedParquet (Jsonl.write
-        // emits a _SUCCESS on commit like any Hadoop-committer sink)
-        val fp = logicDigest + ":" + inputFingerprint(dir, Seq("documents"))
-        def reusable = readMarker(marker).exists(_.getProperty("fp") == fp) &&
-          java.nio.file.Files.exists(java.nio.file.Paths.get(path, "_SUCCESS"))
-        if (!reusable) withBuildLock(path) {
-          if (!reusable) {
-            graft.sources.Jsonl.write(t(s, dir, "documents"), path)
-            writeMarker(marker, Map("fp" -> fp))
-          }
-        }
-      } catch { case t: Throwable => stagedRefs.remove(path); throw t }
-    }
-    touchMarker(marker) // liveness touch on every access (see stagedParquet)
-    path
+    stagedPath("jsonl", dir, Seq("documents")) { tmp =>
+      graft.sources.Jsonl.write(t(s, dir, "documents"), tmp.toString)
+    }.toString
   }
 
-  /** Stage the documents table as ORC once per (JVM, input dir) — the
-    * q_orc_roundtrip fixture, [[jsonlStagePath]]'s columnar sibling (ORC is
-    * the other columnar interchange format Spark ships a native vectorized
-    * reader for; a lakehouse migration reads exactly this way). */
+  /** Stage the documents table as ORC once per (input content, code
+    * digest) — the q_orc_roundtrip fixture, [[jsonlStagePath]]'s columnar
+    * sibling (ORC is the other columnar interchange format Spark ships a
+    * native vectorized reader for; a lakehouse migration reads exactly
+    * this way). */
   private[graft] val orcStagePath: Staged[String] = staged("orc") { (s, dir) =>
-    val digest = dirDigest(dir)
-    val path = s"/tmp/graft_orc_${digest}_${logicDigest.take(8)}"
-    val marker = java.nio.file.Paths.get(path, StagingMarkerName)
-    if (stagedRefs.add(path)) {
-      try {
-        val fp = logicDigest + ":" + inputFingerprint(dir, Seq("documents"))
-        def reusable = readMarker(marker).exists(_.getProperty("fp") == fp) &&
-          java.nio.file.Files.exists(java.nio.file.Paths.get(path, "_SUCCESS"))
-        if (!reusable) withBuildLock(path) {
-          if (!reusable) {
-            t(s, dir, "documents").write.mode("overwrite").orc(path)
-            writeMarker(marker, Map("fp" -> fp))
-          }
-        }
-      } catch { case t: Throwable => stagedRefs.remove(path); throw t }
-    }
-    touchMarker(marker) // liveness touch on every access (see stagedParquet)
-    path
+    stagedPath("orc", dir, Seq("documents")) { tmp =>
+      t(s, dir, "documents").write.orc(tmp.toString)
+    }.toString
   }
 
   /** The positional 40-gram md5 index STAGED once per (JVM, input dir) —

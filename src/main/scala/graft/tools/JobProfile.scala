@@ -18,8 +18,10 @@ object JobProfile {
     val dir = args(0)
     val names = args(1).split(',')
     val reps = args.drop(2).headOption.map(_.toInt).getOrElse(2)
-    Staging.initStaging()
     val spark = graft.GraftSession.build(graft.GraftSession.cpus(32))
+    // fail-fast digest resolution + stale-staging GC of /tmp and this
+    // session's warehouse, before any Spark work
+    Staging.initStaging(spark)
     spark.sparkContext.setLogLevel("ERROR")
 
     case class StageAgg(var name: String = "", var tasks: Int = 0,

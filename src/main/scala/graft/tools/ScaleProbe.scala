@@ -55,9 +55,10 @@ object ScaleProbe {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    // fail-fast digest resolution + stale-staging GC before any Spark work
-    Staging.initStaging()
     val spark = graft.GraftSession.build(graft.GraftSession.cpus(32))
+    // fail-fast digest resolution + stale-staging GC of /tmp and this
+    // session's warehouse, before any Spark work
+    Staging.initStaging(spark)
     spark.sparkContext.setLogLevel("ERROR")
 
     val docs0 = spark.read.parquet(s"$dir/documents.parquet")

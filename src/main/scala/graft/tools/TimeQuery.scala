@@ -11,9 +11,10 @@ object TimeQuery {
     val dir = args(0)
     val names = args(1).split(',')
     val reps = args.drop(2).headOption.map(_.toInt).getOrElse(4)
-    // fail-fast digest resolution + stale-staging GC before any Spark work
-    Staging.initStaging()
     val spark = graft.GraftSession.build(graft.GraftSession.cpus(32))
+    // fail-fast digest resolution + stale-staging GC of /tmp and this
+    // session's warehouse, before any Spark work
+    Staging.initStaging(spark)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       val times = (1 to reps).map { _ =>

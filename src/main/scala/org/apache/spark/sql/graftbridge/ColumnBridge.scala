@@ -31,15 +31,6 @@ object DatasetBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       session.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
-  /** `SparkSession.cloneSession` is `private[sql]` in Spark 4 — exposed
-    * here for the layout pin's session-local conf flip. The clone shares
-    * the SparkContext and SharedState (external catalog, so staged
-    * tables resolve) but owns its SessionState, so conf writes on it are
-    * invisible to the source session. */
-  def cloneSession(session: org.apache.spark.sql.SparkSession)
-      : org.apache.spark.sql.SparkSession =
-    session.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
-
   /** Eager local checkpoint that records the physical plan's output
     * partitioning/ordering against QUALIFIER-NORMALIZED output
     * attributes — the layout-safe replacement for `Dataset

@@ -510,6 +510,11 @@ class PlanSpec extends SparkSpec {
       "ranked adjacency re-exchanges the bucketed scan:\n" + ap.take(3000))
   }
 
+  /** The published location a staged bucketed table is registered at. */
+  private def stagedLocation(name: String): java.nio.file.Path =
+    java.nio.file.Paths.get(new java.net.URI(spark.sql(s"DESCRIBE TABLE EXTENDED $name")
+      .where("col_name = 'Location'").head().getString(1)))
+
   test("staged bucketed tables re-register across processes without a rewrite") {
     // cross-JVM staging reuse: a completed bucketed staging survives as
     // files + a _GRAFT_STAGED marker; a fresh process (simulated here by
@@ -519,8 +524,7 @@ class PlanSpec extends SparkSpec {
       .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
     val name = Staging.stagedTableName(s"graft_copurch_$digest")
     SparkEntry.queries("q_label_prop")(spark, dir).queryExecution.toRdd.count()
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    val loc = java.nio.file.Paths.get(wh, name)
+    val loc = stagedLocation(name)
     assert(java.nio.file.Files.exists(loc.resolve("_GRAFT_STAGED.properties")),
       "staging marker missing — cross-JVM reuse has nothing to probe")
     val before = spark.table(name).collect().map(_.toString).sorted.toSeq
@@ -563,8 +567,9 @@ class PlanSpec extends SparkSpec {
     val digest = java.security.MessageDigest.getInstance("MD5")
       .digest(d.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
     val name = Staging.stagedTableName(s"graft_copurch_$digest")
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    val marker = java.nio.file.Paths.get(wh, name, "_GRAFT_STAGED.properties")
+    // the staging is content-addressed: its location changes with the
+    // input, so the marker is resolved through the registered table
+    def marker = stagedLocation(name).resolve(Staging.StagingMarkerName)
     def run(): Seq[String] = {
       val r = SparkEntry.queries("q_label_prop")(spark, d)
         .collect().map(_.toString).sorted.toSeq
@@ -578,12 +583,13 @@ class PlanSpec extends SparkSpec {
     }
     val r1 = run()
     val fp1 = markerFp()
+    val loc1 = stagedLocation(name)
     val m1 = java.nio.file.Files.getLastModifiedTime(marker)
     // the staged DATA files must be untouched by a reuse (their mtimes
     // are the rewrite tell; the marker's mtime is NOT — reuse touches it
     // as the GC liveness signal, see sweepStaleStagings' age guard)
     def dataFileTimes(): Map[String, java.nio.file.attribute.FileTime] = {
-      val st = java.nio.file.Files.list(java.nio.file.Paths.get(wh, name))
+      val st = java.nio.file.Files.list(loc1)
       try st.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
         .filter(p => p.getFileName.toString != Staging.StagingMarkerName)
         .map(p => p.getFileName.toString ->
@@ -596,12 +602,13 @@ class PlanSpec extends SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS $name")
     assert(run() == r1)
     assert(markerFp() == fp1)
+    assert(stagedLocation(name) == loc1, "reuse must serve the published path")
     assert(dataFileTimes() == files1, "reuse path rewrote the staging")
     assert(java.nio.file.Files.getLastModifiedTime(marker)
       .compareTo(m1) >= 0,
       "reuse must refresh (touch) the marker — the GC liveness signal")
     // fresh process, MUTATED input (mtime bump = upstream rewrite) ->
-    // fingerprint mismatch -> rebuild (marker rewritten with a new fp)
+    // new fingerprint -> a new staging at a new path, the old one untouched
     java.nio.file.Files.setLastModifiedTime(li,
       java.nio.file.attribute.FileTime.fromMillis(
         java.nio.file.Files.getLastModifiedTime(li).toMillis + 5000))
@@ -609,6 +616,9 @@ class PlanSpec extends SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS $name")
     assert(run() == r1, "same bytes, new mtime: results must be unchanged")
     assert(markerFp() != fp1, "mutated input did not force a staging rebuild")
+    val loc2 = stagedLocation(name)
+    assert(loc2 != loc1, "a mutated input must stage a new path")
+    assert(dataFileTimes() == files1, "the rebuild touched the old input's staging")
     // fresh process, same input, STALE CODE: the fingerprint's first
     // component is the digest of the compiled graft classes
     // (Staging.logicDigest), so a frame staged by an older build
@@ -637,7 +647,7 @@ class PlanSpec extends SparkSpec {
     // tmp-dir digest is random per run — leftovers would only accrete)
     Staging.resetStagingRefsForTest()
     spark.sql(s"DROP TABLE IF EXISTS $name")
-    graft.etl.Context.deleteRecursively(java.nio.file.Paths.get(wh, name))
+    Seq(loc1, loc2).foreach(graft.etl.Context.deleteRecursively)
     graft.etl.Context.deleteRecursively(tmp)
   }
 

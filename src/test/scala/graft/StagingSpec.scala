@@ -16,7 +16,10 @@ import java.nio.file.attribute.FileTime
   *     past the age guard while keeping the current build's and any
   *     recently-touched foreign build's (a live A/B partner refreshes
   *     its marker mtime on every reuse), so disk stays flat across
-  *     recompiles instead of growing monotonically. */
+  *     recompiles instead of growing monotonically.
+  *  3. COMMIT — [[Staging.commit]] publishes a staging by one atomic
+  *     rename: concurrent cold builds leave one published dir, and a
+  *     failed build leaves nothing. */
 class StagingSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
@@ -45,11 +48,12 @@ class StagingSpec extends SparkSpec {
     Files.setLastModifiedTime(orphanOld, FileTime.fromMillis(now - 13 * hour))
     // not graft-named: never touched, digest suffix or not
     val foreign = mkStaging(root.resolve("other_x_deadbeef"), 48 * hour, now)
-    // stale-digest lock file (inert — that path is never locked again)
+    // stale-digest lock file an earlier build left behind: a plain file,
+    // reaped by the same age rule
     val lockOld = root.resolve("graft_x_aaaaaaaa_deadbeef.lock")
     Files.write(lockOld, Array.emptyByteArray)
     Files.setLastModifiedTime(lockOld, FileTime.fromMillis(now - 13 * hour))
-    // current-digest lock: live mutual exclusion, never reaped
+    // current-digest lock-named file: the digest rule keeps it
     val lockCur = root.resolve(s"graft_x_aaaaaaaa_$code8.lock")
     Files.write(lockCur, Array.emptyByteArray)
     Files.setLastModifiedTime(lockCur, FileTime.fromMillis(now - 48 * hour))
@@ -71,7 +75,7 @@ class StagingSpec extends SparkSpec {
     assert(Files.exists(staleFresh),
       "a recently-touched foreign-digest staging (live A/B partner) must survive")
     assert(Files.exists(foreign), "non-graft paths must never be touched")
-    assert(Files.exists(lockCur), "current-digest lock must never be reaped")
+    assert(Files.exists(lockCur), "a current-digest entry must never be reaped")
     assert(Files.exists(ownedOddName),
       "a dir whose marker fp leads with the current logicDigest must survive " +
         "regardless of its name tail")
@@ -79,117 +83,6 @@ class StagingSpec extends SparkSpec {
     // idempotent + disk-flat: a second sweep finds nothing
     assert(Staging.sweepStaleStagings(Seq(root), maxAge, now).isEmpty)
     graft.etl.Context.deleteRecursively(root)
-  }
-
-  test("a HELD stale-digest lock is never unlinked; released, it is reaped") {
-    // unlinking a held lock would let the next contender lock a FRESH
-    // inode — two builders then both hold "the" lock and mutual exclusion
-    // is broken (ADVICE r13). The sweep probes with tryLock: a hold by
-    // any process (including this JVM — OverlappingFileLockException)
-    // makes the lock unreapable regardless of age.
-    val root = Files.createTempDirectory("graft_heldlock_spec")
-    val now = 1_000_000_000_000L
-    val lock = root.resolve("graft_x_aaaaaaaa_deadbeef.lock")
-    Files.write(lock, Array.emptyByteArray)
-    Files.setLastModifiedTime(lock, FileTime.fromMillis(now - 48 * hour))
-    val ch = java.nio.channels.FileChannel.open(lock,
-      java.nio.file.StandardOpenOption.WRITE)
-    val held = ch.lock()
-    try {
-      assert(Staging.sweepStaleStagings(Seq(root), 12 * hour, now).isEmpty,
-        "sweep unlinked a HELD lock")
-      assert(Files.exists(lock))
-    } finally { held.release(); ch.close() }
-    // nobody holds it now — the stale lock is inert and reapable
-    assert(Staging.sweepStaleStagings(Seq(root), 12 * hour, now) == Seq(lock))
-    assert(!Files.exists(lock))
-    graft.etl.Context.deleteRecursively(root)
-  }
-
-  test("a reaped lock's inode is tombstoned: the stuck contender detects the orphan") {
-    // the r14 residual: a contender that OPENED the lock file before the
-    // sweep's unlink but locks after its release used to acquire an
-    // orphaned inode silently. r15's sweep writes the tombstone INTO the
-    // file (inode-bound) while holding the probe lock, before unlinking —
-    // so the stuck contender's own fd reads the mark after acquisition.
-    val root = Files.createTempDirectory("graft_tombstone_spec")
-    val now = 1_000_000_000_000L
-    val lock = root.resolve("graft_x_aaaaaaaa_deadbeef.lock")
-    Files.write(lock, Array.emptyByteArray)
-    Files.setLastModifiedTime(lock, FileTime.fromMillis(now - 48 * hour))
-    // the contender opens… and stalls before lock()
-    val ch1 = java.nio.channels.FileChannel.open(lock,
-      java.nio.file.StandardOpenOption.WRITE,
-      java.nio.file.StandardOpenOption.READ)
-    try {
-      // sweep reaps: tombstone write + unlink, all while holding tryLock
-      assert(Staging.sweepStaleStagings(Seq(root), 12 * hour, now) == Seq(lock))
-      assert(!Files.exists(lock))
-      // the contender now locks the ORPHANED inode — and must see the mark
-      val l = ch1.lock()
-      try {
-        val buf = java.nio.ByteBuffer.allocate(Staging.LockTombstone.length)
-        val n = ch1.read(buf, 0L)
-        assert(n == Staging.LockTombstone.length &&
-          java.util.Arrays.equals(buf.array(), Staging.LockTombstone),
-          "reaped inode carries no tombstone — the orphan window is open again")
-      } finally l.release()
-    } finally ch1.close()
-    graft.etl.Context.deleteRecursively(root)
-  }
-
-  test("withBuildLock retries past a tombstoned inode onto a fresh live lock") {
-    // deterministic simulation of the detect-and-retry path: a tombstoned
-    // file sitting AT the path (a sweeper that died between its tombstone
-    // write and its unlink) must not satisfy an acquisition — the first
-    // pass detects the mark, the guarded reap clears the dead file, and
-    // the second pass creates a fresh live lock and runs the body.
-    val root = Files.createTempDirectory("graft_tombretry_spec")
-    val base = root.resolve("graft_x_bbbbbbbb_deadbeef")
-    val lock = Paths.get(base.toString + ".lock")
-    Files.write(lock, Staging.LockTombstone)
-    var ran = false
-    val out = Staging.withBuildLock(base.toString) { ran = true; 42 }
-    assert(out == 42 && ran, "body did not run after the tombstone retry")
-    assert(Files.exists(lock), "retry did not recreate a live lock file")
-    assert(Files.size(lock) == 0L,
-      "the fresh lock file is not empty — tombstone content leaked into a live lock")
-    graft.etl.Context.deleteRecursively(root)
-  }
-
-  test("warehouse code-source anchor resolves classes-dir, sbt-jar and app-dir-jar layouts") {
-    // ADVICE r14: production sweeps (initStaging before any session) rest
-    // entirely on the code-source anchor, which only handled the
-    // classes-dir layout — a jar-packaged launch silently fell back to the
-    // cwd-relative root, the exact r13 skip. The resolver is now a pure
-    // function tested WITHOUT a session for all three launch layouts.
-    val t = Files.createTempDirectory("graft_codesrc_spec")
-    // sbt classes-dir launch: <root>/target/scala-2.13/classes
-    val classes = t.resolve("repo/target/scala-2.13/classes")
-    Files.createDirectories(classes)
-    Files.createDirectories(t.resolve("repo/spark-warehouse"))
-    assert(Staging.warehouseFromCodeSource(classes)
-      .contains(t.resolve("repo/spark-warehouse")))
-    // sbt-layout jar: <root>/target/scala-2.13/app.jar
-    val sbtJar = t.resolve("repo2/target/scala-2.13/app.jar")
-    Files.createDirectories(sbtJar.getParent)
-    Files.write(sbtJar, Array[Byte](1))
-    Files.createDirectories(t.resolve("repo2/spark-warehouse"))
-    assert(Staging.warehouseFromCodeSource(sbtJar)
-      .contains(t.resolve("repo2/spark-warehouse")))
-    // deployed jar next to its warehouse: <dir>/app.jar + <dir>/spark-warehouse
-    val appJar = t.resolve("deploy/app.jar")
-    Files.createDirectories(appJar.getParent)
-    Files.write(appJar, Array[Byte](1))
-    Files.createDirectories(t.resolve("deploy/spark-warehouse"))
-    assert(Staging.warehouseFromCodeSource(appJar)
-      .contains(t.resolve("deploy/spark-warehouse")))
-    // no warehouse anywhere → None (caller falls back loudly)
-    val lost = t.resolve("elsewhere/lib/app.jar")
-    Files.createDirectories(lost.getParent)
-    Files.write(lost, Array[Byte](1))
-    assert(Staging.warehouseFromCodeSource(lost).isEmpty)
-    graft.etl.Context.deleteRecursively(t)
   }
 
   test("warehouse conf decode is shared and handles URIs, encoding and plain paths") {
@@ -208,9 +101,9 @@ class StagingSpec extends SparkSpec {
   test("the warehouse sweep root resolves absolutely (not cwd-relative)") {
     // a relative `spark-warehouse` silently skips the warehouse half of
     // the GC whenever the launcher's cwd is not the repo root (r13
-    // verdict #5) — with a live session the root must BE the session's
-    // configured warehouse dir, absolute
-    val wh = Staging.sweepWarehouseRoot
+    // verdict #5) — the root must BE the session's configured warehouse
+    // dir, absolute
+    val wh = Staging.warehouseRoot(spark)
     assert(wh.isAbsolute, s"warehouse sweep root is cwd-relative: $wh")
     val conf = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     assert(wh == Paths.get(conf),
@@ -229,7 +122,7 @@ class StagingSpec extends SparkSpec {
     val tmp = Paths.get("/tmp")
     val st = Files.list(tmp)
     val cur = try st.toArray.map(_.asInstanceOf[Path]).find(
-        _.getFileName.toString.matches(s"graft_errankname_[0-9a-f]{8}_$code8"))
+        _.getFileName.toString.matches(s"graft_errankname_[0-9a-f]{8}_[0-9a-f]{8}_$code8"))
       finally st.close()
     assert(cur.isDefined, "staged errankname path not found under /tmp")
     // fabricate the A/B partner under an ISOLATED root, not the real
@@ -281,5 +174,81 @@ class StagingSpec extends SparkSpec {
     assert(!Files.exists(partnerCopy))
     graft.etl.Context.deleteRecursively(gcRoot)
     graft.etl.Context.deleteRecursively(coexistRoot)
+  }
+
+  private def tmpSiblings(p: Path): Seq[Path] = {
+    val st = Files.list(p.getParent)
+    try st.toArray.toSeq.map(_.asInstanceOf[Path])
+      .filter(_.getFileName.toString.startsWith(p.getFileName.toString + ".tmp-"))
+    finally st.close()
+  }
+
+  private def writeRange(n: Long)(tmp: Path): Map[String, String] = {
+    spark.range(n).toDF("id").write.parquet(tmp.toString)
+    Map.empty
+  }
+
+  test("two concurrent cold builds publish one dir and read the same rows") {
+    val root = Files.createTempDirectory("graft_commit_spec")
+    val path = root.resolve(s"graft_race_aaaaaaaa_bbbbbbbb_$code8")
+    val fp = s"${Staging.logicDigest}:race"
+    // both callers go straight to the commit, past the in-process map:
+    // the same race two fresh JVMs run
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val rows = (1 to 2).map(_ => pool.submit(new java.util.concurrent.Callable[Seq[Long]] {
+        def call(): Seq[Long] = {
+          start.await()
+          Staging.commit(path, fp)((_, _) => true)(writeRange(1000))
+          spark.read.parquet(path.toString).collect().map(_.getLong(0)).sorted.toSeq
+        }
+      }))
+      start.countDown()
+      val Seq(a, b) = rows.map(_.get(5, java.util.concurrent.TimeUnit.MINUTES))
+      assert(a == (0L until 1000L) && a == b, "the two callers read different rows")
+    } finally pool.shutdown()
+    val st = Files.list(root)
+    val left = try st.toArray.toSeq.map(_.asInstanceOf[Path]) finally st.close()
+    assert(left == Seq(path), s"expected exactly the published dir, found: $left")
+    assert(Files.exists(path.resolve(Staging.StagingMarkerName)))
+    graft.etl.Context.deleteRecursively(root)
+  }
+
+  test("a failed build leaves no published path and no temp dir; the next access rebuilds") {
+    val root = Files.createTempDirectory("graft_commit_fail_spec")
+    val path = root.resolve(s"graft_fail_aaaaaaaa_bbbbbbbb_$code8")
+    val fp = s"${Staging.logicDigest}:fail"
+    val e = intercept[IllegalStateException] {
+      Staging.commit(path, fp)((_, _) => true) { tmp =>
+        writeRange(10)(tmp)
+        throw new IllegalStateException("writer failed")
+      }
+    }
+    assert(e.getMessage == "writer failed")
+    assert(!Files.exists(path), "a failed build published its path")
+    assert(tmpSiblings(path).isEmpty, s"a failed build left ${tmpSiblings(path)}")
+    Staging.commit(path, fp)((_, _) => true)(writeRange(10))
+    assert(spark.read.parquet(path.toString).count() == 10)
+    assert(tmpSiblings(path).isEmpty)
+    graft.etl.Context.deleteRecursively(root)
+  }
+
+  test("sweep reaps an orphaned temp dir past the age guard and keeps a younger one") {
+    val root = Files.createTempDirectory("graft_orphan_spec")
+    val now = 1_000_000_000_000L
+    def orphan(name: String, age: Long): Path = {
+      val p = root.resolve(name)
+      Files.createDirectories(p)
+      Files.write(p.resolve("part-0.parquet"), "data".getBytes("UTF-8"))
+      Files.setLastModifiedTime(p, FileTime.fromMillis(now - age))
+      p
+    }
+    // an orphan of THIS build is reaped too: its digest never protects it
+    val old = orphan(s"graft_x_aaaaaaaa_bbbbbbbb_$code8.tmp-1234", 13 * hour)
+    val young = orphan(s"graft_x_aaaaaaaa_bbbbbbbb_$code8.tmp-5678", 1 * hour)
+    assert(Staging.sweepStaleStagings(Seq(root), 12 * hour, now) == Seq(old))
+    assert(!Files.exists(old) && Files.exists(young))
+    graft.etl.Context.deleteRecursively(root)
   }
 }

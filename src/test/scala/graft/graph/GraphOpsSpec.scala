@@ -765,4 +765,24 @@ class GraphOpsSpec extends SparkSpec {
       GraphOps.assortativity(pairs, "pa", "pb"),
       GraphOps.assortativity(sym, "a", "b", assumeSymmetric = true))
   }
+
+  test("cloned pin/loop sessions do not keep their source sessions alive") {
+    // the pin and loop clone caches are weak-keyed by the source session:
+    // a cached clone must not reach its key, or every session that ever
+    // pinned or looped a frame lives as long as the JVM
+    def useOnce(): java.lang.ref.WeakReference[org.apache.spark.sql.SparkSession] = {
+      val s = spark.newSession()
+      val df = s.range(0, 100).toDF("a")
+      assert(GraphOps.pinForProbe(df).count() == 100)
+      assert(GraphOps.loopFrame(df).count() == 100)
+      new java.lang.ref.WeakReference(s)
+    }
+    val refs = (1 to 4).map(_ => useOnce())
+    var tries = 0
+    while (refs.exists(_.get != null) && tries < 20) {
+      System.gc(); Thread.sleep(100); tries += 1
+    }
+    assert(refs.forall(_.get == null),
+      s"${refs.count(_.get != null)} of ${refs.size} dropped sessions are still reachable")
+  }
 }

@@ -11,6 +11,28 @@ import pandas as pd
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
+def compare(got: pd.DataFrame, exp: pd.DataFrame) -> str:
+    """The compare rule: columns by name, rows sorted, exact values.
+    Returns "" when equal, else why not."""
+    gc, ec = sorted(got.columns), sorted(exp.columns)
+    if gc != ec:
+        return f"columns {gc} vs {ec}"
+    g = got[gc].sort_values(gc, ignore_index=True)
+    e = exp[ec].sort_values(ec, ignore_index=True)
+    if len(g) != len(e):
+        return f"rows {len(g)} vs {len(e)}"
+    try:
+        pd.testing.assert_frame_equal(g, e, check_dtype=False, check_exact=True)
+        return ""
+    except AssertionError as ex:
+        msg = str(ex).splitlines()
+        return f"values differ{dtype_notes(g, e)}: {' / '.join(msg[:3])}"
+
+def dtype_notes(got: pd.DataFrame, exp: pd.DataFrame) -> str:
+    """Columns whose dtypes differ (the compare ignores dtypes)."""
+    return "".join(f" [dtype {c}: {got[c].dtype} vs {exp[c].dtype}]"
+                   for c in sorted(got.columns) if str(got[c].dtype) != str(exp[c].dtype))
+
 def main(sf_dir: str, out_dir: str) -> int:
     con = duckdb.connect()
     for t in TABLES:
@@ -27,25 +49,12 @@ def main(sf_dir: str, out_dir: str) -> int:
             exp = con.sql(sql).df()
         except Exception as e:
             print(f"FAIL {name}: {e}"); failures += 1; continue
-        gc, ec = sorted(got.columns), sorted(exp.columns)
-        if gc != ec:
-            print(f"FAIL {name}: columns {gc} vs {ec}"); failures += 1; continue
-        g = got[gc].sort_values(gc, ignore_index=True)
-        e = exp[ec].sort_values(ec, ignore_index=True)
-        if len(g) != len(e):
-            print(f"FAIL {name}: rows {len(g)} vs {len(e)}"); failures += 1; continue
-        dtype_note = ""
-        for c in gc:
-            if str(g[c].dtype) != str(e[c].dtype):
-                dtype_note += f" [dtype {c}: {g[c].dtype} vs {e[c].dtype}]"
-        try:
-            pd.testing.assert_frame_equal(g, e, check_dtype=False, check_exact=True)
-            print(f"OK   {name}: {len(g)} rows{dtype_note}")
+        why = compare(got, exp)
+        if why:
+            print(f"FAIL {name}: {why}"); failures += 1
+        else:
+            print(f"OK   {name}: {len(got)} rows{dtype_notes(got, exp)}")
             ok += 1
-        except AssertionError as ex:
-            msg = str(ex).splitlines()
-            print(f"FAIL {name}: values differ{dtype_note}: {' / '.join(msg[:3])}")
-            failures += 1
     for name in sorted({q.split('/')[-1] for q in glob.glob(f"{out_dir}/q_*")} - set(oracle)):
         print(f"FAIL {name}: spark output has no oracle"); failures += 1
     print(f"{ok} OK, {failures} FAIL")
