@@ -970,7 +970,7 @@ object Dedup {
     *    holds a uniform sample, so Σ df_prefix² grows on skewed
     *    vocabularies.
     *
-    * Pick by regime — MEASURED (ScaleProbe group r12, SCALE.md): on a
+    * Pick by regime — MEASURED (SCALE.md, round-12 curves): on a
     * uniform vocabulary this variant wins at every probed size (8.0 s
     * vs 13.1 s at 20× sf0.1 — the dictionary passes scale with the
     * corpus and never amortize inline), and on a skewed vocabulary

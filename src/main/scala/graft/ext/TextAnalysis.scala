@@ -426,7 +426,10 @@ object TextAnalysis {
     * independent, and coarse enough that a last-bit `ln` difference
     * between engines sits ~1e-12 of a unit away from any rounding
     * boundary. The per-doc average divides two exact integers and rounds
-    * to 6dp. Quantization error ≤ 0.0005 nats per distinct term, noise at
+    * to 6dp the way the oracle's `round(x, 6)` does, as `round(x * 1e6)
+    * / 1e6` in doubles: on a tie such as 4.0979375 (4097937.4999999995
+    * once scaled) a decimal HALF_UP of `x` rounds the other way.
+    * Quantization error ≤ 0.0005 nats per distinct term, noise at
     * quality-filter granularity.
     *
     * Scale: explode → one (doc, term) aggregation [shuffle 1] → corpus
@@ -450,8 +453,8 @@ object TextAnalysis {
       .groupBy(col(idCol))
       .agg(sum(col("tf")).as("n_tokens"), sum(col("__mnats")).as("__s"))
       .select(col(idCol), col("n_tokens"),
-        round(col("__s").cast("double") / (col("n_tokens").cast("double") * lit(1000.0d)), 6)
-          .as("xent"))
+        (round(col("__s").cast("double") / (col("n_tokens").cast("double") * lit(1000.0d))
+          * lit(1e6d), 0) / lit(1e6d)).as("xent"))
   }
 
   /** Bigram-LM cross-entropy per doc — the KenLM-proxy quality score a

@@ -33,22 +33,8 @@ object VectorFunctions {
     sqrt(aggregate(zip_with(toDouble(a), toDouble(b), (x, y) => (x - y) * (x - y)),
       lit(0.0d), (acc, x) => acc + x))
 
-  /** Random-hyperplane LSH signature: bit i = sign of dot(v, plane_i).
-    * Planes are pseudo-random but fully deterministic (seeded), generated
-    * inline as literals by the caller via [[randomPlanes]]. */
-  def hyperplaneSignature(v: Column, planes: Seq[Array[Double]]): Column = {
-    require(planes.length <= 64,
-      s"at most 64 planes fit a Long signature (got ${planes.length}) — " +
-        "shiftleft wraps at 64, silently aliasing plane i with plane i-64; " +
-        "use banded signatures (NativeExpressions.hyperplaneBands) for more planes")
-    val bits = planes.zipWithIndex.map { case (p, i) =>
-      val planeCol = array(p.map(lit): _*)
-      when(dot(v, planeCol) >= 0.0d, shiftleft(lit(1L), i)).otherwise(lit(0L))
-    }
-    bits.reduce(_ + _)
-  }
-
-  /** Deterministic seeded hyperplanes for [[hyperplaneSignature]]. */
+  /** Deterministic seeded Gaussian hyperplanes (random-hyperplane LSH):
+    * the same seed gives the same planes in every run. */
   def randomPlanes(numPlanes: Int, dim: Int, seed: Long = 42L): Seq[Array[Double]] = {
     val rnd = new scala.util.Random(seed)
     Seq.fill(numPlanes)(Array.fill(dim)(rnd.nextGaussian()))

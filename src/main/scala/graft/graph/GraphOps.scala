@@ -829,10 +829,10 @@ object GraphOps {
     connectedComponentsStarWithRounds(edges, srcCol, dstCol, maxRounds,
       assumeSymmetric)._1
 
-  /** [[connectedComponentsStar]] plus the round count it needed — the
-    * probe hook ScaleProbe uses to show rounds growing ~log(n), not
-    * linearly, across scale factors. */
-  def connectedComponentsStarWithRounds(
+  /** [[connectedComponentsStar]] plus the round count it needed, which
+    * GraphOpsSpec asserts (SCALE.md records rounds growing ~log(n), not
+    * linearly, across scale factors). */
+  private[graft] def connectedComponentsStarWithRounds(
       edges: DataFrame, srcCol: String, dstCol: String,
       maxRounds: Int = 40, assumeSymmetric: Boolean = false): (DataFrame, Int) = {
     // assumeSymmetric: src > dst keeps exactly one canonically-oriented
@@ -1130,9 +1130,9 @@ object GraphOps {
     * join OUTPUT. Dropping groups above the cap is the standard
     * projection policy (a 256-item basket says nothing about pairwise
     * affinity) and bounds per-key join output at cap²/2 ≈ 32k rows — the
-    * planted-mega-basket ScaleProbe measures the capped projection flat
-    * where the uncapped join grows with hub², and the cap is an explicit,
-    * documented parameter rather than a silent drop.
+    * round-7 planted-mega-basket curve (SCALE.md) measured the capped
+    * projection flat where the uncapped join grows with hub², and the cap
+    * is an explicit, documented parameter rather than a silent drop.
     *
     * One shuffle: the group-size window partitions by the group key, the
     * same key the self-join uses, so the exchange is planned once and
@@ -1186,11 +1186,11 @@ object GraphOps {
     * shrink. Under (degree, id) order every out-degree is bounded by
     * O(√m) (a vertex only points at neighbors of ≥ its own degree, and
     * there are at most √(2m) vertices of degree ≥ √(2m)), so the wedge
-    * volume is O(m^1.5) REGARDLESS of skew — the planted-mega-basket
-    * ScaleProbe measures exactly this staying flat where id orientation
-    * goes quadratic. Cost: one extra degree aggregation and join, same
-    * equi-join shape — hash-partitioned, AQE-skew-splittable, never a
-    * cross join. Output is identical (same triangle set) either way. */
+    * volume is O(m^1.5) REGARDLESS of skew — the round-7 planted-hub
+    * curve (SCALE.md) measured exactly this staying flat where id
+    * orientation goes quadratic. Cost: one extra degree aggregation and
+    * join, same equi-join shape — hash-partitioned, AQE-skew-splittable,
+    * never a cross join. Output is identical (same triangle set) either way. */
   def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String,
       assumeSymmetric: Boolean = false): DataFrame = {
     // under the contract the canonical set is a filter and the degree
@@ -1606,8 +1606,9 @@ object GraphOps {
       k: Int, maxRounds: Int = 100, assumeSymmetric: Boolean = false): DataFrame =
     kCoreWithRounds(edges, srcCol, dstCol, k, maxRounds, assumeSymmetric)._1
 
-  /** [[kCore]] plus the peel-round count (the ScaleProbe hook). */
-  def kCoreWithRounds(edges: DataFrame, srcCol: String, dstCol: String,
+  /** [[kCore]] plus the peel-round count, which GraphOpsSpec asserts
+    * (SCALE.md records it flat across scale factors). */
+  private[graft] def kCoreWithRounds(edges: DataFrame, srcCol: String, dstCol: String,
       k: Int, maxRounds: Int = 100,
       assumeSymmetric: Boolean = false): (DataFrame, Int) = {
     require(k >= 1, s"k must be >= 1, got $k")
@@ -1675,7 +1676,7 @@ object GraphOps {
     * Determinism: a fixpoint of a set recurrence — no tie-breaks, no
     * floats — so the oracle replays the peel as unrolled CTEs and
     * equality is exact. */
-  def kTrussWithRounds(edges: DataFrame, srcCol: String, dstCol: String,
+  private[graft] def kTrussWithRounds(edges: DataFrame, srcCol: String, dstCol: String,
       k: Int, maxRounds: Int = 100,
       assumeSymmetric: Boolean = false): (DataFrame, Int) = {
     require(k >= 3, s"k-truss needs k >= 3, got $k")
@@ -1885,12 +1886,13 @@ object GraphOps {
     * partition-local Tarjan contraction first (documented trade, not
     * hidden).
     *
-    * Returns the labels plus (peel count, total round count) — the
-    * ScaleProbe hook. Output: (node, scc) over every endpoint of the
-    * non-self-loop edge set. Callers who don't pick tiers by hand should
-    * use [[stronglyConnectedComponents]] (bounded driver Tarjan below the
+    * Returns the labels plus (peel count, total round count), which
+    * GraphOpsSpec asserts (SCALE.md round 7 records both flat). Output:
+    * (node, scc) over every endpoint of the non-self-loop edge set.
+    * Callers who don't pick tiers by hand should use
+    * [[stronglyConnectedComponents]] (bounded driver Tarjan below the
     * probe limit, this operator above it). */
-  def stronglyConnectedComponentsWithStats(
+  private[graft] def stronglyConnectedComponentsWithStats(
       edges: DataFrame, srcCol: String, dstCol: String,
       maxPeels: Int = 40, maxRounds: Int = 400): (DataFrame, Int, Int) = {
     var e = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))

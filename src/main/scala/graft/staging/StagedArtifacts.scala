@@ -10,10 +10,7 @@ import graft.staging.Staging._
 /** Every frame or path the queries stage. Each artifact is a value built
   * through [[staged]], which records it as it is defined; [[prestageAll]]
   * forces exactly that record. A query stages only through these values:
-  * the staging primitives are `private[staging]`.
-  *
-  * Not recorded (probe-only): [[stagedCoPurchaseSymBuckets]] with a
-  * non-production bucket count, and [[Staging.dropProbeStaging]]. */
+  * the staging primitives are `private[staging]`. */
 object StagedArtifacts {
 
   /** One staged artifact: `apply(s, dir)` stages it for `dir` on first
@@ -47,7 +44,7 @@ object StagedArtifacts {
       "l_orderkey", "l_partkey", minShared = 2, maxGroupSize = 256)
 
   /** The co-purchase projection staged as its SYMMETRIC SELF-LOOP-CLOSED
-    * closure, BUCKETED AND SORTED ON `a` (32 buckets) — the layout the
+    * closure, BUCKETED AND SORTED ON `a` (16 buckets) — the layout the
     * pair-form parquet staging of earlier rounds only promised: every
     * graph consumer (triangles, components, label-prop, BFS, closeness,
     * k-core, k-truss, link prediction, walks, modularity, conductance,
@@ -65,30 +62,14 @@ object StagedArtifacts {
     * consumers that don't. Row-identical derivations keep every oracle
     * untouched. */
   private[graft] val stagedCoPurchaseSym: Staged[DataFrame] = staged("coPurchaseSym") { (s, dir) =>
-    stagedCoPurchaseSymBuckets(s, dir, buckets = 16, nameTag = "")
-  }
-
-  /** The base (pre-digest-suffix) staging name [[stagedCoPurchaseSymBuckets]]
-    * uses — probe cells resolve it to reclaim their probe-only stagings
-    * via [[dropProbeStaging]]. */
-  private[graft] def coPurchaseStagingBaseName(dir: String, nameTag: String): String =
-    s"graft_copurch${nameTag}_${dirDigest(dir)}"
-
-  /** Bucket-count-parameterized body of [[stagedCoPurchaseSym]] —
-    * `private[graft]` so ScaleProbe can A/B bucket counts (the r13
-    * bucket-sizing rule: bucket count must match the parallelism of the
-    * exchange it replaces) under probe-only names that never collide
-    * with the production staging. */
-  private[graft] def stagedCoPurchaseSymBuckets(s: SparkSession, dir: String,
-      buckets: Int, nameTag: String): DataFrame =
-    stagedBucketedTable(s, dir, coPurchaseStagingBaseName(dir, nameTag),
-        "a", buckets, Seq("lineitem")) {
+    stagedBucketedTable(s, dir, s"graft_copurch_${dirDigest(dir)}", "a", 16, Seq("lineitem")) {
       val p = coPurchaseEdges(s, dir)
       val sym = p.select(col("pa").as("a"), col("pb").as("b"), col("w"))
         .unionByName(p.select(col("pb").as("a"), col("pa").as("b"), col("w")))
       sym.unionByName(sym.select(col("a")).distinct()
         .select(col("a"), col("a").as("b"), lit(0L).as("w")))
     }
+  }
 
   /** The capped distinct (order, part) basket projection STAGED once per
     * (input content, code digest), BUCKETED AND SORTED ON the basket key

@@ -135,8 +135,8 @@ object Staging {
     }
   }
 
-  /** Entry-point startup hook (Bench, Verify, TimeQuery, JobProfile and
-    * ScaleProbe call this right after the session is built): forces
+  /** Entry-point startup hook (Bench, Verify, TimeQuery and JobProfile
+    * call this right after the session is built): forces
     * [[logicDigest]] eagerly — a launcher that loads graft classes
     * without a code-source location fails HERE instead of bricking the
     * first staged query mid-run — then sweeps /tmp and the session's
@@ -177,7 +177,7 @@ object Staging {
     * too — but a spurious rebuild costs seconds once per (code, input)
     * while a stale frame costs a wrong investigation; and within fixed
     * code the steady state is unchanged: Verify, Bench, TimeQuery and
-    * ScaleProbe JVMs all reuse each other's stagings. The production
+    * JobProfile JVMs all reuse each other's stagings. The production
     * analogue is keying staged artifacts on the deployed jar's content
     * hash / build id — exactly what this computes, resolved through the
     * classloader so sbt-forked tests and the direct `java -cp` launcher
@@ -342,22 +342,6 @@ object Staging {
     * suffix never drifts. */
   private[graft] def stagedTableName(name0: String): String =
     s"${name0}_${logicDigest.take(8)}"
-
-  /** Eagerly reclaim a PROBE-ONLY staging (ScaleProbe's b16t/b32t
-    * experiment tables carry the current code digest, so the sweep's
-    * keep-by-digest rule preserves them until the NEXT recompile plus
-    * the age-out — silent disk growth on probe hosts). Drops the catalog
-    * entry, deletes the published location and forgets the in-process
-    * ref so a later same-JVM call rebuilds cleanly. Probe cells call this
-    * in their `finally`. */
-  private[graft] def dropProbeStaging(s: SparkSession, name0: String): Unit = {
-    try s.sql(s"DROP TABLE IF EXISTS ${stagedTableName(name0)}"): Unit
-    catch { case scala.util.control.NonFatal(_) => () }
-    Option(stagedRefs.remove(warehouseRoot(s).resolve(name0).toString)).foreach { loc =>
-      try graft.etl.Context.deleteRecursively(loc)
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
-  }
 
   /** Stage a derived frame as a BUCKETED table once per (input content,
     * [[logicDigest]]) — [[stagedParquet]]'s commit for the bucketed

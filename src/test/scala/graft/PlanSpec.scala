@@ -403,7 +403,7 @@ class PlanSpec extends SparkSpec {
     // a bucket-keyed rollup repeatedly — every plan must stay
     // bucket-aware and the session flag must read true throughout.
     import org.apache.spark.sql.functions.col
-    val sym = StagedArtifacts.stagedCoPurchaseSymBuckets(spark, dir, 16, "")
+    val sym = StagedArtifacts.stagedCoPurchaseSym(spark, dir)
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
     val err = new java.util.concurrent.atomic.AtomicReference[Throwable]()
     val pinner = new Thread(() => {

@@ -1,6 +1,6 @@
 #!/bin/bash
 # Direct java -cp launcher for graft mains (Bench/Verify/TimeQuery/
-# ScaleProbe). Exists because an sbt batch run can detach the forked JVM
+# ScaleInput). Exists because an sbt batch run can detach the forked JVM
 # and delete its target/bg-jobs staging jars mid-run (SCALE.md round-9
 # run-mode note) — the direct launch removes sbt from the measured path.
 #
