@@ -9,14 +9,20 @@ import org.json4s.jackson.Serialization
   * (reference: graph_etl/utils.py:61-64 initial shape, 99-119 updates,
   * 81-82 persistence).
   *
-  * Shape (kept JSON-compatible with the reference so resume files are
-  * interchangeable):
+  * Shape (the reference's, plus two fields):
   * {{{
   * { "nodes": { label -> { primary_key, constraints, indexs,
   *                         properties_type, files { fname -> {metadatas, count} } } },
   *   "edges": { type  -> { fname -> { start, end, properties_type,
-  *                                    ignore_mapping, metadatas, count } } } }
+  *                                    ignore_mapping, metadatas, count, mapped } } },
+  *   "parsed": [ parser name, ... ] }
   * }}}
+  * `parsed` lists the parsers whose files are published and `mapped` marks
+  * an edge file that has been through the mapping passes; together they
+  * replace the reference's parser and mapper resume logs. A reference
+  * `configs.json` lacks both and loads with the defaults (nothing parsed,
+  * nothing mapped). The catalog is the ETL's only record of what is staged:
+  * a staged file it does not list is not published ([[StoreInfo]]).
   *
   * The catalog is driver-side only (a few KB) — no Spark jobs touch it.
   * At 100 TB it scales with the number of labels/files, not rows.
@@ -36,11 +42,13 @@ final case class EdgeFileConfig(
     properties_type: Map[String, String] = Map.empty,
     ignore_mapping: Boolean = false,
     metadatas: Map[String, String] = Map.empty,
-    count: Long = 0L)
+    count: Long = 0L,
+    mapped: Boolean = false)
 
 final case class Catalog(
     nodes: Map[String, NodeConfig] = Map.empty,
-    edges: Map[String, Map[String, EdgeFileConfig]] = Map.empty) {
+    edges: Map[String, Map[String, EdgeFileConfig]] = Map.empty,
+    parsed: List[String] = Nil) {
 
   /** First-file-wins node registration (utils.py:99-107: properties_type is
     * only recorded on first sight of the label; counts accumulate per file). */

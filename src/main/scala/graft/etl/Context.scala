@@ -10,7 +10,15 @@ import graft.operators.Normalize
 
 /** Shared mutable state for one ETL run (the reference's singleton
   * `StoreInfo`, graph_etl/utils.py:44-190): catalog, registered ID
-  * mappings, accumulated stats, resume logs. Driver-side only. */
+  * mappings, accumulated stats. Driver-side only.
+  *
+  * `configs.json` is the one durable record of what is staged and mapped,
+  * and [[persistCatalog]]'s rename is the one commit: a staged file is
+  * published when a committed catalog lists it, never by landing in
+  * `nodes/` or `edges/`. Files are moved in under fresh names before the
+  * commit and superseded files deleted after it, so a crash leaves the old
+  * state or the new one plus unlisted files, which [[sweepUncommitted]]
+  * deletes on resume. The output dir has one writer. */
 final class StoreInfo(val outputDir: String, val spark: SparkSession) {
   var catalog: Catalog = Catalog()
   /** "{Label}:{prop}" -> mapping DataFrame(old_value, new_value) (utils.py:77-78). */
@@ -27,31 +35,45 @@ final class StoreInfo(val outputDir: String, val spark: SparkSession) {
   def initDirs(): Unit =
     Seq(nodesDir, edgesDir, configsDir).foreach(Files.createDirectories(_))
 
+  /** Commit the in-memory catalog: write `configs.json.tmp-<uuid>`, then
+    * rename it over `configs.json` in one atomic move. */
   def persistCatalog(): Unit = {
     Files.createDirectories(configsDir)
-    Files.writeString(configsPath, Catalog.toJson(catalog))
+    val tmp = configsDir.resolve(s"configs.json.tmp-${java.util.UUID.randomUUID()}")
+    Files.writeString(tmp, Catalog.toJson(catalog))
+    Files.move(tmp, configsPath, StandardCopyOption.ATOMIC_MOVE)
   }
 
   def loadCatalog(): Unit =
     if (Files.exists(configsPath))
       catalog = Catalog.fromJson(Files.readString(configsPath))
 
-  // -- append-only resume logs (utils.py:26-42, 96-97) -------------------
-  private def logPath(kind: String): Path = Paths.get(outputDir, s"log_$kind.txt")
-  def logAppend(kind: String, entry: String): Unit = {
+  /** Delete what a crash between a write and its commit leaves: every
+    * staged `FILE_*.csv` the catalog does not list and every catalog temp. */
+  def sweepUncommitted(): Unit = {
+    val listed = catalog.nodes.values.flatMap(_.files.keys).toSet ++
+      catalog.edges.values.flatMap(_.keys)
+    (Seq(nodesDir, edgesDir).flatMap(Context.listDir).filter { p =>
+      val n = p.getFileName.toString
+      n.startsWith("FILE_") && n.endsWith(".csv") && !listed.contains(n)
+    } ++ Context.listDir(configsDir).filter(_.getFileName.toString.startsWith("configs.json.tmp-")))
+      .foreach(Files.delete)
+  }
+
+  // -- loader resume log (utils.py:26-42, 96-97): the files an external
+  // database already holds; in-session loaders neither read nor write it
+  private def loaderLog: Path = Paths.get(outputDir, "log_loader.txt")
+  def logLoaded(fname: String): Unit = {
     Files.createDirectories(Paths.get(outputDir))
-    Files.writeString(logPath(kind),
-      entry + "\n",
+    Files.writeString(loaderLog,
+      fname + "\n",
       java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
   }
-  def logEntries(kind: String): Set[String] = {
-    val p = logPath(kind)
-    if (Files.exists(p))
-      scala.jdk.CollectionConverters.ListHasAsScala(Files.readAllLines(p)).asScala.toSet
+  def loadedFiles: Set[String] =
+    if (Files.exists(loaderLog))
+      scala.jdk.CollectionConverters.ListHasAsScala(Files.readAllLines(loaderLog)).asScala.toSet
     else Set.empty
-  }
-  def clearLogs(): Unit =
-    Seq("parser", "mapper", "loader").foreach(k => Files.deleteIfExists(logPath(k)))
+  def clearLoaderLog(): Unit = Files.deleteIfExists(loaderLog)
 }
 
 /** The Spark halves of one batch of staging work, started on the
@@ -132,12 +154,14 @@ final class Context(
   private var lastNodeChunk: Long = 0L
   private var lastEdgeChunk: Long = 0L
 
-  /** Rename a save's chunk files into `dir` as `fileName(start + i)`. */
+  /** Move a save's chunk files into `dir` as `fileName(start + i)`. The
+    * names carry this context's fresh uuid, so no live file is replaced;
+    * they are published by the parser's catalog commit. */
   private def rename(
       chunks: Seq[(Path, Long)], dir: Path, fileName: Long => String, start: Long): Seq[(String, Long)] =
     chunks.zipWithIndex.map { case ((part, count), i) =>
       val name = fileName(start + i)
-      Files.move(part, dir.resolve(name), StandardCopyOption.REPLACE_EXISTING)
+      Files.move(part, dir.resolve(name))
       (name, count)
     }
 
@@ -276,7 +300,8 @@ object Context {
     } finally input.unpersist()
   }
 
-  private def partFile(dir: Path): Path =
+  /** The one `part-*` file Spark wrote into `dir`. */
+  private[graft] def partFile(dir: Path): Path =
     listDir(dir).find(_.getFileName.toString.startsWith("part-"))
       .getOrElse(throw new IllegalStateException(s"no part file in $dir"))
 

@@ -1,6 +1,6 @@
 package graft.etl
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators.Mapping
@@ -20,14 +20,23 @@ final case class RegisteredParser(
   * (graph_etl/pipeline.py + utils.py control plane).
   *
   * One instance per ETL run; holds the driver-side store (catalog, mappings,
-  * logs). All data movement is Spark jobs; everything here is metadata.
+  * stats). All data movement is Spark jobs; everything here is metadata.
+  * The committed catalog is the one resume record ([[StoreInfo]]).
   *
   * A parser's saves run as concurrent Spark jobs (at most
-  * `defaultParallelism` in flight, see [[Context]]); its staged files and
-  * catalog entries become visible when its body returns, in call order,
-  * before the parser is resume-logged. A body or save that throws
-  * publishes nothing and is not logged complete. The mapping rewrites of
+  * `defaultParallelism` in flight, see [[Context]]); when its body returns,
+  * its staged files, their catalog entries and its name in
+  * `Catalog.parsed` are committed together by one catalog rename. A body
+  * or save that throws publishes nothing. The mapping rewrites of
   * [[mapProperties]] likewise run concurrently and commit in catalog order.
+  *
+  * Two departures from the reference, which deletes its resume logs at
+  * load (pipeline.py:193-199) and so re-runs every parser after it:
+  *   - `parsed` and the `mapped` marks outlive `load()`, so a later
+  *     `parse()` or `withParser` skips the parsers already parsed and
+  *     re-maps no file;
+  *   - an in-session loader is offered every catalog file on every
+  *     `load()`, so a resumed load counts every file in `loaded_*` stats.
   *
   * @param strictCompat reproduce the reference's full-outer ghost-edge
   *   mapping joins bug-for-bug (SURVEY §2.12.1); default fixed (left-outer).
@@ -55,7 +64,8 @@ final class GraphEtl(
     parsers(s"FUNCTION_$name") = RegisteredParser(name, metadatas, sourcesPath, ignore, body)
 
   /** init (utils.py:129-133 → pipeline.py:20-29): create output dirs, wire
-    * filters/callbacks, optionally resume from a persisted catalog. */
+    * filters/callbacks, optionally resume from the committed catalog,
+    * deleting the staged files and catalog temps it does not list. */
   def init(
       filter: Option[GraphFilter] = None,
       callbacks: Seq[SchemaCallback] = Nil,
@@ -63,17 +73,17 @@ final class GraphEtl(
     store.initDirs()
     store.filter = filter
     store.callbacks = callbacks
-    if (loadConfigs) store.loadCatalog()
+    if (loadConfigs) { store.loadCatalog(); store.sweepUncommitted() }
     initialized = true
   }
 
-  /** Skip/resume guard (utils.py:255-269): skip when already parsed (resume
-    * log), explicitly ignored, or a declared source path is missing.
+  /** Skip/resume guard (utils.py:255-269): skip when already parsed (in
+    * `Catalog.parsed`), explicitly ignored, or a declared source path is missing.
     * Resume keys on the parser *name* (stable across JVMs) rather than the
     * reference's per-instance uuid. */
   private def shouldSkip(p: RegisteredParser): Boolean =
     p.ignore ||
-      store.logEntries("parser").contains(p.name) ||
+      store.catalog.parsed.contains(p.name) ||
       p.sourcesPath.exists(sp => !Files.exists(Paths.get(sp)))
 
   /** parse (utils.py:135-153 → pipeline.py:32-46): run every registered
@@ -92,10 +102,10 @@ final class GraphEtl(
   }
 
   /** Eager context-manager form (`with Parser(...) as ctx`,
-    * utils.py:271-283): body runs immediately; mapping runs at block exit —
-    * incremental and idempotent-by-rewrite, like the reference. Honors the
+    * utils.py:271-283): body runs immediately; mapping runs at block exit
+    * over the files not yet `mapped`. Honors the
     * FULL `_should_skip` guard (utils.py:255-269) exactly like the deferred
-    * form: resume log, explicit `ignore`, and any missing declared source
+    * form: `parsed`, explicit `ignore`, and any missing declared source
     * path all skip the body (and the mapping pass). */
   def withParser(
       name: String,
@@ -109,11 +119,12 @@ final class GraphEtl(
     }
   }
 
-  /** Run one parser body, then publish its saves in call order. The
-    * resume marker is written only on success — a parser whose body or
-    * save threw must re-run on resume, not be skipped as complete. (The
-    * reference's __exit__ runs these even on exception, utils.py:278-283;
-    * that marks half-staged parsers done, which we deliberately fix.) */
+  /** Run one parser body, then publish its saves in call order and commit
+    * them with the parser's name in `parsed` — only on success: a parser
+    * whose body or save threw must re-run on resume, not be skipped as
+    * complete. (The reference's __exit__ runs these even on exception,
+    * utils.py:278-283; that marks half-staged parsers done, which we
+    * deliberately fix.) */
   private def runParser(name: String, metadatas: Map[String, String], body: Context => Unit): Unit = {
     val ctx = new Context(store, metadatas, java.util.UUID.randomUUID().toString.take(8),
       nodeChunkSize, edgeChunkSize)
@@ -121,7 +132,7 @@ final class GraphEtl(
     try { body(ctx); ctx.publish() } finally ctx.discard()
     // per-parser wall time (utils.py:80-97 save_parser_infos logging)
     store.stats(s"parser_time_ms_$name") = (System.nanoTime() - tp) / 1000000
-    store.logAppend("parser", name)
+    store.catalog = store.catalog.copy(parsed = store.catalog.parsed :+ name)
     store.persistCatalog()
   }
 
@@ -134,7 +145,8 @@ final class GraphEtl(
   private[etl] def readStagedEdges(fname: String, cfg: EdgeFileConfig): DataFrame =
     StagedCsv.readFile(spark, store.edgesDir.resolve(fname), cfg.properties_type)
 
-  /** Both mapping passes over every staged edge file (pipeline.py:48-122).
+  /** Both mapping passes over every staged edge file not yet `mapped`
+    * (pipeline.py:48-122).
     *
     * Pass A — explicit `mapIds` mappings: endpoints whose `"{Label}:{prop}"`
     * spec has a registered mapping are rewritten via join+coalesce.
@@ -145,12 +157,12 @@ final class GraphEtl(
     * Every unmapped file is planned on this thread (the pass A/B frames are
     * lazy); the dirty files' dedup/count/write then run as concurrent Spark
     * jobs, each into a temp dir (Spark cannot overwrite its own input —
-    * SURVEY §2.2 K3), at most `defaultParallelism` at once. Commits happen
-    * in catalog order: per file the rename over the staged file, then the
-    * catalog persist, then the mapper-log line.
+    * SURVEY §2.2 K3), at most `defaultParallelism` at once. Each rewrite
+    * is moved in under a fresh name and swapped into the catalog by its own
+    * commit, in catalog order; the superseded file is deleted after it. One
+    * last commit marks the files that needed no rewrite.
     */
   def mapProperties(): Unit = {
-    val mapped = store.logEntries("mapper")
     // pass-B auto-mappings are identical for every edge file addressing the
     // same (label, prop) — build each once, not per file
     val autoMappings = mutable.Map.empty[(String, String), DataFrame]
@@ -158,7 +170,7 @@ final class GraphEtl(
     try {
       val planned = for {
         (edgeType, files) <- store.catalog.edges.toSeq
-        (fname, cfg0) <- files.toSeq if !mapped.contains(fname)
+        (fname, cfg0) <- files.toSeq if !cfg0.mapped
       } yield {
         var cfg = cfg0
         var df = readStagedEdges(fname, cfg)
@@ -172,14 +184,8 @@ final class GraphEtl(
         if (!cfg.ignore_mapping) {
           Seq(("start", cfg.start), ("end", cfg.end)).foreach { case (colName, spec) =>
             store.mappings.get(spec).foreach { mapping =>
-              val target = s"${colName}_mapped_from"
-              val remapped = Mapping.applyMapping(df, mapping, colName, strictCompat)
-              // idempotent re-map: a crash between load() (which clears
-              // the mapper log) and the next parse() re-enters this pass
-              // on an already-mapped file — overwrite the provenance
-              // column instead of duplicating it
-              df = (if (remapped.columns.contains(target)) remapped.drop(target) else remapped)
-                .withColumnRenamed("mapped_from", target)
+              df = Mapping.applyMapping(df, mapping, colName, strictCompat)
+                .withColumnRenamed("mapped_from", s"${colName}_mapped_from")
               dirty = true
             }
           }
@@ -209,23 +215,23 @@ final class GraphEtl(
           }
         }
 
-        val rewrite =
-          if (dirty) Some(rewrites.submit("graft-rewrite-")(stageRewrite(edgeType, fname, df, cfg)))
-          else None
-        (fname, rewrite)
+        if (dirty) Some(rewrites.submit("graft-rewrite-")(stageRewrite(edgeType, fname, df, cfg)))
+        else None
       }
-
-      planned.foreach { case (fname, rewrite) =>
-        rewrite.foreach(_.await()())
-        store.logAppend("mapper", fname)
-      }
+      planned.foreach(_.foreach(_.await()()))
     } finally rewrites.close()
+    // every file unmapped at the start is now rewritten or needed no rewrite
+    store.catalog = store.catalog.copy(edges = store.catalog.edges.map { case (t, files) =>
+      t -> files.map { case (f, cfg) => f -> cfg.copy(mapped = true) }
+    })
     store.persistCatalog()
   }
 
   /** The Spark half of one edge file's rewrite: dedup, count and write the
     * mapped frame into `tmp`. Returns the commit, which runs on the caller
-    * thread in catalog order. */
+    * thread in catalog order: it moves the file in under the reference name
+    * with a fresh uuid and the same chunk index, swaps it for `fname` in the
+    * catalog, and deletes `fname` once that is committed. */
   private def stageRewrite(edgeType: String, fname: String, df: DataFrame, cfg: EdgeFileConfig)(
       tmp: Path): () => Unit = {
     val deduped = Mapping.dedupEndpoints(df).cache()
@@ -234,19 +240,18 @@ final class GraphEtl(
       deduped.coalesce(1).write
         .option("sep", ";").option("header", "true")
         .mode("overwrite").csv(tmp.toString)
-      val part = Context.listDir(tmp).find(_.getFileName.toString.startsWith("part-"))
-        .getOrElse(throw new IllegalStateException(s"rewrite of $fname produced no file"))
+      val part = Context.partFile(tmp)
       // record the post-mapping schema (pipeline.py:69,110 retype)
-      val mappedCfg = cfg.copy(count = newCount, properties_type = Catalog.schemaTypes(deduped.schema))
+      val mappedCfg = cfg.copy(
+        count = newCount, properties_type = Catalog.schemaTypes(deduped.schema), mapped = true)
+      val newName = s"FILE_${java.util.UUID.randomUUID().toString.take(8)}" +
+        fname.stripPrefix("FILE_").dropWhile(_ != '_')
       () => {
-        Files.move(part, store.edgesDir.resolve(fname), StandardCopyOption.REPLACE_EXISTING)
+        Files.move(part, store.edgesDir.resolve(newName))
         store.catalog = store.catalog.copy(edges = store.catalog.edges +
-          (edgeType -> (store.catalog.edges(edgeType) + (fname -> mappedCfg))))
-        // persist BEFORE the resume marker: a crash between the file
-        // rewrite and here is recovered by the idempotent re-map; a
-        // marker without a persisted catalog would strand a mapped file
-        // behind a stale schema forever
+          (edgeType -> (store.catalog.edges(edgeType) - fname + (newName -> mappedCfg))))
         store.persistCatalog()
+        Files.delete(store.edgesDir.resolve(fname))
       }
     } finally deduped.unpersist()
   }
@@ -275,7 +280,13 @@ final class GraphEtl(
   // ------------------------------------------------------------------
 
   /** Iterate the catalog and hand every staged file to `loader`, honoring
-    * filter and resume semantics; clears the resume logs on success.
+    * the filter, then clear the loader log.
+    *
+    * The loader log lists the files an external database already holds,
+    * so a resumed load skips them. It is read and written only for loaders
+    * whose state lives outside the JVM (Neo4j, TigerGraph): an
+    * [[InSessionLoader]] holds nothing from an earlier run and is offered
+    * every catalog file.
     *
     * Dead-parameter parity note: the reference's `load` also declares a
     * `clear_source` flag (utils.py:156) that its own implementation never
@@ -285,34 +296,25 @@ final class GraphEtl(
   def load(loader: Loader): Unit = {
     if (!parsed && !Files.exists(store.configsPath)) parse()
     if (store.catalog.nodes.isEmpty) store.loadCatalog()
-    val loaded = store.logEntries("loader")
+    val external = !loader.isInstanceOf[InSessionLoader]
+    val loaded = if (external) store.loadedFiles else Set.empty[String]
+    def record(stat: String, fname: String, n: Long): Unit = {
+      store.stats(stat) = store.stats.getOrElse(stat, 0L) + n
+      if (external) store.logLoaded(fname)
+    }
 
     store.catalog.nodes.foreach { case (label, cfg) =>
       cfg.files.foreach { case (fname, info) =>
-        val filtered = store.filter.exists(_.skipLoadNode(info.metadatas, label))
-        if (filtered) loader match {
+        if (store.filter.exists(_.skipLoadNode(info.metadatas, label))) loader match {
           // a deliberately-excluded label is not a missing one: let the
           // in-session loader treat later match-strategy edge references to
           // it as empty (external-DB parity) instead of failing fast
           case l: InSessionLoader => l.markNodesSkipped(label)
           case _ => ()
-        }
-        if (!filtered && !loaded.contains(fname)) {
-          val n = loader.loadNodes(
+        } else if (!loaded.contains(fname))
+          record(s"loaded_nodes_$label", fname, loader.loadNodes(
             store.nodesDir.resolve(fname).toString, label, cfg.primary_key,
-            info.metadatas, cfg.properties_type, cfg.constraints, cfg.indexs)
-          store.stats(s"loaded_nodes_$label") = store.stats.getOrElse(s"loaded_nodes_$label", 0L) + n
-          store.logAppend("loader", fname)
-        } else if (!filtered) loader match {
-          // resume: the file is already in the external store, but an
-          // in-session loader holds node frames only in memory — rebuild
-          // them (no re-count) or match-strategy edge loads on this run
-          // would find no endpoints and drop edges
-          case l: InSessionLoader => l.restoreNodes(
-            store.nodesDir.resolve(fname).toString, label, cfg.primary_key,
-            info.metadatas, cfg.properties_type)
-          case _ => ()
-        }
+            info.metadatas, cfg.properties_type, cfg.constraints, cfg.indexs))
       }
     }
     // a label referenced by edges but absent from the node catalog (e.g.
@@ -329,25 +331,14 @@ final class GraphEtl(
     }
     store.catalog.edges.foreach { case (edgeType, files) =>
       files.foreach { case (fname, cfg) =>
-        val filtered = store.filter.exists(_.skipLoadEdge(cfg.metadatas, edgeType))
-        if (!filtered && !loaded.contains(fname)) {
-          val n = loader.loadEdges(
+        if (!store.filter.exists(_.skipLoadEdge(cfg.metadatas, edgeType)) && !loaded.contains(fname))
+          record(s"loaded_edges_$edgeType", fname, loader.loadEdges(
             store.edgesDir.resolve(fname).toString, edgeType, cfg.start, cfg.end,
-            cfg.metadatas, cfg.properties_type)
-          store.stats(s"loaded_edges_$edgeType") = store.stats.getOrElse(s"loaded_edges_$edgeType", 0L) + n
-          store.logAppend("loader", fname)
-        } else if (!filtered) loader match {
-          // resume: same rebuild as restoreNodes, for edge files (an
-          // external DB still holds them; in-session frames do not)
-          case l: InSessionLoader => l.restoreEdges(
-            store.edgesDir.resolve(fname).toString, edgeType, cfg.start, cfg.end,
-            cfg.metadatas, cfg.properties_type)
-          case _ => ()
-        }
+            cfg.metadatas, cfg.properties_type))
       }
     }
     store.callbacks.foreach(_.save(store.catalog, outputDir))
-    store.clearLogs()
+    store.clearLoaderLog()
   }
 
   /** clear (utils.py:177-189): remove the whole staging area. */

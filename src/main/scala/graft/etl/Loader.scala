@@ -19,30 +19,15 @@ trait Loader {
 }
 
 /** A loader whose loaded state lives only in this JVM session (no external
-  * database holds the nodes between runs). On resume, `GraphEtl.load` skips
-  * files listed in the loader resume log — correct for an external DB that
-  * already has them, but an in-session loader must rebuild its node frames
-  * for those files or `match`-strategy edge loads find no endpoints.
-  * `restoreNodes` re-ingests a node file without re-counting it (the
-  * catalog already has its stats). */
+  * database holds the nodes between runs). `GraphEtl.load` neither reads
+  * nor writes the loader resume log for it: it is offered every catalog
+  * file on every load. */
 trait InSessionLoader { self: Loader =>
-  def restoreNodes(
-      filePath: String, label: String, primaryKey: String,
-      metadatas: Map[String, String], propertiesType: Map[String, String]): Unit
-
   /** Record that a node label's files were deliberately excluded (store
     * filter), so a later match-strategy edge load referencing it means
     * "endpoints absent" (empty result, external-DB parity) rather than a
-    * load-order/resume bug (fail fast). */
+    * load-order bug (fail fast). */
   def markNodesSkipped(label: String): Unit
-
-  /** Re-ingest an already-loaded (resume-logged) edge file without
-    * re-counting — the edge counterpart of [[restoreNodes]]: an external
-    * DB still holds those edges across runs, an in-session loader must
-    * rebuild them. */
-  def restoreEdges(
-      filePath: String, edgeType: String, start: String, end: String,
-      metadatas: Map[String, String], propertiesType: Map[String, String]): Unit
 }
 
 /** Executable in-session loader: staged files become two governed DataFrame
@@ -76,11 +61,11 @@ final class SparkGraphLoader(
   private val edgeFrames = mutable.LinkedHashMap.empty[String, DataFrame]
   private val skippedLabels = mutable.Set.empty[String]
 
-  /** Files already merged into this instance's frames. Makes load()/restore
-    * idempotent per loader instance: `GraphEtl.load` clears the resume log on
-    * success, so a second load() on the same loader would otherwise re-union
-    * every file's rows (nodes survive via dropDuplicates("id"); edges and
-    * as_edge HAS_METADATA edges would not). */
+  /** Files already merged into this instance's frames. Makes load()
+    * idempotent per loader instance: `GraphEtl.load` offers every catalog
+    * file on each call, so a second load() on the same loader would
+    * otherwise re-union every file's rows (nodes survive via
+    * dropDuplicates("id"); edges and as_edge HAS_METADATA edges would not). */
   private val ingestedFiles = mutable.Set.empty[String]
 
   override def markNodesSkipped(label: String): Unit = skippedLabels += label
@@ -91,22 +76,15 @@ final class SparkGraphLoader(
       constraints: Seq[String], indexs: Seq[String]): Long =
     ingestNodes(filePath, label, primaryKey, metadatas, propertiesType).count()
 
-  /** Rebuild the in-memory frame for an already-loaded (resume-logged) node
-    * file: same merge as [[loadNodes]], no count action. */
-  override def restoreNodes(
-      filePath: String, label: String, primaryKey: String,
-      metadatas: Map[String, String], propertiesType: Map[String, String]): Unit =
-    ingestNodes(filePath, label, primaryKey, metadatas, propertiesType)
-
-  /** Shared node-ingest pipeline; returns the per-file frame (pre-merge)
-    * so `loadNodes` can report this file's row count. */
+  /** Merge one node file into the label's frame; returns the per-file
+    * frame (pre-merge) so `loadNodes` can report this file's row count. */
   private def ingestNodes(
       filePath: String, label: String, primaryKey: String,
       metadatas: Map[String, String], propertiesType: Map[String, String]): DataFrame = {
     val df0 = StagedCsv.readFile(spark, java.nio.file.Paths.get(filePath), propertiesType)
       .withColumn("id", col(primaryKey).cast(StringType)) // §2.12.3 canonical id
-    // already merged by this instance (restored, or a prior load() whose log
-    // was cleared): report the per-file frame for counting, mutate nothing
+    // already merged by this instance (a prior load()): report the
+    // per-file frame for counting, mutate nothing
     if (ingestedFiles.contains(filePath)) return df0
     val df = metadataStrategy match {
       case "as_property" =>
@@ -148,11 +126,6 @@ final class SparkGraphLoader(
       filePath: String, edgeType: String, start: String, end: String,
       metadatas: Map[String, String], propertiesType: Map[String, String]): Long =
     ingestEdges(filePath, edgeType, start, end, propertiesType).count()
-
-  override def restoreEdges(
-      filePath: String, edgeType: String, start: String, end: String,
-      metadatas: Map[String, String], propertiesType: Map[String, String]): Unit =
-    ingestEdges(filePath, edgeType, start, end, propertiesType)
 
   /** Distinct endpoint-id set per label, cached across edge files —
     * without this every loadEdges count re-reads all node CSVs of both
@@ -220,14 +193,12 @@ final class SparkGraphLoader(
             } else {
               // In an external DB, MATCH against an absent label just finds
               // nothing; in-session there is no out-of-band node store, so
-              // an unexplained missing frame means a load-order/resume bug
-              // that would silently drop every edge in this file. Fail fast.
+              // an unexplained missing frame means a load-order bug that
+              // would silently drop every edge in this file. Fail fast.
               throw new IllegalStateException(
                 s"edge load '$edgeType' with strategy=match references node label(s) " +
                   s"[${missing.mkString(", ")}] with no loaded node frame — load the node " +
-                  "files first (on resume, GraphEtl.load restores them via " +
-                  "InSessionLoader.restoreNodes; filter-skipped labels must be declared " +
-                  "via markNodesSkipped)")
+                  "files first (filter-skipped labels must be declared via markNodesSkipped)")
             }
         }
       case "create" =>

@@ -24,10 +24,10 @@ private[etl] object StagedCsv {
   /** Read `paths`, which all share the header `cols`. With `header=true` +
     * an explicit schema Spark binds columns positionally, so the schema
     * must follow the files' own header order, never another file's. A
-    * header column missing from the catalog reads as string (happens when
-    * resuming from a crash between a mapping rewrite and the catalog
-    * persist — the read stays usable and the mapping re-run is
-    * idempotent). */
+    * header column missing from the catalog reads as string. A crash can no
+    * longer cause that: a mapping rewrite used to replace the live file
+    * before the catalog recorded its new schema, and now a rewrite and its
+    * schema are published by one catalog commit ([[StoreInfo]]). */
   def read(
       spark: SparkSession, cols: List[String],
       propertiesType: Map[String, String], paths: Seq[Path]): DataFrame = {

@@ -3,7 +3,8 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Shingling / MinHash / SimHash column expressions.
+/** Shingling / SimHash column expressions (MinHash signatures and bands
+  * are the native [[graft.plans.MinHashBands]]).
   *
   * Design for scale: signatures are computed per-row from an array column
   * with `transform`/`aggregate` — no explode, no shuffle, no UDF. The only
@@ -50,42 +51,6 @@ object HashFunctions {
           i => concat_ws(" ", slice(t, i + 1, lit(n))))),
       s => s =!= "")
   }
-
-  /** MinHash signature: k independent hash family members h_i(s) =
-    * xxhash64(i, s); signature[i] = min over shingles. One pass per row,
-    * no shuffle. NOTE: portable HOF reference form — the Dedup pipelines
-    * use graft.plans.MinHashBands, whose (faster) affine family produces
-    * DIFFERENT signature values. */
-  def minhashSignature(shingles: Column, numHashes: Int): Column = {
-    require(numHashes > 0, s"numHashes must be positive, got $numHashes")
-    transform(
-      sequence(lit(0), lit(numHashes - 1)),
-      i => array_min(transform(shingles, s => xxhash64(i, s))))
-  }
-
-  /** LSH band hashes over a MinHash signature: `bands` hashes, each over
-    * `rowsPerBand` consecutive signature slots. Docs sharing any band hash
-    * are candidate near-duplicates. A signature shorter than
-    * `bands*rowsPerBand` raises per row instead of silently hashing empty
-    * slices — xxhash64(b, []) is identical for every row, which would turn
-    * the out-of-range bands into one quadratic everyone-matches bucket. */
-  def lshBandHashes(sig: Column, bands: Int, rowsPerBand: Int): Column = {
-    require(bands > 0 && rowsPerBand > 0,
-      s"bands ($bands) and rowsPerBand ($rowsPerBand) must be positive")
-    val need = bands * rowsPerBand
-    when(size(sig) < need, raise_error(concat(
-        lit("lshBandHashes: signature has "), size(sig).cast("string"),
-        lit(s" slots, needs $need"))))
-      .otherwise(transform(
-        sequence(lit(0), lit(bands - 1)),
-        b => xxhash64(b, slice(sig, b * rowsPerBand + 1, lit(rowsPerBand)))))
-  }
-
-  /** Estimated Jaccard from two MinHash signatures: fraction of agreeing
-    * slots. */
-  def minhashJaccard(sigA: Column, sigB: Column): Column =
-    size(filter(zip_with(sigA, sigB, (a, b) => a === b), x => x))
-      .cast("double") / size(sigA).cast("double")
 
   /** Exact Jaccard over two shingle-set columns — the fused one-pass
     * native form ([[graft.plans.NativeExpressions.arrayJaccard]]):

@@ -103,22 +103,10 @@ object TextFunctions {
 
   /** Composite quality heuristic in [0,1]: long-enough, word-like,
     * not digit/punct-soup, has stopwords (≈ C4/Gopher-style filters).
-    * Evaluated by the one-pass native expression — same arithmetic as
-    * [[qualityScoreColumns]], ~10× cheaper per row. */
+    * Evaluated by the one-pass native expression; its built-ins-only
+    * spec, ~10× dearer per row, is `qualityScoreColumns` in ExtSpec. */
   def qualityScore(c: Column): Column =
     graft.plans.NativeExpressions.qualityScore(c, englishStopwords)
-
-  /** The original built-ins-only formula (3 regex passes + 2 tokenizations
-    * per evaluation). Kept as the executable spec the native expression is
-    * tested against, and for callers who need a zero-custom-code plan. */
-  def qualityScoreColumns(c: Column): Column = {
-    val lenScore = least(length(c).cast("double") / lit(500.0d), lit(1.0d))
-    val wordScore = when(meanTokenLen(c).between(3.0, 12.0), 1.0d).otherwise(0.5d)
-    val punctPenalty = lit(1.0d) - least(punctRatio(c) * 4.0d, lit(1.0d))
-    val digitPenalty = lit(1.0d) - least(digitRatio(c) * 4.0d, lit(1.0d))
-    val stopScore = least(stopwordRatio(c) * 3.0d, lit(1.0d))
-    (lenScore + wordScore + punctPenalty + digitPenalty + stopScore) / lit(5.0d)
-  }
 
   // -- language identification (n-gram/stopword heuristic) --------------
 
@@ -135,27 +123,14 @@ object TextFunctions {
     "es" -> Seq("el", "los", "las", "una", "por", "con", "para", "como", "más", "pero"),
     "it" -> Seq("il", "di", "che", "non", "per", "sono", "della", "anche", "come", "questo"))
 
-  /** Stopword-hit count for one language over lowercase tokens. */
-  def languageScore(c: Column, lang: String): Column =
-    size(filter(tokens(lower(c)), t => t.isin(languageMarkers(lang): _*)))
-
   /** Language order — doubles as the tie-break priority (en first). */
   val languageOrder: Seq[String] = Seq("en", "fr", "de", "es", "it")
 
   /** Heuristic language-ID: argmax of marker-word hits; `und` when no
     * marker is seen. Ties break by language order (en first). Evaluated by
     * the one-pass native expression (five tokenize+filter stacks
-    * otherwise); [[langIdColumns]] is the equivalent built-ins-only spec. */
+    * otherwise); `langIdColumns` in ExtSpec is the equivalent
+    * built-ins-only spec. */
   def langId(c: Column): Column =
     graft.plans.NativeExpressions.langId(c, languageOrder.map(l => l -> languageMarkers(l)))
-
-  /** Built-ins-only language-ID formula (kept as the executable spec the
-    * native expression is tested against). */
-  def langIdColumns(c: Column): Column = {
-    val scores = languageOrder.map(l => languageScore(c, l))
-    val best = greatest(scores: _*)
-    languageOrder.zip(scores).foldRight(lit("und"): Column) { case ((l, s), acc) =>
-      when(best > 0 && s === best, lit(l)).otherwise(acc)
-    }
-  }
 }

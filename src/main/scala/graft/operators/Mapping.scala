@@ -30,7 +30,10 @@ object Mapping {
       strictCompat: Boolean = false,
       broadcastMapping: Boolean = true): DataFrame = {
     val joinType = if (strictCompat) "full_outer" else "left_outer"
-    val m0 = mapping.select(col("old_value"), col("new_value"))
+    // fresh attributes per call: one mapping frame may be joined twice into
+    // one plan (both endpoints of a self-typed edge), and its own
+    // attributes would then be ambiguous in the second join
+    val m0 = mapping.select(col("old_value").as("__old_value"), col("new_value").as("__new_value"))
     val m = if (broadcastMapping && !strictCompat) broadcast(m0) else m0
     // When old and new types differ the merged column becomes a string —
     // the reference records the post-mapping dtype as Utf8 (pipeline.py:69);
@@ -40,19 +43,19 @@ object Mapping {
     val mType = mapping.schema("new_value").dataType
     val oType = mapping.schema("old_value").dataType
     val (newSide, oldSide) =
-      if (pType == mType) (m("new_value"), edges(prop))
-      else (m("new_value").cast("string"), edges(prop).cast("string"))
+      if (pType == mType) (col("__new_value"), edges(prop))
+      else (col("__new_value").cast("string"), edges(prop).cast("string"))
     // join keys likewise compare as strings when types differ — ANSI mode
     // would otherwise coerce the string side numerically and throw on
     // non-numeric ids instead of just not matching
     val joinCond =
-      if (pType == oType) edges(prop) === m("old_value")
-      else edges(prop).cast("string") === m("old_value").cast("string")
+      if (pType == oType) edges(prop) === col("__old_value")
+      else edges(prop).cast("string") === col("__old_value").cast("string")
     edges
       .join(m, joinCond, joinType)
       .withColumn("__mapped", coalesce(newSide, oldSide))
       .withColumnRenamed(prop, "mapped_from")
-      .drop(m("old_value")).drop(m("new_value"))
+      .drop("__old_value", "__new_value")
       .withColumnRenamed("__mapped", prop)
   }
 

@@ -84,10 +84,7 @@ object ScaleInput {
   private def writeOneFile(df: DataFrame, target: Path): Unit = {
     val tmp = target.resolveSibling(s"_tmp_${target.getFileName}")
     df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val parts = Files.list(tmp)
-    val part = try parts.filter(_.getFileName.toString.startsWith("part-")).findFirst().get()
-      finally parts.close()
-    Files.move(part, target, StandardCopyOption.REPLACE_EXISTING)
+    Files.move(graft.etl.Context.partFile(tmp), target, StandardCopyOption.REPLACE_EXISTING)
     graft.etl.Context.deleteRecursively(tmp)
   }
 

@@ -269,7 +269,7 @@ class EtlPipelineSpec extends SparkSpec {
     }
     assert(e.getMessage == "parser failed")
     // the save that ran before the throw is neither published nor left behind
-    assert(!etl.store.logEntries("parser").contains("boom"))
+    assert(!etl.store.catalog.parsed.contains("boom"))
     assert(etl.store.catalog.nodes.isEmpty)
     assert(stagedFiles(etl).isEmpty)
     assert(leftoverTempDirs(etl).isEmpty)
@@ -311,10 +311,12 @@ class EtlPipelineSpec extends SparkSpec {
       assert(counts.init.forall(_ == 7L), s"$label: $counts")
       assert(counts == files.map(nodes(label).files(_).count), label)
     }
-    // the mapped edge files (auto pk resolution) are rewritten in place,
-    // and their catalog counts follow the rewritten contents
+    // the mapped edge files (auto pk resolution) are rewritten under fresh
+    // names with the same chunk indices, their catalog counts follow the
+    // rewritten contents, and no superseded file is left
     val edges = etl.store.catalog.edges("LIKES")
     assert(edges.keys.toSeq.map(index).sorted == (0 until 8))
+    assert(stagedFiles(etl).toSet == nodes.values.flatMap(_.files.keys).toSet ++ edges.keys)
     edges.foreach { case (f, cfg) =>
       assert(cfg.end == "B:id")
       assert(lines(etl.store.edgesDir.resolve(f)) - 1 == cfg.count, f)
@@ -332,7 +334,7 @@ class EtlPipelineSpec extends SparkSpec {
       ctx.saveEdges(Seq((1L, 2L)).toDF("start", "end"), "E", "N:id", "N:id")
     }
     def assertNothingPublished(): Unit = {
-      assert(!etl.store.logEntries("parser").contains("p"))
+      assert(!etl.store.catalog.parsed.contains("p"))
       assert(etl.store.catalog.nodes.isEmpty && etl.store.catalog.edges.isEmpty)
       assert(stagedFiles(etl).isEmpty)
       assert(leftoverTempDirs(etl).isEmpty)
@@ -362,7 +364,7 @@ class EtlPipelineSpec extends SparkSpec {
     // a re-run succeeds and stages every row exactly once
     etl.parser("p")(good)
     etl.parse()
-    assert(etl.store.logEntries("parser").contains("p"))
+    assert(etl.store.catalog.parsed.contains("p"))
     assert(etl.store.catalog.nodes.keySet == Set("N"))
     assert(etl.store.catalog.nodes("N").files.values.map(_.count).sum == 2)
     assert(etl.store.catalog.edges("E").values.map(_.count).sum == 1)
@@ -395,5 +397,181 @@ class EtlPipelineSpec extends SparkSpec {
     etl.parse() // second parse: resume log has the parser name
     assert(runs == 1)
     etl.clear()
+  }
+
+  test("after load, a later parser re-runs no parsed parser and maps no file twice") {
+    val etl = newEtl()
+    var runsA = 0
+    def a(ctx: Context): Unit = {
+      runsA += 1
+      ctx.saveEdges(Seq((1L, "x"), (2L, "x")).toDF("start", "end"), "E", "N:id", "M:id")
+      ctx.mapIds(Seq((1L, 2L), (2L, 3L)).toDF("old_value", "new_value"), "N:id")
+    }
+    etl.withParser("a")(a)
+    etl.load(new SparkGraphLoader(spark))
+    etl.withParser("b") { ctx => ctx.saveNodes(Seq((7L, "n")).toDF("id", "name"), "N") }
+    etl.withParser("a")(a)
+    assert(runsA == 1)
+    // mapped once: 1->2, 2->3; a second pass would make both starts 3 and
+    // the endpoint dedup would drop one edge
+    val (fname, cfg) = etl.store.catalog.edges("E").head
+    assert(cfg.count == 2)
+    assert(etl.readStagedEdges(fname, cfg).select("start").as[Long].collect().toSet == Set(2L, 3L))
+    etl.clear()
+  }
+
+  test("a self-typed edge maps both endpoints through one mapping (pass A and pass B)") {
+    val etl = newEtl()
+    etl.parser("self", Map("source" -> "t")) { ctx =>
+      ctx.saveNodes(Seq((101L, "Ann"), (102L, "Bob")).toDF("id", "name"), "P")
+      ctx.saveEdges(Seq((1L, 2L), (2L, 1L)).toDF("start", "end"), "A", "N:id", "N:id")
+      ctx.mapIds(Seq((1L, 11L), (2L, 12L)).toDF("old_value", "new_value"), "N:id")
+      ctx.saveEdges(Seq(("Ann", "Bob")).toDF("start", "end"), "B", "P:name", "P:name")
+    }
+    etl.parse()
+    def pairs(edgeType: String): Set[(String, String)] = {
+      val (fname, cfg) = etl.store.catalog.edges(edgeType).head
+      etl.readStagedEdges(fname, cfg)
+        .select(col("start").cast("string"), col("end").cast("string")).as[(String, String)]
+        .collect().toSet
+    }
+    assert(pairs("A") == Set(("11", "12"), ("12", "11")))
+    assert(pairs("B") == Set(("101", "102")))
+    val b = etl.store.catalog.edges("B").head._2
+    assert(b.start == "P:id" && b.end == "P:id")
+    etl.clear()
+  }
+
+  test("a reference-shaped configs.json loads with nothing parsed or mapped") {
+    val dir = Files.createTempDirectory("graft-refcat")
+    Seq("nodes", "edges", "configs").foreach(d => Files.createDirectories(dir.resolve(d)))
+    val node = "FILE_3f2c9a1e-0b7d-4c55-9e61-2a8d4f7b1c90_Person_0.csv"
+    val edge = "FILE_3f2c9a1e-0b7d-4c55-9e61-2a8d4f7b1c90_PersonKNOWSPerson_0.csv"
+    Files.writeString(dir.resolve("nodes").resolve(node), "id;name\n1;Ann\n2;Bob\n")
+    Files.writeString(dir.resolve("edges").resolve(edge), "start;end\n1;2\n")
+    Files.writeString(dir.resolve("configs").resolve("configs.json"), s"""{
+      "nodes": {"Person": {"primary_key": "id", "constraints": ["id"], "indexs": [],
+        "properties_type": {"id": "Int64", "name": "Utf8"},
+        "files": {"$node": {"metadatas": {"source": "ref"}, "count": 2}}}},
+      "edges": {"KNOWS": {"$edge": {"start": "Person:id", "end": "Person:id",
+        "properties_type": {"start": "Int64", "end": "Int64"}, "ignore_mapping": false,
+        "metadatas": {"source": "ref"}, "count": 1}}}}""")
+    val etl = new GraphEtl(spark, dir.toString)
+    etl.init(loadConfigs = true)
+    assert(etl.store.catalog.parsed.isEmpty)
+    assert(!etl.store.catalog.edges("KNOWS")(edge).mapped)
+    assert(etl.store.catalog.nodes("Person").files(node) == NodeFileInfo(Map("source" -> "ref"), 2))
+    val loader = new SparkGraphLoader(spark)
+    etl.load(loader)
+    assert(loader.nodeTable("Person").get.count() == 2)
+    assert(loader.edgeTable("KNOWS").get.count() == 1)
+    etl.clear()
+  }
+
+  // -- crash states: each is built by hand from the files a crash between
+  // a write and its catalog commit leaves, then resumed by a fresh engine
+
+  /** "people" stages Person; "knows" stages Company plus two edge types,
+    * KNOWS addressed by name at both ends (pass B rewrites it to ids) and
+    * WORKS_AT by primary keys (no rewrite). */
+  private def register(etl: GraphEtl, parsers: Set[String] = Set("people", "knows")): Unit = {
+    if (parsers("people")) etl.parser("people", Map("source" -> "t")) { ctx =>
+      ctx.saveNodes(Seq((1L, "Ann"), (2L, "Bob"), (3L, "Cy")).toDF("id", "name"), "Person")
+    }
+    if (parsers("knows")) etl.parser("knows", Map("source" -> "t")) { ctx =>
+      ctx.saveNodes(Seq((10L, "Acme")).toDF("id", "name"), "Company")
+      ctx.saveEdges(Seq(("Ann", "Bob"), ("Bob", "Cy"), ("Cy", "Zed")).toDF("start", "end"),
+        "KNOWS", "Person:name", "Person:name")
+      ctx.saveEdges(Seq((1L, 10L), (2L, 10L)).toDF("start", "end"), "WORKS_AT", "Person:id", "Company:id")
+    }
+  }
+
+  /** Resume `dir` through a fresh engine, then compare what a run is judged
+    * by: per-label and per-type counts, types and endpoint specs, the
+    * loaded rows, and a staging dir holding exactly the listed files. */
+  private def resumed(dir: String): Seq[Any] = {
+    val etl = new GraphEtl(spark, dir)
+    register(etl)
+    etl.init(loadConfigs = true)
+    etl.parse()
+    val loader = new SparkGraphLoader(spark)
+    etl.load(loader)
+    val c = etl.store.catalog
+    assert(stagedFiles(etl).toSet == c.nodes.values.flatMap(_.files.keys).toSet ++ c.edges.values.flatMap(_.keys))
+    assert(!Context.listDir(etl.store.configsDir).exists(_.getFileName.toString.contains(".tmp-")))
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] = df.collect().toSeq.map(r =>
+      r.schema.fieldNames.sorted.map(f => s"$f=${r.getAs[Any](f)}").mkString(",")).sorted
+    val summary = Seq(
+      c.parsed,
+      c.nodes.map { case (l, n) => l -> (n.files.values.map(_.count).sum, n.properties_type) },
+      c.edges.map { case (t, fs) => t -> (fs.values.map(_.count).sum,
+        fs.values.map(f => (f.start, f.end, f.properties_type, f.mapped)).toSet) },
+      etl.store.stats.filter(_._1.startsWith("loaded_")).toMap,
+      c.nodes.keys.map(l => l -> rows(loader.nodeTable(l).get)).toMap,
+      c.edges.keys.map(t => t -> rows(loader.edgeTable(t).get)).toMap)
+    etl.clear()
+    summary
+  }
+
+  private lazy val uncrashed: Seq[Any] = {
+    val run = resumed(Files.createTempDirectory("graft-crash-none").toString)
+    // KNOWS keeps Ann->Bob and Bob->Cy: Zed names no Person
+    assert(run(3) == Map("loaded_nodes_Person" -> 3L, "loaded_nodes_Company" -> 1L,
+      "loaded_edges_KNOWS" -> 2L, "loaded_edges_WORKS_AT" -> 2L))
+    run
+  }
+
+  private def snapshot(d: java.nio.file.Path): Map[java.nio.file.Path, Array[Byte]] =
+    Context.listDir(d).map(p => p -> Files.readAllBytes(p)).toMap
+  private def restore(files: Map[java.nio.file.Path, Array[Byte]]): Unit =
+    files.foreach { case (p, bytes) => Files.write(p, bytes) }
+
+  test("crash state: a parser's files staged, the pre-parser catalog restored") {
+    val dir = Files.createTempDirectory("graft-crash-parser").toString
+    val first = new GraphEtl(spark, dir)
+    register(first, Set("people"))
+    first.parse()
+    val before = snapshot(first.store.configsDir)
+    val second = new GraphEtl(spark, dir)
+    register(second)
+    second.init(loadConfigs = true)
+    second.parse()
+    restore(before)
+    assert(Context.listDir(second.store.nodesDir).exists(_.getFileName.toString.contains("_Company_")))
+    assert(resumed(dir) == uncrashed)
+  }
+
+  test("crash state: a truncated catalog temp beside a valid catalog") {
+    val dir = Files.createTempDirectory("graft-crash-tmp").toString
+    val etl = new GraphEtl(spark, dir)
+    register(etl)
+    etl.parse()
+    val json = Files.readString(etl.store.configsPath)
+    Files.writeString(etl.store.configsDir.resolve("configs.json.tmp-0123"), json.take(json.length / 2))
+    assert(resumed(dir) == uncrashed)
+  }
+
+  test("crash state: a mapped file under its new name, the old file and catalog restored") {
+    val dir = Files.createTempDirectory("graft-crash-map").toString
+    val etl = new GraphEtl(spark, dir)
+    register(etl)
+    etl.parse(useMapper = false)
+    val before = snapshot(etl.store.configsDir) ++ snapshot(etl.store.edgesDir)
+    etl.mapProperties()
+    restore(before)
+    assert(Context.listDir(etl.store.edgesDir).size == 3) // KNOWS old + new, WORKS_AT
+    assert(resumed(dir) == uncrashed)
+  }
+
+  test("crash state: a mapping committed, the superseded file put back") {
+    val dir = Files.createTempDirectory("graft-crash-superseded").toString
+    val etl = new GraphEtl(spark, dir)
+    register(etl)
+    etl.parse(useMapper = false)
+    val before = snapshot(etl.store.edgesDir)
+    etl.mapProperties()
+    restore(before)
+    assert(Context.listDir(etl.store.edgesDir).size == 3)
+    assert(resumed(dir) == uncrashed)
   }
 }

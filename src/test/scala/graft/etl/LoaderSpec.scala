@@ -46,16 +46,16 @@ class LoaderSpec extends SparkSpec {
     val (etl, _) = staged()
     // simulate a crash after every NODE file was loaded and resume-logged
     // but before any edge file: a fresh loader on the resumed run starts
-    // with no node frames in memory
+    // with no node frames in memory, so it ignores the log
     etl.store.catalog.nodes.foreach { case (_, cfg) =>
-      cfg.files.keys.foreach(f => etl.store.logAppend("loader", f))
+      cfg.files.keys.foreach(etl.store.logLoaded)
     }
     val loader = new SparkGraphLoader(spark, edgeStrategy = "match")
     etl.load(loader)
-    // node frames restored (not re-counted: no loaded_nodes stats)
+    // node frames loaded and counted
     assert(loader.nodeTable("Person").get.count() == 2)
     assert(loader.nodeTable("Car").get.count() == 2)
-    assert(!etl.store.stats.contains("loaded_nodes_Person"))
+    assert(etl.store.stats("loaded_nodes_Person") == 2)
     // the edge file still loads against the restored endpoints instead of
     // silently vanishing through an empty MATCH
     assert(loader.edgeTable("DRIVED_BY").get.count() == 2)
@@ -68,24 +68,24 @@ class LoaderSpec extends SparkSpec {
     // fresh loader in a new "JVM" must rebuild node AND edge frames —
     // replay the log entries a completed pre-crash run would have written
     etl.store.catalog.nodes.foreach { case (_, cfg) =>
-      cfg.files.keys.foreach(f => etl.store.logAppend("loader", f))
+      cfg.files.keys.foreach(etl.store.logLoaded)
     }
     etl.store.catalog.edges.foreach { case (_, files) =>
-      files.keys.foreach(f => etl.store.logAppend("loader", f))
+      files.keys.foreach(etl.store.logLoaded)
     }
     val resumed = new SparkGraphLoader(spark, edgeStrategy = "match")
     etl.load(resumed)
     assert(resumed.nodeTable("Person").get.count() == 2)
     assert(resumed.edgeTable("DRIVED_BY").get.count() == 2) // previously lost
-    assert(!etl.store.stats.contains("loaded_edges_DRIVED_BY")) // restored, not re-counted
+    assert(etl.store.stats("loaded_edges_DRIVED_BY") == 2) // loaded and counted
     etl.clear()
   }
 
   test("second load() on the same loader instance does not duplicate edges") {
-    // GraphEtl.load clears the resume log on success, so a second load()
-    // re-offers every file; the loader must recognize files it already
-    // merged (r2 ADVICE: edges and HAS_METADATA edges duplicated; nodes
-    // only survived via dropDuplicates)
+    // GraphEtl.load offers an in-session loader every file on each call,
+    // so the loader must recognize files it already merged (r2 ADVICE:
+    // edges and HAS_METADATA edges duplicated; nodes only survived via
+    // dropDuplicates)
     val (etl, _) = staged()
     val loader = new SparkGraphLoader(spark, edgeStrategy = "match",
       metadataStrategy = "as_edge")
@@ -100,18 +100,13 @@ class LoaderSpec extends SparkSpec {
     etl.clear()
   }
 
-  test("restore after load on the same instance is a no-op (no re-union)") {
+  test("an external loader skips the files in its loader log, which load clears") {
     val (etl, _) = staged()
-    val loader = new SparkGraphLoader(spark, edgeStrategy = "match")
-    etl.load(loader)
-    // simulate a resume pass handing the same files back as restores
-    etl.store.catalog.edges.foreach { case (_, files) =>
-      files.foreach { case (fname, cfg) =>
-        loader.restoreEdges(etl.store.edgesDir.resolve(fname).toString,
-          "DRIVED_BY", cfg.start, cfg.end, cfg.metadatas, cfg.properties_type)
-      }
-    }
-    assert(loader.edgeTable("DRIVED_BY").get.count() == 2)
+    // a crash after every node file reached the database
+    etl.store.catalog.nodes.values.flatMap(_.files.keys).foreach(etl.store.logLoaded)
+    etl.load(new Neo4jLoader())
+    assert(etl.store.stats.keySet.filter(_.startsWith("loaded_")) == Set("loaded_edges_DRIVED_BY"))
+    assert(etl.store.loadedFiles.isEmpty)
     etl.clear()
   }
 

@@ -2,6 +2,7 @@ package graft.ext
 
 import graft.SparkSpec
 import graft.functions.{HashFunctions => H, TextFunctions => TF, VectorFunctions => VF}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 class ExtSpec extends SparkSpec {
@@ -110,36 +111,6 @@ class ExtSpec extends SparkSpec {
     assert(pairs.contains((1L, 4L))) // exact dup: jaccard 1.0
     assert(pairs.contains((1L, 2L)) || pairs.contains((2L, 4L))) // near-dup
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L)) // unrelated doc stays out
-  }
-
-  test("minhash estimated jaccard tracks exact jaccard") {
-    val sig = docs.select(
-      col("doc_id"),
-      H.charShingles(col("text"), 5).as("sh"),
-      H.minhashSignature(H.charShingles(col("text"), 5), 128).as("sig"))
-    val a = sig.where(col("doc_id") === 1).select(col("sh").as("sh_a"), col("sig").as("sig_a"))
-    val b = sig.where(col("doc_id") === 2).select(col("sh").as("sh_b"), col("sig").as("sig_b"))
-    val row = a.crossJoin(b)
-      .select(H.jaccard(col("sh_a"), col("sh_b")).as("exact"),
-        H.minhashJaccard(col("sig_a"), col("sig_b")).as("est"))
-      .head()
-    assert(math.abs(row.getDouble(0) - row.getDouble(1)) < 0.2)
-  }
-
-  test("lshBandHashes rejects bad geometry loudly instead of empty-slice hashing") {
-    // a too-short signature used to hash empty slices: xxhash64(b, []) is
-    // the same for every row, collapsing the out-of-range bands into one
-    // everyone-matches bucket
-    intercept[IllegalArgumentException] { H.lshBandHashes(col("sig"), 0, 8) }
-    val sig = docs.limit(2).select(
-      H.minhashSignature(H.charShingles(col("text"), 5), 64).as("sig"))
-    val ex = intercept[Exception] {
-      sig.select(H.lshBandHashes(col("sig"), 16, 8).as("b")).collect()
-    }
-    assert(ex.getMessage.contains("needs 128"))
-    // well-formed geometry still works
-    assert(sig.select(H.lshBandHashes(col("sig"), 8, 8).as("b"))
-      .head().getSeq[Long](0).length == 8)
   }
 
   test("simhash hamming distance is 0 for identical, small for near-dup, large for unrelated") {
@@ -275,6 +246,31 @@ class ExtSpec extends SparkSpec {
     assert(funnel("2_exact_dedup") == 4L)
   }
 
+  /** The built-ins-only quality-score formula (3 regex passes + 2
+    * tokenizations per evaluation): the spec `TF.qualityScore`'s native
+    * expression is tested against. */
+  private def qualityScoreColumns(c: Column): Column = {
+    val lenScore = least(length(c).cast("double") / lit(500.0d), lit(1.0d))
+    val wordScore = when(TF.meanTokenLen(c).between(3.0, 12.0), 1.0d).otherwise(0.5d)
+    val punctPenalty = lit(1.0d) - least(TF.punctRatio(c) * 4.0d, lit(1.0d))
+    val digitPenalty = lit(1.0d) - least(TF.digitRatio(c) * 4.0d, lit(1.0d))
+    val stopScore = least(TF.stopwordRatio(c) * 3.0d, lit(1.0d))
+    (lenScore + wordScore + punctPenalty + digitPenalty + stopScore) / lit(5.0d)
+  }
+
+  /** The built-ins-only language-ID formula: per language, the count of
+    * its marker words among the lowercase tokens; argmax in language
+    * order, `und` when no marker is seen. The spec `TF.langId`'s native
+    * expression is tested against. */
+  private def langIdColumns(c: Column): Column = {
+    val scores = TF.languageOrder.map(l =>
+      size(filter(TF.tokens(lower(c)), t => t.isin(TF.languageMarkers(l): _*))))
+    val best = greatest(scores: _*)
+    TF.languageOrder.zip(scores).foldRight(lit("und"): Column) { case ((l, s), acc) =>
+      when(best > 0 && s === best, lit(l)).otherwise(acc)
+    }
+  }
+
   test("native quality score is bit-identical to the built-ins-only formula") {
     val df = Seq(
       "", "   ", "a", "The quick brown fox, with 42 reasons!",
@@ -284,7 +280,7 @@ class ExtSpec extends SparkSpec {
     ).zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
     val both = df.select(
       TF.qualityScore(col("text")).as("native"),
-      TF.qualityScoreColumns(col("text")).as("columns")).collect()
+      qualityScoreColumns(col("text")).as("columns")).collect()
     both.foreach { r =>
       assert(java.lang.Double.doubleToLongBits(r.getDouble(0)) ==
         java.lang.Double.doubleToLongBits(r.getDouble(1)),
@@ -300,7 +296,7 @@ class ExtSpec extends SparkSpec {
       "THE AND OF", "the\tand\nof"
     ).zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
     val rows = df.select(TF.langId(col("text")).as("native"),
-      TF.langIdColumns(col("text")).as("columns")).collect()
+      langIdColumns(col("text")).as("columns")).collect()
     rows.foreach(r => assert(r.getString(0) == r.getString(1),
       s"native=${r.getString(0)} columns=${r.getString(1)}"))
   }

@@ -31,6 +31,7 @@ def read(out_dir: str, name: str) -> pd.DataFrame:
     return pd.concat(pd.read_parquet(f) for f in sorted(glob.glob(f"{out_dir}/{name}/*.parquet")))
 
 def main(sf_dir: str, work: str) -> int:
+    os.makedirs(work, exist_ok=True)
     outs = {c: f"{work}/c{c}" for c in CPUS}
     for c, out in outs.items():
         print(f"verify at SPARK_GRAFT_CPUS={c} -> {out}", flush=True)
