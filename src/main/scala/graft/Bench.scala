@@ -28,8 +28,8 @@ object Bench {
       case None        => SparkEntry.queries
     }
     val spark = GraftSession.build(cpus)
-    // fail-fast digest resolution + stale-staging GC of /tmp and this
-    // session's warehouse, before any Spark work
+    // fail-fast digest resolution + stale-staging GC of this session's
+    // warehouse (the one staging root), before any Spark work
     Staging.initStaging(spark)
     spark.sparkContext.setLogLevel("WARN")
     // sf0.01 runs every kernel long enough for the JIT to compile the hot

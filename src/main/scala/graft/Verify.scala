@@ -30,8 +30,8 @@ object Verify {
         sys.exit(2)
       }
     val spark = GraftSession.build(GraftSession.cpus(4))
-    // fail-fast digest resolution + stale-staging GC of /tmp and this
-    // session's warehouse, before any Spark work
+    // fail-fast digest resolution + stale-staging GC of this session's
+    // warehouse (the one staging root), before any Spark work
     Staging.initStaging(spark)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

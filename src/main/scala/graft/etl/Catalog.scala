@@ -9,20 +9,23 @@ import org.json4s.jackson.Serialization
   * (reference: graph_etl/utils.py:61-64 initial shape, 99-119 updates,
   * 81-82 persistence).
   *
-  * Shape (the reference's, plus two fields):
+  * Shape (the reference's, plus three fields):
   * {{{
   * { "nodes": { label -> { primary_key, constraints, indexs,
   *                         properties_type, files { fname -> {metadatas, count} } } },
   *   "edges": { type  -> { fname -> { start, end, properties_type,
   *                                    ignore_mapping, metadatas, count, mapped } } },
-  *   "parsed": [ parser name, ... ] }
+  *   "parsed": [ parser name, ... ],
+  *   "mappings": { "Label:prop" -> { properties_type, files: [ fname, ... ] } } }
   * }}}
   * `parsed` lists the parsers whose files are published and `mapped` marks
   * an edge file that has been through the mapping passes; together they
-  * replace the reference's parser and mapper resume logs. A reference
-  * `configs.json` lacks both and loads with the defaults (nothing parsed,
-  * nothing mapped). The catalog is the ETL's only record of what is staged:
-  * a staged file it does not list is not published ([[StoreInfo]]).
+  * replace the reference's parser and mapper resume logs. `mappings` lists
+  * the staged `mapIds` frames under `mappings/`, which the reference holds
+  * only in memory. A reference `configs.json` lacks all three and loads
+  * with the defaults (nothing parsed, mapped or registered). The catalog
+  * is the ETL's only record of what is staged: a staged file it does not
+  * list is not published ([[StoreInfo]]).
   *
   * The catalog is driver-side only (a few KB) — no Spark jobs touch it.
   * At 100 TB it scales with the number of labels/files, not rows.
@@ -45,10 +48,16 @@ final case class EdgeFileConfig(
     count: Long = 0L,
     mapped: Boolean = false)
 
+/** A staged `mapIds` frame: its `old_value`/`new_value` types and files. */
+final case class MappingConfig(
+    properties_type: Map[String, String] = Map.empty,
+    files: List[String] = Nil)
+
 final case class Catalog(
     nodes: Map[String, NodeConfig] = Map.empty,
     edges: Map[String, Map[String, EdgeFileConfig]] = Map.empty,
-    parsed: List[String] = Nil) {
+    parsed: List[String] = Nil,
+    mappings: Map[String, MappingConfig] = Map.empty) {
 
   /** First-file-wins node registration (utils.py:99-107: properties_type is
     * only recorded on first sight of the label; counts accumulate per file). */

@@ -5,35 +5,36 @@ import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{IntegralDivide, Literal}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.{ColumnBridge, LocalDirBridge, ThreadBridge}
+import org.apache.spark.sql.graftbridge.{ColumnBridge, ThreadBridge}
 import graft.operators.Normalize
 
 /** Shared mutable state for one ETL run (the reference's singleton
-  * `StoreInfo`, graph_etl/utils.py:44-190): catalog, registered ID
-  * mappings, accumulated stats. Driver-side only.
+  * `StoreInfo`, graph_etl/utils.py:44-190): catalog, accumulated stats.
+  * Driver-side only.
   *
+  * A run writes only under `outputDir`: staged files in `nodes/`, `edges/`
+  * and `mappings/`, Spark scratch in `graft-staging-*`/`graft-rewrite-*`.
   * `configs.json` is the one durable record of what is staged and mapped,
   * and [[persistCatalog]]'s rename is the one commit: a staged file is
-  * published when a committed catalog lists it, never by landing in
-  * `nodes/` or `edges/`. Files are moved in under fresh names before the
-  * commit and superseded files deleted after it, so a crash leaves the old
-  * state or the new one plus unlisted files, which [[sweepUncommitted]]
+  * published when a committed catalog lists it, never by landing in a
+  * staging dir. Files are moved in under fresh names before the commit and
+  * superseded files deleted after it, so a crash leaves the old state or
+  * the new one plus unlisted files and scratch, which [[sweepUncommitted]]
   * deletes on resume. The output dir has one writer. */
 final class StoreInfo(val outputDir: String, val spark: SparkSession) {
   var catalog: Catalog = Catalog()
-  /** "{Label}:{prop}" -> mapping DataFrame(old_value, new_value) (utils.py:77-78). */
-  val mappings: mutable.Map[String, DataFrame] = mutable.LinkedHashMap.empty
   var callbacks: Seq[SchemaCallback] = Nil
   var filter: Option[GraphFilter] = None
   val stats: mutable.Map[String, Long] = mutable.LinkedHashMap.empty
 
   def nodesDir: Path = Paths.get(outputDir, "nodes")
   def edgesDir: Path = Paths.get(outputDir, "edges")
+  def mappingDir: Path = Paths.get(outputDir, "mappings")
   def configsDir: Path = Paths.get(outputDir, "configs")
   def configsPath: Path = configsDir.resolve("configs.json")
 
   def initDirs(): Unit =
-    Seq(nodesDir, edgesDir, configsDir).foreach(Files.createDirectories(_))
+    Seq(nodesDir, edgesDir, mappingDir, configsDir).foreach(Files.createDirectories(_))
 
   /** Commit the in-memory catalog: write `configs.json.tmp-<uuid>`, then
     * rename it over `configs.json` in one atomic move. */
@@ -49,15 +50,17 @@ final class StoreInfo(val outputDir: String, val spark: SparkSession) {
       catalog = Catalog.fromJson(Files.readString(configsPath))
 
   /** Delete what a crash between a write and its commit leaves: every
-    * staged `FILE_*.csv` the catalog does not list and every catalog temp. */
+    * staged `FILE_*.csv` the catalog does not list, every catalog temp and
+    * every [[StagingQueue]] scratch dir. */
   def sweepUncommitted(): Unit = {
     val listed = catalog.nodes.values.flatMap(_.files.keys).toSet ++
-      catalog.edges.values.flatMap(_.keys)
-    (Seq(nodesDir, edgesDir).flatMap(Context.listDir).filter { p =>
+      catalog.edges.values.flatMap(_.keys) ++ catalog.mappings.values.flatMap(_.files)
+    (Seq(nodesDir, edgesDir, mappingDir).flatMap(Context.listDir).filter { p =>
       val n = p.getFileName.toString
       n.startsWith("FILE_") && n.endsWith(".csv") && !listed.contains(n)
-    } ++ Context.listDir(configsDir).filter(_.getFileName.toString.startsWith("configs.json.tmp-")))
-      .foreach(Files.delete)
+    } ++ Context.listDir(configsDir).filter(_.getFileName.toString.startsWith("configs.json.tmp-")) ++
+      Context.listDir(Paths.get(outputDir)).filter(_.getFileName.toString.matches("graft-(staging|rewrite)-.*")))
+      .foreach(Context.deleteRecursively)
   }
 
   // -- loader resume log (utils.py:26-42, 96-97): the files an external
@@ -78,29 +81,26 @@ final class StoreInfo(val outputDir: String, val spark: SparkSession) {
 
 /** The Spark halves of one batch of staging work, started on the
   * [[org.apache.spark.sql.graftbridge.ThreadBridge]] daemon pool in call
-  * order. Each writes into its own temp dir under Spark's local scratch
-  * dir, never under the output dir, so a reader of the output dir only
-  * ever sees published files. At most `defaultParallelism` jobs run at
-  * once: a submit past the bound waits for the oldest job still running.
-  * The caller takes results in call order and publishes them; `close()`
-  * then waits for every job (their failures were already surfaced or are
-  * superseded) and deletes every temp dir, on success and failure alike.
-  * Driver-side, one caller thread. */
-private[etl] final class StagingQueue[T](spark: SparkSession) {
+  * order. Each writes into its own temp dir directly under the output dir
+  * (so a publish is a same-filesystem rename), which a reader ignores: it
+  * sees only the files a committed catalog lists. At most
+  * `defaultParallelism` jobs run at once: a submit past the bound waits for
+  * the oldest job still running. The caller takes results in call order
+  * and publishes them; `close()` then waits for every job (their failures
+  * were already surfaced or are superseded) and deletes every temp dir, on
+  * success and failure alike. Driver-side, one caller thread. */
+private[etl] final class StagingQueue[T](store: StoreInfo) {
   private val jobs = mutable.ArrayBuffer.empty[(Path, ThreadBridge.Pending[T])]
-  private val bound = math.max(1, spark.sparkContext.defaultParallelism)
-  private lazy val scratch = Paths.get(LocalDirBridge.localDir(spark))
+  private val bound = math.max(1, store.spark.sparkContext.defaultParallelism)
 
   def submit(prefix: String)(stage: Path => T): ThreadBridge.Pending[T] = {
     val running = jobs.map(_._2).filterNot(_.isDone)
     if (running.size >= bound) running.head.await()
-    val tmp = Files.createTempDirectory(scratch, prefix)
-    val job = ThreadBridge.async(spark)(stage(tmp))
+    val tmp = Files.createTempDirectory(Paths.get(store.outputDir), prefix)
+    val job = ThreadBridge.async(store.spark)(stage(tmp))
     jobs += tmp -> job
     job
   }
-
-  def all: Seq[ThreadBridge.Pending[T]] = jobs.map(_._2).toSeq
 
   def close(): Unit = {
     jobs.foreach(j => scala.util.Try(j._2.await()))
@@ -112,8 +112,9 @@ private[etl] final class StagingQueue[T](spark: SparkSession) {
 /** Per-parser staging context — the Spark re-expression of
   * graph_etl/context.py. Each `saveNodes`/`saveEdges` call splits in two:
   *   - the Spark half (normalize, size, write chunk files into a private
-  *     temp dir in Spark's scratch space) starts at once on a daemon pool,
-  *     so a parser's tables are staged as concurrent Spark jobs — at most
+  *     scratch dir under the output dir) starts on a daemon pool when the
+  *     parser body returns (so no Spark commit renames files under a reader
+  *     of the output dir mid-body), as concurrent Spark jobs — at most
   *     `defaultParallelism` in flight, a save past the bound waits for the
   *     oldest one ([[StagingQueue]]);
   *   - the publish half (chunk index from the context counter, rename into
@@ -128,7 +129,8 @@ private[etl] final class StagingQueue[T](spark: SparkSession) {
   * Chunk-file layout matches the reference:
   *   nodes: FILE_{uuid}_{label}_{n}.csv         (context.py:149)
   *   edges: FILE_{uuid}_{start}{TYPE}{end}_{n}.csv (context.py:244)
-  * `;`-separated, header, arrays flattened with `|`.
+  * `;`-separated, header, arrays flattened with `|`. A `mapIds` frame is
+  * staged the same way, unnormalized, as mappings/FILE_{uuid}_{Label}_{prop}_{n}.csv.
   */
 final class Context(
     val store: StoreInfo,
@@ -137,13 +139,18 @@ final class Context(
     nodeChunkSize: Long = Context.NodeChunkSize,
     edgeChunkSize: Long = Context.EdgeChunkSize) {
 
-  /** Each save's Spark half returns its publish half. */
-  private val saves = new StagingQueue[() => Unit](store.spark)
+  /** Each save's Spark half, in call order; it returns its publish half. */
+  private val halves = mutable.ArrayBuffer.empty[Path => () => Unit]
+  private val saves = new StagingQueue[() => Unit](store)
 
-  /** Start staging `df`; `publish` later gets its chunk files, in chunk
+  /** Committed files this context's publish replaced; deleted once the
+    * parser's commit lists their replacements. */
+  private[etl] val superseded = mutable.ArrayBuffer.empty[Path]
+
+  /** Queue staging `df`; `publish` later gets its chunk files, in chunk
     * order with their row counts. */
   private def stage(df: DataFrame, chunkSize: Long)(publish: Seq[(Path, Long)] => Unit): Unit =
-    saves.submit("graft-staging-") { tmp =>
+    halves += { tmp =>
       val chunks = Context.stageChunkedCsv(df, tmp, chunkSize)
       () => publish(chunks)
     }
@@ -153,6 +160,7 @@ final class Context(
   // advanced at publish, in call order
   private var lastNodeChunk: Long = 0L
   private var lastEdgeChunk: Long = 0L
+  private var lastMappingChunk: Long = 0L
 
   /** Move a save's chunk files into `dir` as `fileName(start + i)`. The
     * names carry this context's fresh uuid, so no live file is replaced;
@@ -226,21 +234,34 @@ final class Context(
   }
 
   /** Register an explicit ID mapping for `idToMap` = `"{Label}:{prop}"`
-    * (context.py:18-59; stored at utils.py:77-78). The frame must carry
-    * `old_value`/`new_value`; duplicate `old_value` rows are kept — they
-    * fan out at join time and collapse in the post-mapping dedup, matching
-    * the reference (SURVEY §2.12.5). */
+    * (context.py:18-59). The frame must carry `old_value`/`new_value`;
+    * duplicate `old_value` rows are kept — they fan out at join time and
+    * collapse in the post-mapping dedup, matching the reference (SURVEY
+    * §2.12.5). The frame is staged like a save and committed with the
+    * parser, so a resumed run still applies it; the reference keeps it in
+    * memory (utils.py:77-78). A later mapping for the same spec replaces
+    * this one. */
   def mapIds(mapping: DataFrame, idToMap: String): Unit = {
     require(mapping.columns.contains("old_value") && mapping.columns.contains("new_value"),
       s"mapIds($idToMap): mapping must have columns old_value/new_value, got ${mapping.columns.mkString(",")}")
-    store.mappings(idToMap) = mapping.select(col("old_value"), col("new_value"))
+    val pair = mapping.select(col("old_value"), col("new_value"))
+    val propTypes = Catalog.schemaTypes(pair.schema)
+    stage(pair, nodeChunkSize) { chunks =>
+      val written = rename(chunks, store.mappingDir,
+        n => s"FILE_${uuid}_${idToMap.replace(':', '_')}_$n.csv", lastMappingChunk)
+      lastMappingChunk += written.size
+      store.catalog.mappings.get(idToMap).foreach(superseded ++= _.files.map(store.mappingDir.resolve))
+      store.catalog = store.catalog.copy(mappings = store.catalog.mappings +
+        (idToMap -> MappingConfig(propTypes, written.map(_._1).toList)))
+    }
   }
 
-  /** Wait for every save of this context and publish them in call order.
-    * If a save failed, its own exception is rethrown and nothing is
-    * published. Called once, after the parser body returned; `discard()`
+  /** Start every save of this context, wait for them and publish them in
+    * call order. If a save failed, its own exception is rethrown and nothing
+    * is published. Called once, after the parser body returned; `discard()`
     * must follow either way. */
-  private[etl] def publish(): Unit = saves.all.map(_.await()).foreach(_())
+  private[etl] def publish(): Unit =
+    halves.toSeq.map(h => saves.submit("graft-staging-")(h)).map(_.await()).foreach(_())
 
   /** Wait for the running saves and delete every temp dir. */
   private[etl] def discard(): Unit = saves.close()

@@ -19,14 +19,14 @@ final case class RegisteredParser(
 /** Top-level orchestration: init / parse / load / clear
   * (graph_etl/pipeline.py + utils.py control plane).
   *
-  * One instance per ETL run; holds the driver-side store (catalog, mappings,
-  * stats). All data movement is Spark jobs; everything here is metadata.
+  * One instance per ETL run; holds the driver-side store (catalog, stats).
+  * All data movement is Spark jobs; everything here is metadata.
   * The committed catalog is the one resume record ([[StoreInfo]]).
   *
-  * A parser's saves run as concurrent Spark jobs (at most
-  * `defaultParallelism` in flight, see [[Context]]); when its body returns,
-  * its staged files, their catalog entries and its name in
-  * `Catalog.parsed` are committed together by one catalog rename. A body
+  * When a parser's body returns, its saves run as concurrent Spark jobs (at
+  * most `defaultParallelism` in flight, see [[Context]]); its staged files,
+  * their catalog entries and its name in `Catalog.parsed` are then
+  * committed together by one catalog rename. A body
   * or save that throws publishes nothing. The mapping rewrites of
   * [[mapProperties]] likewise run concurrently and commit in catalog order.
   *
@@ -134,6 +134,7 @@ final class GraphEtl(
     store.stats(s"parser_time_ms_$name") = (System.nanoTime() - tp) / 1000000
     store.catalog = store.catalog.copy(parsed = store.catalog.parsed :+ name)
     store.persistCatalog()
+    ctx.superseded.foreach(Files.delete)
   }
 
   // ------------------------------------------------------------------
@@ -149,7 +150,8 @@ final class GraphEtl(
     * (pipeline.py:48-122).
     *
     * Pass A — explicit `mapIds` mappings: endpoints whose `"{Label}:{prop}"`
-    * spec has a registered mapping are rewritten via join+coalesce.
+    * spec has a mapping in `Catalog.mappings` are rewritten via
+    * join+coalesce; the staged mapping is read once per spec.
     * Pass B — automatic pk resolution: endpoints addressing a non-primary
     * property are rewritten to the node primary key; the catalog endpoint is
     * repointed to `Label:{pk}` and the column retyped (pipeline.py:110-111).
@@ -166,7 +168,8 @@ final class GraphEtl(
     // pass-B auto-mappings are identical for every edge file addressing the
     // same (label, prop) — build each once, not per file
     val autoMappings = mutable.Map.empty[(String, String), DataFrame]
-    val rewrites = new StagingQueue[() => Unit](spark)
+    val explicitMappings = mutable.Map.empty[String, DataFrame]
+    val rewrites = new StagingQueue[() => Unit](store)
     try {
       val planned = for {
         (edgeType, files) <- store.catalog.edges.toSeq
@@ -183,7 +186,9 @@ final class GraphEtl(
         // endpoints can't collide.
         if (!cfg.ignore_mapping) {
           Seq(("start", cfg.start), ("end", cfg.end)).foreach { case (colName, spec) =>
-            store.mappings.get(spec).foreach { mapping =>
+            store.catalog.mappings.get(spec).foreach { m =>
+              val mapping = explicitMappings.getOrElseUpdate(spec, StagedCsv.read(spark,
+                List("old_value", "new_value"), m.properties_type, m.files.map(store.mappingDir.resolve)))
               df = Mapping.applyMapping(df, mapping, colName, strictCompat)
                 .withColumnRenamed("mapped_from", s"${colName}_mapped_from")
               dirty = true
@@ -345,7 +350,6 @@ final class GraphEtl(
   def clear(): Unit = {
     Context.deleteRecursively(Paths.get(outputDir))
     store.catalog = Catalog()
-    store.mappings.clear()
     store.stats.clear()
     initialized = false
     parsed = false

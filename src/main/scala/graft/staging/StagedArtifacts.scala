@@ -317,7 +317,7 @@ object StagedArtifacts {
     * zone map). q_partition_prune pins `PartitionFilters` non-empty in
     * its plan. */
   private[graft] val partitionedDocsPath: Staged[String] = staged("docsByLang") { (s, dir) =>
-    stagedPath("docs_bylang", dir, Seq("documents")) { tmp =>
+    stagedPath(s, "docs_bylang", dir, Seq("documents")) { tmp =>
       t(s, dir, "documents").write.partitionBy("lang").parquet(tmp.toString)
     }.toString
   }
@@ -331,7 +331,7 @@ object StagedArtifacts {
     * the contract a long-lived 100 TB dataset's readers depend on as
     * its schema accretes columns. */
   private[graft] val schemaDriftPaths: Staged[(String, String)] = staged("schemaDrift") { (s, dir) =>
-    val p = stagedPath("docs_drift", dir, Seq("documents")) { tmp =>
+    val p = stagedPath(s, "docs_drift", dir, Seq("documents")) { tmp =>
       val docs = t(s, dir, "documents")
       docs.where(col("doc_id") % 10 < 8)
         .select(col("doc_id"), col("text"))
@@ -347,7 +347,7 @@ object StagedArtifacts {
     * digest) — the q_jsonl_roundtrip fixture: the one-time write is not
     * charged to every timed pass. */
   private[graft] val jsonlStagePath: Staged[String] = staged("jsonl") { (s, dir) =>
-    stagedPath("jsonl", dir, Seq("documents")) { tmp =>
+    stagedPath(s, "jsonl", dir, Seq("documents")) { tmp =>
       graft.sources.Jsonl.write(t(s, dir, "documents"), tmp.toString)
     }.toString
   }
@@ -358,7 +358,7 @@ object StagedArtifacts {
     * native vectorized reader for; a lakehouse migration reads exactly
     * this way). */
   private[graft] val orcStagePath: Staged[String] = staged("orc") { (s, dir) =>
-    stagedPath("orc", dir, Seq("documents")) { tmp =>
+    stagedPath(s, "orc", dir, Seq("documents")) { tmp =>
       t(s, dir, "documents").write.orc(tmp.toString)
     }.toString
   }

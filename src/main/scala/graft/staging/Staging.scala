@@ -6,8 +6,9 @@ import java.nio.file.{Files, FileSystemException, NoSuchFileException, Path, Pat
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The staging lifecycle behind every staged artifact: content-addressed
-  * paths, one atomic commit, completion markers, and the sweep that
-  * reclaims stagings stranded by a recompile.
+  * paths directly under the session's warehouse dir ([[warehouseRoot]];
+  * JVMs sharing a warehouse share stagings), one atomic commit, completion
+  * markers, and the sweep that reclaims stagings stranded by a recompile.
   *
   * A staged path is named by what built it,
   * `graft_<prefix>_<dir8>_<input8>_<code8>` (input dir, input content,
@@ -72,8 +73,8 @@ object Staging {
     viaUri.getOrElse(Paths.get(u.stripPrefix("file:")))
   }
 
-  /** The session's warehouse root — ONE resolution shared by the staging
-    * WRITER ([[stagedBucketedTable]]'s location) and the sweep READER
+  /** The session's warehouse root, the one staging root — ONE resolution
+    * shared by the staging WRITER ([[stage]]) and the sweep READER
     * ([[initStaging]]): with separate decoders an encoded path would
     * split them, and the sweep would silently skip the stagings. */
   private[graft] def warehouseRoot(s: SparkSession): Path =
@@ -81,9 +82,9 @@ object Staging {
 
   /** GC for stranded stagings (the digest-keyed coexistence rule's
     * cost): every recompile rotates [[logicDigest]] and strands the
-    * previous build's /tmp parquet dirs and warehouse bucketed tables —
-    * a full artifact set per recompile, monotone disk growth on any
-    * long-lived host. Sweeps each root for entries named
+    * previous build's parquet dirs and bucketed tables — a full artifact
+    * set per recompile, monotone disk growth on any long-lived host.
+    * Sweeps `root` for entries named
     * `graft_*_<8hex>` whose digest suffix differs from THIS build's and
     * whose marker (the entry's own mtime when no marker) is older than
     * `maxAgeMillis`; a stale-digest dotted sibling (the `.lock` files
@@ -100,7 +101,7 @@ object Staging {
     *    of its name tail (the sweep must not depend on a naming
     *    convention it doesn't own).
     * Returns the deleted paths. */
-  private[graft] def sweepStaleStagings(roots: Seq[Path],
+  private[graft] def sweepStaleStagings(root: Path,
       maxAgeMillis: Long = StagingMaxAgeMillis,
       nowMillis: Long = System.currentTimeMillis()): Seq[Path] = {
     val keep = logicDigest.take(8)
@@ -113,25 +114,24 @@ object Staging {
       readMarker(marker).exists { m =>
         Option(m.getProperty("fp")).exists(_.startsWith(logicDigest))
       }
-    roots.filter(Files.isDirectory(_)).flatMap { root =>
-      val st = Files.list(root)
-      val entries = try st.toArray.toSeq.map(_.asInstanceOf[Path]) finally st.close()
-      entries.filter { p =>
-        val m = pat.matcher(p.getFileName.toString)
-        m.matches() && {
-          val marker = p.resolve(StagingMarkerName)
-          if (Option(m.group(2)).exists(_.startsWith(".tmp-"))) olderThanGuard(p)
-          else m.group(1) != keep &&
-            olderThanGuard(if (Files.exists(marker)) marker else p) &&
-            !markedByThisBuild(marker)
-        }
-      }.flatMap { p =>
-        // best-effort: an undeletable or concurrently-mutating stale
-        // path (foreign owner, writer re-creating files mid-walk) must
-        // not abort the entry point that volunteered to GC it
-        try { graft.etl.Context.deleteRecursively(p); Some(p) }
-        catch { case scala.util.control.NonFatal(_) => None }
+    if (!Files.isDirectory(root)) return Nil
+    val st = Files.list(root)
+    val entries = try st.toArray.toSeq.map(_.asInstanceOf[Path]) finally st.close()
+    entries.filter { p =>
+      val m = pat.matcher(p.getFileName.toString)
+      m.matches() && {
+        val marker = p.resolve(StagingMarkerName)
+        if (Option(m.group(2)).exists(_.startsWith(".tmp-"))) olderThanGuard(p)
+        else m.group(1) != keep &&
+          olderThanGuard(if (Files.exists(marker)) marker else p) &&
+          !markedByThisBuild(marker)
       }
+    }.flatMap { p =>
+      // best-effort: an undeletable or concurrently-mutating stale
+      // path (foreign owner, writer re-creating files mid-walk) must
+      // not abort the entry point that volunteered to GC it
+      try { graft.etl.Context.deleteRecursively(p); Some(p) }
+      catch { case scala.util.control.NonFatal(_) => None }
     }
   }
 
@@ -139,12 +139,11 @@ object Staging {
     * call this right after the session is built): forces
     * [[logicDigest]] eagerly — a launcher that loads graft classes
     * without a code-source location fails HERE instead of bricking the
-    * first staged query mid-run — then sweeps /tmp and the session's
-    * warehouse so strandings are reaped at the same cadence they are
-    * created. */
+    * first staged query mid-run — then sweeps the session's warehouse so
+    * strandings are reaped at the same cadence they are created. */
   private[graft] def initStaging(s: SparkSession): Unit = {
     logicDigest: Unit
-    sweepStaleStagings(Seq(Paths.get("/tmp"), warehouseRoot(s))): Unit
+    sweepStaleStagings(warehouseRoot(s)): Unit
   }
 
   /** Refresh a staging's marker mtime — the liveness signal
@@ -294,12 +293,14 @@ object Staging {
     }
   }
 
-  /** Resolve the artifact `name0` (a `graft_<prefix>_<dir8>` base name)
-    * under `root`: on first use in this JVM, [[commit]] it at its
-    * content-addressed path; every access touches its marker. */
-  private def stage(root: Path, name0: String, dir: String, inputs: Seq[String])
+  /** Resolve the artifact `name0` (a `graft_<prefix>_<dir8>` base name,
+    * distinct across parquet and bucketed artifacts, which share the root)
+    * under the session's warehouse: on first use in this JVM, [[commit]]
+    * it at its content-addressed path; every access touches its marker. */
+  private def stage(s: SparkSession, name0: String, dir: String, inputs: Seq[String])
       (attach: (Path, java.util.Properties) => Boolean)
       (write: Path => Map[String, String]): Path = {
+    val root = warehouseRoot(s)
     val key = root.resolve(name0).toString
     val path = Option(stagedRefs.get(key)).getOrElse {
       val input = inputFingerprint(dir, inputs)
@@ -316,23 +317,23 @@ object Staging {
     path
   }
 
-  /** Stage files under /tmp once per (input content, [[logicDigest]]):
-    * `write` fills the directory it is given, and the published path is
-    * returned. A mutated input dir changes the fingerprint and stages a
-    * new path (PlanSpec pins both directions). */
-  private[staging] def stagedPath(prefix: String, dir: String, inputs: Seq[String])
-      (write: Path => Unit): Path =
-    stage(Paths.get("/tmp"), s"graft_${prefix}_${dirDigest(dir)}", dir, inputs)(
+  /** Stage files under the session's warehouse once per (input content,
+    * [[logicDigest]]): `write` fills the directory it is given, and the
+    * published path is returned. A mutated input dir changes the
+    * fingerprint and stages a new path (PlanSpec pins both directions). */
+  private[staging] def stagedPath(s: SparkSession, prefix: String, dir: String,
+      inputs: Seq[String])(write: Path => Unit): Path =
+    stage(s, s"graft_${prefix}_${dirDigest(dir)}", dir, inputs)(
       (_, _) => true) { tmp => write(tmp); Map.empty }
 
-  /** Stage a derived frame to /tmp parquet ([[stagedPath]]) and read it
+  /** Stage a derived frame as parquet ([[stagedPath]]) and read it
     * back with the schema-cached read: a bare read re-infers the schema
     * with a ~20 ms driver footer job on EVERY staged-frame access (r16;
     * rationale at Tables.schemaCache). A published path never changes,
     * so its cached schema never goes stale. */
   private[staging] def stagedParquet(s: SparkSession, dir: String, prefix: String,
       inputs: Seq[String])(build: => DataFrame): DataFrame =
-    graft.sources.Tables.parquet(s, stagedPath(prefix, dir, inputs) { tmp =>
+    graft.sources.Tables.parquet(s, stagedPath(s, prefix, dir, inputs) { tmp =>
       build.write.parquet(tmp.toString)
     }.toString)
 
@@ -362,7 +363,7 @@ object Staging {
     // under a different (key, buckets) must never re-register under the
     // caller's current DDL — bucket metadata would lie about the files
     // and silently corrupt every exchange-free join built on it
-    stage(warehouseRoot(s), name0, dir, inputs) { (loc, m) =>
+    stage(s, name0, dir, inputs) { (loc, m) =>
       m.getProperty("schema") != null && m.getProperty("rows") != null &&
         m.getProperty("key") == key && m.getProperty("buckets") == buckets.toString && {
           s.sql(s"DROP TABLE IF EXISTS $name")

@@ -19,8 +19,8 @@ object JobProfile {
     val names = args(1).split(',')
     val reps = args.drop(2).headOption.map(_.toInt).getOrElse(2)
     val spark = graft.GraftSession.build(graft.GraftSession.cpus(32))
-    // fail-fast digest resolution + stale-staging GC of /tmp and this
-    // session's warehouse, before any Spark work
+    // fail-fast digest resolution + stale-staging GC of this session's
+    // warehouse (the one staging root), before any Spark work
     Staging.initStaging(spark)
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -7,8 +7,9 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val names = args(1).split(',')
-    // the shared session, so dumped plans carry the same partition counts
-    // and conf-dependent shapes the board measures
+    // the shared session factory at SPARK_GRAFT_CPUS cores (default 4):
+    // partition counts and AQE choices follow that core count, so set it
+    // to the board's to see the board's plans
     val spark = graft.GraftSession.build(graft.GraftSession.cpus(4))
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>

@@ -12,8 +12,8 @@ object TimeQuery {
     val names = args(1).split(',')
     val reps = args.drop(2).headOption.map(_.toInt).getOrElse(4)
     val spark = graft.GraftSession.build(graft.GraftSession.cpus(32))
-    // fail-fast digest resolution + stale-staging GC of /tmp and this
-    // session's warehouse, before any Spark work
+    // fail-fast digest resolution + stale-staging GC of this session's
+    // warehouse (the one staging root), before any Spark work
     Staging.initStaging(spark)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>

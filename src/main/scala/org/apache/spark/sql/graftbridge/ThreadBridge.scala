@@ -39,10 +39,3 @@ object ThreadBridge {
     })
   }
 }
-
-/** Spark's local scratch dir: `SPARK_LOCAL_DIRS` or `spark.local.dir`,
-  * else the JVM temp dir (`Utils.getLocalDir` is `private[spark]`). */
-object LocalDirBridge {
-  def localDir(session: SparkSession): String =
-    org.apache.spark.util.Utils.getLocalDir(session.sparkContext.getConf)
-}

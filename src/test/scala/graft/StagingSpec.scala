@@ -68,7 +68,7 @@ class StagingSpec extends SparkSpec {
     Files.setLastModifiedTime(ownedOddName.resolve(Staging.StagingMarkerName),
       FileTime.fromMillis(now - 48 * hour))
 
-    val deleted = Staging.sweepStaleStagings(Seq(root), maxAge, now).toSet
+    val deleted = Staging.sweepStaleStagings(root, maxAge, now).toSet
     assert(deleted == Set(staleOld, orphanOld, lockOld),
       s"sweep deleted the wrong set: $deleted")
     assert(Files.exists(current), "current-digest staging must survive any age")
@@ -81,7 +81,7 @@ class StagingSpec extends SparkSpec {
         "regardless of its name tail")
     assert(!Files.exists(staleOld) && !Files.exists(orphanOld) && !Files.exists(lockOld))
     // idempotent + disk-flat: a second sweep finds nothing
-    assert(Staging.sweepStaleStagings(Seq(root), maxAge, now).isEmpty)
+    assert(Staging.sweepStaleStagings(root, maxAge, now).isEmpty)
     graft.etl.Context.deleteRecursively(root)
   }
 
@@ -116,17 +116,37 @@ class StagingSpec extends SparkSpec {
     finally st.close()
   }
 
+  /** The content-addressed stagings directly under `root`. */
+  private def stagings(root: Path): Seq[Path] = {
+    val st = Files.list(root)
+    try st.toArray.toSeq.map(_.asInstanceOf[Path])
+      .filter(_.getFileName.toString.matches("graft_.+_[0-9a-f]{8}_[0-9a-f]{8}_[0-9a-f]{8}"))
+    finally st.close()
+  }
+
+  test("parquet and path stagings resolve under the session's warehouse, none under /tmp") {
+    val before = stagings(Paths.get("/tmp")).toSet
+    Staging.resetStagingRefsForTest()
+    val ranks = StagedArtifacts.stagedErRanks(spark, dir)._1
+    val jsonl = Paths.get(StagedArtifacts.jsonlStagePath(spark, dir))
+    val wh = Staging.warehouseRoot(spark)
+    val parquet = ranks.inputFiles.toSeq.map(f => Paths.get(new java.net.URI(f)))
+    assert(parquet.nonEmpty && parquet.forall(_.getParent.getParent == wh),
+      s"errankname not staged directly under $wh: $parquet")
+    assert(jsonl.getParent == wh, s"jsonl not staged directly under $wh: $jsonl")
+    assert(stagings(wh).contains(jsonl))
+    assert(stagings(Paths.get("/tmp")).toSet -- before == Set.empty)
+  }
+
   test("coexisting code digests never clobber each other's stagings") {
     // a REAL staged artifact under the current digest
     StagedArtifacts.stagedErRanks(spark, dir)._1.count()
-    val tmp = Paths.get("/tmp")
-    val st = Files.list(tmp)
-    val cur = try st.toArray.map(_.asInstanceOf[Path]).find(
-        _.getFileName.toString.matches(s"graft_errankname_[0-9a-f]{8}_[0-9a-f]{8}_$code8"))
-      finally st.close()
-    assert(cur.isDefined, "staged errankname path not found under /tmp")
+    val wh = Staging.warehouseRoot(spark)
+    val cur = stagings(wh).find(
+      _.getFileName.toString.matches(s"graft_errankname_[0-9a-f]{8}_[0-9a-f]{8}_$code8"))
+    assert(cur.isDefined, s"staged errankname path not found under $wh")
     // fabricate the A/B partner under an ISOLATED root, not the real
-    // shared /tmp (ADVICE r13: a concurrent session's sweep or a parallel
+    // shared warehouse (ADVICE r13: a concurrent session's sweep or a parallel
     // test run could race a fixture created in the live staging root) —
     // the coexistence property under test is "a rebuild under one digest
     // writes only its own digest-keyed path", which no partner location
@@ -154,7 +174,7 @@ class StagingSpec extends SparkSpec {
     // and the GC reaps exactly the stale partner once it ages out while
     // keeping the current staging — the disk-flat-across-recompiles
     // claim. Sweep COPIES under an isolated root with a far-future
-    // clock: sweeping the real /tmp with an inflated `now` would reap a
+    // clock: sweeping the real warehouse with an inflated `now` would reap a
     // LIVE A/B partner's warm stagings (exactly what the age guard
     // exists to prevent).
     val gcRoot = Files.createTempDirectory("graft_gc_spec")
@@ -167,7 +187,7 @@ class StagingSpec extends SparkSpec {
     val curCopy = copyInto(cur.get)
     val partnerCopy = copyInto(partner)
     val future = System.currentTimeMillis() + 100 * hour
-    val deleted = Staging.sweepStaleStagings(Seq(gcRoot), 12 * hour, future)
+    val deleted = Staging.sweepStaleStagings(gcRoot, 12 * hour, future)
     assert(deleted == Seq(partnerCopy),
       s"sweep must reap exactly the stale partner, got: $deleted")
     assert(Files.exists(curCopy), "current staging reaped by its own sweep")
@@ -247,7 +267,7 @@ class StagingSpec extends SparkSpec {
     // an orphan of THIS build is reaped too: its digest never protects it
     val old = orphan(s"graft_x_aaaaaaaa_bbbbbbbb_$code8.tmp-1234", 13 * hour)
     val young = orphan(s"graft_x_aaaaaaaa_bbbbbbbb_$code8.tmp-5678", 1 * hour)
-    assert(Staging.sweepStaleStagings(Seq(root), 12 * hour, now) == Seq(old))
+    assert(Staging.sweepStaleStagings(root, 12 * hour, now) == Seq(old))
     assert(!Files.exists(old) && Files.exists(young))
     graft.etl.Context.deleteRecursively(root)
   }

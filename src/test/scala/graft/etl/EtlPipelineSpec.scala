@@ -3,7 +3,6 @@ package graft.etl
 import java.nio.file.Files
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.LocalDirBridge
 
 /** Ports of the reference's parser tests (graph_etl/tests/test_parser.py)
   * against the fixed catalog layout — see SURVEY §5 for why the original
@@ -244,16 +243,14 @@ class EtlPipelineSpec extends SparkSpec {
     assert(got.select(col("start").cast("long")).as[Long].collect().toSet == Set(1L, 2L))
   }
 
-  /** Temp dirs a staging or mapping job could leave, in Spark's scratch
-    * dir or under the output dir. */
-  private def leftoverTempDirs(etl: GraphEtl): Seq[String] =
-    Seq(etl.outputDir, LocalDirBridge.localDir(spark)).flatMap { root =>
-      val s = Files.walk(java.nio.file.Paths.get(root))
-      try scala.jdk.CollectionConverters.IteratorHasAsScala(s.iterator()).asScala
-        .map(_.getFileName.toString)
-        .filter(n => n.startsWith("graft-staging-") || n.startsWith("graft-rewrite-")).toList
-      finally s.close()
-    }
+  /** Temp dirs a staging or mapping job could leave under the output dir. */
+  private def leftoverTempDirs(etl: GraphEtl): Seq[String] = {
+    val s = Files.walk(java.nio.file.Paths.get(etl.outputDir))
+    try scala.jdk.CollectionConverters.IteratorHasAsScala(s.iterator()).asScala
+      .map(_.getFileName.toString)
+      .filter(n => n.startsWith("graft-staging-") || n.startsWith("graft-rewrite-")).toList
+    finally s.close()
+  }
 
   private def stagedFiles(etl: GraphEtl): Seq[String] =
     Seq(etl.store.nodesDir, etl.store.edgesDir).flatMap(Context.listDir)
@@ -499,6 +496,7 @@ class EtlPipelineSpec extends SparkSpec {
     val c = etl.store.catalog
     assert(stagedFiles(etl).toSet == c.nodes.values.flatMap(_.files.keys).toSet ++ c.edges.values.flatMap(_.keys))
     assert(!Context.listDir(etl.store.configsDir).exists(_.getFileName.toString.contains(".tmp-")))
+    assert(leftoverTempDirs(etl).isEmpty)
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] = df.collect().toSeq.map(r =>
       r.schema.fieldNames.sorted.map(f => s"$f=${r.getAs[Any](f)}").mkString(",")).sorted
     val summary = Seq(
@@ -573,5 +571,44 @@ class EtlPipelineSpec extends SparkSpec {
     restore(before)
     assert(Context.listDir(etl.store.edgesDir).size == 3)
     assert(resumed(dir) == uncrashed)
+  }
+
+  test("crash state: a scratch dir holding a part file under the output dir") {
+    val dir = Files.createTempDirectory("graft-crash-scratch")
+    val first = new GraphEtl(spark, dir.toString)
+    register(first, Set("people"))
+    first.parse()
+    // "knows" died while its Spark half was writing
+    val scratch = Files.createTempDirectory(dir, "graft-staging-")
+    Files.writeString(scratch.resolve("part-00000-0000.csv"), "id;name\n10;Acme\n")
+    val etl = new GraphEtl(spark, dir.toString)
+    etl.init(loadConfigs = true)
+    assert(!Files.exists(scratch))
+    assert(resumed(dir.toString) == uncrashed)
+  }
+
+  test("crash state: a parser's mapping committed, its mapping pass not run") {
+    val dir = Files.createTempDirectory("graft-crash-mapids").toString
+    def register(etl: GraphEtl): Unit = etl.parser("p") { ctx =>
+      ctx.saveEdges(Seq((1L, "x"), (2L, "x")).toDF("start", "end"), "E", "N:id", "M:id")
+      ctx.mapIds(Seq((1L, 11L), (2L, 12L)).toDF("old_value", "new_value"), "N:id")
+    }
+    val first = new GraphEtl(spark, dir)
+    register(first)
+    first.parse(useMapper = false)
+    val etl = new GraphEtl(spark, dir)
+    register(etl)
+    etl.init(loadConfigs = true)
+    etl.parse()
+    val (fname, cfg) = etl.store.catalog.edges("E").head
+    assert(cfg.mapped)
+    assert(etl.readStagedEdges(fname, cfg).select("start").as[Long].collect().toSet == Set(11L, 12L))
+    // a later mapping for the spec replaces the staged one and its files
+    val replaced = etl.store.catalog.mappings("N:id").files
+    etl.withParser("q") { ctx => ctx.mapIds(Seq((11L, 21L)).toDF("old_value", "new_value"), "N:id") }
+    val files = etl.store.catalog.mappings("N:id").files
+    assert(files.nonEmpty && files.intersect(replaced).isEmpty)
+    assert(Context.listDir(etl.store.mappingDir).map(_.getFileName.toString).toSet == files.toSet)
+    etl.clear()
   }
 }
