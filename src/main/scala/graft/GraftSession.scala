@@ -45,10 +45,13 @@ object GraftSession {
           s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
     }
 
-  /** A `local[cpus]` session with one shuffle partition per core. */
+  /** A `local[cpus]` session with one shuffle partition per core and the
+    * graft SQL functions and optimizer rule ([[graft.plans.GraftExtensions]])
+    * installed. */
   def build(cpus: Int): SparkSession =
     SparkSession.builder()
       .master(s"local[$cpus]")
+      .withExtensions(new graft.plans.GraftExtensions)
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config(graft.sources.Tables.NanosAsLongConf, "true")

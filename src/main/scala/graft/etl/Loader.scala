@@ -155,24 +155,10 @@ final class SparkGraphLoader(
         col("start").cast(StringType) =!= "" && col("end").cast(StringType) =!= "") // P8
       .withColumn("src", col("start").cast(StringType))
       .withColumn("dst", col("end").cast(StringType))
-
-    // already merged by this instance: recount without mutating any frame
-    // (for "create" the first ingest synthesized missing endpoints, so the
-    // whole filtered file counts; for "match" re-run the side-effect-free
-    // semi-joins against the now-present id sets)
-    if (ingestedFiles.contains(filePath)) {
-      val counted = edgeStrategy match {
-        case "match" =>
-          (idSet(startLabel).map(_.select(col("id").as("src"))),
-            idSet(endLabel).map(_.select(col("id").as("dst")))) match {
-            case (Some(s), Some(d)) =>
-              df.join(s, Seq("src"), "left_semi").join(d, Seq("dst"), "left_semi")
-            case _ => df.limit(0)
-          }
-        case _ => df
-      }
-      return counted
-    }
+    // a file this instance already merged is only recounted: the same
+    // resolution, with no frame mutated (for "create" the first ingest
+    // synthesized every missing endpoint, so the whole filtered file counts)
+    val firstIngest = !ingestedFiles.contains(filePath)
 
     val resolved = edgeStrategy match {
       case "match" =>
@@ -201,6 +187,7 @@ final class SparkGraphLoader(
                   "files first (filter-skipped labels must be declared via markNodesSkipped)")
             }
         }
+      case "create" if !firstIngest => df
       case "create" =>
         // synthesize missing endpoints as BlankNodes (left-anti + union)
         def ensure(label: String, idCol: String): Unit = {
@@ -224,15 +211,17 @@ final class SparkGraphLoader(
       case other => throw new IllegalArgumentException(s"unknown edge strategy '$other'")
     }
 
-    val tagged = resolved
-      .withColumn("start_label", lit(startLabel))
-      .withColumn("end_label", lit(endLabel))
-    edgeFrames(edgeType) = edgeFrames.get(edgeType) match {
-      case Some(prev) => prev.unionByName(tagged, allowMissingColumns = true)
-      case None => tagged
+    if (firstIngest) {
+      val tagged = resolved
+        .withColumn("start_label", lit(startLabel))
+        .withColumn("end_label", lit(endLabel))
+      edgeFrames(edgeType) = edgeFrames.get(edgeType) match {
+        case Some(prev) => prev.unionByName(tagged, allowMissingColumns = true)
+        case None => tagged
+      }
+      ingestedFiles += filePath
     }
-    ingestedFiles += filePath
-    tagged
+    resolved
   }
 
   /** All loaded nodes as one frame: (label, id, …union of props). */

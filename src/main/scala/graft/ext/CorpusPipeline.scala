@@ -12,25 +12,16 @@ import graft.functions.{TextFunctions => T}
   *
   * Each stage is the already-scale-shaped operator (single scan, bounded
   * LSH shuffle, GraphX transitive closure on the tiny pair set); the
-  * composition adds no extra shuffles beyond the stages' own. Both entry
-  * points build each stage exactly once and feed it forward — `funnel`
-  * derives its near-dup stage from its own `exact` frame rather than
-  * re-running the whole prefix.
+  * composition adds no extra shuffles beyond the stages' own. [[funnel]]
+  * builds each stage exactly once and feeds it forward — its near-dup
+  * stage derives from its own `exact` frame rather than re-running the
+  * whole prefix.
   */
 object CorpusPipeline {
 
   /** Keep documents whose heuristic quality score clears `minQuality`. */
   def filterByQuality(df: DataFrame, textCol: String, minQuality: Double): DataFrame =
     df.where(T.qualityScore(col(textCol)) >= minQuality)
-
-  /** Stages 0-2: sanitize → quality filter → exact dedup. */
-  private def exactStage(
-      docs: DataFrame, idCol: String, textCol: String,
-      minQuality: Double): DataFrame = {
-    val sanitized = Normalize.sanitizeStrings(docs)
-    val quality = filterByQuality(sanitized, textCol, minQuality)
-    Dedup.exactDedup(quality, idCol, Seq(textCol))
-  }
 
   /** Stage 3: MinHash-LSH near-dup pairs over the exact-deduped frame,
     * resolved to clusters and dropped down to one keeper each. */
@@ -42,37 +33,6 @@ object CorpusPipeline {
       exact, idCol, textCol, shingleSize, numHashes, bands, nearDupThreshold)
     Dedup.dropNearDuplicates(exact, idCol, pairs)
   }
-
-  /** Full cleaning pass; returns the cleaned corpus. The exact-dedup
-    * frame is cached (MEMORY_AND_DISK): the near-dup stage scans it four
-    * times (LSH candidates, two verify sides, final drop), and without the
-    * cache each scan re-runs the sanitize + quality + window-dedup prefix.
-    * The cache stays for the returned plan's lifetime — Spark evicts LRU;
-    * callers that materialize once can `spark.catalog.clearCache()` or use
-    * [[funnel]], which manages the lifecycle itself. */
-  def clean(
-      docs: DataFrame, idCol: String, textCol: String,
-      minQuality: Double = 0.2,
-      shingleSize: Int = 5, numHashes: Int = 128, bands: Int = 16,
-      nearDupThreshold: Double = 0.8): DataFrame = {
-    val exact = exactStage(docs, idCol, textCol, minQuality)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    nearStage(exact, idCol, textCol, shingleSize, numHashes, bands, nearDupThreshold)
-  }
-
-  /** Write a cleaned corpus as partitioned parquet — the training-data
-    * sink layout: directory-partitioned by the stratum column (language,
-    * source, split, ...) so downstream readers prune partitions, with
-    * bounded file sizes so a 100 TB output is many independently-readable
-    * files rather than a few giants. */
-  def writeCleaned(
-      df: DataFrame, path: String, partitionCol: String,
-      maxRecordsPerFile: Long = 1000000L): Unit =
-    df.write
-      .mode("overwrite")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy(partitionCol)
-      .parquet(path)
 
   /** Per-stage survivor counts — the funnel report a pipeline run logs.
     * The `exact` frame is cached for the duration: the near-dup stage

@@ -97,17 +97,14 @@ object Dedup {
     * guaranteed by the 4-band pigeonhole; larger values may miss pairs). */
   def simhashNearDuplicates(
       df: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3, portableHash: Boolean = false): DataFrame = {
+      maxHamming: Int = 3): DataFrame = {
     // fused tokenize+hash, one loop per row; token-less docs get a NULL
     // fingerprint (they all hash to the degenerate fp=0 otherwise — same
     // quadratic-pairing hazard as empty shingle sets) and exit the
-    // pipeline at posexplode via the null-propagated band array.
-    // portableHash swaps the xxhash64 token family for md5-lower-64 so a
-    // SQL engine can rebuild the fingerprints — the correctness-gate
-    // variant; the default family is ~10× faster per token.
-    val fpExpr = if (portableHash) NativeExpressions.simhashTextPortable(col(textCol))
-                 else NativeExpressions.simhashText(col(textCol))
-    val fps = df.select(col(idCol).as("id"), fpExpr.as("fp"))
+    // pipeline at posexplode via the null-propagated band array. The
+    // md5-lower-64 token family lets a SQL engine rebuild the fingerprints.
+    val fps = df.select(col(idCol).as("id"),
+      NativeExpressions.simhashTextPortable(col(textCol)).as("fp"))
     val bandArr = when(col("fp").isNull, lit(null)).otherwise(H.simhashBands(col("fp")))
     val buckets = fps.select(col("id"), posexplode(bandArr).as(Seq("band", "bval")))
     val a = buckets.select(col("band"), col("bval"), col("id").as("id_a"))
@@ -144,16 +141,15 @@ object Dedup {
   def resolveDuplicateClusters(pairs: DataFrame, localPairLimit: Int = 2_000_000): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
-    // ids keep their ORIGINAL type (string URLs, UUIDs, longs, ...): the
-    // local path unions on raw values, the GraphX path goes through dense
-    // translation ids (assigned in ascending id order, so the component's
-    // min-vid maps back to the min id)
+    // ids keep their ORIGINAL type (string URLs, UUIDs, longs, ...): both
+    // tiers work on the raw values
     val idType = pairs.schema("id_a").dataType
     val slim = pairs.select(col("id_a"), col("id_b"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // bounded count probe decides the tier; pair rows reach the driver
     // only AFTER the local tier is chosen (a head(limit+1) probe would
-    // materialize up to 2M rows on the driver just to pick GraphX)
+    // materialize up to 2M rows on the driver just to pick the distributed
+    // tier)
     val probed = slim.limit(localPairLimit + 1).count()
     if (probed <= localPairLimit) {
       val head = slim.collect()
@@ -275,7 +271,7 @@ object Dedup {
     * Sizing: the sketch covers `docs × bands` reference keys — at fpp 0.01
     * roughly 1.2 bytes/key, so ~1 GB per billion band keys. Right-sized
     * for references up to a few billion band keys; beyond that, stage the
-    * reference as a bucketed table ([[stageBandsBucketed]]) instead of
+    * reference as a bucketed table ([[bandStagingFrame]]) instead of
     * (or in addition to) the sketch. */
   def crossCorpusNearDuplicatesBloom(
       newDf: DataFrame, refDf: DataFrame, idCol: String, textCol: String,
@@ -318,33 +314,23 @@ object Dedup {
       .write.mode("overwrite").parquet(path)
   }
 
-  /** Stage a reference corpus' LSH banding as a BUCKETED managed table:
-    * one row per (doc, band) with the band and its hash folded into a
-    * single join key, bucketed and sorted by that key. A batch candidate
-    * join against this table needs NO exchange on the (huge) reference
+  /** A reference corpus' LSH banding, to stage as a BUCKETED managed table
+    * (bucketed and sorted by `bkey`): one row per (doc, band) with the
+    * band and its hash folded into a single join key. A batch candidate
+    * join against that table needs NO exchange on the (huge) reference
     * side — only the (small) batch is shuffled into the bucket layout.
     * This is the staging format for a reference corpus that every future
-    * ingest batch joins against. */
-  def stageBandsBucketed(
-      df: DataFrame, idCol: String, textCol: String, tableName: String,
-      buckets: Int = 64, shingleSize: Int = 5, numHashes: Int = 128,
-      bands: Int = 32): Unit =
-    graft.sources.Tables.writeBucketed(
-      bandStagingFrame(df, idCol, textCol, shingleSize, numHashes, bands),
-      tableName, "bkey", buckets)
-
-  /** The banding frame [[stageBandsBucketed]] writes — exposed so a caller
-    * managing its own (cross-JVM reusable) table lifecycle stages the
-    * identical layout. The fold of (band, bhash) into ONE bkey (see
-    * bandKeys) makes bucket co-location exactly match the join key — a
-    * two-column join over a one-column bucket layout would still
+    * ingest batch joins against. The fold of (band, bhash) into ONE bkey
+    * (see bandKeys) makes bucket co-location exactly match the join key —
+    * a two-column join over a one-column bucket layout would still
     * exchange. */
   def bandStagingFrame(df: DataFrame, idCol: String, textCol: String,
       shingleSize: Int = 5, numHashes: Int = 128, bands: Int = 32): DataFrame =
     bandKeys(df, idCol, "ref_id",
       NativeExpressions.charShingles(col(textCol), shingleSize), numHashes, bands)
 
-  /** Cross-corpus near-dup pairs against a [[stageBandsBucketed]] table:
+  /** Cross-corpus near-dup pairs against a staged [[bandStagingFrame]]
+    * table (bucketed by `bkey`):
     * candidates come from a bucket-local join (reference side reads its
     * buckets in place, batch side is exchanged into the same layout),
     * verification re-joins shingles from `refDf` per candidate pair.
@@ -531,29 +517,6 @@ object Dedup {
           >= minShare, 1L).otherwise(0L)).as("n_boilerplate_lines"))
   }
 
-  /** Per-doc EXACT duplicated-substring coverage at character
-    * granularity: for every position p of every document, is the k-char
-    * substring starting at p ALSO present in some OTHER document? This is
-    * the sliding-window (every offset) flavor of exact substring dedup
-    * from the training-data-dedup literature (Lee et al., "Deduplicating
-    * Training Data Makes Language Models Better" — their ExactSubstr uses
-    * a suffix array; the k-gram formulation detects the same >= k-char
-    * verbatim overlaps and is shuffle-shaped), complementing
-    * [[duplicateLineProfile]], which only sees DISJOINT token windows and
-    * so misses overlaps that straddle a window boundary or start mid-line.
-    *
-    * Output: (id, n_positions, n_dup_positions, dup_span_ratio) — the
-    * ratio is the fraction of the doc covered by spans copied verbatim
-    * from elsewhere in the corpus, the standard curation signal for
-    * boilerplate/mirror removal.
-    *
-    * Scale: one shuffle, keyed by the 128-bit md5 of the gram (fixed
-    * 16-byte keys move, never the 40-char texts); "shared with another
-    * doc" is min(id) != max(id) within the key — no count-distinct
-    * buffer. Gram explosion is |text| rows per doc — bounded per-row
-    * work, and the reason the gram carries only its hash. Within-doc
-    * repeats do NOT count as duplication (min != max is false), matching
-    * the cross-doc semantics of the paper. */
   /** The positional k-gram hash index both substring-dup operators
     * consume: (id, __p, __gh) — one row per character position, carrying
     * only the 16-byte md5 of the k-char window. Expose it so a pipeline
@@ -574,12 +537,31 @@ object Dedup {
         unhex(md5(col("col"))).as("__gh"))
   }
 
-  def duplicatedSpanProfile(df: DataFrame, idCol: String, textCol: String,
-      k: Int = 40): DataFrame =
-    duplicatedSpanProfileFromGrams(gramIndex(df, idCol, textCol, k), idCol)
-
-  /** [[duplicatedSpanProfile]] over a pre-built (possibly staged)
-    * [[gramIndex]] frame. */
+  /** Per-doc EXACT duplicated-substring coverage at character
+    * granularity: for every position p of every document, is the k-char
+    * substring starting at p ALSO present in some OTHER document? This is
+    * the sliding-window (every offset) flavor of exact substring dedup
+    * from the training-data-dedup literature (Lee et al., "Deduplicating
+    * Training Data Makes Language Models Better" — their ExactSubstr uses
+    * a suffix array; the k-gram formulation detects the same >= k-char
+    * verbatim overlaps and is shuffle-shaped), complementing
+    * [[duplicateLineProfile]], which only sees DISJOINT token windows and
+    * so misses overlaps that straddle a window boundary or start mid-line.
+    *
+    * Output: (id, n_positions, n_dup_positions, dup_span_ratio) — the
+    * ratio is the fraction of the doc covered by spans copied verbatim
+    * from elsewhere in the corpus, the standard curation signal for
+    * boilerplate/mirror removal.
+    *
+    * Input: a pre-built (possibly staged) [[gramIndex]] frame.
+    *
+    * Scale: one shuffle, keyed by the 128-bit md5 of the gram (fixed
+    * 16-byte keys move, never the 40-char texts); "shared with another
+    * doc" is min(id) != max(id) within the key — no count-distinct
+    * buffer. Gram explosion is |text| rows per doc — bounded per-row
+    * work, and the reason the gram carries only its hash. Within-doc
+    * repeats do NOT count as duplication (min != max is false), matching
+    * the cross-doc semantics of the paper. */
   def duplicatedSpanProfileFromGrams(grams: DataFrame, idCol: String): DataFrame = {
     val w = Window.partitionBy(col("__gh"))
     grams
@@ -592,28 +574,24 @@ object Dedup {
         col("n_dup_positions").cast("double") / col("n_positions").cast("double"))
   }
 
-  /** The REGIONS behind [[duplicatedSpanProfile]]'s counts: every maximal
-    * verbatim-duplicated span per document, as (id, span_start, span_end)
-    * character ranges (1-based, inclusive) — the exact text an
-    * ExactSubstr-style cutter removes, not just how much of it there is.
+  /** The REGIONS behind [[duplicatedSpanProfileFromGrams]]' counts:
+    * every maximal verbatim-duplicated span per document, as (id,
+    * span_start, span_end) character ranges (1-based, inclusive) — the
+    * exact text an ExactSubstr-style cutter removes, not just how much of
+    * it there is.
     * A position p is duplicated iff its k-gram appears in another doc;
     * overlapping/adjacent hit intervals [p, p+k-1] merge via
     * [[graft.operators.Intervals.mergeIntervals]]. Same single
     * gram-hash exchange as the profile, plus the interval windows' doc
-    * exchange. */
-  def duplicatedSpans(df: DataFrame, idCol: String, textCol: String,
-      k: Int = 40): DataFrame =
-    duplicatedSpansFromGrams(gramIndex(df, idCol, textCol, k), idCol, k)
-
-  /** [[duplicatedSpans]] over a pre-built (possibly staged) [[gramIndex]]
-    * frame; `k` must match the index's window size (it sets the hit
-    * interval width). */
+    * exchange. Input: a pre-built (possibly staged) [[gramIndex]] frame;
+    * `k` must match the index's window size (it sets the hit interval
+    * width). */
   def duplicatedSpansFromGrams(grams: DataFrame, idCol: String,
       k: Int): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     // one window pass marks cross-doc grams in place — a groupBy + self-
     // join formulation would run the whole gram explode twice (measured
-    // ~2x at sf0.1); same min!=max test as duplicatedSpanProfile
+    // ~2x at sf0.1); same min!=max test as duplicatedSpanProfileFromGrams
     val w = Window.partitionBy(col("__gh"))
     val hits = grams
       .withColumn("__dup", min(col(idCol)).over(w) =!= max(col(idCol)).over(w))
@@ -826,98 +804,39 @@ object Dedup {
         payload.flatMap(c => Seq(col(s"${c}_a"), col(s"${c}_b"))): _*)
   }
 
-  /** EXACT set-similarity join via prefix filtering (PPJoin family,
-    * Chaudhuri/Ganjam/Kaushik SSJoin; Xiao et al. PPJoin) — every pair of
-    * documents whose word-`ngram`-shingle Jaccard is >= `threshold`,
-    * WITHOUT LSH's probabilistic recall and WITHOUT an all-pairs join.
-    *
-    * The filter is lossless: order all tokens by one global total order
-    * (ascending document frequency, token as tiebreak — rarest first,
-    * which minimizes candidate volume because prefixes then hold the
-    * LEAST-shared tokens); a set of size s keeps only its first
-    * `s - ceil(t*s) + 1` tokens as its prefix. If J(A,B) >= t, A and B
-    * MUST share a prefix token (pigeonhole on the overlap bound
-    * |A∩B| >= ceil(t/(1+t) * (|A|+|B|)) — see the SSJoin paper, Lemma 1),
-    * so the equi-join on prefix tokens has perfect recall; exact Jaccard
-    * verification then removes false candidates.
-    *
-    * This entry point is the INLINE composition: it builds the
-    * query-independent rank artifact ([[dfRankedShingleDocs]]) and runs
-    * the threshold-dependent pair machinery ([[prefixPairsFromRanked]])
-    * in one call, materializing the artifact once (`localCheckpoint`)
-    * because all four downstream consumers — both candidate sides and
-    * both verify joins — read it. When the SAME corpus serves repeated
-    * joins, stage [[dfRankedShingleDocs]] to parquet instead and call
-    * [[prefixPairsFromRanked]] per threshold (the q_prefix_join query
-    * does exactly that): the dictionary pass, GlobalRank and the per-doc
-    * ordering are corpus artifacts, not query work.
-    *
-    * Scale shape (the reason this exists next to the LSH variants):
-    *  - token ranks come from [[graft.operators.GlobalRank]] over the token
-    *    DICTIONARY (bounded by vocabulary, not corpus) — no single-reducer
-    *    window anywhere;
-    *  - prefix selection is a narrow per-row slice of each doc's ordered
-    *    key array;
-    *  - the candidate join carries only (key, id, size, position) — hashed
-    *    shingle arrays are re-joined by id for the bounded verify step;
-    *  - a size filter (t*|B| <= |A|) prunes candidates before payloads
-    *    move: J(A,B) >= t forces |A|/|B| >= t for |A| <= |B|.
-    *    Candidate volume is Σ_prefix-token df², dominated by rare tokens
-    *    by construction of the order.
-    *
-    * Exactness makes it oracle-checkable against all-pairs SQL — the
-    * correctness twin q_jaccard_pairs covers a bounded subset; this runs
-    * the FULL corpus. Empty shingle sets are excluded (Jaccard with an
-    * empty set is 0 against any non-empty set — below any threshold — and
-    * the empty/empty pair is a dedup non-event handled by exactDedup).
-    * "Exact" throughout means exact over the xxhash64'd shingle sets the
-    * verify compares — see the honesty note on [[prefixPairsImpl]]. */
-  def prefixFilterJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-      ngram: Int = 3, threshold: Double = 0.4, numPartitions: Int = 0,
-      shingler: (org.apache.spark.sql.Column, Int) => org.apache.spark.sql.Column =
-        NativeExpressions.wordShingles): DataFrame = {
-    require(threshold > 0.0 && threshold <= 1.0,
-      s"prefixFilterJaccardPairs needs threshold in (0, 1], got $threshold")
-    // materialized once: all four prefixPairsImpl consumers (two candidate
-    // sides, two verify joins) read the artifact, and without the
-    // checkpoint the dictionary-rank pipeline executes four times
-    // (structural re-use, same rationale as GlobalRank's materialization
-    // — not a data cache)
-    prefixPairsImpl(
-      dfRankedShingleDocs(df, idCol, textCol, ngram, numPartitions, shingler)
-        .localCheckpoint(true),
-      threshold)
-  }
-
-  /** The df-ordered prefix join's QUERY-INDEPENDENT corpus artifact:
-    * one row per non-empty document,
+  /** The df-ordered exact prefix join's QUERY-INDEPENDENT corpus
+    * artifact (the join itself is [[prefixPairsFromRanked]]): one row per
+    * non-empty document,
     *
     *   (id, sz: long, keys: array<long>, hs: array<long>)
     *
-    * where `keys` holds the doc's shingles' global (document-frequency
-    * asc, token asc) ranks in ASCENDING rank order — rarest first — and
-    * `hs` the sorted xxhash64'd shingle set the verify compares.
+    * where `keys` holds the doc's word-`ngram` shingles' global ranks in
+    * ASCENDING rank order and `hs` the sorted xxhash64'd shingle set the
+    * verify compares. The global total order is ascending document
+    * frequency, token as tiebreak — rarest first, which minimizes
+    * candidate volume because prefixes then hold the LEAST-shared tokens.
     * Everything threshold-DEPENDENT (prefix lengths, size gate,
-    * positional bound, the verify cut) lives downstream in
-    * [[prefixPairsFromRanked]], so a caller joining the same corpus
-    * repeatedly — or at several thresholds — stages THIS frame once and
-    * pays only the pair machinery per call.
+    * positional bound, the verify cut) lives downstream, so a caller
+    * joining the same corpus repeatedly — or at several thresholds —
+    * stages THIS frame once and pays only the pair machinery per call
+    * (the q_prefix_join query does exactly that): the dictionary pass,
+    * GlobalRank and the per-doc ordering are corpus artifacts, not query
+    * work.
     *
     * Shape: one posting explode, one dictionary groupBy (bounded by
-    * vocabulary, not corpus), GlobalRank's range exchange over the
-    * dictionary, one id-keyed collect_list aggregation whose per-doc
-    * arrays are bounded by shingle count. No single-reducer stage
-    * (GlobalRank's contract). `shingler` must emit DISTINCT shingles
-    * per doc — the prefix/size arithmetic is set arithmetic; word
-    * n-grams ([[graft.plans.NativeExpressions.wordShingles]], the
-    * default) and char n-grams (`charShingles`, for contracts defined
-    * over character sets) both do. */
+    * vocabulary, not corpus), [[graft.operators.GlobalRank]]'s range
+    * exchange over the dictionary — no single-reducer window anywhere —
+    * and one id-keyed collect_list aggregation whose per-doc arrays are
+    * bounded by shingle count. Word n-grams
+    * ([[graft.plans.NativeExpressions.wordShingles]]) are DISTINCT per
+    * doc, as the prefix/size set arithmetic requires. Empty shingle sets
+    * are excluded (Jaccard with an empty set is 0 against any non-empty
+    * set — below any threshold — and the empty/empty pair is a dedup
+    * non-event handled by exactDedup). */
   def dfRankedShingleDocs(df: DataFrame, idCol: String, textCol: String,
-      ngram: Int = 3, numPartitions: Int = 0,
-      shingler: (org.apache.spark.sql.Column, Int) => org.apache.spark.sql.Column =
-        NativeExpressions.wordShingles): DataFrame = {
+      ngram: Int = 3, numPartitions: Int = 0): DataFrame = {
     val docs = df.select(col(idCol).as("id"),
-        shingler(col(textCol), ngram).as("sh"))
+        NativeExpressions.wordShingles(col(textCol), ngram).as("sh"))
       .where(size(col("sh")) > 0)
     val posts = docs.select(col("id"), explode(col("sh")).as("tok"))
     // global token order: (document frequency asc, token) — a total order
@@ -939,12 +858,40 @@ object Dedup {
         col("keys"), col("hs"))
   }
 
-  /** Threshold-dependent half of the df-ordered exact prefix join: runs
-    * [[prefixPairsImpl]] over a [[dfRankedShingleDocs]] frame (inline,
-    * checkpointed, or staged to parquet — any source with the
-    * (id, sz, keys, hs) contract). Output: (id_a, id_b, jaccard) with
-    * id_a < id_b, exactly [[prefixFilterJaccardPairs]]' output on the
-    * same corpus. */
+  /** EXACT set-similarity self-join via prefix filtering (PPJoin family,
+    * Chaudhuri/Ganjam/Kaushik SSJoin; Xiao et al. PPJoin) over a
+    * [[dfRankedShingleDocs]] frame (inline, checkpointed, or staged to
+    * parquet — any source with the (id, sz, keys, hs) contract): every
+    * pair of documents whose shingle Jaccard is >= `threshold`, WITHOUT
+    * LSH's probabilistic recall and WITHOUT an all-pairs join. Output:
+    * (id_a, id_b, jaccard) with id_a < id_b.
+    *
+    * The filter is lossless: with all tokens in one global total order, a
+    * set of size s keeps only its first `s - ceil(t*s) + 1` tokens as its
+    * prefix. If J(A,B) >= t, A and B MUST share a prefix token
+    * (pigeonhole on the overlap bound |A∩B| >= ceil(t/(1+t) * (|A|+|B|))
+    * — see the SSJoin paper, Lemma 1), so the equi-join on prefix tokens
+    * has perfect recall; exact Jaccard verification then removes false
+    * candidates.
+    *
+    * Scale shape (the reason this exists next to the LSH variants):
+    *  - prefix selection is a narrow per-row slice of each doc's ordered
+    *    key array;
+    *  - the candidate join carries only (key, id, size, position) — hashed
+    *    shingle arrays are re-joined by id for the bounded verify step;
+    *  - a size filter (t*|B| <= |A|) prunes candidates before payloads
+    *    move: J(A,B) >= t forces |A|/|B| >= t for |A| <= |B|.
+    *    Candidate volume is Σ_prefix-token df², dominated by rare tokens
+    *    by construction of the order.
+    * All four consumers (both candidate sides, both verify joins) read
+    * `prep`, so pass a staged or checkpointed frame: an inline one re-runs
+    * the dictionary-rank pipeline per consumer.
+    *
+    * Exactness makes it oracle-checkable against all-pairs SQL — the
+    * correctness twin q_jaccard_pairs covers a bounded subset; this runs
+    * the FULL corpus. "Exact" throughout means exact over the xxhash64'd
+    * shingle sets the verify compares — see the honesty note on
+    * [[prefixPairsImpl]]. */
   def prefixPairsFromRanked(prep: DataFrame, threshold: Double): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"prefixPairsFromRanked needs threshold in (0, 1], got $threshold")
@@ -952,7 +899,7 @@ object Dedup {
   }
 
   /** EXACT set-similarity self-join via HASH-ORDER prefix filtering —
-    * the same lossless pigeonhole as [[prefixFilterJaccardPairs]] under
+    * the same lossless pigeonhole as [[prefixPairsFromRanked]] under
     * a different global total order: tokens order by
     * (xxhash64(token), token) instead of ascending document frequency.
     * The SSJoin prefix lemma needs only SOME total order shared by all
@@ -960,11 +907,11 @@ object Dedup {
     * IDENTICAL — pinned against the df-ordered form in CurationProps);
     * what changes is the cost profile:
     *
-    *  - NO dictionary pass, NO GlobalRank, NO id-keyed aggregation, NO
-    *    checkpoint: each doc's ordered key array is built IN PLACE
-    *    (`array_sort` over (hash, token) structs, narrow and inside
-    *    whole-stage codegen), so the whole pipeline is the fixed-cost-
-    *    free [[prefixPairsImpl]] machinery;
+    *  - NO dictionary pass, NO GlobalRank, NO id-keyed aggregation: each
+    *    doc's ordered key array is built IN PLACE (`array_sort` over
+    *    (hash, token) structs, narrow and inside whole-stage codegen) and
+    *    checkpointed once, so the rest is the [[prefixPairsImpl]]
+    *    machinery;
     *  - candidate volume is NOT df-optimized: a rarest-first prefix
     *    holds each doc's least-shared tokens, a hash-ordered prefix
     *    holds a uniform sample, so Σ df_prefix² grows on skewed
@@ -988,32 +935,27 @@ object Dedup {
     * verify honesty note on [[prefixPairsImpl]] for the 2^-64-scale
     * caveat both variants share. */
   def hashOrderJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-      ngram: Int = 3, threshold: Double = 0.4,
-      shingler: (org.apache.spark.sql.Column, Int) => org.apache.spark.sql.Column =
-        NativeExpressions.wordShingles,
-      materializePrep: Boolean = false): DataFrame = {
+      ngram: Int = 3, threshold: Double = 0.4): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"hashOrderJaccardPairs needs threshold in (0, 1], got $threshold")
     val docs = df.select(col(idCol).as("id"),
-        shingler(col(textCol), ngram).as("sh"))
+        NativeExpressions.wordShingles(col(textCol), ngram).as("sh"))
       .where(size(col("sh")) > 0)
     // per-doc (hash, token)-ordered key array — token tiebreak keeps the
     // order total under hash collisions, all narrow per-row work; `hs`
     // stays unsorted (the verify is set arithmetic) so the build is one
     // pass over `sh` per column
-    val prep0 = docs.select(col("id"),
+    // materialized once: all four prefixPairsImpl consumers read prep,
+    // and its only caller's input is an expensive sub-plan (the funnel's
+    // survivor frame: scan → gate → exact-dedup aggregation), so the cut
+    // deletes three replays of that sub-plan
+    val prep = docs.select(col("id"),
       size(col("sh")).cast("long").as("sz"),
       transform(array_sort(transform(col("sh"),
           t => struct(xxhash64(t).as("h"), t.as("tok")))),
         e => e("h")).as("keys"),
       transform(col("sh"), t => xxhash64(t)).as("hs"))
-    // materializePrep: all four prefixPairsImpl consumers re-derive prep
-    // from the input plan. When `df` is a cheap scan the narrow re-derive
-    // is the right default (no materialization cost, no lineage cut); when
-    // `df` is itself an expensive sub-plan (the funnel's survivor frame:
-    // scan → gate → exact-dedup aggregation), cutting once here deletes
-    // three replays of that sub-plan
-    val prep = if (materializePrep) prep0.localCheckpoint(eager = true) else prep0
+      .localCheckpoint(eager = true)
     prefixPairsImpl(prep, threshold)
   }
 
@@ -1150,42 +1092,5 @@ object Dedup {
       .select(col(idCol),
         posexplode(NativeExpressions.cdcChunks(col(textCol), window, mask))
           .as(Seq("chunk_idx", "chunk")))
-  }
-
-  /** The original HOF construction of [[contentDefinedChunks]]'s chunk
-    * set — per-position window hashes inside a `transform` over
-    * `sequence`, interpreted lambdas, SQL substr/conv — kept ONLY as the
-    * executable reference the native [[graft.plans.CdcChunks]] kernel is
-    * ScalaCheck-pinned against (DedupSpec): the two must agree on every
-    * boundary for any input, or the oracle contract is broken. */
-  private[graft] def contentDefinedChunksHof(docs: DataFrame, idCol: String,
-      textCol: String, window: Int = 16, mask: Int = 64): DataFrame = {
-    require(window >= 2, s"window must be >= 2, got $window")
-    require(mask >= 2, s"mask must be >= 2, got $mask")
-    val text = col(textCol)
-    val n = coalesce(length(text).cast("long"), lit(0L))
-    // candidate boundary AFTER position i (1-based, i >= window):
-    // hash(text[i-window+1 .. i]) ≡ 0 (mod mask). The pos guards also
-    // neutralize Spark's DESCENDING sequence(a, b) when b < a (texts
-    // shorter than the window must yield no boundary, not a reversed
-    // position walk)
-    val bounds = filter(
-      transform(
-        sequence(lit(window.toLong), greatest(n, lit(window.toLong))),
-        i => struct(
-          (H.md5PrefixLong("cdc:",
-            text.substr((i - lit(window - 1)).cast("int"), lit(window)), 15)
-            % mask).as("m"),
-          i.as("pos"))),
-      s => s("m") === 0 && s("pos") >= lit(window.toLong) && s("pos") <= n)
-    val boundPos = transform(bounds, s => s("pos"))
-    val starts = concat(array(lit(1L)), transform(boundPos, p => p + 1L))
-    val ends = concat(boundPos, array(coalesce(length(text).cast("long"), lit(0L))))
-    val chunks = filter(
-      zip_with(starts, ends, (s, e) =>
-        when(e >= s, text.substr(s.cast("int"), (e - s + 1L).cast("int")))),
-      c => c.isNotNull)
-    docs.where(text.isNotNull)
-      .select(col(idCol), posexplode(chunks).as(Seq("chunk_idx", "chunk")))
   }
 }

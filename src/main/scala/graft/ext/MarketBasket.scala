@@ -79,9 +79,4 @@ object MarketBasket {
         ((col("pair_supp").cast("double") * col("n_groups")) /
           (col("ante_supp").cast("double") * col("cons_supp"))).as("lift"))
   }
-
-  def associationRules(items: DataFrame, groupCol: String, itemCol: String,
-      minShared: Int = 2, maxGroupSize: Int = 256): DataFrame =
-    associationRulesFromBaskets(
-      cappedBaskets(items, groupCol, itemCol, maxGroupSize), minShared)
 }

@@ -388,7 +388,7 @@ object Multimodal {
     * sampling, byte compares) so any engine replays it bit for bit.
     * None for payloads the BMP parser rejects or smaller than 1×1.
     * Near-duplicate images differ in few bits; pair search reuses the
-    * SimHash Hamming-band machinery ([[imageNearDuplicates]]). */
+    * SimHash Hamming-band machinery ([[nearDuplicatesFromFingerprints]]). */
   private[ext] def dHash64(bytes: Array[Byte]): Option[Long] =
     parseHeader(bytes) match {
       case Some(MediaHeader("bmp", Some(w), Some(h), _, _, _)) if w >= 1 && h >= 1 =>
@@ -420,14 +420,6 @@ object Multimodal {
       case _ => None
     }
 
-  /** Image near-duplicate pairs via dHash + the SimHash Hamming-band LSH:
-    * fingerprints from [[dHash64]] in the partition-batched decode shape,
-    * 16-bit band bucketing, Hamming verify at `maxHamming` (≤ 3 is
-    * GUARANTEED recall: 3 flipped bits cannot touch all 4 bands).
-    * Undecodable payloads get a null fingerprint and exit at the band
-    * explode — they can never pair. Scale: the band join carries
-    * (band, bval, id) rows only — never payloads — and the verify join
-    * fetches two longs per candidate; the corpus is scanned once. */
   /** (id, fp) dHash fingerprints for a media frame — the decode-once
     * product every image-similarity consumer shares: at 100 TB the
     * decode+hash pass is the expensive scan, so it runs ONCE and the
@@ -446,11 +438,14 @@ object Multimodal {
       .select(col("id"), col("fp"))
   }
 
-  def imageNearDuplicates(media: DataFrame, maxHamming: Int = 3): DataFrame =
-    nearDuplicatesFromFingerprints(imageFingerprints(media), maxHamming)
-
-  /** The banding/verify half of [[imageNearDuplicates]], over an already
-    * materialized (id, fp) frame. */
+  /** Image near-duplicate pairs via dHash + the SimHash Hamming-band LSH,
+    * over an already materialized (id, fp) frame of [[imageFingerprints]]:
+    * 16-bit band bucketing, Hamming verify at `maxHamming` (≤ 3 is
+    * GUARANTEED recall: 3 flipped bits cannot touch all 4 bands).
+    * Undecodable payloads have a null fingerprint and exit at the band
+    * explode — they can never pair. Scale: the band join carries
+    * (band, bval, id) rows only — never payloads — and the verify join
+    * fetches two longs per candidate. */
   def nearDuplicatesFromFingerprints(fps: DataFrame, maxHamming: Int = 3): DataFrame = {
     import graft.functions.{HashFunctions => H}
     val bandArr = when(col("fp").isNull, lit(null)).otherwise(H.simhashBands(col("fp")))
@@ -465,31 +460,6 @@ object Multimodal {
       .select(col("id_a"), col("id_b"),
         H.hamming64(col("fp_a"), col("fp_b")).cast("long").as("hamming"))
       .where(col("hamming") <= maxHamming)
-  }
-
-  /** STUB resize: clamp dimensions to fit (maxW, maxH) preserving aspect
-    * ratio, and stand in for the re-encoded payload by truncating bytes
-    * proportionally to the area change. A real implementation swaps the
-    * payload transform for a decoder+scaler; the metadata arithmetic and
-    * the (id, content, meta) -> same-schema contract are the real parts —
-    * a narrow per-row projection, no batch state needed. */
-  def resize(media: DataFrame, maxW: Int, maxH: Int): DataFrame = {
-    val w = col("meta.width"); val h = col("meta.height")
-    // scale = min(maxW/w, maxH/h, 1.0)
-    val scale = least(lit(maxW).cast("double") / w, lit(maxH).cast("double") / h, lit(1.0d))
-    val newW = greatest(floor(w * scale), lit(1)).cast("int")
-    val newH = greatest(floor(h * scale), lit(1)).cast("int")
-    val keepBytes = greatest(
-      floor(length(col("content")) * (newW * newH).cast("double") / (w * h)), lit(1)).cast("int")
-    media.select(
-      col("media_id"),
-      // real impl: decode + rescale + re-encode; stub keeps a proportional prefix
-      col("content").substr(lit(1), keepBytes).as("content"),
-      struct(
-        col("meta.mime").as("mime"),
-        keepBytes.cast("long").as("n_bytes"),
-        newW.as("width"),
-        newH.as("height")).as("meta"))
   }
 
   /** Synthesize WAV payloads whose PCM BODY (not just the header) varies
@@ -686,19 +656,6 @@ object Multimodal {
       f += 1
     }
     Some(AudioFp(id, n.toLong, fp))
-  }
-
-  /** STUB frame sampling for video payloads: every `everyN`-th fixed-size
-    * slice of the payload stands in for a decoded frame; real impl swaps
-    * the slicer for a video decoder, the exploded output shape is real. */
-  def sampleFrames(media: DataFrame, everyN: Int = 10, frameBytes: Int = 256): DataFrame = {
-    val nFrames = greatest(floor(length(col("content")) / lit(frameBytes * everyN)), lit(1))
-    media.select(
-      col("media_id"),
-      posexplode(transform(
-        sequence(lit(0), (nFrames - 1).cast("int")),
-        i => substring(col("content"), (i * frameBytes * everyN + 1).cast("int"), lit(frameBytes))))
-        .as(Seq("frame_idx", "frame_bytes")))
   }
 
   // ---------------------------------------------------------------------

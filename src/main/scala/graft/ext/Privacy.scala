@@ -68,13 +68,6 @@ object Privacy {
     d.drop(levels.indices.map(i => s"__ka_n$i"): _*)
   }
 
-  /** Audit view: group sizes at one QI projection with the at-risk flag —
-    * the "how exposed is this release" report kAnonymizeLadder acts on. */
-  def kAnonymityAudit(df: DataFrame, k: Int, qi: Seq[(String, Column)]): DataFrame =
-    df.groupBy(qi.map { case (n, c) => c.as(n) }: _*)
-      .agg(count(lit(1)).as("group_size"))
-      .withColumn("at_risk", col("group_size") < k)
-
   /** l-diversity audit (Machanavajjhala et al. 2007): k-anonymity alone
     * fails to the HOMOGENEITY attack — a crowd of k rows that all share
     * the same sensitive value still discloses it. Each QI group must also

@@ -3,7 +3,6 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.functions.{VectorFunctions => V}
 import graft.plans.NativeExpressions
 
 /** Approximate-nearest-neighbor search over an embedding column.
@@ -474,36 +473,6 @@ object Similarity {
         col("rank").cast("long").as("rank"))
   }
 
-  /** IVF-PQ top-k — the combined FAISS layout ([[ivfTopK]] prunes
-    * candidates to the probed buckets, [[pqTopK]]'s ADC scores them over
-    * the PQ codes). The corpus-side index is built in ONE narrow
-    * projection (bucket argmin + `nsub` code argmins per row — no join
-    * between the two halves). At 100 TB this projection is the one-off
-    * index build: written bucketed by `centroid_id`, a query batch reads
-    * only the probed buckets at CODE width (nsub small ints per row, not
-    * `dim` floats) — IVF's ~nprobe/nlist scan cut compounding PQ's
-    * memory cut, which is exactly why the layout is the large-scale
-    * default (Jégou et al. 2011, §IV).
-    *
-    * Deterministic end to end: sampled (+ optionally Lloyd-refined)
-    * centroids, md5-stride donor codebooks, per-query LUTs materialized
-    * once on the (bounded) probe frame, fixed-order squared-ADC sum,
-    * (adc, neighbor_id) rank — the SQL oracle replays every value.
-    * Returns (query_id, neighbor_id, adc_r, rank), rank ≤ k by ASCENDING
-    * approximate L2. */
-  def ivfPqTopK(corpus: DataFrame, idCol: String, vecCol: String,
-      queries: DataFrame, qidCol: String, qvecCol: String,
-      k: Int, nlist: Int = 16, nprobe: Int = 8, refineIters: Int = 1,
-      dim: Int = 64, nsub: Int = 4, ncent: Int = 16): DataFrame = {
-    val centroids0 = sampleCentroids(corpus, idCol, vecCol, nlist)
-    val centroids = if (refineIters <= 0) centroids0
-      else refineCentroids(corpus, idCol, vecCol, centroids0, refineIters)
-    val donors = pqDonors(corpus, idCol, vecCol, ncent)
-    val index = ivfPqCodedCorpus(corpus, idCol, vecCol, centroids, donors, dim, nsub)
-    ivfPqSearchWith(index, centroids, donors, queries, qidCol, qvecCol,
-      k, nprobe, dim, nsub)
-  }
-
   /** The donor codebook as a (ord, vec) FRAME — [[pqDonors]] made
     * stageable: a staged index must persist its codebooks next to its
     * codes (they are corpus artifacts; queries arrive later), and the
@@ -522,11 +491,17 @@ object Similarity {
     donorsDf.select(col("ord").cast("int"), col("vec"))
       .collect().sortBy(_.getInt(0)).map(_.getSeq[Float](1))
 
-  /** The query-independent HALF of [[ivfPqTopK]]: the coded corpus —
-    * IVF bucket argmin + `nsub` PQ code argmins in ONE narrow projection
-    * per row, (neighbor_id, centroid_id, c0..c{nsub-1}). At 100 TB this
-    * is the one-off index build; staged (bucketed by centroid_id at
-    * scale), a query batch reads only probed buckets at CODE width. */
+  /** The query-independent HALF of IVF-PQ top-k — the combined FAISS
+    * layout ([[ivfTopK]] prunes candidates to the probed buckets,
+    * [[pqTopK]]'s ADC scores them over the PQ codes; the query half is
+    * [[ivfPqSearch]]): the coded corpus — IVF bucket argmin + `nsub` PQ
+    * code argmins in ONE narrow projection per row (no join between the
+    * two halves), (neighbor_id, centroid_id, c0..c{nsub-1}). At 100 TB
+    * this is the one-off index build: staged bucketed by `centroid_id`, a
+    * query batch reads only the probed buckets at CODE width (nsub small
+    * ints per row, not `dim` floats) — IVF's ~nprobe/nlist scan cut
+    * compounding PQ's memory cut, which is exactly why the layout is the
+    * large-scale default (Jégou et al. 2011, §IV). */
   def ivfPqCodedCorpus(corpus: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame, donors: Array[Seq[Float]],
       dim: Int, nsub: Int): DataFrame = {
@@ -546,21 +521,22 @@ object Similarity {
       .select((Seq(col(idCol).as("neighbor_id"), col("centroid_id")) ++ codeCols): _*)
   }
 
-  /** The per-query-batch HALF of [[ivfPqTopK]] over a (possibly staged)
+  /** The per-query-batch HALF of IVF-PQ top-k over a (possibly staged)
     * [[ivfPqCodedCorpus]]: probe selection + per-query LUTs on the
     * bounded query frame, one broadcast join into the probed code scan,
-    * fixed-order squared-ADC sum, (adc, neighbor_id) rank. Value-identical
-    * to the fused form — the oracle replays the same chain. */
+    * fixed-order squared-ADC sum, (adc, neighbor_id) rank.
+    *
+    * Deterministic end to end: sampled (+ optionally Lloyd-refined)
+    * centroids, md5-stride donor codebooks ([[pqDonorsFrame]]), per-query
+    * LUTs materialized once on the (bounded) probe frame, fixed-order
+    * squared-ADC sum, (adc, neighbor_id) rank — the SQL oracle replays
+    * every value. Returns (query_id, neighbor_id, adc_r, rank), rank ≤ k
+    * by ASCENDING approximate L2. */
   def ivfPqSearch(index: DataFrame, centroids: DataFrame, donorsDf: DataFrame,
       queries: DataFrame, qidCol: String, qvecCol: String,
-      k: Int, nprobe: Int, dim: Int, nsub: Int): DataFrame =
-    ivfPqSearchWith(index, centroids, collectDonors(donorsDf), queries,
-      qidCol, qvecCol, k, nprobe, dim, nsub)
-
-  private def ivfPqSearchWith(index: DataFrame, centroids: DataFrame,
-      donors: Array[Seq[Float]], queries: DataFrame, qidCol: String,
-      qvecCol: String, k: Int, nprobe: Int, dim: Int, nsub: Int): DataFrame = {
+      k: Int, nprobe: Int, dim: Int, nsub: Int): DataFrame = {
     require(dim % nsub == 0, s"dim $dim must split evenly into $nsub subspaces")
+    val donors = collectDonors(donorsDf)
     val sw = dim / nsub
     val qw = Window.partitionBy(col("query_id")).orderBy(col("dist"), col("centroid_id"))
     val luts = (0 until nsub).map { s =>

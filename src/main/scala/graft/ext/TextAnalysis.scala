@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import graft.functions.{TextFunctions => T}
 
 /** Document-corpus profiling: per-doc quality/token metrics, language-ID,
-  * fingerprints — the text-analysis slice of a training-data pipeline.
+  * repetition and vocabulary statistics — the text-analysis slice of a
+  * training-data pipeline.
   * All column expressions (graft.functions.TextFunctions), so each profile
   * is a single codegen'd scan. */
 object TextAnalysis {
@@ -29,13 +30,6 @@ object TextAnalysis {
   /** Language-ID predictions: (id, lang_pred, …per-language scores). */
   def detectLanguage(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.select(col(idCol), T.langId(col(textCol)).as("lang_pred"))
-
-  /** Stable content fingerprints (md5-of-normalized + rolling hash). */
-  def fingerprints(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.select(
-      col(idCol),
-      T.fingerprint(col(textCol)).as("fingerprint"),
-      T.rollingHash(col(textCol)).as("rolling_hash"))
 
   /** Corpus-level aggregate: per-language token/char/doc counts. */
   def corpusStats(df: DataFrame, langCol: String, textCol: String): DataFrame =
@@ -232,10 +226,10 @@ object TextAnalysis {
     * ZERO-shuffle shape: one native tokenize+count pass per row
     * ([[graft.plans.NativeExpressions.bigramRepetition]]) — a per-document
     * statistic should never pay an explode plus two shuffled aggregations.
-    * An earlier HOF form (array_sort + aggregate sorted-run fold,
-    * [[repetitionProfileHof]]) had the right plan shape but interpreted-
-    * lambda constants: ~3.5s alone at sf0.1 vs ~0.3s here, the same
-    * cost center the fused SimHash expressions removed. */
+    * An earlier HOF form (array_sort + aggregate sorted-run fold, kept
+    * in ExtSpec as the kernel's reference) had the right plan shape but
+    * interpreted-lambda constants: ~3.5s alone at sf0.1 vs ~0.3s here,
+    * the same cost center the fused SimHash expressions removed. */
   def repetitionProfile(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.select(col(idCol),
         graft.plans.NativeExpressions.bigramRepetition(col(textCol)).as("__r"))
@@ -243,37 +237,6 @@ object TextAnalysis {
       .select(col(idCol), col("__r.n_bigrams").as("n_bigrams"), col("__r.max_c").as("max_c"))
       .withColumn("top_bigram_share",
         col("max_c").cast("double") / col("n_bigrams").cast("double"))
-
-  /** The engine-portable HOF reference of [[repetitionProfile]]: the most
-    * frequent bigram's count equals the longest run of equal elements in
-    * the row's SORTED bigram array. Kept as executable documentation of
-    * the native kernel's semantics (TextSpec asserts equality); prefer the
-    * native form on real corpora. */
-  def repetitionProfileHof(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val toks = T.tokens(lower(col(textCol)))
-    val base = df.select(col(idCol), toks.as("__toks")).where(size(col("__toks")) >= 2)
-    val bigrams = zip_with(
-      slice(col("__toks"), lit(1), size(col("__toks")) - 1),
-      slice(col("__toks"), lit(2), size(col("__toks")) - 1),
-      (a, b) => concat_ws(" ", a, b))
-    val maxRun = aggregate(
-      array_sort(bigrams),
-      struct(lit("").as("prev"), lit(0L).as("run"), lit(0L).as("best")),
-      (acc, x) => {
-        val run = when(x === acc.getField("prev"), acc.getField("run") + 1L).otherwise(lit(1L))
-        struct(x.as("prev"), run.as("run"),
-          greatest(acc.getField("best"), run).as("best"))
-      },
-      acc => acc.getField("best"))
-    // max_c lands in its own projection first: referencing maxRun twice in
-    // one select would inline (and evaluate) the sort+fold tree twice per
-    // row — HOF subtrees are not subexpression-eliminated
-    base.select(col(idCol),
-      (size(col("__toks")) - 1).cast("long").as("n_bigrams"),
-      maxRun.as("max_c"))
-      .withColumn("top_bigram_share",
-        col("max_c").cast("double") / col("n_bigrams").cast("double"))
-  }
 
   /** Corpus-wide top-k adjacent-token bigrams (n desc, bigram asc).
     * `zip_with` over the shifted token array keeps pair construction inside

@@ -51,73 +51,23 @@ object WebText {
       lit("</footer></body></html>"))
   }
 
-  private def stripBlocks(html: Column): Column =
+  private[ext] def stripBlocks(html: Column): Column =
     regexp_replace(
       regexp_replace(html, "(?s)<script[^>]*>.*?</script>", " "),
       "(?s)<style[^>]*>.*?</style>", " ")
 
-  private def stripTags(c: Column): Column = regexp_replace(c, "<[^>]*>", " ")
+  private[ext] def stripTags(c: Column): Column = regexp_replace(c, "<[^>]*>", " ")
 
-  private def collapseWs(c: Column): Column =
+  private[ext] def collapseWs(c: Column): Column =
     trim(regexp_replace(c, "[\\s\\u000b]+", " "))
 
-  /** Boilerplate-removal report per page:
-    * title, cleaned text, its length, anchor-text link density
-    * (chars of text inside `<a>` / chars of all text — int/int one
-    * IEEE division), and the link count. `textCol` must hold markup
-    * (pair with [[synthesizeHtml]] on plain-text fixtures).
-    *
-    * Batch production paths read this product from [[extractAll]]'s
-    * one-pass staging; this single-product form is kept as (1) the
-    * STREAMING-path operator (a stream can't read a staged batch
-    * product) and (2) the executable reference the combined build is
-    * pinned against field-for-field (WebTextSpec). */
-  def extract(df: DataFrame, idCol: String, htmlCol: String): DataFrame = {
-    val noBlocks = stripBlocks(col(htmlCol))
-    val clean = collapseWs(stripTags(noBlocks))
-    // anchor inner text: join captured groups of every <a ...>inner</a>
-    val anchorText = collapseWs(stripTags(
-      array_join(regexp_extract_all(noBlocks,
-        lit("(?s)<a [^>]*>(.*?)</a>"), lit(1)), " ")))
-    df.select(
-      col(idCol),
-      regexp_extract(col(htmlCol), "(?s)<title>(.*?)</title>", 1).as("title"),
-      clean.as("text_clean"),
-      length(clean).cast("long").as("text_len"),
-      (length(anchorText).cast("double") /
-        greatest(length(clean), lit(1)).cast("double")).as("link_density"),
-      size(regexp_extract_all(col(htmlCol), lit("(?s)<a [^>]*>"), lit(0)))
-        .cast("long").as("n_links"))
-  }
-
-  /** Outgoing links per page, normalized — the URL canonicalization
-    * every web-dedup keys on: lowercase scheme+host, default port
-    * stripped, fragment stripped, relative hrefs resolved against the
-    * page's base URL (string-prefix resolution: the synthesized hrefs
-    * are root-relative, which is the overwhelmingly common shape), and
-    * the registrable domain approximated as the last two host labels
-    * (the full public-suffix list is a broadcast lookup in production —
-    * documented, not shipped). One explode, then per-row string ops.
-    * Kept alongside [[extractAll]] as its pinned executable reference
-    * (WebTextSpec) — batch consumers read the staged combined product. */
-  def links(df: DataFrame, idCol: String, htmlCol: String,
-      baseHost: String): DataFrame = {
-    val hrefs = regexp_extract_all(col(htmlCol),
-      lit("<a [^>]*href=\"([^\"]*)\""), lit(1))
-    val exploded = df.select(col(idCol), explode(hrefs).as("href"))
-    exploded.select(
-      col(idCol), col("href"),
-      normalizeHref(col("href"), baseHost).as("url_norm"))
-      .withColumn("domain", registrableDomain(col("url_norm")))
-  }
-
-  /** The normalization chain shared by [[links]] and [[anchorStats]]:
-    * scheme+host lowercased; path/query case-PRESERVED (paths are
+  /** The URL canonicalization every web-dedup keys on, shared by
+    * [[extractAll]]'s link and anchor rows: scheme+host lowercased; path/query case-PRESERVED (paths are
     * case-sensitive); :443/:80 dropped only with their scheme's default;
     * fragment stripped; root-relative hrefs resolved against `baseHost`.
     * No lookahead anywhere: the oracle replays these in RE2, which has
     * none — the (possibly empty) tail is captured and re-emitted. */
-  private def normalizeHref(href: Column, baseHost: String): Column = {
+  private[ext] def normalizeHref(href: Column, baseHost: String): Column = {
     val absolute = when(href.rlike("(?i)^https?://"), href)
       .otherwise(concat(lit(s"https://$baseHost"), href))
     val noFrag = regexp_replace(absolute, "#.*$", "")
@@ -131,23 +81,34 @@ object WebText {
       "^(http://[^/?#:]*):80((?:[/?].*)?)$", "$1$2")
   }
 
-  private def registrableDomain(urlNorm: Column): Column =
+  /** The registrable domain approximated as the last two host labels
+    * (the full public-suffix list is a broadcast lookup in production —
+    * documented, not shipped). */
+  private[ext] def registrableDomain(urlNorm: Column): Column =
     regexp_extract(
       regexp_extract(urlNorm, "^[^:]+://([^/?#:]*)", 1),
       "([^.]+\\.[^.]+)$", 1)
 
-  /** ALL THREE extraction products in ONE pass over the raw HTML —
-    * [[extract]]'s per-page report plus the [[links]] rows and
-    * [[anchorPairs]] rows carried as per-page struct ARRAYS (consumers
-    * explode their axis; parquet column pruning keeps each consumer's
-    * scan as narrow as a dedicated file). This is the multi-output
-    * ingest form: at 100 TB the raw HTML is the largest column in the
-    * lake, and building the three products separately scanned (and
-    * regex-processed the shared chrome of) every page three times —
-    * here the page row is read once and every product's columns are
-    * computed in the same projection. Field-for-field identical to the
-    * single-product builders (same private regex chain), so exploding
-    * `links`/`anchors` reproduces [[links]]/[[anchorPairs]] exactly. */
+  /** ALL THREE extraction products in ONE pass over the raw HTML: the
+    * per-page boilerplate-removal report — title, cleaned text, its
+    * length, anchor-text link density (chars of text inside `<a>` / chars
+    * of all text — int/int one IEEE division) and the link count — plus
+    * the outgoing-link rows (href, normalized url, registrable domain) and
+    * the anchor rows (normalized target, tag-stripped whitespace-collapsed
+    * anchor text; ONE pattern evaluated twice — group 1 = href, group 2 =
+    * inner — so the two arrays are position-aligned by construction)
+    * carried as per-page struct ARRAYS (consumers explode their axis;
+    * parquet column pruning keeps each consumer's scan as narrow as a
+    * dedicated file). This is the multi-output ingest form: at 100 TB the
+    * raw HTML is the largest column in the lake, and building the three
+    * products separately scanned (and regex-processed the shared chrome
+    * of) every page three times — here the page row is read once and
+    * every product's columns are computed in the same projection.
+    * Field-for-field identical to the single-product builders (same regex
+    * chain): WebTextSpec pins the report, the exploded `links` and the
+    * exploded `anchors` against them. `htmlCol` must hold markup (pair
+    * with [[synthesizeHtml]] on plain-text fixtures). Every product is a
+    * per-row projection, so this also runs unchanged on a stream. */
   def extractAll(df: DataFrame, idCol: String, htmlCol: String,
       baseHost: String): DataFrame = {
     val noBlocks = stripBlocks(col(htmlCol))
@@ -186,45 +147,14 @@ object WebText {
   /** Anchor-text index per normalized link TARGET — the inbound-link
     * rollup web search and link-graph quality scoring key on (anchor
     * text is the classic off-page relevance signal; inlink counts feed
-    * centrality/spam features). For every `<a href …>inner</a>` the pair
-    * (normalized target, tag-stripped whitespace-collapsed anchor text)
-    * is extracted with ONE pattern evaluated twice (group 1 = href,
-    * group 2 = inner) so the two arrays are position-aligned by
-    * construction; per target: total inbound anchors, distinct source
-    * pages, total anchor characters.
+    * centrality/spam features): per target, total inbound anchors,
+    * distinct source pages, total anchor characters.
     *
-    * Scale: per-row array projections (no join to build pairs), one
+    * Input: one (page id, url_norm, anchor_text) row per `<a>` tag — the
+    * exploded `anchors` of [[extractAll]], staged. Scale: one
     * exchange on the target key with map-combined partials — the shape
     * of a full web-graph anchor aggregation; anchor text leaves the page
     * row only as the (short) extracted string. */
-  def anchorStats(df: DataFrame, idCol: String, htmlCol: String,
-      baseHost: String): DataFrame =
-    anchorStatsFromPairs(anchorPairs(df, idCol, htmlCol, baseHost), idCol)
-
-  /** The QUERY-INDEPENDENT half of [[anchorStats]]: one
-    * (page, normalized target, cleaned anchor text) row per `<a>` tag —
-    * the extraction product an ingest pipeline stages next to [[links]]
-    * so every anchor-level rollup (inbound counts, anchor-text search
-    * features, spam scoring) reads extracted rows instead of re-running
-    * the two-group regex over raw HTML. Per-row array projections only;
-    * the explode is the single widening step. Kept alongside
-    * [[extractAll]] as its pinned executable reference (WebTextSpec). */
-  def anchorPairs(df: DataFrame, idCol: String, htmlCol: String,
-      baseHost: String): DataFrame = {
-    val pat = lit("(?s)<a [^>]*href=\"([^\"]*)\"[^>]*>(.*?)</a>")
-    df.select(col(idCol),
-      arrays_zip(
-        regexp_extract_all(col(htmlCol), pat, lit(1)),
-        regexp_extract_all(col(htmlCol), pat, lit(2))).as("__p"))
-      .select(col(idCol), explode(col("__p")).as("a"))
-      .select(col(idCol),
-        normalizeHref(col("a.0"), baseHost).as("url_norm"),
-        collapseWs(stripTags(col("a.1"))).as("anchor_text"))
-  }
-
-  /** The rollup half of [[anchorStats]], over an [[anchorPairs]] frame
-    * (inline or staged): one exchange on the target key with
-    * map-combined partials. */
   def anchorStatsFromPairs(pairs: DataFrame, idCol: String): DataFrame =
     pairs.groupBy(col("url_norm"))
       .agg(count(lit(1)).as("n_anchors"),

@@ -3,13 +3,14 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Shingling / SimHash column expressions (MinHash signatures and bands
-  * are the native [[graft.plans.MinHashBands]]).
+/** Hash-derived column expressions: the engine-portable md5-prefix
+  * family, shingle-set Jaccard and the SimHash banding/Hamming helpers
+  * (shingles, MinHash bands and SimHash fingerprints are the native
+  * [[graft.plans.NativeExpressions]] kernels).
   *
-  * Design for scale: signatures are computed per-row from an array column
-  * with `transform`/`aggregate` — no explode, no shuffle, no UDF. The only
-  * shuffles in the dedup pipelines built on these are the LSH bucket
-  * `groupBy`/join, which is the theoretically-required one.
+  * Design for scale: everything is per-row — no explode, no shuffle, no
+  * UDF. The only shuffles in the dedup pipelines built on these are the
+  * LSH bucket `groupBy`/join, which is the theoretically-required one.
   */
 object HashFunctions {
 
@@ -29,29 +30,6 @@ object HashFunctions {
       .cast("long")
   }
 
-  /** Distinct character n-grams of `c` (lowercased). Strings shorter than
-    * `n` yield their whole text as the single shingle. */
-  def charShingles(c: Column, n: Int): Column = {
-    val s = lower(c)
-    array_distinct(
-      transform(
-        sequence(lit(1), greatest(length(s) - lit(n - 1), lit(1))),
-        i => s.substr(i, lit(n))))
-  }
-
-  /** Distinct word n-grams over whitespace tokens. Empty/whitespace-only
-    * input yields an empty array (matching the native twin in
-    * graft.plans.NativeExpressions). */
-  def wordShingles(c: Column, n: Int): Column = {
-    val t = TextFunctions.tokens(lower(c))
-    filter(
-      array_distinct(
-        transform(
-          sequence(lit(0), greatest(size(t) - lit(n), lit(0))),
-          i => concat_ws(" ", slice(t, i + 1, lit(n))))),
-      s => s =!= "")
-  }
-
   /** Exact Jaccard over two shingle-set columns — the fused one-pass
     * native form ([[graft.plans.NativeExpressions.arrayJaccard]]):
     * value-identical to the previous
@@ -62,27 +40,6 @@ object HashFunctions {
     * sits in the per-candidate verify loop of every exact-dedup family. */
   def jaccard(a: Column, b: Column): Column =
     graft.plans.NativeExpressions.arrayJaccard(a, b)
-
-  /** 64-bit SimHash over a token array: each token votes ±1 on every bit of
-    * its xxhash64; fingerprint bit j is 1 iff the vote sum is positive.
-    * Single fold per row, fully codegen'd. */
-  def simhash64(tokensCol: Column): Column = {
-    val votes = aggregate(
-      tokensCol,
-      array_repeat(lit(0L), 64),
-      (acc, t) => {
-        val h = xxhash64(t)
-        zip_with(
-          acc,
-          transform(sequence(lit(0), lit(63)),
-            j => when(call_function("shiftright", h, j).bitwiseAND(lit(1L)) === 1L, lit(1L)).otherwise(lit(-1L))),
-          (a, v) => a + v)
-      })
-    aggregate(
-      sequence(lit(0), lit(63)),
-      lit(0L),
-      (fp, j) => fp + when(element_at(votes, j + 1) > 0, call_function("shiftleft", lit(1L), j)).otherwise(lit(0L)))
-  }
 
   /** Hamming distance between two 64-bit fingerprints. */
   def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))

@@ -37,17 +37,6 @@ object TextFunctions {
     * engines — used by the DuckDB oracle too). */
   def fingerprint(c: Column): Column = md5(normalizeText(c))
 
-  /** Polynomial rolling hash over characters (h = (h*31 + code) mod 2^31),
-    * a cheap order-sensitive fingerprint computed without leaving codegen.
-    * The explicit modulus keeps every intermediate below 2^36 — under ANSI
-    * mode an unbounded `h*31` would throw on long multiplication overflow
-    * after ~13 characters. */
-  def rollingHash(c: Column): Column =
-    aggregate(
-      filter(split(c, ""), ch => ch =!= ""),
-      lit(0L),
-      (h, ch) => pmod(h * lit(31L) + ascii(ch), lit(2147483648L)))
-
   // -- PII redaction -----------------------------------------------------
 
   /** Email-address pattern (pragmatic, not RFC-exhaustive). */

@@ -1,13 +1,15 @@
 package graft.graph
 
-import org.apache.spark.graphx.{Edge, Graph, VertexId}
+import org.apache.spark.graphx.{Edge, Graph}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ThreadBridge
 import org.apache.spark.storage.StorageLevel
 
-/** GraphX materialization of the staged property graph and the graph
-  * algorithms the engine exposes over it.
+/** GraphX materialization of the staged property graph ([[toGraphX]]) and
+  * the graph algorithms the engine exposes over it. Every iterative
+  * algorithm is a DataFrame fixed point (integer or min/max recurrences an
+  * oracle can replay); GraphX only materializes the graph.
   *
   * Input frames follow the [[graft.etl.SparkGraphLoader]] layout:
   *   nodes(label, id, …props)   edges(type, src, dst, …props)
@@ -77,17 +79,6 @@ object GraphOps {
     * stays persisted at its own storage level. */
   def toGraphX(nodes: DataFrame, edges: DataFrame): Graph[(String, String), String] = {
     val vids = denseVertexIds(nodes).cache()
-    val g = toGraphXWithIds(vids, edges)
-    g.numVertices; g.numEdges // materialize into the graph's own storage
-    vids.unpersist()
-    g
-  }
-
-  /** Build the graph against a PRE-ASSIGNED vid table. Algorithms that join
-    * results back by vid MUST pass the same table here — `zipWithIndex` id
-    * assignment is per-job and two separate runs are not guaranteed to
-    * agree. */
-  def toGraphXWithIds(vids: DataFrame, edges: DataFrame): Graph[(String, String), String] = {
     val vertexRdd = vids.rdd.map(r =>
       (r.getAs[Long]("vid"), (r.getAs[String]("label"), r.getAs[String]("id"))))
     val srcIds = vids.select(col("label").as("start_label"), col("id").as("src"), col("vid").as("src_vid"))
@@ -97,31 +88,17 @@ object GraphOps {
       .join(dstIds, Seq("end_label", "dst"))
       .select(col("src_vid"), col("dst_vid"), col("type"))
     val edgeRdd = translated.rdd.map(r => Edge(r.getLong(0), r.getLong(1), r.getString(2)))
-    Graph(vertexRdd, edgeRdd, ("", ""),
+    val g = Graph(vertexRdd, edgeRdd, ("", ""),
       StorageLevel.MEMORY_AND_DISK, StorageLevel.MEMORY_AND_DISK)
-  }
-
-  /** Join algorithm output back to (label, id), materialize it, and release
-    * the cached vid table (which must stay cached DURING the algorithm —
-    * uncached zipWithIndex could assign different ids to the graph build
-    * and the join-back). The returned frame is cached; callers may
-    * unpersist it when done. */
-  private def withVertexInfo(
-      spark: SparkSession, vids: DataFrame, scores: org.apache.spark.rdd.RDD[(VertexId, Double)],
-      valueName: String): DataFrame = {
-    import spark.implicits._
-    val df = scores.toDF("vid", valueName)
-    val out = df.join(vids, "vid").select(col("label"), col("id"), col(valueName)).cache()
-    out.count()
+    g.numVertices; g.numEdges // materialize into the graph's own storage
     vids.unpersist()
-    out
+    g
   }
 
   /** In/out/total degrees as a DataFrame: (label, id, in_deg, out_deg). */
   def degrees(nodes: DataFrame, edges: DataFrame): DataFrame = {
     // DataFrame-only implementation — no graph build, two aggregations;
-    // this is the plan that survives 100 TB (GraphX reserved for iterative
-    // algorithms below)
+    // this is the plan that survives 100 TB
     val out = edges.groupBy(col("start_label").as("label"), col("src").as("id"))
       .agg(count(lit(1)).as("out_deg"))
     val in = edges.groupBy(col("end_label").as("label"), col("dst").as("id"))
@@ -346,7 +323,7 @@ object GraphOps {
     // The eager pin stays EVEN for the bucketed input: letting each of
     // the 6 per-round joins re-scan the staged table instead measured
     // 4.6-5.1 s vs 3.4-4.7 s at sf0.1 (r11 session 2) — unlike
-    // pageRank's single-reference loop, both directions re-read the
+    // pageRankFixedPoint's single-reference loop, both directions re-read the
     // frame every round, and the block-manager read beats 6 filtered
     // parquet scans.
     // edgesByDst: an OPTIONAL second view of the SAME edge set (same
@@ -416,8 +393,8 @@ object GraphOps {
   }
 
   /** Fixed-point INTEGER PageRank as a co-partitioned DataFrame power
-    * iteration — the deterministic, oracle-checkable twin of the GraphX
-    * [[pageRank]] path (whose float accumulation is order-dependent and so
+    * iteration — deterministic and oracle-checkable, unlike GraphX's
+    * Pregel PageRank (whose float accumulation is order-dependent and so
     * can never hash-match another engine). All arithmetic is 64-bit
     * integer: ranks are micro-units (1e6 = mass 1.0), each edge ships
     * `rank DIV outdeg`, and damping is `150000 + (Σ·85) DIV 100` — sums of
@@ -682,8 +659,8 @@ object GraphOps {
   }
 
   /** Min-label propagation communities as a fixed-iteration DataFrame
-    * recurrence — the deterministic, oracle-checkable twin of GraphX
-    * [[connectedComponents]] (whose Pregel convergence detection is
+    * recurrence — the deterministic, oracle-checkable twin of GraphX's
+    * `connectedComponents` (whose Pregel convergence detection is
     * engine-internal; a FIXED iteration count replays identically in any
     * engine). Edges are read UNDIRECTED (symmetric closure); labels start
     * as own node id and each round become `min(own, min over neighbors)`
@@ -735,63 +712,11 @@ object GraphOps {
     labels
   }
 
-  /** EXACT connected components: [[labelPropagateMin]]'s recurrence
-    * iterated to a fixpoint instead of a fixed round count. Still fully
-    * deterministic (min over longs), so the result is the per-component
-    * minimum id and an oracle can rebuild it with a recursive reachability
-    * CTE. Convergence detection exploits monotonicity: labels only ever
-    * DECREASE, so Σ label is strictly decreasing until the fixpoint and
-    * one scalar aggregate per round replaces any change-join. (The scalar
-    * is a convergence FLAG read driver-side, not collected data — the
-    * labels themselves never leave the executors.)
-    *
-    * Materialization: every round runs its own convergence job, so
-    * ReuseExchange cannot span rounds the way it does in the fixed-k
-    * variant; each round's labels are `localCheckpoint`ed (NOT persist:
-    * the CacheManager keys on canonicalized plans, and a registry entry
-    * would make an identically-built rerun silently read stale-but-equal
-    * cache instead of computing) — this is also what cuts the growing
-    * lineage. Rounds needed = component diameter; on high-diameter graphs
-    * swap the recurrence for large-star/small-star (same join shape,
-    * O(log n) rounds). */
-  def connectedComponentsMin(edges: DataFrame, srcCol: String, dstCol: String,
-      maxRounds: Int = 100): DataFrame = {
-    val e = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
-      .union(edges.select(col(dstCol).as("a"), col(srcCol).as("b")))
-      .where(col("a") =!= col("b")).distinct()
-    val eSelf = e.unionByName(
-        e.select(col("a")).distinct().select(col("a"), col("a").as("b")))
-      .localCheckpoint(true)
-    var labels = eSelf.where(col("a") === col("b"))
-      .select(col("a").as("node"), col("a").as("label"))
-      .localCheckpoint(true)
-    var mass = labels.agg(sum(col("label"))).head.getLong(0)
-    var converged = false
-    var round = 0
-    while (!converged && round < maxRounds) {
-      round += 1
-      val next = eSelf
-        .join(labels.select(col("node").as("nb"), col("label").as("nl")),
-          col("b") === col("nb"))
-        .groupBy(col("a"))
-        .agg(min(col("nl")).as("label"))
-        .select(col("a").as("node"), col("label"))
-        .localCheckpoint(true)
-      val nextMass = next.agg(sum(col("label"))).head.getLong(0)
-      converged = nextMass == mass
-      mass = nextMass
-      labels = next
-    }
-    require(converged, s"connected components did not converge in $maxRounds rounds" +
-      " — raise maxRounds or use connectedComponentsStar for this diameter")
-    labels
-  }
-
   /** EXACT connected components by alternating large-star / small-star
     * contraction (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond", SoCC 2014) — the scale-safe replacement for
-    * [[connectedComponentsMin]]'s min-label fixpoint, whose round count is
-    * the component DIAMETER (a data property that can grow arbitrarily at
+    * Beyond", SoCC 2014) — the scale-safe replacement for a min-label
+    * fixpoint (the [[labelPropagateMin]] recurrence iterated to
+    * convergence), whose round count is the component DIAMETER (a data property that can grow arbitrarily at
     * 100 TB). Star contraction converges in O(log n) rounds on any
     * topology, with the same per-round join shape.
     *
@@ -939,42 +864,6 @@ object GraphOps {
     (labels, round)
   }
 
-  /** Hop-bounded BFS distances from a one-row seed frame as a fixed-
-    * iteration DataFrame recurrence (the distance twin of
-    * [[labelPropagateMin]]): after k rounds every row is the EXACT
-    * unweighted shortest-hop distance for nodes within k hops of the seed
-    * (nodes further away simply have no row yet). Deterministic integers
-    * end-to-end — `min` over longs is order-independent — so an oracle
-    * replays the frontier expansion with a bounded recursive CTE.
-    *
-    * The recurrence folds "keep my distance" and "relax over in-edges"
-    * into ONE `min(nd + w)` by adding zero-weight self-loops (w=0) next to
-    * the unit-weight symmetrized edges (w=1) — each round then references
-    * the distance frame exactly once, keeping the unrolled plan linear in
-    * k (the [[labelPropagateMin]] trick, with the weight column carrying
-    * the +1).
-    *
-    * Scale: per round one equi-join of the (node, dist) frame with the
-    * adjacency list — both hashed on the node key, pre-bucketable to
-    * exchange-free — and one map-combined min. The frontier frame is at
-    * most |V| rows regardless of round. For many-source BFS pass a wider
-    * seed frame (same shape); for diameters past ~10 rounds, checkpoint
-    * like [[connectedComponentsMin]]. */
-  def bfsDistances(edges: DataFrame, srcCol: String, dstCol: String,
-      seeds: DataFrame, maxHops: Int,
-      assumeSymmetric: Boolean = false): DataFrame = {
-    // materialize the (possibly expensive) upstream edge derivation ONCE:
-    // the unrolled k-round plan references this subtree k times, and
-    // unlike the single-join-per-round fixed-k label recurrences, the
-    // interleaved seed/frontier aggregates here defeat static exchange
-    // reuse (measured: the 4-hop co-purchase BFS re-ran the pair
-    // projection per round, 4.8s vs 1.6s checkpointed). localCheckpoint,
-    // NOT persist: the CacheManager keys on canonicalized plans and would
-    // silently serve a rerun of the identically-built query from cache.
-    val eSelf = bfsEdges(edges, srcCol, dstCol, assumeSymmetric)
-    relaxRounds(eSelf, seeds.select(col("node"), lit(0L).as("hops")), maxHops)
-  }
-
   /** The self-loop-closed weighted relax frame shared by the BFS family:
     * real edges carry w = 1, per-node self-loops w = 0 (they make the
     * join-min recurrence monotone without a union). Under the
@@ -1003,6 +892,11 @@ object GraphOps {
         edges.select(col(srcCol).as("a"), col(dstCol).as("b"),
           when(col(srcCol) === col(dstCol), 0L).otherwise(1L).as("w"))))
     else {
+      // materialize the (possibly expensive) upstream edge derivation ONCE:
+      // the unrolled k-round plan references it k times, and the
+      // interleaved seed/frontier aggregates defeat static exchange reuse.
+      // localCheckpoint, NOT persist: the CacheManager keys on canonicalized
+      // plans and would silently serve an identically-built rerun from cache.
       val e = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
         .union(edges.select(col(dstCol).as("a"), col(srcCol).as("b")))
         .where(col("a") =!= col("b")).distinct()
@@ -1015,7 +909,7 @@ object GraphOps {
   /** Multi-source BFS with PER-SOURCE distances: (seed, node, hops) for
     * every node within `maxHops` of each seed — the primitive sampled
     * centrality estimators are built from ([[harmonicCloseness]]), where
-    * [[bfsDistances]]' collective-min over the seed set would be wrong.
+    * [[bfsFromMinNode]]'s collective-min over the seed set would be wrong.
     *
     * Scale shape: the frontier is keyed (seed, node), so total work is
     * Σ_seed |B(seed, maxHops)| — the SAMPLE SIZE is the scale knob, and
@@ -1023,7 +917,7 @@ object GraphOps {
     * aggregation, both hash-partitioned and map-side combined. Self-loop
     * weight-0 edges make the plain join-min recurrence monotone (settled
     * distances survive each round without a union). The edge frame is
-    * checkpointed once (same rationale as [[bfsDistances]]). */
+    * checkpointed once (same rationale as [[bfsEdges]]). */
   def multiSourceBfs(edges: DataFrame, srcCol: String, dstCol: String,
       seeds: DataFrame, maxHops: Int,
       assumeSymmetric: Boolean = false): DataFrame = {
@@ -1082,10 +976,21 @@ object GraphOps {
         (col("harmonic_num").cast("double") / lit(denom.toDouble)).as("harmonic"))
   }
 
-  /** [[bfsDistances]] seeded at the graph's minimum node id, derived from
-    * the ALREADY-materialized edge frame — a caller-built seed aggregate
-    * over the raw edge derivation would re-run that (possibly expensive)
-    * upstream subtree a second time just to find one node. */
+  /** Hop-bounded BFS distances from the graph's minimum node id as a
+    * fixed-iteration DataFrame recurrence (the distance twin of
+    * [[labelPropagateMin]]): after k rounds every row is the EXACT
+    * unweighted shortest-hop distance for nodes within k hops of the seed
+    * (nodes further away simply have no row yet). Deterministic integers
+    * end-to-end — `min` over longs is order-independent — so an oracle
+    * replays the frontier expansion with a bounded recursive CTE. The
+    * recurrence folds "keep my distance" and "relax over in-edges" into
+    * ONE `min(nd + w)` by adding zero-weight self-loops next to the
+    * unit-weight symmetrized edges ([[bfsEdges]]).
+    *
+    * The seed derives from the ALREADY-materialized edge frame — a
+    * caller-built seed aggregate over the raw edge derivation would re-run
+    * that (possibly expensive) upstream subtree a second time just to find
+    * one node. */
   def bfsFromMinNode(edges: DataFrame, srcCol: String, dstCol: String,
       maxHops: Int, assumeSymmetric: Boolean = false): DataFrame = {
     val eSelf = bfsEdges(edges, srcCol, dstCol, assumeSymmetric)
@@ -1171,8 +1076,8 @@ object GraphOps {
   }
 
   /** Per-node triangle counts via DEGREE-ORIENTED wedge closing (the
-    * compact-forward algorithm) — the deterministic, oracle-checkable twin
-    * of the GraphX [[triangleCount]] path (integers end-to-end). Edges are
+    * compact-forward algorithm) — deterministic and oracle-checkable,
+    * unlike GraphX's `triangleCount` (integers end-to-end). Edges are
     * read as UNDIRECTED and deduplicated; each is then oriented from the
     * endpoint with the smaller `(degree, id)` to the larger, so every
     * triangle materializes exactly once as the wedge at its order-minimum
@@ -1418,7 +1323,8 @@ object GraphOps {
     * of walk w is `md5(w || '|' || s) mod deg(current)` over the node's
     * id-ordered neighbor list, so any engine (and the SQL oracle) replays
     * the exact walk. Output is one row per (walk_id, step, node),
-    * step 0 = the seed.
+    * step 0 = the seed. One walk starts at every node of the graph's OWN
+    * node set that passes `nodeFilter` (it references the `node` column).
     *
     * Plan shape: the symmetric adjacency is ranked ONCE (one window over
     * the node-hash exchange, neighbor rank + degree together) and
@@ -1426,20 +1332,11 @@ object GraphOps {
     * it on (node, rank) — `steps` joins total, no recursion, no driver
     * loop. At 100 TB the adjacency frame is the natural bucketing target
     * (bucket by `v`) making every step exchange-free on the adjacency
-    * side; the frontier stays walk-count-sized, independent of |E|. */
-  def randomWalks(edges: DataFrame, srcCol: String, dstCol: String,
-      seeds: DataFrame, seedCol: String, steps: Int,
-      assumeSymmetric: Boolean = false): DataFrame = {
-    val adj = rankedAdjacency(edges, srcCol, dstCol, assumeSymmetric)
-    walkLoop(adj, seeds.select(col(seedCol).as("walk_id"),
-      col(seedCol).as("node"), lit(0).as("step")), steps)
-  }
-
-  /** [[randomWalks]] seeded by a predicate over the graph's OWN node set
-    * (`nodeFilter` references the `node` column) — seeds derive from the
-    * already-materialized adjacency, so a caller-built seed frame does not
-    * re-run the (possibly expensive) edge derivation a second time: the
-    * same one-materialization rationale as [[bfsFromMinNode]]. */
+    * side; the frontier stays walk-count-sized, independent of |E|. Seeds
+    * derive from the already-materialized adjacency, so a caller-built
+    * seed frame does not re-run the (possibly expensive) edge derivation a
+    * second time: the same one-materialization rationale as
+    * [[bfsFromMinNode]]. */
   def randomWalksFromNodes(edges: DataFrame, srcCol: String, dstCol: String,
       nodeFilter: org.apache.spark.sql.Column, steps: Int,
       assumeSymmetric: Boolean = false): DataFrame = {
@@ -1499,81 +1396,6 @@ object GraphOps {
         .select(col("walk_id"), col("n").as("node"), lit(s).as("step"))
       out = out.unionByName(frontier)
     }
-    out
-  }
-
-  /** PageRank via GraphX Pregel implementation. */
-  def pageRank(nodes: DataFrame, edges: DataFrame, tol: Double = 0.001): DataFrame = {
-    val spark = nodes.sparkSession
-    val vids = denseVertexIds(nodes).cache()
-    val g = toGraphXWithIds(vids, edges)
-    val pr = g.pageRank(tol)
-    val out = withVertexInfo(spark, vids, pr.vertices, "pagerank")
-    // the output frame is materialized; release the interim graphs (a
-    // long-lived session calling several algorithms would otherwise pin
-    // every input AND result graph in the block manager until GC)
-    pr.unpersist(blocking = false); g.unpersist(blocking = false)
-    out
-  }
-
-  /** Connected components (undirected reachability). */
-  def connectedComponents(nodes: DataFrame, edges: DataFrame): DataFrame = {
-    val spark = nodes.sparkSession
-    val vids = denseVertexIds(nodes).cache()
-    val g = toGraphXWithIds(vids, edges)
-    val cc = g.connectedComponents()
-    val out = withVertexInfo(spark, vids, cc.vertices.mapValues(_.toDouble), "component")
-    cc.unpersist(blocking = false); g.unpersist(blocking = false)
-    out
-  }
-
-  /** Triangle counts per vertex. */
-  def triangleCount(nodes: DataFrame, edges: DataFrame): DataFrame = {
-    val spark = nodes.sparkSession
-    val vids = denseVertexIds(nodes).cache()
-    val g = toGraphXWithIds(vids, edges)
-    val tc = g.triangleCount()
-    val out = withVertexInfo(spark, vids, tc.vertices.mapValues(_.toDouble), "triangles")
-    tc.unpersist(blocking = false); g.unpersist(blocking = false)
-    out
-  }
-
-  /** Unweighted shortest-path hop counts from each vertex to the given
-    * landmark nodes (GraphX Pregel `ShortestPaths`). Landmarks are
-    * (label, id) pairs; output is one row per reachable (vertex, landmark)
-    * with the hop distance. Distances follow edge direction REVERSED
-    * (GraphX's ShortestPaths semantics: distance from each vertex TO the
-    * landmark along in-edges); pass a symmetrized edge frame for
-    * undirected distance. */
-  def shortestPaths(
-      nodes: DataFrame, edges: DataFrame,
-      landmarks: Seq[(String, String)]): DataFrame = {
-    import org.apache.spark.graphx.lib.ShortestPaths
-    val spark = nodes.sparkSession
-    import spark.implicits._
-    val vids = denseVertexIds(nodes).cache()
-    // collect ONLY the landmark rows (a handful), never the vid table
-    val lmCond = landmarks
-      .map { case (l, i) => col("label") === l && col("id") === i }
-      .reduce(_ || _)
-    val lmIds = vids.where(lmCond).select(col("vid")).collect().map(_.getLong(0))
-    // every landmark must resolve: a silently-dropped typo would read as
-    // "unreachable from everywhere" instead of "nonexistent"
-    require(lmIds.length == landmarks.distinct.length,
-      s"only ${lmIds.length} of ${landmarks.distinct.length} landmarks matched the node set: $landmarks")
-    val g = toGraphXWithIds(vids, edges)
-    val result = ShortestPaths.run(g, lmIds.toIndexedSeq)
-    val rows = result.vertices.flatMap { case (vid, spMap) =>
-      spMap.map { case (lm, d) => (vid, lm, d.toLong) }
-    }.toDF("vid", "lm_vid", "hops")
-    val lmNames = vids.select(col("vid").as("lm_vid"),
-      col("label").as("lm_label"), col("id").as("lm_id"))
-    val out = rows.join(vids, "vid").join(lmNames, "lm_vid")
-      .select(col("label"), col("id"), col("lm_label"), col("lm_id"), col("hops"))
-      .cache()
-    out.count()
-    vids.unpersist()
-    result.unpersist(blocking = false); g.unpersist(blocking = false)
     out
   }
 
@@ -1753,10 +1575,6 @@ object GraphOps {
       .select(col("a"), col("b"), coalesce(col("sup"), lit(0L)).as("support")),
       round)
   }
-
-  def kTruss(edges: DataFrame, srcCol: String, dstCol: String,
-      k: Int, maxRounds: Int = 100, assumeSymmetric: Boolean = false): DataFrame =
-    kTrussWithRounds(edges, srcCol, dstCol, k, maxRounds, assumeSymmetric)._1
 
   /** Strongly connected components, two-tier (the
     * [[graft.ext.Dedup]] cluster-resolution pattern): a bounded probe
@@ -1998,7 +1816,8 @@ object GraphOps {
     * layer 0). The standard longest-path recurrence as a DataFrame
     * fixpoint: layers only INCREASE and are bounded by condensation depth,
     * so Σ layer is monotone and one scalar per round detects the fixpoint
-    * (the [[connectedComponentsMin]] convergence trick, maximizing). The
+    * (the convergence trick of a min-label components fixpoint,
+    * maximizing). The
     * self-loop fold keeps one layer-frame reference per round.
     *
     * Scale: condensation edges are two label joins + one distinct off the

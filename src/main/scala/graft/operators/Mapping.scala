@@ -17,8 +17,7 @@ import org.apache.spark.sql.functions._
   * reproduces the ghosts bug-for-bug.
   *
   * Scale: mappings are dimension-sized — `broadcast()` keeps the rewrite
-  * shuffle-free over arbitrarily large edge tables. For mappings too large
-  * to broadcast, drop the hint and Catalyst falls back to sort-merge.
+  * shuffle-free over arbitrarily large edge tables.
   */
 object Mapping {
 
@@ -27,14 +26,13 @@ object Mapping {
       edges: DataFrame,
       mapping: DataFrame,
       prop: String,
-      strictCompat: Boolean = false,
-      broadcastMapping: Boolean = true): DataFrame = {
+      strictCompat: Boolean = false): DataFrame = {
     val joinType = if (strictCompat) "full_outer" else "left_outer"
     // fresh attributes per call: one mapping frame may be joined twice into
     // one plan (both endpoints of a self-typed edge), and its own
     // attributes would then be ambiguous in the second join
     val m0 = mapping.select(col("old_value").as("__old_value"), col("new_value").as("__new_value"))
-    val m = if (broadcastMapping && !strictCompat) broadcast(m0) else m0
+    val m = if (strictCompat) m0 else broadcast(m0)
     // When old and new types differ the merged column becomes a string —
     // the reference records the post-mapping dtype as Utf8 (pipeline.py:69);
     // without the explicit cast Spark's ANSI coercion would pick the

@@ -13,10 +13,10 @@ import org.apache.spark.sql.functions._
   * codegen'd, no UDF, and bit-for-bit replayable by any engine with
   * integer `& | << >>` (the DuckDB oracle of q_zorder does exactly that).
   *
-  * At 100 TB this pairs with the write path: `clusterByZOrder` range
-  * partitions on the z-value (one exchange, AQE-coalescible) so each
-  * output file covers one compact z-range; the per-file min/max audit
-  * (`fileSkippingProfile`) is the evidence the layout skips.
+  * At 100 TB this pairs with the write path: range partitioning on the
+  * z-value (one exchange, AQE-coalescible) gives each output file one
+  * compact z-range; the per-file min/max audit ([[fileSkippingProfile]])
+  * is the evidence the layout skips.
   */
 object ZOrder {
 
@@ -37,19 +37,6 @@ object ZOrder {
     * curve distance meaningful for skewed domains. */
   def morton2(x: Column, y: Column): Column =
     spreadBits16(x).bitwiseOR(shiftleft(spreadBits16(y), 1))
-
-  /** Cluster `df` for writing: range partition on the z-value into
-    * `numFiles` compact curve segments and sort within each so row groups
-    * inside a file are curve-local too (parquet page stats then prune
-    * WITHIN files as well). One exchange; boundary sampling is Spark's
-    * usual range partitioner. Write the result with a plain
-    * `.write.parquet` — one file per partition, each covering a narrow
-    * min/max box in BOTH dimensions. */
-  def clusterByZOrder(df: DataFrame, x: Column, y: Column, numFiles: Int): DataFrame = {
-    require(numFiles >= 1, s"numFiles must be >= 1, got $numFiles")
-    val z = morton2(x, y)
-    df.repartitionByRange(numFiles, z).sortWithinPartitions(z)
-  }
 
   /** Rank-based (equal-frequency) ordinal for a CONTINUOUS or skewed
     * dimension: `ordinal = rank * 2^bits div n` over the exact global

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, Coalesce, EqualTo, Expression, ExpressionInfo, If, IsNull, LambdaFunction, Literal, Lower, NamedLambdaVariable, Not, StringSplit}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -11,11 +11,9 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *
   *   SELECT id, minhash_bands(char_shingles(text, 5), 128, 16) FROM docs
   *
-  * Two entry points:
-  *  - new sessions: `--conf spark.sql.extensions=graft.plans.GraftExtensions`
-  *    (the standard injection path — survives into every session built from
-  *    that config, executors included);
-  *  - an already-running session: `GraftExtensions.register(spark)`.
+  * [[graft.GraftSession.build]] installs it in every session it creates
+  * (and so in every `newSession` clone of one); a session built elsewhere
+  * gets it with `--conf spark.sql.extensions=graft.plans.GraftExtensions`.
   *
   * Sketch parameters (shingle size, hash/band counts) must be integer
   * literals: they parameterize the expression instance itself (the hash
@@ -23,7 +21,10 @@ import org.apache.spark.sql.catalyst.rules.Rule
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftExtensions.descriptions.foreach(ext.injectFunction)
+    GraftExtensions.functions.foreach { case (name, _, builder) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo("graft.plans.NativeExpressions", null, name), builder))
+    }
     ext.injectOptimizerRule(_ => FuseSimHashTokenize)
   }
 }
@@ -116,17 +117,4 @@ object GraftExtensions {
       case Seq(a, b) => EuclideanDistance(a, b)
       case args      => arity("euclidean_distance", 2, args)
     }))
-
-  /** The injectFunction descriptions (shared by both entry points). */
-  private[plans] def descriptions
-      : Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
-    functions.map { case (name, _, builder) =>
-      (FunctionIdentifier(name), new ExpressionInfo("graft.plans.NativeExpressions", null, name), builder)
-    }
-
-  /** Register into an already-running session's function registry. */
-  def register(spark: SparkSession): Unit =
-    descriptions.foreach { case (ident, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
-    }
 }

@@ -23,13 +23,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * zero kernel duplication between the interpreted and generated forms.
   *
   * Hashing is built on the same seed-42 xxhash64 base Spark's `xxhash64`
-  * uses, so results are stable and reproducible across runs. NOTE: the
-  * MinHash slot family here (affine `base*a_k+b_k` over one base hash per
-  * shingle) intentionally differs from the HOF variant in
-  * graft.functions.HashFunctions (per-slot `xxhash64(k, s)`) — it hashes
-  * each shingle once instead of k times. Signatures from the two APIs are
-  * NOT comparable; these native forms are the canonical ones the Dedup
-  * pipelines use.
+  * uses, so results are stable and reproducible across runs. The MinHash
+  * slot family (affine `base*a_k+b_k` over one base hash per shingle)
+  * hashes each shingle once instead of k times.
   */
 object NativeExpressions {
 
@@ -45,9 +41,8 @@ object NativeExpressions {
     * cut): boundary after 1-based code-point position i ≥ `window` iff
     * `md5("cdc:" || text[i-window+1 .. i])`'s first-15-hex-chars value ≡ 0
     * (mod `mask`) — byte-for-byte the contract of the HOF form this
-    * kernel replaced ([[graft.ext.Dedup.contentDefinedChunksHof]], kept
-    * as the spec's reference), which an external SQL engine replays
-    * exactly. One pass per row instead of a materialized per-position
+    * kernel replaced (kept in ExtSpec as the spec's reference), which an
+    * external SQL engine replays exactly. One pass per row instead of a materialized per-position
     * struct array walked by interpreted lambdas. */
   def cdcChunks(text: Column, window: Int, mask: Int): Column =
     toCol(CdcChunks(toExpr(text), window, mask))
@@ -64,9 +59,6 @@ object NativeExpressions {
   def minhashBands(shingles: Column, numHashes: Int, bands: Int): Column =
     toCol(MinHashBands(toExpr(shingles), numHashes, bands))
 
-  /** 64-bit SimHash over an array<string> of tokens. */
-  def simhash64(tokens: Column): Column = toCol(SimHash64(toExpr(tokens)))
-
   /** Exact set-Jaccard of two same-typed string/integral arrays, fused
     * into ONE pass (see [[ArrayJaccard]]) — value-identical to the
     * size(array_intersect)/size(array_union) composition it replaces. */
@@ -74,26 +66,19 @@ object NativeExpressions {
     toCol(ArrayJaccard(toExpr(a), toExpr(b)))
 
   /** Tokenize (lowercase whitespace split) + 64-bit SimHash fused into one
-    * loop per row — replaces the interpreted HOF tokenizer feeding
-    * [[simhash64]] in the hot dedup path. NULL for token-less input, so the
-    * degenerate all-zero fingerprint never enters an LSH bucket join (the
-    * banding expression propagates the null and `posexplode` drops the
-    * row). */
-  def simhashText(text: Column): Column = toCol(SimHashText(toExpr(text)))
-
-  /** [[simhashText]] with an md5-lower-64 token hash instead of xxhash64:
-    * engine-portable (DuckDB can rebuild the exact fingerprint from
-    * `substr(md5(tok),1,16)`), so the whole SimHash pipeline becomes
-    * value-checkable against a SQL oracle. ~10× slower per token than the
-    * xxhash64 family — use the default for production corpora and this one
-    * where cross-engine reproducibility matters more than hash throughput. */
+    * loop per row, with an md5-lower-64 token hash: engine-portable (DuckDB
+    * can rebuild the exact fingerprint from `substr(md5(tok),1,16)`), so
+    * the whole SimHash pipeline is value-checkable against a SQL oracle.
+    * NULL for token-less input, so the degenerate all-zero fingerprint
+    * never enters an LSH bucket join (the banding expression propagates
+    * the null and `posexplode` drops the row). */
   def simhashTextPortable(text: Column): Column = toCol(SimHashTextMd5(toExpr(text)))
 
   /** Fused tokenize + bigram frequency profile in one pass per row:
     * struct(n_bigrams, max_c) where max_c is the count of the most frequent
     * adjacent-token bigram — NULL for texts with fewer than two tokens.
     * Replaces the interpreted `array_sort` + `aggregate` sorted-run fold
-    * (the same interpreted-lambda cost center [[simhashText]] replaced):
+    * (the same interpreted-lambda cost center [[simhashTextPortable]] replaced):
     * the HOF form costs ms per document at sf0.1, this loop ~µs.
     * Tokenization is the shared lowercase `\s+` contract, so the result is
     * identical to the HOF form and to the DuckDB oracle. */
@@ -152,9 +137,8 @@ object NativeExpressions {
     toCol(BloomMightContain(toExpr(c), bloom))
 
   /** Cosine similarity over two float/double array columns, computed in
-    * double with sequential index-order accumulation — bit-identical to the
-    * `aggregate`-based graft.functions.VectorFunctions.cosine and to the
-    * DuckDB oracle formula dot/(sqrt(na)*sqrt(nb)). */
+    * double with sequential index-order accumulation — bit-identical to
+    * the DuckDB oracle formula dot/(sqrt(na)*sqrt(nb)). */
   def cosine(a: Column, b: Column): Column = toCol(CosineSimilarity(toExpr(a), toExpr(b)))
 
   /** Euclidean distance over two float/double array columns. */
@@ -551,7 +535,8 @@ private object SimHashKernel {
 
 /** Fused lowercase-tokenize + SimHash: one pass over the string, no
   * intermediate token array, no interpreted HOF. NULL for token-less
-  * input (see [[NativeExpressions.simhashText]]). */
+  * input (see [[NativeExpressions.simhashTextPortable]]). Reached through
+  * the `simhash_text` SQL function and the [[FuseSimHashTokenize]] rule. */
 case class SimHashText(child: Expression)
     extends UnaryExpression {
   override def dataType: DataType = LongType

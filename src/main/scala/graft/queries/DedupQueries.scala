@@ -313,7 +313,7 @@ object DedupQueries extends QueryFamily("dedup") {
   // "i̇" vs "i") — absent from this corpus and from most web text.
   query("q_simhash_near_dup")((s, dir) => {
     Dedup.simhashNearDuplicates(t(s, dir, "documents"), "doc_id", "text",
-      maxHamming = 3, portableHash = true)
+      maxHamming = 3)
       .select(col("id_a"), col("id_b"), col("hamming").cast("long").as("hamming"))
   }) {
     // rebuilds the md5-family SimHash fingerprint per document — same token

@@ -372,7 +372,7 @@ object EtlQueries extends QueryFamily("etl") {
   // table max (integer div — exact on any engine, and SF-independent:
   // the curve always spans all 32 bits), Morton-interleave, bucket by
   // the top 6 curve bits (64 deterministic z-ranges = the files a
-  // clusterByZOrder write would cut), report the per-file min/max box a
+  // z-range-partitioned write would cut), report the per-file min/max box a
   // scan planner prunes against — all builtin bit ops, zero UDFs
   query("q_zorder")((s, dir) => {
     val li = t(s, dir, "lineitem")

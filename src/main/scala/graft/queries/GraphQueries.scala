@@ -234,9 +234,8 @@ object GraphQueries extends QueryFamily("graph") {
 
   // EXACT connected components on the co-purchase graph via alternating
   // large-star/small-star contraction (Kiveris et al. 2014): O(log n)
-  // rounds on ANY topology, vs the min-label fixpoint twin
-  // (connectedComponentsMin, cross-validated in GraphOpsSpec) whose
-  // round count is the component diameter. Same deterministic
+  // rounds on ANY topology, vs a min-label fixpoint whose round count
+  // is the component diameter. Same deterministic
   // integer-min output; oracle = recursive reachability closure
   query("q_components")((s, dir) => {
     graft.graph.GraphOps.connectedComponentsStar(stagedCoPurchaseSym(s, dir), "a", "b",
@@ -465,7 +464,7 @@ object GraphQueries extends QueryFamily("graph") {
 
   // DeepWalk-style positive-pair walks on the co-purchase graph, fully
   // deterministic (md5 choice — the oracle replays each step); every
-  // 20th node seeds a 4-step walk. See GraphOps.randomWalks for the
+  // 20th node seeds a 4-step walk. See GraphOps.randomWalksFromNodes for the
   // one-ranked-adjacency, one-join-per-step plan shape
   query("q_random_walks")((s, dir) => {
     graft.graph.GraphOps.randomWalksFromNodes(stagedCoPurchaseSym(s, dir),
@@ -473,7 +472,7 @@ object GraphQueries extends QueryFamily("graph") {
       .select(col("walk_id"), col("step").cast("long").as("step"), col("node"))
   }) {
     // each step replayed as one join on (node, md5-choice rank) — the
-    // determinism contract in GraphOps.randomWalks, unrolled
+    // determinism contract in GraphOps.randomWalksFromNodes, unrolled
     (s"WITH $walksChainSql\n" +
       "SELECT walk_id, step, node FROM walks")
   }
@@ -946,7 +945,7 @@ object GraphQueries extends QueryFamily("graph") {
   /** The deterministic-walk chain in SQL, ending in a `walks` CTE — the
     * capped co-purchase projection, the id-ordered ranked adjacency, and
     * each of the four md5-choice steps replayed exactly as
-    * [[graft.graph.GraphOps.randomWalks]] computes them. Shared by the
+    * [[graft.graph.GraphOps.randomWalksFromNodes]] computes them. Shared by the
     * q_random_walks / q_walk_centrality / q_skipgram_pairs oracles. */
   private val walksChainSql: String = {
     val base =

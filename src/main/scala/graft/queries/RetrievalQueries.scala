@@ -870,7 +870,8 @@ object RetrievalQueries extends QueryFamily("retrieval") {
       |FROM ranked WHERE rank <= 5""".stripMargin
   }
 
-  // the combined FAISS IVF-PQ layout (Similarity.ivfPqTopK): IVF
+  // the combined FAISS IVF-PQ layout (Similarity.ivfPqCodedCorpus +
+  // ivfPqSearch): IVF
   // candidate pruning (nprobe of nlist buckets, one Lloyd pass) + ADC
   // scoring over the 4-subspace PQ codes — corpus index built in ONE
   // narrow projection (bucket + codes per row), the probed scan reads

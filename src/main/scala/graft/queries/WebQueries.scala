@@ -276,11 +276,7 @@ object WebQueries extends QueryFamily("web") {
       .agg(min(col("doc_id")).as("doc_id"))
     val pairs = Dedup.hashOrderJaccardPairs(
       exact.select(col("doc_id"), col("text_clean").as("text")),
-      "doc_id", "text", ngram = 3, threshold = 0.8,
-      // the input is the gate + exact-dedup SUB-PLAN, not a scan: one
-      // prep materialization replaces three replays of it (measured
-      // ~2.5 -> ~1.7 s steady-state at sf0.1)
-      materializePrep = true)
+      "doc_id", "text", ngram = 3, threshold = 0.8)
       .select(col("id_a"), col("id_b"))
     val dropped = Dedup.resolveDuplicateClusters(pairs)
       .where(col("id") =!= col("keep_id")).select(col("id").as("doc_id"))

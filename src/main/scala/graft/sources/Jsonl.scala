@@ -11,14 +11,14 @@ import org.apache.spark.sql.types.StructType
   * Scale rules encoded here rather than left to callers:
   *  - READS TAKE AN EXPLICIT SCHEMA. `spark.read.json` without one runs a
   *    full inference pass over the data — at 100 TB that silently doubles
-  *    the scan. Infer once (sampled, explicit) with [[inferSchema]], save
-  *    the schema, and pass it to every subsequent read.
+  *    the scan. Infer once (sampled, explicit: `spark.read.option(
+  *    "samplingRatio", r).json(path).schema`), save the schema, and pass
+  *    it to every subsequent [[read]].
   *  - JSONL is splittable only uncompressed or with a splittable codec;
   *    gzip makes each FILE one task. Default writes are uncompressed
   *    (shard count = parallelism); pass zstd for cold storage.
   *  - corrupt lines land in the standard `_corrupt_record` column under
-  *    PERMISSIVE mode instead of killing the job; [[readStrict]] is the
-  *    fail-fast variant for pipelines that prefer loud ingest errors. */
+  *    PERMISSIVE mode instead of killing the job. */
 object Jsonl {
 
   /** Write one JSON object per line. `compression`: "none" (default,
@@ -31,14 +31,4 @@ object Jsonl {
     * doc). Malformed lines are PERMISSIVE-nulled. */
   def read(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.schema(schema).json(path)
-
-  /** Fail-fast read: any malformed line aborts the job loudly. */
-  def readStrict(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.schema(schema).option("mode", "FAILFAST").json(path)
-
-  /** One explicit, sampled inference pass — run once, persist the result
-    * (e.g. `schema.json` next to the data), then use [[read]]. */
-  def inferSchema(spark: SparkSession, path: String,
-      samplingRatio: Double = 0.1): StructType =
-    spark.read.option("samplingRatio", samplingRatio).json(path).schema
 }

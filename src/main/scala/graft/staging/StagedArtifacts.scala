@@ -448,8 +448,8 @@ object StagedArtifacts {
 
   /** The (page, normalized target, anchor text) pair table STAGED once
     * per (input content, code digest) — the anchor-level extraction
-    * product ([[graft.ext.WebText.anchorPairs]] semantics, served from
-    * the combined build's `anchors` array); q_anchor_stats is the
+    * product (the exploded `anchors` of [[graft.ext.WebText.extractAll]],
+    * served from the combined build); q_anchor_stats is the
     * rollup over it. */
   private[graft] def stagedWebAnchors(s: SparkSession, dir: String): DataFrame =
     stagedWebProducts(s, dir)

@@ -15,7 +15,7 @@ class EndToEndSpec extends SparkSpec {
   import spark.implicits._
 
   test("movie graph: parse -> map -> load -> GraphX top actor") {
-    val dir = Files.createTempDirectory("graft-e2e").toString
+    val dir = tempDir("graft-e2e").toString
     val etl = new GraphEtl(spark, dir)
 
     val movies = Seq(
@@ -74,7 +74,7 @@ class EndToEndSpec extends SparkSpec {
     // committed fixtures with the reference's exact file schemas (fictional
     // rows). Asserts the persisted configs.json against the reference's
     // catalog layout (utils.py:99-119) with normalized file names.
-    val dir = Files.createTempDirectory("graft-e2e-example").toString
+    val dir = tempDir("graft-e2e-example").toString
     val etl = new GraphEtl(spark, dir)
 
     // imdb.py — sources_path declared, source=kaggle metadata
@@ -172,7 +172,7 @@ class EndToEndSpec extends SparkSpec {
     // the reference's example/main.py shape: the oscars parser emits
     // AWARDED_FOR edges addressed by Person:name, while Person nodes come
     // from the separately-registered imdb parser
-    val dir = Files.createTempDirectory("graft-e2e-cross").toString
+    val dir = tempDir("graft-e2e-cross").toString
     val etl = new GraphEtl(spark, dir)
 
     etl.parser("people", Map("source" -> "imdb")) { ctx =>

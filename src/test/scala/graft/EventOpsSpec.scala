@@ -149,7 +149,7 @@ class EventOpsSpec extends SparkSpec {
       (13L, 1L, "purchase", ts(300), 1.0),
       (14L, 1L, "purchase", ts(400), 1.0)
     ).toDF("event_id", "user_id", "event_type", "ts", "value")
-    val d = java.nio.file.Files.createTempDirectory("graft-pit").toString
+    val d = tempDir("graft-pit").toString
     rows.withColumn("props", lit(null).cast("string"))
       .write.mode("overwrite").parquet(s"$d/events.parquet")
     val out = SparkEntry.queries("q_pit_join")(spark, d)
@@ -173,7 +173,7 @@ class EventOpsSpec extends SparkSpec {
       // u3: purchase 1s past +24h -> label 0
       (5L, 3L, "view", ts(1000), 0.0), (6L, 3L, "purchase", ts(1001 + day), 1.0)
     ).toDF("event_id", "user_id", "event_type", "ts", "value")
-    val d = java.nio.file.Files.createTempDirectory("graft-lw").toString
+    val d = tempDir("graft-lw").toString
     rows.withColumn("props", lit(null).cast("string"))
       .write.mode("overwrite").parquet(s"$d/events.parquet")
     val out = SparkEntry.queries("q_label_window")(spark, d)

@@ -559,7 +559,7 @@ class PlanSpec extends SparkSpec {
   test("staging reuses a valid prior build and rebuilds on input mutation") {
     // own input dir (the fixture dirs are read-only): q_label_prop reads
     // only lineitem, so one copied file is a complete input
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stale_test")
+    val tmp = tempDir("graft_stale_test")
     val li = tmp.resolve("lineitem.parquet")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(dir, "lineitem.parquet"), li)
@@ -1181,19 +1181,19 @@ class PlanSpec extends SparkSpec {
       s"combined web build must scan the page frame exactly once:\n${bp.take(3000)}")
     // the funnel still materializes ONE frame per call — the near-dup
     // prep over its query-derived survivor sub-plan (gate + exact-dedup
-    // output; hashOrderJaccardPairs materializePrep = true, measured
+    // output; hashOrderJaccardPairs checkpoints its prep frame, measured
     // ~2.5 -> ~1.8 s). The funnel's FINAL plan can't show it (cluster
     // resolution evaluates the pair pipeline eagerly), so pin the
-    // operator contract: with materializePrep all four impl consumers
-    // read the one checkpoint and the input sub-plan appears nowhere
+    // operator contract: all four impl consumers read the one
+    // checkpoint and the input sub-plan appears nowhere
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .selectExpr("doc_id", "text").groupBy("text")
       .agg(org.apache.spark.sql.functions.min("doc_id").as("doc_id"))
     val mp = graft.ext.Dedup.hashOrderJaccardPairs(docs, "doc_id", "text",
-        ngram = 3, threshold = 0.8, materializePrep = true)
+        ngram = 3, threshold = 0.8)
       .queryExecution.executedPlan.toString()
     assert(mp.contains("Scan ExistingRDD"),
-      s"materializePrep did not checkpoint the prep frame:\n${mp.take(2000)}")
+      s"hashOrderJaccardPairs did not checkpoint the prep frame:\n${mp.take(2000)}")
     assert(!mp.contains("HashAggregate(keys=[text"),
       s"a consumer re-derives the aggregated input past the checkpoint:\n${mp.take(2000)}")
   }

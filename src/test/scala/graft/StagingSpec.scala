@@ -36,7 +36,7 @@ class StagingSpec extends SparkSpec {
   }
 
   test("sweep reaps stale-digest stagings past the age guard, keeps current/recent/foreign-named") {
-    val root = Files.createTempDirectory("graft_sweep_spec")
+    val root = tempDir("graft_sweep_spec")
     val now = 1_000_000_000_000L // fixed clock: the sweep takes nowMillis explicitly
     val maxAge = 12 * hour
     val current    = mkStaging(root.resolve(s"graft_x_aaaaaaaa_$code8"), 48 * hour, now)
@@ -151,7 +151,7 @@ class StagingSpec extends SparkSpec {
     // the coexistence property under test is "a rebuild under one digest
     // writes only its own digest-keyed path", which no partner location
     // can change
-    val coexistRoot = Files.createTempDirectory("graft_coexist_spec")
+    val coexistRoot = tempDir("graft_coexist_spec")
     val partner = coexistRoot.resolve(
       cur.get.getFileName.toString.dropRight(8) + "0abcde12")
     Files.createDirectories(partner)
@@ -177,7 +177,7 @@ class StagingSpec extends SparkSpec {
     // clock: sweeping the real warehouse with an inflated `now` would reap a
     // LIVE A/B partner's warm stagings (exactly what the age guard
     // exists to prevent).
-    val gcRoot = Files.createTempDirectory("graft_gc_spec")
+    val gcRoot = tempDir("graft_gc_spec")
     def copyInto(src: Path): Path = {
       val dst = gcRoot.resolve(src.getFileName)
       Files.createDirectories(dst)
@@ -209,7 +209,7 @@ class StagingSpec extends SparkSpec {
   }
 
   test("two concurrent cold builds publish one dir and read the same rows") {
-    val root = Files.createTempDirectory("graft_commit_spec")
+    val root = tempDir("graft_commit_spec")
     val path = root.resolve(s"graft_race_aaaaaaaa_bbbbbbbb_$code8")
     val fp = s"${Staging.logicDigest}:race"
     // both callers go straight to the commit, past the in-process map:
@@ -236,7 +236,7 @@ class StagingSpec extends SparkSpec {
   }
 
   test("a failed build leaves no published path and no temp dir; the next access rebuilds") {
-    val root = Files.createTempDirectory("graft_commit_fail_spec")
+    val root = tempDir("graft_commit_fail_spec")
     val path = root.resolve(s"graft_fail_aaaaaaaa_bbbbbbbb_$code8")
     val fp = s"${Staging.logicDigest}:fail"
     val e = intercept[IllegalStateException] {
@@ -255,7 +255,7 @@ class StagingSpec extends SparkSpec {
   }
 
   test("sweep reaps an orphaned temp dir past the age guard and keeps a younger one") {
-    val root = Files.createTempDirectory("graft_orphan_spec")
+    val root = tempDir("graft_orphan_spec")
     val now = 1_000_000_000_000L
     def orphan(name: String, age: Long): Path = {
       val p = root.resolve(name)

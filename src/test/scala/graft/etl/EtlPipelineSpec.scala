@@ -12,7 +12,7 @@ class EtlPipelineSpec extends SparkSpec {
   import spark.implicits._
 
   private def newEtl(strict: Boolean = false) = {
-    val dir = Files.createTempDirectory("graft-etl-test").toString
+    val dir = tempDir("graft-etl-test").toString
     new GraphEtl(spark, dir, strictCompat = strict, nodeChunkSize = 200000L, edgeChunkSize = 500000L)
   }
 
@@ -52,7 +52,7 @@ class EtlPipelineSpec extends SparkSpec {
     // rows) plus one chunk with a DIFFERENT header order; the read must
     // group by header (2 scans), bind each group's schema to its own
     // column order, and return every row
-    val dir = Files.createTempDirectory("graft-manychunks").toString
+    val dir = tempDir("graft-manychunks").toString
     val etl = new GraphEtl(spark, dir, nodeChunkSize = 5)
     etl.parser("many", Map("source" -> "test")) { ctx =>
       val rows = (1 to 500).map(i => (i.toString, s"name_$i"))
@@ -277,7 +277,7 @@ class EtlPipelineSpec extends SparkSpec {
   }
 
   test("concurrent saves keep the chunk geometry, call-order indices and exact counts") {
-    val etl = new GraphEtl(spark, Files.createTempDirectory("graft-geometry").toString,
+    val etl = new GraphEtl(spark, tempDir("graft-geometry").toString,
       nodeChunkSize = 7L, edgeChunkSize = 4L)
     // the first save is the largest (and sorts its input), so its Spark
     // half finishes last; publication must still follow call order
@@ -370,7 +370,7 @@ class EtlPipelineSpec extends SparkSpec {
   }
 
   test("catalog resume: a new engine instance reloads configs.json (S6)") {
-    val dir = Files.createTempDirectory("graft-resume").toString
+    val dir = tempDir("graft-resume").toString
     val etl1 = new GraphEtl(spark, dir)
     etl1.parser("r1", Map("source" -> "t")) { ctx =>
       ctx.saveNodes(Seq((1L, "A"), (2L, "B")).toDF("id", "name"), "Person", indexs = Seq("name"))
@@ -440,7 +440,7 @@ class EtlPipelineSpec extends SparkSpec {
   }
 
   test("a reference-shaped configs.json loads with nothing parsed or mapped") {
-    val dir = Files.createTempDirectory("graft-refcat")
+    val dir = tempDir("graft-refcat")
     Seq("nodes", "edges", "configs").foreach(d => Files.createDirectories(dir.resolve(d)))
     val node = "FILE_3f2c9a1e-0b7d-4c55-9e61-2a8d4f7b1c90_Person_0.csv"
     val edge = "FILE_3f2c9a1e-0b7d-4c55-9e61-2a8d4f7b1c90_PersonKNOWSPerson_0.csv"
@@ -512,7 +512,7 @@ class EtlPipelineSpec extends SparkSpec {
   }
 
   private lazy val uncrashed: Seq[Any] = {
-    val run = resumed(Files.createTempDirectory("graft-crash-none").toString)
+    val run = resumed(tempDir("graft-crash-none").toString)
     // KNOWS keeps Ann->Bob and Bob->Cy: Zed names no Person
     assert(run(3) == Map("loaded_nodes_Person" -> 3L, "loaded_nodes_Company" -> 1L,
       "loaded_edges_KNOWS" -> 2L, "loaded_edges_WORKS_AT" -> 2L))
@@ -525,7 +525,7 @@ class EtlPipelineSpec extends SparkSpec {
     files.foreach { case (p, bytes) => Files.write(p, bytes) }
 
   test("crash state: a parser's files staged, the pre-parser catalog restored") {
-    val dir = Files.createTempDirectory("graft-crash-parser").toString
+    val dir = tempDir("graft-crash-parser").toString
     val first = new GraphEtl(spark, dir)
     register(first, Set("people"))
     first.parse()
@@ -540,7 +540,7 @@ class EtlPipelineSpec extends SparkSpec {
   }
 
   test("crash state: a truncated catalog temp beside a valid catalog") {
-    val dir = Files.createTempDirectory("graft-crash-tmp").toString
+    val dir = tempDir("graft-crash-tmp").toString
     val etl = new GraphEtl(spark, dir)
     register(etl)
     etl.parse()
@@ -550,7 +550,7 @@ class EtlPipelineSpec extends SparkSpec {
   }
 
   test("crash state: a mapped file under its new name, the old file and catalog restored") {
-    val dir = Files.createTempDirectory("graft-crash-map").toString
+    val dir = tempDir("graft-crash-map").toString
     val etl = new GraphEtl(spark, dir)
     register(etl)
     etl.parse(useMapper = false)
@@ -562,7 +562,7 @@ class EtlPipelineSpec extends SparkSpec {
   }
 
   test("crash state: a mapping committed, the superseded file put back") {
-    val dir = Files.createTempDirectory("graft-crash-superseded").toString
+    val dir = tempDir("graft-crash-superseded").toString
     val etl = new GraphEtl(spark, dir)
     register(etl)
     etl.parse(useMapper = false)
@@ -574,7 +574,7 @@ class EtlPipelineSpec extends SparkSpec {
   }
 
   test("crash state: a scratch dir holding a part file under the output dir") {
-    val dir = Files.createTempDirectory("graft-crash-scratch")
+    val dir = tempDir("graft-crash-scratch")
     val first = new GraphEtl(spark, dir.toString)
     register(first, Set("people"))
     first.parse()
@@ -588,7 +588,7 @@ class EtlPipelineSpec extends SparkSpec {
   }
 
   test("crash state: a parser's mapping committed, its mapping pass not run") {
-    val dir = Files.createTempDirectory("graft-crash-mapids").toString
+    val dir = tempDir("graft-crash-mapids").toString
     def register(etl: GraphEtl): Unit = etl.parser("p") { ctx =>
       ctx.saveEdges(Seq((1L, "x"), (2L, "x")).toDF("start", "end"), "E", "N:id", "M:id")
       ctx.mapIds(Seq((1L, 11L), (2L, 12L)).toDF("old_value", "new_value"), "N:id")

@@ -8,7 +8,7 @@ class LoaderSpec extends SparkSpec {
   import spark.implicits._
 
   private def staged(): (GraphEtl, String) = {
-    val dir = Files.createTempDirectory("graft-loader-test").toString
+    val dir = tempDir("graft-loader-test").toString
     val etl = new GraphEtl(spark, dir)
     etl.parser("fixtures", Map("source" -> "test")) { ctx =>
       ctx.saveNodes(Seq((1L, "Tom"), (2L, "Marie")).toDF("id", "name"), "Person")
@@ -128,7 +128,7 @@ class LoaderSpec extends SparkSpec {
   test("match-strategy edge load against a filter-skipped label is empty, not a crash") {
     val loader = new SparkGraphLoader(spark, edgeStrategy = "match")
     loader.markNodesSkipped("Person")
-    val dir = Files.createTempDirectory("graft-loader-skip")
+    val dir = tempDir("graft-loader-skip")
     val f = dir.resolve("e.csv")
     Files.writeString(f, "start;end\n1;2\n")
     val n = loader.loadEdges(f.toString, "KNOWS", "Person:id", "Person:id",
@@ -138,7 +138,7 @@ class LoaderSpec extends SparkSpec {
 
   test("match-strategy edge load with no node frame fails fast, not limit(0)") {
     val loader = new SparkGraphLoader(spark, edgeStrategy = "match")
-    val dir = Files.createTempDirectory("graft-loader-ff")
+    val dir = tempDir("graft-loader-ff")
     val f = dir.resolve("e.csv")
     Files.writeString(f, "start;end\n1;2\n")
     val ex = intercept[IllegalStateException] {
@@ -149,7 +149,7 @@ class LoaderSpec extends SparkSpec {
   }
 
   test("primary key value is canonicalized under property `id` (SURVEY §2.12.3)") {
-    val dir = Files.createTempDirectory("graft-loader-pk").toString
+    val dir = tempDir("graft-loader-pk").toString
     val etl = new GraphEtl(spark, dir)
     etl.parser("pk", Map.empty) { ctx =>
       ctx.saveNodes(Seq(("ORCID1", "X")).toDF("orcid", "name"), "Author", primaryKey = "orcid")
@@ -263,7 +263,7 @@ class LoaderSpec extends SparkSpec {
   }
 
   test("connection config merges kwargs over defaults, caches, and reloads") {
-    val dir = Files.createTempDirectory("graft-conn").toString
+    val dir = tempDir("graft-conn").toString
     val c1 = ConnectionConfig.resolve(dir, ConnectionConfig.Neo4jDefaults,
       Map("host" -> "bolt://db:7687", "password" -> "s3cret"))
     assert(c1("url") == "bolt://db:7687") // host aliased to url
@@ -307,7 +307,7 @@ class LoaderSpec extends SparkSpec {
   }
 
   test("connection config rejects multi-line values instead of truncating on reload") {
-    val dir = Files.createTempDirectory("graft-conn-nl").toString
+    val dir = tempDir("graft-conn-nl").toString
     val ex = intercept[IllegalArgumentException] {
       ConnectionConfig.resolve(dir, ConnectionConfig.Neo4jDefaults,
         Map("password" -> "abc\ndef"))

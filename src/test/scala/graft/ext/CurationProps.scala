@@ -108,8 +108,8 @@ object CurationProps extends Properties("Curation") {
       // heavy token sharing, many near-threshold pairs, and sets small
       // enough that prefix lengths hit their boundary cases
       val df = docsDf(texts)
-      val got = Dedup.prefixFilterJaccardPairs(df, "doc_id", "text",
-        ngram = 3, threshold = t)
+      val got = Dedup.prefixPairsFromRanked(
+          Dedup.dfRankedShingleDocs(df, "doc_id", "text", ngram = 3).localCheckpoint(true), t)
         .select("id_a", "id_b").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       val d = df.select(col("doc_id"),
@@ -136,8 +136,8 @@ object CurationProps extends Properties("Curation") {
           .map(r => (r.getLong(0), r.getLong(1))).toSet
       pairSet(Dedup.hashOrderJaccardPairs(df, "doc_id", "text",
           ngram = 3, threshold = t)) ==
-        pairSet(Dedup.prefixFilterJaccardPairs(df, "doc_id", "text",
-          ngram = 3, threshold = t))
+        pairSet(Dedup.prefixPairsFromRanked(
+          Dedup.dfRankedShingleDocs(df, "doc_id", "text", ngram = 3).localCheckpoint(true), t))
     }
 
   // profile drift of a snapshot against ITSELF is exactly zero in every
@@ -167,8 +167,9 @@ object CurationProps extends Properties("Curation") {
       import spark.implicits._
       rows.nonEmpty ==> {
         val items = rows.map { case (g, i) => (g, s"i$i") }.toDF("g", "i")
-        val r = MarketBasket.associationRules(items, "g", "i",
-          minShared = 1, maxGroupSize = 256).collect()
+        val r = MarketBasket.associationRulesFromBaskets(
+          MarketBasket.cappedBaskets(items, "g", "i", maxGroupSize = 256),
+          minShared = 1).collect()
         val byPair = r.map(x => (x.getString(0), x.getString(1)) -> x).toMap
         r.forall { x =>
           val conf = x.getAs[Double]("confidence")

@@ -1,7 +1,7 @@
 package graft.ext
 
 import graft.SparkSpec
-import graft.functions.{HashFunctions => H, TextFunctions => TF, VectorFunctions => VF}
+import graft.functions.{HashFunctions => H, TextFunctions => TF}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -113,9 +113,31 @@ class ExtSpec extends SparkSpec {
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L)) // unrelated doc stays out
   }
 
+  /** 64-bit SimHash over a token array as a built-ins-only fold: each
+    * token votes ±1 on every bit of its xxhash64; fingerprint bit j is 1
+    * iff the vote sum is positive — the HOF form the native SimHash
+    * kernels replaced. */
+  private def simhash64(tokensCol: Column): Column = {
+    val votes = aggregate(
+      tokensCol,
+      array_repeat(lit(0L), 64),
+      (acc, t) => {
+        val h = xxhash64(t)
+        zip_with(
+          acc,
+          transform(sequence(lit(0), lit(63)),
+            j => when(call_function("shiftright", h, j).bitwiseAND(lit(1L)) === 1L, lit(1L)).otherwise(lit(-1L))),
+          (a, v) => a + v)
+      })
+    aggregate(
+      sequence(lit(0), lit(63)),
+      lit(0L),
+      (fp, j) => fp + when(element_at(votes, j + 1) > 0, call_function("shiftleft", lit(1L), j)).otherwise(lit(0L)))
+  }
+
   test("simhash hamming distance is 0 for identical, small for near-dup, large for unrelated") {
     val fps = docs.select(col("doc_id"),
-      H.simhash64(TF.tokens(lower(col("text")))).as("fp"))
+      simhash64(TF.tokens(lower(col("text")))).as("fp"))
       .as[(Long, Long)].collect().toMap
     assert(fps(1L) == fps(4L))
     def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
@@ -148,7 +170,8 @@ class ExtSpec extends SparkSpec {
 
   test("cosine column function matches hand computation") {
     val df = Seq((Array(1.0f, 2.0f, 3.0f), Array(4.0f, 5.0f, 6.0f))).toDF("a", "b")
-    val got = df.select(VF.cosine(col("a"), col("b"))).as[Double].head()
+    val got = df.select(graft.plans.NativeExpressions.cosine(col("a"), col("b")))
+      .as[Double].head()
     val expected = 32.0 / (math.sqrt(14.0) * math.sqrt(77.0))
     assert(math.abs(got - expected) < 1e-12)
   }
@@ -220,21 +243,31 @@ class ExtSpec extends SparkSpec {
     assert(row.getAs[Double]("upper_ratio") == 2.0 / 16.0)
   }
 
-  test("rolling hash handles long strings without ANSI overflow") {
-    val df = Seq((1L, "x" * 5000)).toDF("id", "text")
-    val h = TextAnalysis.fingerprints(df, "id", "text")
-      .select("rolling_hash").as[Long].head()
-    assert(h >= 0L && h < (1L << 31))
-  }
-
   test("fingerprint is invariant to case, punctuation and extra whitespace") {
     val df = Seq((1L, "Hello,   World!"), (2L, "hello world")).toDF("id", "text")
     val fps = df.select(TF.fingerprint(col("text"))).as[String].collect()
     assert(fps(0) == fps(1))
   }
 
+  /** The cleaning pass composed stage by stage — sanitize → quality
+    * filter → exact dedup → near-dup cluster removal — the reference the
+    * one-scan [[CorpusPipeline.funnel]] is checked against. The exact-dedup
+    * frame is cached: the near-dup stage scans it four times. */
+  private def clean(
+      docs: org.apache.spark.sql.DataFrame, idCol: String, textCol: String,
+      minQuality: Double, numHashes: Int, bands: Int,
+      nearDupThreshold: Double): org.apache.spark.sql.DataFrame = {
+    val sanitized = graft.operators.Normalize.sanitizeStrings(docs)
+    val quality = CorpusPipeline.filterByQuality(sanitized, textCol, minQuality)
+    val exact = Dedup.exactDedup(quality, idCol, Seq(textCol))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val pairs = Dedup.minhashNearDuplicates(
+      exact, idCol, textCol, 5, numHashes, bands, nearDupThreshold)
+    Dedup.dropNearDuplicates(exact, idCol, pairs)
+  }
+
   test("corpus cleaning pipeline removes exact and near duplicates, keeps distinct docs") {
-    val cleaned = CorpusPipeline.clean(docs, "doc_id", "text",
+    val cleaned = clean(docs, "doc_id", "text",
       minQuality = 0.0, numHashes = 64, bands = 32, nearDupThreshold = 0.6)
     val ids = cleaned.select("doc_id").as[Long].collect().toSet
     assert(!ids.contains(4L)) // exact dup of 1 removed
@@ -369,21 +402,6 @@ class ExtSpec extends SparkSpec {
     assert(direct.nonEmpty, "testdata should contain cross-corpus near-dups")
   }
 
-  test("writeCleaned produces a partition-pruned parquet layout") {
-    val df = Seq((1L, "hello there", "en"), (2L, "bonjour", "fr"), (3L, "more text", "en"))
-      .toDF("doc_id", "text", "lang")
-    val dir = java.nio.file.Files.createTempDirectory("graft-cleaned").toString
-    CorpusPipeline.writeCleaned(df, dir, "lang")
-    assert(new java.io.File(s"$dir/lang=en").isDirectory)
-    assert(new java.io.File(s"$dir/lang=fr").isDirectory)
-    val back = spark.read.parquet(dir)
-    assert(back.count() == 3)
-    // a lang filter prunes to the partition directory (no full scan)
-    val plan = back.where(col("lang") === "en").queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("lang"))
-    assert(back.where(col("lang") === "en").count() == 2)
-  }
-
   test("staged-signature cross-corpus dedup matches the direct computation") {
     val ref = Seq(
       (1L, "the quick brown fox jumps over the lazy dog near the river bank"),
@@ -392,7 +410,7 @@ class ExtSpec extends SparkSpec {
       (10L, "the quick brown fox jumps over the lazy dog near the river bank"),
       (11L, "fresh new document that matches nothing in the reference corpus")
     ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-staged-sigs").toString
+    val dir = tempDir("graft-staged-sigs").toString
     Dedup.stageSignatures(ref, "doc_id", "text", dir, numHashes = 64, bands = 32)
     val staged = Dedup.crossCorpusNearDuplicatesStaged(batch, "doc_id", "text", dir,
       numHashes = 64, bands = 32, threshold = 0.6)
@@ -422,7 +440,7 @@ class ExtSpec extends SparkSpec {
       ("u1", "the quick brown fox jumps over the lazy dog and runs far away"),
       ("u2", "the quick brown fox jumps over the lazy dog and runs far away"),
       ("u3", "entirely different document content here")).toDF("url", "text")
-    val cleaned = CorpusPipeline.clean(docs, "url", "text",
+    val cleaned = clean(docs, "url", "text",
       minQuality = 0.0, numHashes = 64, bands = 32, nearDupThreshold = 0.6)
       .select("url").as[String].collect().toSet
     assert(cleaned == Set("u1", "u3"))
@@ -436,8 +454,9 @@ class ExtSpec extends SparkSpec {
       (10L, "the quick brown fox jumps over the lazy dog near the river bank"),
       (11L, "fresh new document that matches nothing in the reference corpus")
     ).toDF("doc_id", "text")
-    Dedup.stageBandsBucketed(ref, "doc_id", "text", "ref_bands_test",
-      buckets = 4, numHashes = 64, bands = 32)
+    graft.sources.Tables.writeBucketed(
+      Dedup.bandStagingFrame(ref, "doc_id", "text", numHashes = 64, bands = 32),
+      "ref_bands_test", "bkey", buckets = 4)
     try {
       val got = Dedup.crossCorpusNearDuplicatesBucketed(batch, ref, "doc_id", "text",
         "ref_bands_test", numHashes = 64, bands = 32, threshold = 0.6)
@@ -682,25 +701,6 @@ class ExtSpec extends SparkSpec {
     val f1 = feats.filter(_.media_id == 1L).head().features.toSeq
     val f4 = feats.filter(_.media_id == 4L).head().features.toSeq
     assert(f1 == f4) // docs 1 and 4 have identical text/bytes
-    val frames = Multimodal.sampleFrames(media)
-    assert(frames.columns.toSeq == Seq("media_id", "frame_idx", "frame_bytes"))
-    assert(frames.count() >= 5)
-    // resize: same schema, dims clamped into the box, aspect preserved
-    val resized = Multimodal.resize(media, 640, 480)
-    assert(resized.schema.fieldNames.toSeq == media.schema.fieldNames.toSeq)
-    val dims = resized.select(col("meta.width"), col("meta.height"),
-      col("meta.n_bytes"), length(col("content")).cast("long")).collect()
-    dims.foreach { r =>
-      assert(r.getInt(0) <= 640 && r.getInt(1) <= 480)
-      assert(r.getLong(2) == r.getLong(3)) // payload matches recorded size
-    }
-    // an already-small image is untouched
-    val orig = media.select(col("meta.width"), col("meta.height")).collect()
-    orig.zip(dims).foreach { case (o, d) =>
-      if (o.getInt(0) <= 640 && o.getInt(1) <= 480) {
-        assert(o.getInt(0) == d.getInt(0) && o.getInt(1) == d.getInt(1))
-      }
-    }
   }
 
   test("media decode: synthesized BMP/WAV/PNG/JPEG payloads parse back to their formula fields") {
@@ -830,7 +830,8 @@ class ExtSpec extends SparkSpec {
     // the measured fixture (step-varying gradient)
     val imgs = Multimodal.synthesizeGradientImages(
       spark.range(0, 120).toDF("doc_id"), "doc_id")
-    val pairs = Multimodal.imageNearDuplicates(imgs, maxHamming = 3)
+    val pairs = Multimodal.nearDuplicatesFromFingerprints(
+        Multimodal.imageFingerprints(imgs), maxHamming = 3)
       .as[(Long, Long, Long)].collect()
     assert(pairs.nonEmpty)
     // every pair shares a pattern id, and the planted (7, 57) pair is found
@@ -866,6 +867,36 @@ class ExtSpec extends SparkSpec {
     assert(u.kind == "unknown" && u.width.isEmpty && u.sample_rate.isEmpty)
   }
 
+  /** The engine-portable HOF reference of [[TextAnalysis.repetitionProfile]]:
+    * the most frequent bigram's count equals the longest run of equal
+    * elements in the row's SORTED bigram array. */
+  private def repetitionProfileHof(df: org.apache.spark.sql.DataFrame, idCol: String,
+      textCol: String): org.apache.spark.sql.DataFrame = {
+    val toks = TF.tokens(lower(col(textCol)))
+    val base = df.select(col(idCol), toks.as("__toks")).where(size(col("__toks")) >= 2)
+    val bigrams = zip_with(
+      slice(col("__toks"), lit(1), size(col("__toks")) - 1),
+      slice(col("__toks"), lit(2), size(col("__toks")) - 1),
+      (a, b) => concat_ws(" ", a, b))
+    val maxRun = aggregate(
+      array_sort(bigrams),
+      struct(lit("").as("prev"), lit(0L).as("run"), lit(0L).as("best")),
+      (acc, x) => {
+        val run = when(x === acc.getField("prev"), acc.getField("run") + 1L).otherwise(lit(1L))
+        struct(x.as("prev"), run.as("run"),
+          greatest(acc.getField("best"), run).as("best"))
+      },
+      acc => acc.getField("best"))
+    // max_c lands in its own projection first: referencing maxRun twice in
+    // one select would inline (and evaluate) the sort+fold tree twice per
+    // row — HOF subtrees are not subexpression-eliminated
+    base.select(col(idCol),
+      (size(col("__toks")) - 1).cast("long").as("n_bigrams"),
+      maxRun.as("max_c"))
+      .withColumn("top_bigram_share",
+        col("max_c").cast("double") / col("n_bigrams").cast("double"))
+  }
+
   test("repetition profile: native kernel equals the HOF reference form") {
     val df = Seq(
       (1L, "spam spam spam spam spam"),
@@ -879,7 +910,7 @@ class ExtSpec extends SparkSpec {
       d.select("doc_id", "n_bigrams", "max_c", "top_bigram_share")
         .as[(Long, Long, Long, Double)].collect().sortBy(_._1).toSeq
     assert(rows(TextAnalysis.repetitionProfile(df, "doc_id", "text")) ==
-      rows(TextAnalysis.repetitionProfileHof(df, "doc_id", "text")))
+      rows(repetitionProfileHof(df, "doc_id", "text")))
   }
 
   test("duplicate-line profile flags lines shared across documents") {
@@ -1195,7 +1226,8 @@ class ExtSpec extends SparkSpec {
       (3L, "zzzzzzzzzzzzzzzzzzzzzzzz"),      // within-doc repeats only (z^24)
       (4L, "short")                           // < k: no positions at all
     ).toDF("doc_id", "text")
-    val got = Dedup.duplicatedSpanProfile(df, "doc_id", "text", k)
+    val got = Dedup.duplicatedSpanProfileFromGrams(
+        Dedup.gramIndex(df, "doc_id", "text", k), "doc_id")
       .select("doc_id", "n_positions", "n_dup_positions")
       .as[(Long, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
     // doc1: 15 positions, the 10 spanning `shared` are duplicated
@@ -1214,7 +1246,8 @@ class ExtSpec extends SparkSpec {
       (2L, "yyyyy" + shared),           // hits at 6..15 -> one span [6, 24]
       (3L, "zzzzzzzzzzzzzzzzzzzzzzzz")  // within-doc repeats only: no spans
     ).toDF("doc_id", "text")
-    val got = Dedup.duplicatedSpans(df, "doc_id", "text", k)
+    val got = Dedup.duplicatedSpansFromGrams(
+        Dedup.gramIndex(df, "doc_id", "text", k), "doc_id", k)
       .select("doc_id", "span_start", "span_end", "span_len")
       .as[(Long, Long, Long, Long)].collect().toSet
     assert(got == Set((1L, 1L, 19L, 19L), (2L, 6L, 24L, 19L)))
@@ -1223,15 +1256,16 @@ class ExtSpec extends SparkSpec {
       (1L, shared + "xxxxxxxxxxxx" + shared),
       (2L, shared)
     ).toDF("doc_id", "text")
-    val spans2 = Dedup.duplicatedSpans(df2, "doc_id", "text", k)
+    val spans2 = Dedup.duplicatedSpansFromGrams(
+        Dedup.gramIndex(df2, "doc_id", "text", k), "doc_id", k)
       .where(col("doc_id") === 1L)
       .select("span_start", "span_end").as[(Long, Long)].collect().toSet
     assert(spans2 == Set((1L, 19L), (32L, 50L)), s"got $spans2")
   }
 
   test("prefixFilterJaccardPairs finds planted near-dups exactly (no LSH miss mode)") {
-    val pairs = Dedup.prefixFilterJaccardPairs(docs, "doc_id", "text",
-      ngram = 3, threshold = 0.5)
+    val pairs = Dedup.prefixPairsFromRanked(
+        Dedup.dfRankedShingleDocs(docs, "doc_id", "text", ngram = 3).localCheckpoint(true), 0.5)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(pairs.contains((1L, 4L)), "exact dup pair missing")
     assert(pairs.contains((1L, 2L)), "near-dup pair missing")
@@ -1416,9 +1450,6 @@ class ExtSpec extends SparkSpec {
     Seq(1L, 2L, 3L).foreach(i => assert(out(i) == (0, "cityA")))
     Seq(4L, 5L, 6L).foreach(i => assert(out(i) == (1, "countryX")))
     assert(out(7L) == (2, "*"))
-    val audit = Privacy.kAnonymityAudit(df, k = 3, Seq("qi_geo" -> col("city")))
-      .where(col("at_risk")).select("qi_geo").as[String].collect().toSet
-    assert(audit == Set("cityB", "cityC", "cityD"))
   }
 
   test("lDiversityAudit flags homogeneous crowds k-anonymity misses") {
@@ -1529,6 +1560,41 @@ class ExtSpec extends SparkSpec {
     assert(r == again, "deflate must be deterministic")
   }
 
+  /** The original HOF construction of [[Dedup.contentDefinedChunks]]'s
+    * chunk set — per-position window hashes inside a `transform` over
+    * `sequence`, interpreted lambdas, SQL substr/conv — the executable
+    * reference the native [[graft.plans.CdcChunks]] kernel must agree
+    * with on every boundary for any input, or the oracle contract is
+    * broken. */
+  private def contentDefinedChunksHof(docs: org.apache.spark.sql.DataFrame, idCol: String,
+      textCol: String, window: Int, mask: Int): org.apache.spark.sql.DataFrame = {
+    val text = col(textCol)
+    val n = coalesce(length(text).cast("long"), lit(0L))
+    // candidate boundary AFTER position i (1-based, i >= window):
+    // hash(text[i-window+1 .. i]) ≡ 0 (mod mask). The pos guards also
+    // neutralize Spark's DESCENDING sequence(a, b) when b < a (texts
+    // shorter than the window must yield no boundary, not a reversed
+    // position walk)
+    val bounds = filter(
+      transform(
+        sequence(lit(window.toLong), greatest(n, lit(window.toLong))),
+        i => struct(
+          (H.md5PrefixLong("cdc:",
+            text.substr((i - lit(window - 1)).cast("int"), lit(window)), 15)
+            % mask).as("m"),
+          i.as("pos"))),
+      s => s("m") === 0 && s("pos") >= lit(window.toLong) && s("pos") <= n)
+    val boundPos = transform(bounds, s => s("pos"))
+    val starts = concat(array(lit(1L)), transform(boundPos, p => p + 1L))
+    val ends = concat(boundPos, array(coalesce(length(text).cast("long"), lit(0L))))
+    val chunks = filter(
+      zip_with(starts, ends, (s, e) =>
+        when(e >= s, text.substr(s.cast("int"), (e - s + 1L).cast("int")))),
+      c => c.isNotNull)
+    docs.where(text.isNotNull)
+      .select(col(idCol), posexplode(chunks).as(Seq("chunk_idx", "chunk")))
+  }
+
   test("CDC native kernel replays the HOF reference boundary-for-boundary") {
     // the native CdcChunks expression must agree with the original
     // HOF construction on EVERY (doc, chunk_idx, chunk) row — the HOF
@@ -1549,7 +1615,7 @@ class ExtSpec extends SparkSpec {
     for ((w, m) <- Seq((16, 64), (16, 8), (4, 4), (2, 2))) {
       val native = Dedup.contentDefinedChunks(docs, "doc_id", "text", w, m)
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).sorted.toSeq
-      val hof = Dedup.contentDefinedChunksHof(docs, "doc_id", "text", w, m)
+      val hof = contentDefinedChunksHof(docs, "doc_id", "text", w, m)
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).sorted.toSeq
       assert(native == hof, s"native CDC diverged from the HOF reference at window=$w mask=$m")
       // lossless reassembly stands on the native path too
@@ -1747,8 +1813,8 @@ class ExtSpec extends SparkSpec {
       (4, "B"), (4, "D"),
       (2, "A") // duplicate (group, item) row: supports count DISTINCT pairs
     ).toDF("g", "i")
-    val rules = MarketBasket.associationRules(items, "g", "i",
-        minShared = 2, maxGroupSize = 256)
+    val rules = MarketBasket.associationRulesFromBaskets(
+        MarketBasket.cappedBaskets(items, "g", "i", maxGroupSize = 256), minShared = 2)
       .collect().map(r => (r.getString(0), r.getString(1)) -> r).toMap
     // pairs >= 2: (A,B)=2, (A,C)=2; N=4; supp A=3 B=3 C=2
     assert(rules.keySet == Set("A" -> "B", "B" -> "A", "A" -> "C", "C" -> "A"))
@@ -1761,8 +1827,9 @@ class ExtSpec extends SparkSpec {
     assert(ca.getAs[Double]("lift") == (2.0 * 4.0) / (2.0 * 3.0))
     // a 300-item mega-group is dropped whole: no rule mentions its items
     val mega = (0 until 300).map(k => (99, s"M$k")).toDF("g", "i")
-    val capped = MarketBasket.associationRules(items.unionAll(mega), "g", "i",
-      minShared = 2, maxGroupSize = 256)
+    val capped = MarketBasket.associationRulesFromBaskets(
+      MarketBasket.cappedBaskets(items.unionAll(mega), "g", "i", maxGroupSize = 256),
+      minShared = 2)
     assert(capped.where(col("antecedent").startsWith("M")).count() == 0)
     // and the surviving rules are unchanged (N still counts only capped groups)
     assert(capped.count() == 4)

@@ -21,31 +21,13 @@ class GroundTruthSpec extends SparkSpec {
   private lazy val docs = spark.read.parquet(s"$dir/documents.parquet")
   private lazy val emb = spark.read.parquet(s"$dir/embeddings.parquet")
 
-  test("simhash near-dup pairs EQUAL brute-force all-pairs hamming<=3 (pigeonhole)") {
+  test("portable-md5 simhash pairs EQUAL brute-force all-pairs hamming<=3") {
     // 4 bands of 16 bits: any pair within hamming 3 shares at least one
     // band verbatim, so LSH candidates ⊇ true pairs and the verify filter
-    // makes the output exactly the true pair set — an equality, not a bound
+    // makes the output exactly the true pair set — an equality, not a
+    // bound — for the md5 hash family behind the DuckDB oracle of
+    // q_simhash_near_dup
     val lsh = Dedup.simhashNearDuplicates(docs, "doc_id", "text", maxHamming = 3)
-      .select("id_a", "id_b", "hamming").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val fps = docs.select(col("doc_id"),
-      NativeExpressions.simhashText(col("text")).as("fp"))
-      .where(col("fp").isNotNull)
-    val a = fps.select(col("doc_id").as("id_a"), col("fp").as("fp_a"))
-    val b = fps.select(col("doc_id").as("id_b"), col("fp").as("fp_b"))
-    val brute = a.crossJoin(b).where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), H.hamming64(col("fp_a"), col("fp_b")).as("hamming"))
-      .where(col("hamming") <= 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    assert(brute.nonEmpty, "testdata should contain simhash near-dups")
-    assert(lsh == brute)
-  }
-
-  test("portable-md5 simhash pairs EQUAL brute-force all-pairs hamming<=3") {
-    // same pigeonhole equality for the md5 hash family behind the DuckDB
-    // oracle of q_simhash_near_dup
-    val lsh = Dedup.simhashNearDuplicates(docs, "doc_id", "text",
-      maxHamming = 3, portableHash = true)
       .select("id_a", "id_b", "hamming").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     val fps = docs.select(col("doc_id"),
@@ -149,7 +131,8 @@ class GroundTruthSpec extends SparkSpec {
     // threshold low enough that candidates must survive size and prefix
     // pruning from several different prefix tokens
     val t = 0.4
-    val got = Dedup.prefixFilterJaccardPairs(docs, "doc_id", "text", ngram = 3, threshold = t)
+    val got = Dedup.prefixPairsFromRanked(
+        Dedup.dfRankedShingleDocs(docs, "doc_id", "text", ngram = 3).localCheckpoint(true), t)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val d = docs.select(col("doc_id"),
         NativeExpressions.wordShingles(col("text"), 3).as("sh"))

@@ -37,7 +37,7 @@ object WebTextProps extends Properties("WebText") {
 
   property("round-trip: clean text contains the whitespace-collapsed body; chrome accounted") =
     forAll(Gen.listOfN(6, body)) { texts =>
-      val rows = WebText.extract(pages(texts), "doc_id", "html")
+      val rows = WebTextReference.extract(pages(texts), "doc_id", "html")
         .join(pages(texts).select(col("doc_id"), col("text")), "doc_id")
         .collect()
       rows.forall { r =>
@@ -57,7 +57,7 @@ object WebTextProps extends Properties("WebText") {
 
   property("every extracted link normalizes to an absolute lowercase-scheme URL") =
     forAll(Gen.listOfN(5, body)) { texts =>
-      val links = WebText.links(pages(texts), "doc_id", "html", "corp.example.com")
+      val links = WebTextReference.links(pages(texts), "doc_id", "html", "corp.example.com")
         .collect()
       links.nonEmpty && links.forall { r =>
         val u = r.getAs[String]("url_norm")

@@ -19,7 +19,7 @@ class WebTextSpec extends SparkSpec {
   }
 
   test("extract recovers the body text (whitespace-collapsed) and strips chrome") {
-    val out = WebText.extract(pages, "doc_id", "html")
+    val out = WebTextReference.extract(pages, "doc_id", "html")
       .join(pages.select(col("doc_id"), col("text")), "doc_id")
       .collect().map(r => r.getAs[Long]("doc_id") -> r).toMap
     val r0 = out(0L)
@@ -47,7 +47,7 @@ class WebTextSpec extends SparkSpec {
   }
 
   test("link_density is anchor text share of clean text") {
-    val r = WebText.extract(pages, "doc_id", "html")
+    val r = WebTextReference.extract(pages, "doc_id", "html")
       .where(col("doc_id") === 0L).collect()(0)
     val clean = r.getAs[String]("text_clean")
     // anchors: "Home", "Section", "more 0"
@@ -57,7 +57,7 @@ class WebTextSpec extends SparkSpec {
   }
 
   test("links normalizes case, default port, fragment, and relative hrefs") {
-    val out = WebText.links(pages, "doc_id", "html", "corp.example.com")
+    val out = WebTextReference.links(pages, "doc_id", "html", "corp.example.com")
       .where(col("doc_id") === 6L)
       .orderBy(col("href")).collect()
     assert(out.length === 3)
@@ -78,7 +78,7 @@ class WebTextSpec extends SparkSpec {
   test("non-default port and http:80 handling") {
     val df = Seq((1L, "<a href=\"http://X.Y.test:80/q\">a</a>" +
       "<a href=\"https://h.test:8443/z\">b</a>")).toDF("doc_id", "html")
-    val out = WebText.links(df, "doc_id", "html", "corp.example.com")
+    val out = WebTextReference.links(df, "doc_id", "html", "corp.example.com")
       .orderBy(col("href")).collect()
     assert(out(0).getAs[String]("url_norm") === "http://x.y.test/q")
     assert(out(1).getAs[String]("url_norm") === "https://h.test:8443/z")
@@ -94,14 +94,14 @@ class WebTextSpec extends SparkSpec {
     val extractCols = Seq("doc_id", "title", "text_clean", "text_len",
       "link_density", "n_links").map(col)
     assert(all.select(extractCols: _*)
-      .except(WebText.extract(pages, "doc_id", "html")).isEmpty &&
-      WebText.extract(pages, "doc_id", "html")
+      .except(WebTextReference.extract(pages, "doc_id", "html")).isEmpty &&
+      WebTextReference.extract(pages, "doc_id", "html")
         .except(all.select(extractCols: _*)).isEmpty,
       "extractAll's per-page report drifted from extract")
     val allLinks = all.select(col("doc_id"), explode(col("links")).as("l"))
       .select(col("doc_id"), col("l.href").as("href"),
         col("l.url_norm").as("url_norm"), col("l.domain").as("domain"))
-    val refLinks = WebText.links(pages, "doc_id", "html", "corp.example.com")
+    val refLinks = WebTextReference.links(pages, "doc_id", "html", "corp.example.com")
     // exceptAll is MULTISET difference — both empty directions pin exact
     // row multiplicity, not just the value sets (a total-count check
     // could not catch per-key multiplicity redistribution)
@@ -111,7 +111,7 @@ class WebTextSpec extends SparkSpec {
     val allAnchors = all.select(col("doc_id"), explode(col("anchors")).as("a"))
       .select(col("doc_id"), col("a.url_norm").as("url_norm"),
         col("a.anchor_text").as("anchor_text"))
-    val refAnchors = WebText.anchorPairs(pages, "doc_id", "html", "corp.example.com")
+    val refAnchors = WebTextReference.anchorPairs(pages, "doc_id", "html", "corp.example.com")
     assert(allAnchors.exceptAll(refAnchors).isEmpty &&
       refAnchors.exceptAll(allAnchors).isEmpty,
       "extractAll's anchors axis drifted from anchorPairs")

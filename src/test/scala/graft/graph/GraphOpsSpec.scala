@@ -32,27 +32,31 @@ class GraphOpsSpec extends SparkSpec {
     assert(d("C1") == (0L, 0L))
   }
 
+  // GraphX's own algorithms over the graph toGraphX materializes: the
+  // vertex attrs and edge directions must survive the dense-id translation
+
   test("GraphX connected components find the isolated vertex") {
-    val cc = GraphOps.connectedComponents(nodes, edges)
-    assert(cc.select("component").distinct().count() == 2)
+    val g = GraphOps.toGraphX(nodes, edges)
+    assert(g.connectedComponents().vertices.map(_._2).distinct().count() == 2)
   }
 
   test("GraphX shortest paths measure hops to a landmark") {
     // distance TO landmark B1 along edge direction: A1 -> B1 = 1 hop,
     // A2 -> B1 = 1 hop, B1 itself = 0; C1 unreachable (absent)
-    val sp = GraphOps.shortestPaths(nodes, edges, Seq(("Company", "B1")))
-      .collect().map(r => (r.getAs[String]("id"), r.getAs[Long]("hops"))).toMap
-    assert(sp("B1") == 0L)
-    assert(sp("A1") == 1L && sp("A2") == 1L)
+    val g = GraphOps.toGraphX(nodes, edges)
+    val b1 = g.vertices.filter(_._2 == (("Company", "B1"))).keys.first()
+    val sp = org.apache.spark.graphx.lib.ShortestPaths.run(g, Seq(b1)).vertices
+      .join(g.vertices).collect()
+      .flatMap { case (_, (hops, (_, id))) => hops.get(b1).map(id -> _) }.toMap
+    assert(sp("B1") == 0)
+    assert(sp("A1") == 1 && sp("A2") == 1)
     assert(!sp.contains("C1"))
-    intercept[IllegalArgumentException] {
-      GraphOps.shortestPaths(nodes, edges, Seq(("Person", "nope")))
-    }
   }
 
   test("GraphX pagerank gives the hub the highest score") {
-    val pr = GraphOps.pageRank(nodes, edges, tol = 0.001)
-    val top = pr.orderBy(col("pagerank").desc).select("id").as[String].head()
+    val g = GraphOps.toGraphX(nodes, edges)
+    val top = g.pageRank(0.001).vertices.join(g.vertices)
+      .collect().maxBy(_._2._1)._2._2._2
     assert(top == "B1")
   }
 
@@ -210,16 +214,6 @@ class GraphOpsSpec extends SparkSpec {
     assert(r1(9L) == 7L && r1(5L) == 3L && r1(3L) == 3L)
   }
 
-  test("fixpoint connected components converge past the fixed-k horizon") {
-    // path 2-4-6-8-10 (diameter 4, so k=1 propagation would NOT finish)
-    // plus isolated pair 20-30
-    val e = Seq((4L, 2L), (6L, 4L), (6L, 8L), (10L, 8L), (30L, 20L)).toDF("s", "d")
-    val out = GraphOps.connectedComponentsMin(e, "s", "d")
-      .as[(Long, Long)].collect().toMap
-    assert(out == Map(2L -> 2L, 4L -> 2L, 6L -> 2L, 8L -> 2L, 10L -> 2L,
-      20L -> 20L, 30L -> 20L))
-  }
-
   test("star-contraction CC labels path + pair graphs exactly") {
     val e = Seq((4L, 2L), (6L, 4L), (6L, 8L), (10L, 8L), (30L, 20L)).toDF("s", "d")
     val out = GraphOps.connectedComponentsStar(e, "s", "d")
@@ -236,21 +230,6 @@ class GraphOpsSpec extends SparkSpec {
     assert(rounds <= 12, s"expected ~log2(256)=8 rounds, took $rounds")
     val out = labels.as[(Long, Long)].collect().toMap
     assert(out.size == 256 && out.values.forall(_ == 1L))
-  }
-
-  test("star-contraction CC agrees with the fixpoint twin and GraphX on a seeded random graph") {
-    val rnd = new scala.util.Random(1234)
-    val edges = Seq.fill(300)((rnd.nextInt(150).toLong, rnd.nextInt(150).toLong))
-      .filter { case (a, b) => a != b }
-    val star = GraphOps.connectedComponentsStar(edges.toDF("s", "d"), "s", "d")
-      .as[(Long, Long)].collect().toMap
-    val fixpoint = GraphOps.connectedComponentsMin(edges.toDF("s", "d"), "s", "d")
-      .as[(Long, Long)].collect().toMap
-    assert(star == fixpoint)
-    val gx = org.apache.spark.graphx.Graph
-      .fromEdgeTuples(spark.sparkContext.parallelize(edges), 0)
-      .connectedComponents().vertices.collect().toMap
-    assert(star == gx)
   }
 
   test("fixed-point PageRank rejects dangling nodes loudly") {
@@ -292,16 +271,19 @@ class GraphOpsSpec extends SparkSpec {
   test("fixpoint CC agrees with GraphX connectedComponents on a seeded random graph") {
     // both algorithms label a component by its minimum vertex id, so the
     // outputs are directly comparable — an independent implementation
-    // (Pregel) validating the DataFrame recurrence on 300 random edges
-    val rnd = new scala.util.Random(42)
-    val edges = Seq.fill(300)((rnd.nextInt(120).toLong, rnd.nextInt(120).toLong))
-      .filter { case (a, b) => a != b }
-    val mine = GraphOps.connectedComponentsMin(edges.toDF("s", "d"), "s", "d")
-      .as[(Long, Long)].collect().toMap
-    val gx = org.apache.spark.graphx.Graph
-      .fromEdgeTuples(spark.sparkContext.parallelize(edges), 0)
-      .connectedComponents().vertices.collect().toMap
-    assert(mine == gx)
+    // (Pregel) validating the star-contraction fixpoint on 300 random
+    // edges, at two seeds
+    for ((seed, n) <- Seq((42, 120), (1234, 150))) {
+      val rnd = new scala.util.Random(seed)
+      val edges = Seq.fill(300)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+        .filter { case (a, b) => a != b }
+      val mine = GraphOps.connectedComponentsStar(edges.toDF("s", "d"), "s", "d")
+        .as[(Long, Long)].collect().toMap
+      val gx = org.apache.spark.graphx.Graph
+        .fromEdgeTuples(spark.sparkContext.parallelize(edges), 0)
+        .connectedComponents().vertices.collect().toMap
+      assert(mine == gx, s"seed $seed")
+    }
   }
 
   test("DataFrame triangle counts agree with GraphX TriangleCount on a seeded random graph") {
@@ -377,18 +359,20 @@ class GraphOpsSpec extends SparkSpec {
     // path 1-2-3-4 plus disconnected 5-6; mixed edge directions prove the
     // undirected symmetrization
     val e = Seq((2L, 1L), (2L, 3L), (4L, 3L), (5L, 6L)).toDF("s", "d")
-    val seed = Seq(1L).toDF("node")
-    val out = GraphOps.bfsDistances(e, "s", "d", seed, maxHops = 2)
+    // the seed is the minimum node, 1
+    val out = GraphOps.bfsFromMinNode(e, "s", "d", maxHops = 2)
       .as[(Long, Long)].collect().toMap
     // node 4 is 3 hops away -> absent at maxHops=2; 5/6 unreachable
     assert(out == Map(1L -> 0L, 2L -> 1L, 3L -> 2L))
-    // a wider horizon reaches node 4 with the exact distance, and a
-    // multi-source seed frame takes the min over sources
-    val out3 = GraphOps.bfsDistances(e, "s", "d", seed, maxHops = 3)
+    // a wider horizon reaches node 4 with the exact distance, and the
+    // min over a multi-source run's per-source distances is the
+    // distance to the nearest source
+    val out3 = GraphOps.bfsFromMinNode(e, "s", "d", maxHops = 3)
       .as[(Long, Long)].collect().toMap
     assert(out3(4L) == 3L)
-    val multi = GraphOps.bfsDistances(e, "s", "d",
-        Seq(1L, 4L).toDF("node"), maxHops = 2)
+    val multi = GraphOps.multiSourceBfs(e, "s", "d",
+        Seq(1L, 4L).toDF("seed"), maxHops = 2)
+      .groupBy("node").agg(min("hops"))
       .as[(Long, Long)].collect().toMap
     assert(multi == Map(1L -> 0L, 2L -> 1L, 3L -> 1L, 4L -> 0L))
   }
@@ -485,8 +469,8 @@ class GraphOpsSpec extends SparkSpec {
   test("randomWalks: every hop is an edge, length is exact, and replays identically") {
     val e = Seq((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L), (3L, 4L), (4L, 5L))
       .toDF("s", "d")
-    val seeds = Seq(1L, 4L).toDF("node")
-    val walks = GraphOps.randomWalks(e, "s", "d", seeds, "node", steps = 3)
+    val seeds = col("node").isin(1L, 4L)
+    val walks = GraphOps.randomWalksFromNodes(e, "s", "d", seeds, steps = 3)
       .as[(Long, Long, Int)].collect().toSet // (walk_id, node, step)
     // two walks, each with steps 0..3 and exactly one node per step
     val byWalk = walks.groupBy(_._1)
@@ -505,13 +489,9 @@ class GraphOpsSpec extends SparkSpec {
       }
     }
     // determinism: a second evaluation is bit-identical
-    val again = GraphOps.randomWalks(e, "s", "d", seeds, "node", steps = 3)
+    val again = GraphOps.randomWalksFromNodes(e, "s", "d", seeds, steps = 3)
       .as[(Long, Long, Int)].collect().toSet
     assert(walks == again)
-    // a seed outside the graph contributes only its step-0 row
-    val stray = GraphOps.randomWalks(e, "s", "d", Seq(99L).toDF("node"), "node", 3)
-      .as[(Long, Long, Int)].collect().toSeq
-    assert(stray == Seq((99L, 99L, 0)))
   }
 
   private def sccMap(edges: Seq[(Long, Long)]): (Map[Long, Long], Int, Int) = {
@@ -689,12 +669,12 @@ class GraphOpsSpec extends SparkSpec {
     assert(rounds4 >= 1) // the bridge/pendant/triangle fringe peeled away
     // k=3 keeps both triangles' edges (support >= 1) but peels the
     // bridge 4-5 and pendant 7-8 (zero triangles)
-    val got3 = GraphOps.kTruss(edges, "s", "d", k = 3)
+    val got3 = GraphOps.kTrussWithRounds(edges, "s", "d", k = 3)._1
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got3 == (k4 ++ tri).toSet)
     // k=5 on K4: each edge has support 2 < 3 -> everything peels; the
     // operator returns the empty truss rather than erroring
-    assert(GraphOps.kTruss(edges, "s", "d", k = 5).isEmpty)
+    assert(GraphOps.kTrussWithRounds(edges, "s", "d", k = 5)._1.isEmpty)
   }
 
   test("assumeSymmetric: every flagged derivation is row-identical to the default path") {
@@ -738,8 +718,8 @@ class GraphOpsSpec extends SparkSpec {
       GraphOps.kCore(pairs, "pa", "pb", k = 3),
       GraphOps.kCore(sym, "a", "b", k = 3, assumeSymmetric = true))
     same("kTruss",
-      GraphOps.kTruss(pairs, "pa", "pb", k = 3),
-      GraphOps.kTruss(sym, "a", "b", k = 3, assumeSymmetric = true))
+      GraphOps.kTrussWithRounds(pairs, "pa", "pb", k = 3)._1,
+      GraphOps.kTrussWithRounds(sym, "a", "b", k = 3, assumeSymmetric = true)._1)
     same("triangleCounts",
       GraphOps.triangleCounts(pairs, "pa", "pb"),
       GraphOps.triangleCounts(sym, "a", "b", assumeSymmetric = true))

@@ -43,7 +43,7 @@ class GlobalRankSpec extends SparkSpec {
       }
       assert(e.getMessage.contains("setCheckpointDir"))
     }
-    val dir = java.nio.file.Files.createTempDirectory("grk_ckpt").toString
+    val dir = tempDir("grk_ckpt").toString
     spark.sparkContext.setCheckpointDir(dir)
     try {
       val fast = GlobalRank.withGlobalRank(df, Seq(col("k"), col("id")), "r",

@@ -89,7 +89,7 @@ class TimeSeriesSpec extends SparkSpec {
       if !(h % 168 == 50 && h / 168 == 1) // silence week-2's hour-of-week 50
       i <- 0 until 10
     } yield (h.toLong * 10 + i, base.plusHours(h.toLong), 1L, "m", 1.0d, "{}")
-    val dirTmp = java.nio.file.Files.createTempDirectory("graft-seasonal").toString
+    val dirTmp = tempDir("graft-seasonal").toString
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.parquet(s"$dirTmp/events.parquet")
     val top = graft.SparkEntry.queries("q_seasonal_profile")(spark, dirTmp)

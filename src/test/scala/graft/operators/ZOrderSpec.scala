@@ -81,21 +81,4 @@ class ZOrderSpec extends SparkSpec {
       .groupBy("b").count().agg(max("count")).as[Long].head()
     assert(fixedMax > 2000, "control: fixed-width binning should collapse")
   }
-
-  test("clusterByZOrder yields numFiles partitions, each z-sorted") {
-    val rnd = new scala.util.Random(11)
-    val pts = (1 to 2000).map(_ => (rnd.nextInt(65536).toLong, rnd.nextInt(65536).toLong))
-    val out = ZOrder.clusterByZOrder(pts.toDF("x", "y").repartition(7),
-      col("x"), col("y"), numFiles = 8)
-    assert(out.rdd.getNumPartitions == 8)
-    val zs = out.select(ZOrder.morton2(col("x"), col("y")).as("z"))
-      .mapPartitions(it => Iterator.single(it.map(_.getLong(0)).toVector))
-      .collect()
-    zs.foreach(v => assert(v == v.sorted, "partition not z-sorted"))
-    // partitions are disjoint z-ranges in partition order
-    val nonEmpty = zs.filter(_.nonEmpty)
-    nonEmpty.sliding(2).withFilter(_.length == 2).foreach { w =>
-      assert(w(0).last <= w(1).head, "z-ranges overlap across files")
-    }
-  }
 }

@@ -2,16 +2,20 @@ package graft.plans
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
-/** SQL surface of the native expressions: registered functions must be
-  * callable from spark.sql and agree exactly with the DataFrame API. */
+/** SQL surface of the native expressions: the functions the session
+  * factory installs must be callable from spark.sql and agree exactly
+  * with the DataFrame API. */
 class GraftExtensionsSpec extends SparkSpec {
 
-  private lazy val registered: Unit = GraftExtensions.register(spark)
-
   test("registered SQL functions match the DataFrame-API expressions") {
-    registered
     import spark.implicits._
+    // the factory session (and a newSession clone of it) resolves the
+    // functions with no registration call
+    Seq(spark, spark.newSession()).foreach(s =>
+      assert(s.sessionState.functionRegistry.functionExists(
+        org.apache.spark.sql.catalyst.FunctionIdentifier("minhash_bands"))))
     val df = Seq((1L, "the quick brown fox jumps over the lazy dog")).toDF("id", "text")
     df.createOrReplaceTempView("ext_docs")
 
@@ -27,8 +31,8 @@ class GraftExtensionsSpec extends SparkSpec {
 
     val sqlSim = spark.sql(
       "SELECT simhash64(word_shingles(text, 1)) AS fp FROM ext_docs").as[Long].head()
-    val apiSim = df.select(
-      NativeExpressions.simhash64(NativeExpressions.wordShingles(col("text"), 1)).as("fp"))
+    val apiSim = df.select(ColumnBridge.column(SimHash64(ColumnBridge.expression(
+      NativeExpressions.wordShingles(col("text"), 1)))).as("fp"))
       .as[Long].head()
     assert(sqlSim == apiSim)
 
@@ -49,7 +53,6 @@ class GraftExtensionsSpec extends SparkSpec {
   }
 
   test("sketch parameters must be integer literals") {
-    registered
     val ex = intercept[Exception] {
       spark.sql("SELECT minhash_signature(array('a'), length('xx')) AS s").collect()
     }
@@ -57,28 +60,50 @@ class GraftExtensionsSpec extends SparkSpec {
   }
 
   test("FuseSimHashTokenize rewrites the naive composition, preserving results") {
-    registered
-    import spark.implicits._
-    val df = Seq((1L, "The Quick Brown fox"), (2L, ""), (3L, "  \t ")).toDF("id", "text")
-    df.createOrReplaceTempView("fuse_docs")
+    val rows = Seq((1L, "The Quick Brown fox"), (2L, ""), (3L, "  \t "),
+      (4L, "a  b\tc\nd a b"), (5L, "Hello, WORLD! hello, world!"), (6L, "x"))
     // the naive SQL composition of primitives
-    val naive = spark.sql(
+    val naiveSql =
       """SELECT id, simhash64(filter(split(lower(text), '\\s+'), t -> t != '')) AS fp
-        |FROM fuse_docs""".stripMargin)
+        |FROM fuse_docs""".stripMargin
+    def naiveIn(s: org.apache.spark.sql.SparkSession) = {
+      import s.implicits._
+      // an RDD source, not a LocalRelation: the optimizer would fold a
+      // projection over local rows into constants before the rule runs
+      s.sparkContext.parallelize(rows, 1).toDF("id", "text")
+        .createOrReplaceTempView("fuse_docs")
+      s.sql(naiveSql)
+    }
+    val naive = naiveIn(spark)
     val analyzed = naive.queryExecution.analyzed
     val rewritten = FuseSimHashTokenize(analyzed)
     // the rule fires on the analyzed plan and removes the composition
     assert(rewritten.expressions.map(_.toString).mkString.contains("simhash_text"))
     assert(!rewritten.expressions.exists(_.exists(_.isInstanceOf[SimHash64])))
-    // the fused form the rule produces is semantics-preserving, including
-    // token-less rows (coalesce turns the fused NULL into the composition's
+    // the factory session runs the rule by default
+    val optimized = naive.queryExecution.optimizedPlan
+    assert(optimized.expressions.exists(_.exists(_.isInstanceOf[SimHashText])))
+    assert(!optimized.expressions.exists(_.exists(_.isInstanceOf[SimHash64])))
+    // the unfused composition runs in a clone with the rule excluded; the
+    // fused form the rule produces must match it, including token-less
+    // rows (coalesce turns the fused NULL into the composition's
     // empty-vote fingerprint 0)
+    val ref = spark.newSession()
+    ref.conf.set("spark.sql.optimizer.excludedRules", FuseSimHashTokenize.ruleName)
+    val unfused = naiveIn(ref)
+    val unfusedPlan = unfused.queryExecution.optimizedPlan
+    assert(unfusedPlan.expressions.exists(_.exists(_.isInstanceOf[SimHash64])))
+    assert(!unfusedPlan.expressions.exists(_.exists(_.isInstanceOf[SimHashText])))
+    import spark.implicits._
+    val a = unfused.orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val fused = spark.sql(
       "SELECT id, coalesce(simhash_text(text), 0L) AS fp FROM fuse_docs")
-    val a = naive.orderBy("id").as[(Long, Long)].collect().toSeq
     val b = fused.orderBy("id").as[(Long, Long)].collect().toSeq
+    val c = naive.orderBy("id").as[(Long, Long)].collect().toSeq
     assert(a == b)
-    assert(a.filter(_._1 >= 2L).forall(_._2 == 0L))
+    assert(a == c)
+    assert(a.filter(r => r._1 == 2L || r._1 == 3L).forall(_._2 == 0L))
+    assert(a.filter(r => r._1 != 2L && r._1 != 3L).forall(_._2 != 0L))
     // a different split pattern must NOT be rewritten
     val other = spark.sql(
       """SELECT simhash64(filter(split(lower(text), ','), t -> t != '')) AS fp

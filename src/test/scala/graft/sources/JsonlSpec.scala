@@ -23,21 +23,18 @@ class JsonlSpec extends SparkSpec {
       (6L, null)
     )
     val df = rows.toDF("id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsonl_spec").toString
+    val dir = tempDir("graft_jsonl_spec").toString
     try {
       Jsonl.write(df, dir)
       val back = Jsonl.read(spark, dir, schema)
         .collect().map(r => (r.getLong(0), if (r.isNullAt(1)) null else r.getString(1)))
         .toSet
       assert(back == rows.toSet)
-      // the newline-bearing doc stayed ONE physical line (JSON-escaped)
-      val strict = Jsonl.readStrict(spark, dir, schema)
-      assert(strict.count() == 6)
     } finally graft.etl.Context.deleteRecursively(java.nio.file.Paths.get(dir))
   }
 
-  test("schema-explicit read never runs inference; strict mode fails loudly on corrupt lines") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsonl_bad").toString
+  test("schema-explicit read nulls a corrupt line instead of failing") {
+    val dir = tempDir("graft_jsonl_bad").toString
     try {
       java.nio.file.Files.write(java.nio.file.Paths.get(dir, "part-0.json"),
         "{\"id\": 1, \"text\": \"ok\"}\nnot json at all\n{\"id\": 2, \"text\": \"also ok\"}\n"
@@ -46,14 +43,6 @@ class JsonlSpec extends SparkSpec {
       val rows = Jsonl.read(spark, dir, schema).collect()
       assert(rows.length == 3)
       assert(rows.count(_.isNullAt(0)) == 1)
-      // FAILFAST: loud error naming the mode
-      val err = intercept[org.apache.spark.SparkException](
-        Jsonl.readStrict(spark, dir, schema).collect())
-      assert(err.getMessage.toLowerCase.contains("malformed") ||
-        err.getCause != null)
-      // inferSchema is the explicit, separate pass
-      val inferred = Jsonl.inferSchema(spark, dir, samplingRatio = 1.0)
-      assert(inferred.fieldNames.contains("id"))
     } finally graft.etl.Context.deleteRecursively(java.nio.file.Paths.get(dir))
   }
 }

@@ -9,7 +9,7 @@ class StreamingSpec extends SparkSpec {
 
   // file-stream sources need a directory; stage the single events file into one
   private lazy val streamDir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-stream")
+    val d = tempDir("graft-stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$dir/events.parquet"), d.resolve("events.parquet"))
     d.toString
@@ -59,7 +59,7 @@ class StreamingSpec extends SparkSpec {
     // drops into a readStream ingest as-is — pin that by equality with
     // the batch result over the same files
     import graft.ext.WebText
-    val d = java.nio.file.Files.createTempDirectory("graft-webstream")
+    val d = tempDir("graft-webstream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$dir/documents.parquet"),
       d.resolve("documents.parquet"))
@@ -68,10 +68,10 @@ class StreamingSpec extends SparkSpec {
       WebText.synthesizeHtml(col("doc_id"),
         coalesce(col("text"), lit(""))).as("html"))
     val got = EventsStream.runToMemory(spark,
-      WebText.extract(wrap(spark.readStream.schema(schema).parquet(d.toString)),
-        "doc_id", "html"), "web_extract_test")
-    val batch = WebText.extract(wrap(spark.read.parquet(s"$dir/documents.parquet")),
-      "doc_id", "html")
+      WebText.extractAll(wrap(spark.readStream.schema(schema).parquet(d.toString)),
+        "doc_id", "html", "corp.example.com"), "web_extract_test")
+    val batch = WebText.extractAll(wrap(spark.read.parquet(s"$dir/documents.parquet")),
+      "doc_id", "html", "corp.example.com")
     assert(got.count() == batch.count())
     val cols = Seq("doc_id", "title", "text_clean", "text_len", "n_links")
       .map(col)
@@ -85,7 +85,7 @@ class StreamingSpec extends SparkSpec {
     // readStream ingest (the quarantine gate runs AT ingest, before any
     // stateful stage) — pinned by equality with the batch result
     import graft.ext.WebText
-    val d = java.nio.file.Files.createTempDirectory("graft-encstream")
+    val d = tempDir("graft-encstream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$dir/documents.parquet"),
       d.resolve("documents.parquet"))
@@ -106,7 +106,7 @@ class StreamingSpec extends SparkSpec {
 
   test("dropDuplicatesWithinWatermark removes re-delivered events") {
     // stage the events file twice: every event is delivered twice
-    val dupDir = java.nio.file.Files.createTempDirectory("graft-stream-dup")
+    val dupDir = tempDir("graft-stream-dup")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$dir/events.parquet"), dupDir.resolve("events_a.parquet"))
     java.nio.file.Files.copy(
@@ -135,8 +135,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("foreachBatch sink writes idempotent batch partitions") {
-    val out = java.nio.file.Files.createTempDirectory("graft-sink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-sink-ckpt").toString
+    val out = tempDir("graft-sink").toString
+    val ckpt = tempDir("graft-sink-ckpt").toString
     val q = EventsStream.toPartitionedParquet(
       EventsStream.readStream(spark, streamDir), out, ckpt)
     q.awaitTermination()
@@ -155,7 +155,7 @@ class StreamingSpec extends SparkSpec {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val ref = docs.where(col("doc_id") < 30)
     val incoming = docs.where(col("doc_id") >= 30)
-    val work = java.nio.file.Files.createTempDirectory("graft-corpus-stream")
+    val work = tempDir("graft-corpus-stream")
     val staged = s"$work/staged"
     val src = s"$work/incoming"
     val out = s"$work/accepted"
@@ -211,7 +211,7 @@ class StreamingSpec extends SparkSpec {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val ref = docs.where(col("doc_id") < 30).select("doc_id", "text")
     val batch1 = docs.where(col("doc_id") >= 30 && col("doc_id") < 60).select("doc_id", "text")
-    val work = java.nio.file.Files.createTempDirectory("graft-tailing")
+    val work = tempDir("graft-tailing")
     val staged = s"$work/staged"; val src = s"$work/incoming"; val out = s"$work/accepted"
     Dedup.stageSignatures(ref, "doc_id", "text", staged, numHashes = 64, bands = 16)
     batch1.write.parquet(src)
@@ -254,7 +254,7 @@ class StreamingSpec extends SparkSpec {
     val planted = bench.select((col("doc_id") + 100000L).as("doc_id"), col("text"))
     val incoming = docs.where(col("doc_id") >= 30).select("doc_id", "text")
       .unionByName(planted)
-    val work = java.nio.file.Files.createTempDirectory("graft-contam-stream")
+    val work = tempDir("graft-contam-stream")
     val src = s"$work/incoming"
     val out = s"$work/clean"
     incoming.write.parquet(src)
@@ -281,13 +281,13 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     // force MULTIPLE micro-batches (one per file) so the merge path — not
     // just the batch-0 bootstrap — is exercised
-    val src = java.nio.file.Files.createTempDirectory("graft-incr-src")
+    val src = tempDir("graft-incr-src")
     val events = graft.sources.Tables.events(spark, dir)
     events.where(col("event_id") % 2 === 0).coalesce(1)
       .write.parquet(s"$src/part_a")
     events.where(col("event_id") % 2 === 1).coalesce(1)
       .write.parquet(s"$src/part_b")
-    val work = java.nio.file.Files.createTempDirectory("graft-incr")
+    val work = tempDir("graft-incr")
     val statePath = s"$work/state"
     val ckpt = s"$work/ckpt"
     val stream = {
@@ -319,13 +319,13 @@ class StreamingSpec extends SparkSpec {
 
   test("stream-maintained Misra-Gries state equals the batch counts at exactness capacity") {
     import spark.implicits._
-    val src = java.nio.file.Files.createTempDirectory("graft-hh-src")
+    val src = tempDir("graft-hh-src")
     val events = graft.sources.Tables.events(spark, dir)
     events.where(col("event_id") % 2 === 0).coalesce(1)
       .write.parquet(s"$src/part_a")
     events.where(col("event_id") % 2 === 1).coalesce(1)
       .write.parquet(s"$src/part_b")
-    val work = java.nio.file.Files.createTempDirectory("graft-hh")
+    val work = tempDir("graft-hh")
     val statePath = s"$work/state"
     val ckpt = s"$work/ckpt"
     def stream = {
@@ -357,13 +357,13 @@ class StreamingSpec extends SparkSpec {
 
   test("stream-maintained value counts serve the exact median of all history") {
     import spark.implicits._
-    val src = java.nio.file.Files.createTempDirectory("graft-vc-src")
+    val src = tempDir("graft-vc-src")
     val events = graft.sources.Tables.events(spark, dir)
     events.where(col("event_id") % 2 === 0).coalesce(1)
       .write.parquet(s"$src/part_a")
     events.where(col("event_id") % 2 === 1).coalesce(1)
       .write.parquet(s"$src/part_b")
-    val work = java.nio.file.Files.createTempDirectory("graft-vc")
+    val work = tempDir("graft-vc")
     val statePath = s"$work/state"
     val ckpt = s"$work/ckpt"
     def stream = {
@@ -396,13 +396,13 @@ class StreamingSpec extends SparkSpec {
 
   test("stream-maintained hourly counts serve the same anomalies as the batch monitor") {
     import spark.implicits._
-    val src = java.nio.file.Files.createTempDirectory("graft-an-src")
+    val src = tempDir("graft-an-src")
     val events = graft.sources.Tables.events(spark, dir)
     events.where(col("event_id") % 2 === 0).coalesce(1)
       .write.parquet(s"$src/part_a")
     events.where(col("event_id") % 2 === 1).coalesce(1)
       .write.parquet(s"$src/part_b")
-    val work = java.nio.file.Files.createTempDirectory("graft-an")
+    val work = tempDir("graft-an")
     val statePath = s"$work/state"
     def stream = {
       val schema = spark.read.parquet(s"$src/part_a").schema
@@ -459,12 +459,12 @@ class StreamingSpec extends SparkSpec {
 
   test("stream-maintained chunk store equals the batch content-defined recompute") {
     import spark.implicits._
-    val src = java.nio.file.Files.createTempDirectory("graft-cdc-src")
+    val src = tempDir("graft-cdc-src")
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id"), col("text"))
     docs.where(col("doc_id") % 2 === 0).coalesce(1).write.parquet(s"$src/part_a")
     docs.where(col("doc_id") % 2 === 1).coalesce(1).write.parquet(s"$src/part_b")
-    val work = java.nio.file.Files.createTempDirectory("graft-cdc-state")
+    val work = tempDir("graft-cdc-state")
     val statePath = s"$work/state"
     def stream = {
       val schema = spark.read.parquet(s"$src/part_a").schema
@@ -491,7 +491,7 @@ class StreamingSpec extends SparkSpec {
 
   test("stream-maintained column profile equals the batch profile over all history") {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val src = java.nio.file.Files.createTempDirectory("graft-prof-src")
+    val src = tempDir("graft-prof-src")
     // plant nulls in one shard so the null-count path is exercised
     docs.where(col("doc_id") % 2 === 0)
       .withColumn("lang", when(col("doc_id") % 6 === 0,
@@ -499,7 +499,7 @@ class StreamingSpec extends SparkSpec {
       .coalesce(1).write.parquet(s"$src/part_a")
     docs.where(col("doc_id") % 2 === 1).coalesce(1)
       .write.parquet(s"$src/part_b")
-    val work = java.nio.file.Files.createTempDirectory("graft-prof")
+    val work = tempDir("graft-prof")
     val cols = Seq("doc_id", "lang", "source", "n_chars")
     def stream = {
       val schema = spark.read.parquet(s"$src/part_a").schema

@@ -4,7 +4,6 @@ import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
-import org.scalatest.BeforeAndAfterAll
 
 import graft.SparkSpec
 import graft.sources.Tables
@@ -12,10 +11,10 @@ import graft.sources.Tables
 /** ScaleInput on the sf0.001 fixture: factor 1 reproduces the source,
   * factor 2 doubles every fact and entity table with keys and FKs closed
   * inside each copy, and a factor outside 1..26 writes nothing. */
-class ScaleInputSpec extends SparkSpec with BeforeAndAfterAll {
+class ScaleInputSpec extends SparkSpec {
 
   private val src = "/root/testdata/sf0.001"
-  private val root = Files.createTempDirectory("graft-scale-input")
+  private val root = tempDir("graft-scale-input")
 
   private lazy val x1 = generate(1)
   private lazy val x2 = generate(2)
@@ -27,9 +26,6 @@ class ScaleInputSpec extends SparkSpec with BeforeAndAfterAll {
   }
 
   private def read(dir: String, t: String): DataFrame = Tables.read(spark, dir, t)
-
-  override def afterAll(): Unit =
-    try graft.etl.Context.deleteRecursively(root) finally super.afterAll()
 
   test("factor 1 writes each of the ten tables as one file equal to its source") {
     assert(ScaleInput.TableNames.size == 10)
