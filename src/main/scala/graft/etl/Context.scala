@@ -79,33 +79,50 @@ final class StoreInfo(val outputDir: String, val spark: SparkSession) {
   def clearLoaderLog(): Unit = Files.deleteIfExists(loaderLog)
 }
 
-/** The Spark halves of one batch of staging work, started on the
+/** Spark jobs started on the
   * [[org.apache.spark.sql.graftbridge.ThreadBridge]] daemon pool in call
-  * order. Each writes into its own temp dir directly under the output dir
-  * (so a publish is a same-filesystem rename), which a reader ignores: it
-  * sees only the files a committed catalog lists. At most
-  * `defaultParallelism` jobs run at once: a submit past the bound waits for
-  * the oldest job still running. The caller takes results in call order
-  * and publishes them; `close()` then waits for every job (their failures
-  * were already surfaced or are superseded) and deletes every temp dir, on
-  * success and failure alike. Driver-side, one caller thread. */
-private[etl] final class StagingQueue[T](store: StoreInfo) {
-  private val jobs = mutable.ArrayBuffer.empty[(Path, ThreadBridge.Pending[T])]
-  private val bound = math.max(1, store.spark.sparkContext.defaultParallelism)
+  * order, at most `defaultParallelism` in flight: a submit past the bound
+  * waits for the oldest job still running (and rethrows its failure). The
+  * caller takes results in call order; `close()` then waits for every job
+  * (their failures were already surfaced or are superseded), on success and
+  * failure alike. Driver-side, one caller thread. */
+private[etl] final class BoundedJobs[T](spark: SparkSession) {
+  private val jobs = mutable.ArrayBuffer.empty[ThreadBridge.Pending[T]]
+  private val bound = math.max(1, spark.sparkContext.defaultParallelism)
 
-  def submit(prefix: String)(stage: Path => T): ThreadBridge.Pending[T] = {
-    val running = jobs.map(_._2).filterNot(_.isDone)
+  def submit(body: => T): ThreadBridge.Pending[T] = {
+    val running = jobs.filterNot(_.isDone)
     if (running.size >= bound) running.head.await()
-    val tmp = Files.createTempDirectory(Paths.get(store.outputDir), prefix)
-    val job = ThreadBridge.async(store.spark)(stage(tmp))
-    jobs += tmp -> job
+    val job = ThreadBridge.async(spark)(body)
+    jobs += job
     job
   }
 
   def close(): Unit = {
-    jobs.foreach(j => scala.util.Try(j._2.await()))
-    jobs.foreach(j => Context.deleteRecursively(j._1))
+    jobs.foreach(j => scala.util.Try(j.await()))
     jobs.clear()
+  }
+}
+
+/** The Spark halves of one batch of staging work, run as [[BoundedJobs]].
+  * Each writes into its own temp dir directly under the output dir (so a
+  * publish is a same-filesystem rename), which a reader ignores: it sees
+  * only the files a committed catalog lists. `close()` waits for every job
+  * and deletes every temp dir, on success and failure alike. */
+private[etl] final class StagingQueue[T](store: StoreInfo) {
+  private val jobs = new BoundedJobs[T](store.spark)
+  private val dirs = mutable.ArrayBuffer.empty[Path]
+
+  def submit(prefix: String)(stage: Path => T): ThreadBridge.Pending[T] = {
+    val tmp = Files.createTempDirectory(Paths.get(store.outputDir), prefix)
+    dirs += tmp
+    jobs.submit(stage(tmp))
+  }
+
+  def close(): Unit = {
+    jobs.close()
+    dirs.foreach(Context.deleteRecursively)
+    dirs.clear()
   }
 }
 

@@ -3,6 +3,7 @@ package graft.etl
 import java.nio.file.{Files, Path, Paths}
 import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.ThreadBridge
 import graft.operators.Mapping
 
 /** Registered parser metadata + body — the reference's `@Parser` decorator
@@ -289,9 +290,15 @@ final class GraphEtl(
     *
     * The loader log lists the files an external database already holds,
     * so a resumed load skips them. It is read and written only for loaders
-    * whose state lives outside the JVM (Neo4j, TigerGraph): an
-    * [[InSessionLoader]] holds nothing from an earlier run and is offered
-    * every catalog file.
+    * whose state lives outside the JVM (Neo4j, TigerGraph), whose
+    * statements run inline, in catalog order. An [[InSessionLoader]] holds
+    * nothing from an earlier run and is offered every catalog file: each
+    * file is merged on this thread, in catalog order (so results never
+    * depend on thread timing), and its count runs as a concurrent Spark
+    * job, at most `defaultParallelism` in flight ([[BoundedJobs]]). The
+    * counts are added to the `loaded_*` stats in catalog order; a failed
+    * count is rethrown and records nothing, and no count is still running
+    * when `load` returns or throws.
     *
     * Dead-parameter parity note: the reference's `load` also declares a
     * `clear_source` flag (utils.py:156) that its own implementation never
@@ -303,45 +310,62 @@ final class GraphEtl(
     if (store.catalog.nodes.isEmpty) store.loadCatalog()
     val external = !loader.isInstanceOf[InSessionLoader]
     val loaded = if (external) store.loadedFiles else Set.empty[String]
-    def record(stat: String, fname: String, n: Long): Unit = {
+    def record(stat: String, n: Long): Unit =
       store.stats(stat) = store.stats.getOrElse(stat, 0L) + n
-      if (external) store.logLoaded(fname)
+    def loadedInline(stat: String, fname: String, n: Long): Unit = {
+      record(stat, n)
+      store.logLoaded(fname)
     }
+    val counts = new BoundedJobs[Long](spark)
+    val pending = mutable.ArrayBuffer.empty[(String, ThreadBridge.Pending[Long])]
+    def count(stat: String, rows: DataFrame): Unit = pending += stat -> counts.submit(rows.count())
 
-    store.catalog.nodes.foreach { case (label, cfg) =>
-      cfg.files.foreach { case (fname, info) =>
-        if (store.filter.exists(_.skipLoadNode(info.metadatas, label))) loader match {
-          // a deliberately-excluded label is not a missing one: let the
-          // in-session loader treat later match-strategy edge references to
-          // it as empty (external-DB parity) instead of failing fast
-          case l: InSessionLoader => l.markNodesSkipped(label)
-          case _ => ()
-        } else if (!loaded.contains(fname))
-          record(s"loaded_nodes_$label", fname, loader.loadNodes(
-            store.nodesDir.resolve(fname).toString, label, cfg.primary_key,
-            info.metadatas, cfg.properties_type, cfg.constraints, cfg.indexs))
-      }
-    }
-    // a label referenced by edges but absent from the node catalog (e.g.
-    // its source produced zero rows) is not a load-order bug: declare it
-    // so match-strategy loads treat it as MATCH-finds-nothing
-    loader match {
-      case l: InSessionLoader =>
-        store.catalog.edges.values.flatten.foreach { case (_, cfg) =>
-          Seq(cfg.start, cfg.end).map(_.split(":")(0)).foreach { label =>
-            if (!store.catalog.nodes.contains(label)) l.markNodesSkipped(label)
+    try {
+      store.catalog.nodes.foreach { case (label, cfg) =>
+        cfg.files.foreach { case (fname, info) =>
+          val path = store.nodesDir.resolve(fname).toString
+          val stat = s"loaded_nodes_$label"
+          if (store.filter.exists(_.skipLoadNode(info.metadatas, label))) loader match {
+            // a deliberately-excluded label is not a missing one: let the
+            // in-session loader treat later match-strategy edge references to
+            // it as empty (external-DB parity) instead of failing fast
+            case l: InSessionLoader => l.markNodesSkipped(label)
+            case _ => ()
+          } else if (!loaded.contains(fname)) loader match {
+            case l: InSessionLoader =>
+              count(stat, l.ingestNodes(path, label, cfg.primary_key, info.metadatas, cfg.properties_type))
+            case _ => loadedInline(stat, fname, loader.loadNodes(path, label, cfg.primary_key,
+              info.metadatas, cfg.properties_type, cfg.constraints, cfg.indexs))
           }
         }
-      case _ => ()
-    }
-    store.catalog.edges.foreach { case (edgeType, files) =>
-      files.foreach { case (fname, cfg) =>
-        if (!store.filter.exists(_.skipLoadEdge(cfg.metadatas, edgeType)) && !loaded.contains(fname))
-          record(s"loaded_edges_$edgeType", fname, loader.loadEdges(
-            store.edgesDir.resolve(fname).toString, edgeType, cfg.start, cfg.end,
-            cfg.metadatas, cfg.properties_type))
       }
-    }
+      // a label referenced by edges but absent from the node catalog (e.g.
+      // its source produced zero rows) is not a load-order bug: declare it
+      // so match-strategy loads treat it as MATCH-finds-nothing
+      loader match {
+        case l: InSessionLoader =>
+          store.catalog.edges.values.flatten.foreach { case (_, cfg) =>
+            Seq(cfg.start, cfg.end).map(_.split(":")(0)).foreach { label =>
+              if (!store.catalog.nodes.contains(label)) l.markNodesSkipped(label)
+            }
+          }
+        case _ => ()
+      }
+      store.catalog.edges.foreach { case (edgeType, files) =>
+        files.foreach { case (fname, cfg) =>
+          val path = store.edgesDir.resolve(fname).toString
+          val stat = s"loaded_edges_$edgeType"
+          if (!store.filter.exists(_.skipLoadEdge(cfg.metadatas, edgeType)) && !loaded.contains(fname))
+            loader match {
+              case l: InSessionLoader =>
+                count(stat, l.ingestEdges(path, edgeType, cfg.start, cfg.end, cfg.properties_type))
+              case _ => loadedInline(stat, fname, loader.loadEdges(path, edgeType, cfg.start, cfg.end,
+                cfg.metadatas, cfg.properties_type))
+            }
+        }
+      }
+      pending.foreach { case (stat, job) => record(stat, job.await()) }
+    } finally counts.close()
     store.callbacks.foreach(_.save(store.catalog, outputDir))
     store.clearLoaderLog()
   }

@@ -4,6 +4,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** Bulk-load extension point — same shape as the reference's `Loader` ABC
   * (graph_etl/loader.py:5-37). Returns rows loaded. */
@@ -21,13 +22,28 @@ trait Loader {
 /** A loader whose loaded state lives only in this JVM session (no external
   * database holds the nodes between runs). `GraphEtl.load` neither reads
   * nor writes the loader resume log for it: it is offered every catalog
-  * file on every load. */
+  * file on every load. It offers each file in two steps: `ingestNodes` /
+  * `ingestEdges` merge the file into the loaded graph on the caller thread,
+  * in catalog order, and return the file's rows; `load` counts those rows
+  * as a concurrent Spark job (`loadNodes`/`loadEdges` are the two steps
+  * run inline). */
 trait InSessionLoader { self: Loader =>
   /** Record that a node label's files were deliberately excluded (store
     * filter), so a later match-strategy edge load referencing it means
     * "endpoints absent" (empty result, external-DB parity) rather than a
     * load-order bug (fail fast). */
   def markNodesSkipped(label: String): Unit
+
+  /** Merge one node file; returns its rows, whose count is its loaded count. */
+  def ingestNodes(
+      filePath: String, label: String, primaryKey: String,
+      metadatas: Map[String, String], propertiesType: Map[String, String]): DataFrame
+
+  /** Merge one edge file; returns its loaded rows, whose count is its loaded
+    * count. */
+  def ingestEdges(
+      filePath: String, edgeType: String, start: String, end: String,
+      propertiesType: Map[String, String]): DataFrame
 }
 
 /** Executable in-session loader: staged files become two governed DataFrame
@@ -38,6 +54,16 @@ trait InSessionLoader { self: Loader =>
   * tigergraph_loader.py) with the Spark-native equivalent: executors read
   * the staged files directly — the same "don't ship rows through the
   * driver/API" rationale as the reference's `file:/` URLs (setup.py:16).
+  *
+  * The staged files are read once. Like the reference's database, which
+  * every later query reads instead of the CSVs (pipeline.py:134-188), the
+  * loaded graph is pinned in Spark's cache (`Dataset.persist`,
+  * MEMORY_AND_DISK): each label's merged node frame from its first use
+  * after its last change, and each edge file's loaded rows from its count.
+  * `nodes`, `edges`, `nodeTable`, `edgeTable` and the match-strategy
+  * semi-joins all read these pins. A pin lives until its label changes or
+  * `spark.catalog.clearCache()`; after that the same frames re-read the
+  * files and give the same rows.
   *
   * Reference-quirk parity (SURVEY §2.12.3): the primary-key *value* is
   * canonicalized under the property name `id` regardless of `primaryKey`
@@ -57,18 +83,29 @@ final class SparkGraphLoader(
       * "ignore": drop metadata (default — keeps node schemas narrow). */
     metadataStrategy: String = "ignore") extends Loader with InSessionLoader {
 
+  /** Each label's merged node frame, deduplicated on `id`; written only
+    * through [[setNodes]]. */
   private val nodeFrames = mutable.LinkedHashMap.empty[String, DataFrame]
+  /** The persisted node frame of each label used since its last change. */
+  private val nodePins = mutable.Map.empty[String, DataFrame]
   private val edgeFrames = mutable.LinkedHashMap.empty[String, DataFrame]
   private val skippedLabels = mutable.Set.empty[String]
 
-  /** Files already merged into this instance's frames. Makes load()
-    * idempotent per loader instance: `GraphEtl.load` offers every catalog
-    * file on each call, so a second load() on the same loader would
-    * otherwise re-union every file's rows (nodes survive via
-    * dropDuplicates("id"); edges and as_edge HAS_METADATA edges would not). */
-  private val ingestedFiles = mutable.Set.empty[String]
+  /** Files already merged into this instance's frames; an edge file maps to
+    * its persisted loaded rows. Makes load() idempotent per loader
+    * instance: `GraphEtl.load` offers every catalog file on each call, so a
+    * second load() on the same loader would otherwise re-union every file's
+    * rows (nodes survive via dropDuplicates("id"); edges and as_edge
+    * HAS_METADATA edges would not). */
+  private val ingestedNodeFiles = mutable.Set.empty[String]
+  private val ingestedEdgeFiles = mutable.Map.empty[String, DataFrame]
 
   override def markNodesSkipped(label: String): Unit = skippedLabels += label
+
+  private def setNodes(label: String, frame: DataFrame): Unit = {
+    nodeFrames(label) = frame
+    nodePins.remove(label).foreach(_.unpersist())
+  }
 
   override def loadNodes(
       filePath: String, label: String, primaryKey: String,
@@ -77,15 +114,15 @@ final class SparkGraphLoader(
     ingestNodes(filePath, label, primaryKey, metadatas, propertiesType).count()
 
   /** Merge one node file into the label's frame; returns the per-file
-    * frame (pre-merge) so `loadNodes` can report this file's row count. */
-  private def ingestNodes(
+    * frame (pre-merge), whose count is this file's loaded count. */
+  override def ingestNodes(
       filePath: String, label: String, primaryKey: String,
       metadatas: Map[String, String], propertiesType: Map[String, String]): DataFrame = {
     val df0 = StagedCsv.readFile(spark, java.nio.file.Paths.get(filePath), propertiesType)
       .withColumn("id", col(primaryKey).cast(StringType)) // §2.12.3 canonical id
     // already merged by this instance (a prior load()): report the
     // per-file frame for counting, mutate nothing
-    if (ingestedFiles.contains(filePath)) return df0
+    if (ingestedNodeFiles.contains(filePath)) return df0
     val df = metadataStrategy match {
       case "as_property" =>
         metadatas.foldLeft(df0) { case (d, (k, v)) => d.withColumn(k, lit(v)) }
@@ -97,10 +134,10 @@ final class SparkGraphLoader(
           java.util.List.of(org.apache.spark.sql.Row(metaId)),
           org.apache.spark.sql.types.StructType(Seq(StructField("id", StringType))))
         val withProps = metadatas.foldLeft(metaNode) { case (d, (k, v)) => d.withColumn(k, lit(v)) }
-        nodeFrames("Metadata") = nodeFrames.get("Metadata") match {
+        setNodes("Metadata", nodeFrames.get("Metadata") match {
           case Some(prev) => prev.unionByName(withProps, allowMissingColumns = true).dropDuplicates("id")
           case None => withProps
-        }
+        })
         val metaEdges = df0.select(
           col("id").cast(StringType).as("src"), lit(metaId).as("dst"),
           lit(label).as("start_label"), lit("Metadata").as("end_label"))
@@ -116,9 +153,8 @@ final class SparkGraphLoader(
         .dropDuplicates("id") // MERGE-on-id upsert semantics (unique constraint K8)
       case None => df.dropDuplicates("id")
     }
-    nodeFrames(label) = merged
-    invalidateIdSet(label)
-    ingestedFiles += filePath
+    setNodes(label, merged)
+    ingestedNodeFiles += filePath
     df
   }
 
@@ -127,27 +163,14 @@ final class SparkGraphLoader(
       metadatas: Map[String, String], propertiesType: Map[String, String]): Long =
     ingestEdges(filePath, edgeType, start, end, propertiesType).count()
 
-  /** Distinct endpoint-id set per label, cached across edge files —
-    * without this every loadEdges count re-reads all node CSVs of both
-    * endpoint labels (the semi-join recomputes the merged node lineage).
-    * Invalidated whenever the label's node frame changes. */
-  private val idSetCache = mutable.Map.empty[String, DataFrame]
-
-  private def invalidateIdSet(label: String): Unit =
-    idSetCache.remove(label).foreach(_.unpersist())
-
-  private def idSet(label: String): Option[DataFrame] =
-    nodeFrames.get(label).map { frame =>
-      idSetCache.getOrElseUpdate(label, {
-        val ids = frame.select(col("id")).distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        ids
-      })
-    }
-
-  private def ingestEdges(
+  /** Merge one edge file into its type's frame; returns the file's loaded
+    * rows, persisted, so its count fills the pin the edge frame reads. A
+    * file this instance already merged returns the same pin and mutates
+    * nothing. */
+  override def ingestEdges(
       filePath: String, edgeType: String, start: String, end: String,
       propertiesType: Map[String, String]): DataFrame = {
+    if (ingestedEdgeFiles.contains(filePath)) return ingestedEdgeFiles(filePath)
     val startLabel = start.split(":")(0)
     val endLabel = end.split(":")(0)
     val df = StagedCsv.readFile(spark, java.nio.file.Paths.get(filePath), propertiesType)
@@ -155,17 +178,13 @@ final class SparkGraphLoader(
         col("start").cast(StringType) =!= "" && col("end").cast(StringType) =!= "") // P8
       .withColumn("src", col("start").cast(StringType))
       .withColumn("dst", col("end").cast(StringType))
-    // a file this instance already merged is only recounted: the same
-    // resolution, with no frame mutated (for "create" the first ingest
-    // synthesized every missing endpoint, so the whole filtered file counts)
-    val firstIngest = !ingestedFiles.contains(filePath)
 
-    val resolved = edgeStrategy match {
+    val resolved = (edgeStrategy match {
       case "match" =>
-        // both endpoints must exist (neo4j MATCH): two semi-joins; node-id
-        // sides are deduped label tables — broadcast when small via AQE
-        val srcIds = idSet(startLabel).map(_.select(col("id").as("src")))
-        val dstIds = idSet(endLabel).map(_.select(col("id").as("dst")))
+        // both endpoints must exist (neo4j MATCH): two semi-joins against
+        // the pinned label tables (deduped on id) — broadcast when small via AQE
+        val srcIds = nodeTable(startLabel).map(_.select(col("id").as("src")))
+        val dstIds = nodeTable(endLabel).map(_.select(col("id").as("dst")))
         (srcIds, dstIds) match {
           case (Some(s), Some(d)) =>
             df.join(s, Seq("src"), "left_semi").join(d, Seq("dst"), "left_semi")
@@ -187,9 +206,9 @@ final class SparkGraphLoader(
                   "files first (filter-skipped labels must be declared via markNodesSkipped)")
             }
         }
-      case "create" if !firstIngest => df
       case "create" =>
-        // synthesize missing endpoints as BlankNodes (left-anti + union)
+        // synthesize missing endpoints as BlankNodes (left-anti + union);
+        // once `df` is pinned below, the blanks read its pin
         def ensure(label: String, idCol: String): Unit = {
           val ids = df.select(col(idCol).as("id")).distinct()
           val missing = nodeFrames.get(label) match {
@@ -197,36 +216,32 @@ final class SparkGraphLoader(
             case None => ids
           }
           val blanks = missing.withColumn("is_blank_node", lit(true))
-          nodeFrames(label) = nodeFrames.get(label) match {
+          setNodes(label, nodeFrames.get(label) match {
             case Some(existing) =>
               existing.unionByName(blanks, allowMissingColumns = true).dropDuplicates("id")
             case None => blanks
-          }
+          })
         }
         ensure(startLabel, "src")
         ensure(endLabel, "dst")
-        invalidateIdSet(startLabel)
-        invalidateIdSet(endLabel)
         df
       case other => throw new IllegalArgumentException(s"unknown edge strategy '$other'")
-    }
+    }).persist(StorageLevel.MEMORY_AND_DISK)
 
-    if (firstIngest) {
-      val tagged = resolved
-        .withColumn("start_label", lit(startLabel))
-        .withColumn("end_label", lit(endLabel))
-      edgeFrames(edgeType) = edgeFrames.get(edgeType) match {
-        case Some(prev) => prev.unionByName(tagged, allowMissingColumns = true)
-        case None => tagged
-      }
-      ingestedFiles += filePath
+    val tagged = resolved
+      .withColumn("start_label", lit(startLabel))
+      .withColumn("end_label", lit(endLabel))
+    edgeFrames(edgeType) = edgeFrames.get(edgeType) match {
+      case Some(prev) => prev.unionByName(tagged, allowMissingColumns = true)
+      case None => tagged
     }
+    ingestedEdgeFiles(filePath) = resolved
     resolved
   }
 
   /** All loaded nodes as one frame: (label, id, …union of props). */
-  def nodes: Option[DataFrame] = nodeFrames.map { case (l, df) =>
-    df.withColumn("label", lit(l))
+  def nodes: Option[DataFrame] = nodeFrames.keys.toSeq.map { l =>
+    nodeTable(l).get.withColumn("label", lit(l))
   }.reduceOption(_.unionByName(_, allowMissingColumns = true))
 
   /** All loaded edges as one frame: (type, src, dst, …props). */
@@ -234,6 +249,9 @@ final class SparkGraphLoader(
     df.withColumn("type", lit(t))
   }.reduceOption(_.unionByName(_, allowMissingColumns = true))
 
-  def nodeTable(label: String): Option[DataFrame] = nodeFrames.get(label)
+  /** The label's node frame, pinned at its first use after its last change. */
+  def nodeTable(label: String): Option[DataFrame] = nodeFrames.get(label).map(frame =>
+    nodePins.getOrElseUpdate(label, frame.persist(StorageLevel.MEMORY_AND_DISK)))
+
   def edgeTable(edgeType: String): Option[DataFrame] = edgeFrames.get(edgeType)
 }

@@ -15,13 +15,15 @@ import org.apache.spark.sql.types._
   *   2. scrub `\r` `\n` `\` from every string col (context.py:123)
   *   3. dedup on key                              (context.py:124)
   *   4. drop null keys                            (context.py:125)
-  *   5. sequential row ids -> chunk = id / size   (context.py:126-127)
+  *
+  * The reference's last step, sequential row ids -> chunk = id / size
+  * (context.py:126-127), is not part of [[normalize]]: staging chunks in
+  * `graft.etl.Context.stageChunkedCsv`, from per-partition sizes plus a
+  * Catalyst chunk expression, and [[withChunkIds]] serves only the
+  * `q_chunk` query.
   *
   * Scale notes (100 TB posture): steps 1-2 are narrow (no shuffle); step 3
-  * is one hash-shuffle on the key; step 5's faithful path uses RDD
-  * zipWithIndex (one extra job to count partition sizes, no shuffle) — the
-  * performance path skips explicit chunk ids entirely and bounds output
-  * files with `maxRecordsPerFile` instead.
+  * is one hash-shuffle on the key.
   */
 object Normalize {
 

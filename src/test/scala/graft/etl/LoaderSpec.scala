@@ -1,11 +1,31 @@
 package graft.etl
 
 import java.nio.file.Files
+import java.util.concurrent.CompletionException
+import java.util.concurrent.atomic.AtomicInteger
+import scala.collection.mutable
 import graft.SparkSpec
+import graft.graph.GraphOps
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CacheEntries
+
+object LoaderSpec {
+  /** Rows the slow count of the failure-path test has processed. */
+  val slowRows = new AtomicInteger()
+}
 
 class LoaderSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Run `df`, then name the scans its executed plan reads (through AQE
+    * stages; a cached relation is one leaf, its own plan is not walked). */
+  private def scans(df: DataFrame): Set[String] = {
+    df.collect()
+    new AdaptiveSparkPlanHelper {}.collectLeaves(df.queryExecution.executedPlan)
+      .map(_.getClass.getSimpleName).filter(_.endsWith("ScanExec")).toSet
+  }
 
   private def staged(): (GraphEtl, String) = {
     val dir = tempDir("graft-loader-test").toString
@@ -97,6 +117,124 @@ class LoaderSpec extends SparkSpec {
     assert(loader.edgeTable("HAS_METADATA").get.count() == meta1)
     assert(loader.nodeTable("Person").get.count() == 2)
     // stats still accumulate honestly (the re-load recounts the files)
+    etl.clear()
+  }
+
+  test("the graph build reads the loader's pins, and the pins never change the rows") {
+    val (etl, _) = staged()
+    val loader = new SparkGraphLoader(spark)
+    etl.load(loader)
+    def degrees = GraphOps.degrees(loader.nodes.get, loader.edges.get)
+    assert(scans(loader.edges.get) == Set("InMemoryTableScanExec"))
+    assert(scans(degrees) == Set("InMemoryTableScanExec"))
+    val pinned = degrees.collect().map(_.toString).sorted.toSeq
+    assert(pinned.size == 4)
+    // with the cache gone the same frames re-read the staged files
+    spark.catalog.clearCache()
+    assert(scans(degrees).contains("FileSourceScanExec"))
+    assert(degrees.collect().map(_.toString).sorted.toSeq == pinned)
+    etl.clear()
+  }
+
+  /** Person staged by two parsers with the overlapping id 2, and one edge
+    * file whose second edge ends at the unstaged id 9. */
+  private def twoPersonFiles(): GraphEtl = {
+    val etl = new GraphEtl(spark, tempDir("graft-loader-two").toString)
+    etl.parser("a") { ctx =>
+      ctx.saveNodes(Seq((1L, "Tom"), (2L, "Marie")).toDF("id", "name"), "Person")
+    }
+    etl.parser("b") { ctx =>
+      ctx.saveNodes(Seq((2L, "Marie"), (3L, "Ann")).toDF("id", "name"), "Person")
+      ctx.saveEdges(Seq((1L, 2L), (3L, 9L)).toDF("start", "end"), "KNOWS", "Person:id", "Person:id")
+    }
+    etl.parse()
+    etl
+  }
+
+  test("a label staged in two files loads each id once into one pin, with the sequential stats") {
+    Seq("match" -> Seq("1", "2", "3"), "create" -> Seq("1", "2", "3", "9")).foreach { case (strategy, ids) =>
+      val etl = twoPersonFiles()
+      assert(etl.store.catalog.nodes("Person").files.size == 2)
+      val loader = new SparkGraphLoader(spark, edgeStrategy = strategy)
+      etl.load(loader)
+      val persons = loader.nodeTable("Person").get
+      assert(persons.select("id").as[String].collect().sorted.toSeq == ids, strategy)
+      // create: the BlankNode synthesis changed the label, and it re-pins
+      assert(scans(persons) == Set("InMemoryTableScanExec"), strategy)
+      // the stats of the concurrent counts equal those of a fresh loader
+      // loading every file inline, in catalog order
+      val inline = new SparkGraphLoader(spark, edgeStrategy = strategy)
+      val expected = mutable.LinkedHashMap.empty[String, Long].withDefaultValue(0L)
+      val c = etl.store.catalog
+      c.nodes.foreach { case (label, cfg) => cfg.files.foreach { case (f, info) =>
+        expected(s"loaded_nodes_$label") += inline.loadNodes(etl.store.nodesDir.resolve(f).toString,
+          label, cfg.primary_key, info.metadatas, cfg.properties_type, cfg.constraints, cfg.indexs)
+      } }
+      c.edges.foreach { case (t, files) => files.foreach { case (f, cfg) =>
+        expected(s"loaded_edges_$t") += inline.loadEdges(etl.store.edgesDir.resolve(f).toString,
+          t, cfg.start, cfg.end, cfg.metadatas, cfg.properties_type)
+      } }
+      val stats = etl.store.stats.filter(_._1.startsWith("loaded_")).toMap
+      assert(stats == expected.toMap, strategy)
+      assert(stats == Map("loaded_nodes_Person" -> 4L,
+        "loaded_edges_KNOWS" -> (if (strategy == "match") 1L else 2L)), strategy)
+      // a second load re-counts the files it already merged: no new pin
+      val entries = CacheEntries(spark)
+      etl.load(loader)
+      assert(CacheEntries(spark) == entries, strategy)
+      etl.clear()
+    }
+  }
+
+  test("as_edge: a later file's Metadata node reaches `nodes` past the pinned Metadata frame") {
+    val etl = new GraphEtl(spark, tempDir("graft-loader-meta").toString)
+    val loader = new SparkGraphLoader(spark, metadataStrategy = "as_edge")
+    def metadataIds = loader.nodes.get.where(col("label") === "Metadata")
+      .select("id").as[String].collect().sorted.toSeq
+    etl.withParser("a", Map("source" -> "a")) { ctx =>
+      ctx.saveNodes(Seq((1L, "Tom")).toDF("id", "name"), "Person")
+    }
+    etl.load(loader)
+    assert(metadataIds == Seq("source=a"))
+    etl.withParser("b", Map("source" -> "b")) { ctx =>
+      ctx.saveNodes(Seq((2L, "Ann")).toDF("id", "name"), "Person")
+    }
+    etl.load(loader)
+    assert(metadataIds == Seq("source=a", "source=b"))
+    etl.clear()
+  }
+
+  test("a failed count is rethrown by load itself, records nothing, and leaves no count running") {
+    val (etl, _) = staged()
+    def failing = spark.range(3).where(raise_error(concat(lit("boom "), col("id").cast("string"))).isNull)
+    val slow = udf { (x: Long) => Thread.sleep(200); LoaderSpec.slowRows.incrementAndGet(); x }
+    LoaderSpec.slowRows.set(0)
+    // the second node file's rows fail when counted; the edge file's count
+    // is still running when that failure surfaces
+    val labels = mutable.ArrayBuffer.empty[String]
+    val loader = new Loader with InSessionLoader {
+      def markNodesSkipped(label: String): Unit = ()
+      def ingestNodes(filePath: String, label: String, primaryKey: String,
+          metadatas: Map[String, String], propertiesType: Map[String, String]): DataFrame = {
+        labels += label
+        if (labels.size == 2) failing.toDF() else spark.range(5).toDF()
+      }
+      def ingestEdges(filePath: String, edgeType: String, start: String, end: String,
+          propertiesType: Map[String, String]): DataFrame =
+        spark.range(4).where(slow(col("id")) >= 0).toDF()
+      def loadNodes(filePath: String, label: String, primaryKey: String,
+          metadatas: Map[String, String], propertiesType: Map[String, String],
+          constraints: Seq[String], indexs: Seq[String]): Long = fail("counted inline")
+      def loadEdges(filePath: String, edgeType: String, start: String, end: String,
+          metadatas: Map[String, String], propertiesType: Map[String, String]): Long = fail("counted inline")
+    }
+    val thrown = intercept[Exception](etl.load(loader))
+    val direct = intercept[Exception](failing.count())
+    assert(!thrown.isInstanceOf[CompletionException])
+    assert(thrown.getClass == direct.getClass && thrown.getMessage.contains("boom"))
+    assert(labels.size == 2)
+    assert(etl.store.stats.filter(_._1.startsWith("loaded_")).toMap == Map(s"loaded_nodes_${labels(0)}" -> 5L))
+    assert(LoaderSpec.slowRows.get == 4)
     etl.clear()
   }
 
