@@ -5,7 +5,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{IntegralDivide, Literal}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.{ColumnBridge, ThreadBridge}
+import org.apache.spark.sql.graftbridge.{ColumnBridge, DatasetBridge, ThreadBridge}
 import graft.operators.Normalize
 
 /** Shared mutable state for one ETL run (the reference's singleton
@@ -292,32 +292,41 @@ object Context {
   /** Write `df` into the empty dir `tmp` as `;`-separated CSV files of at
     * most `chunkSize` rows with deterministic sequential chunk membership:
     * every file but the last holds exactly `chunkSize` rows. Returns the
-    * files in chunk order with their row counts.
+    * files in chunk order with their row counts; an empty `df` writes none.
+    * This is the ETL's one CSV writer. Strings are written verbatim: the
+    * writer's default trim of leading and trailing whitespace is off, as in
+    * the reference's `write_csv`, so keys that differ only in whitespace
+    * stay distinct.
     *
-    * About three jobs: the input is persisted and sized by one
-    * per-partition count job (which also fills the cache); a row's chunk is
-    * `(offset of its partition + its index in the partition) div chunkSize`,
-    * evaluated as Catalyst expressions over the cached partitions;
-    * `repartition(n, chunk)` then co-locates each chunk in exactly one task
-    * so `partitionBy("chunk")` emits one part file per chunk. A table that
-    * fits one chunk skips that shuffle and is written by one task. Counts
-    * come from arithmetic on the partition sizes, not a per-chunk collect.
+    * The planned rows run once, into an RDD persisted at the block level
+    * (no columnar cache, so no encode/decode and no cache-stage job). One
+    * per-partition count job over it fills the cache and sizes the
+    * partitions; the write reads the same cached partitions through a frame
+    * over that RDD, so the sizing reads the very partitions the chunk ids
+    * are computed over. A row's chunk is `(offset of its partition + its
+    * index in the partition) div chunkSize`, evaluated as Catalyst
+    * expressions; `repartition(n, chunk)` then co-locates each chunk in
+    * exactly one task so `partitionBy("chunk")` emits one part file per
+    * chunk. A table that fits one chunk skips that shuffle and is written
+    * by one task. Counts come from arithmetic on the partition sizes, not a
+    * per-chunk collect. So a save runs two jobs (three for more than one
+    * chunk) past the shuffle stages of `df`'s own plan.
     */
   def stageChunkedCsv(df: DataFrame, tmp: Path, chunkSize: Long): Seq[(Path, Long)] = {
     require(chunkSize > 0, s"chunkSize must be positive, got $chunkSize")
-    val input = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val rows = df.queryExecution.toRdd.map(_.copy())
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // a fresh plan over the cached relation: `input` may have been
-      // planned before the persist, and the sizing must read the very
-      // partitions the chunk ids are computed over
-      val cached = input.toDF(input.columns.toIndexedSeq: _*)
-      val sizes = cached.queryExecution.toRdd
-        .mapPartitions(it => Iterator.single(it.size.toLong)).collect()
+      val sizes = rows.mapPartitions(it => Iterator.single(it.size.toLong)).collect()
       val total = sizes.sum
       if (total == 0) return Nil
-      val nChunks = ((total + chunkSize - 1) / chunkSize).toInt
+      // (total - 1) / chunkSize cannot overflow, even for Long.MaxValue
+      val nChunks = ((total - 1) / chunkSize + 1).toInt
+      val cached = DatasetBridge.fromInternalRows(df.sparkSession, rows, df.schema)
       val csv = (d: DataFrame) => d.write
-        .option("sep", ";").option("header", "true").mode("overwrite")
+        .option("sep", ";").option("header", "true")
+        .option("ignoreLeadingWhiteSpace", "false").option("ignoreTrailingWhiteSpace", "false")
+        .mode("overwrite")
       if (nChunks == 1) {
         csv(cached.coalesce(1)).csv(tmp.toString)
         Seq(partFile(tmp) -> total)
@@ -335,7 +344,7 @@ object Context {
           partFile(tmp.resolve(s"$ChunkCol=$i")) -> count
         }
       }
-    } finally input.unpersist()
+    } finally rows.unpersist()
   }
 
   /** The one `part-*` file Spark wrote into `dir`. */

@@ -145,7 +145,7 @@ final class GraphEtl(
   /** Read a staged edge file with the catalog-recorded schema — no second
     * inference pass (improvement over pipeline.py:53's 100k-row re-infer). */
   private[etl] def readStagedEdges(fname: String, cfg: EdgeFileConfig): DataFrame =
-    StagedCsv.readFile(spark, store.edgesDir.resolve(fname), cfg.properties_type)
+    StagedCsv.readAll(spark, Seq(store.edgesDir.resolve(fname)), cfg.properties_type)
 
   /** Both mapping passes over every staged edge file not yet `mapped`
     * (pipeline.py:48-122).
@@ -158,7 +158,7 @@ final class GraphEtl(
     * repointed to `Label:{pk}` and the column retyped (pipeline.py:110-111).
     *
     * Every unmapped file is planned on this thread (the pass A/B frames are
-    * lazy); the dirty files' dedup/count/write then run as concurrent Spark
+    * lazy); the dirty files' dedup and staging then run as concurrent Spark
     * jobs, each into a temp dir (Spark cannot overwrite its own input —
     * SURVEY §2.2 K3), at most `defaultParallelism` at once. Each rewrite
     * is moved in under a fresh name and swapped into the catalog by its own
@@ -188,8 +188,8 @@ final class GraphEtl(
         if (!cfg.ignore_mapping) {
           Seq(("start", cfg.start), ("end", cfg.end)).foreach { case (colName, spec) =>
             store.catalog.mappings.get(spec).foreach { m =>
-              val mapping = explicitMappings.getOrElseUpdate(spec, StagedCsv.read(spark,
-                List("old_value", "new_value"), m.properties_type, m.files.map(store.mappingDir.resolve)))
+              val mapping = explicitMappings.getOrElseUpdate(spec,
+                StagedCsv.readAll(spark, m.files.map(store.mappingDir.resolve), m.properties_type))
               df = Mapping.applyMapping(df, mapping, colName, strictCompat)
                 .withColumnRenamed("mapped_from", s"${colName}_mapped_from")
               dirty = true
@@ -233,53 +233,36 @@ final class GraphEtl(
     store.persistCatalog()
   }
 
-  /** The Spark half of one edge file's rewrite: dedup, count and write the
-    * mapped frame into `tmp`. Returns the commit, which runs on the caller
-    * thread in catalog order: it moves the file in under the reference name
-    * with a fresh uuid and the same chunk index, swaps it for `fname` in the
-    * catalog, and deletes `fname` once that is committed. */
+  /** The Spark half of one edge file's rewrite: dedup the mapped frame and
+    * stage it into `tmp` as one chunk ([[Context.stageChunkedCsv]], the
+    * writer and row cache the saves use). Returns the commit, which runs on
+    * the caller thread in catalog order: it moves the file in under the
+    * reference name with a fresh uuid and the same chunk index, swaps it for
+    * `fname` in the catalog, and deletes `fname` once that is committed. A
+    * mapped frame with no rows (only an empty staged file gives one) keeps
+    * `fname` and commits its new catalog entry alone. */
   private def stageRewrite(edgeType: String, fname: String, df: DataFrame, cfg: EdgeFileConfig)(
       tmp: Path): () => Unit = {
-    val deduped = Mapping.dedupEndpoints(df).cache()
-    try {
-      val newCount = deduped.count()
-      deduped.coalesce(1).write
-        .option("sep", ";").option("header", "true")
-        .mode("overwrite").csv(tmp.toString)
-      val part = Context.partFile(tmp)
-      // record the post-mapping schema (pipeline.py:69,110 retype)
-      val mappedCfg = cfg.copy(
-        count = newCount, properties_type = Catalog.schemaTypes(deduped.schema), mapped = true)
-      val newName = s"FILE_${java.util.UUID.randomUUID().toString.take(8)}" +
-        fname.stripPrefix("FILE_").dropWhile(_ != '_')
-      () => {
-        Files.move(part, store.edgesDir.resolve(newName))
-        store.catalog = store.catalog.copy(edges = store.catalog.edges +
-          (edgeType -> (store.catalog.edges(edgeType) - fname + (newName -> mappedCfg))))
-        store.persistCatalog()
-        Files.delete(store.edgesDir.resolve(fname))
-      }
-    } finally deduped.unpersist()
+    val deduped = Mapping.dedupEndpoints(df)
+    val staged = Context.stageChunkedCsv(deduped, tmp, Long.MaxValue)
+    // record the post-mapping schema (pipeline.py:69,110 retype)
+    val mappedCfg = cfg.copy(count = staged.map(_._2).sum,
+      properties_type = Catalog.schemaTypes(deduped.schema), mapped = true)
+    val newName = if (staged.isEmpty) fname else s"FILE_${java.util.UUID.randomUUID().toString.take(8)}" +
+      fname.stripPrefix("FILE_").dropWhile(_ != '_')
+    () => {
+      staged.foreach { case (part, _) => Files.move(part, store.edgesDir.resolve(newName)) }
+      store.catalog = store.catalog.copy(edges = store.catalog.edges +
+        (edgeType -> (store.catalog.edges(edgeType) - fname + (newName -> mappedCfg))))
+      store.persistCatalog()
+      if (newName != fname) Files.delete(store.edgesDir.resolve(fname))
+    }
   }
 
-  /** Concatenated staged node table for a label (used by pass B and the
-    * in-session loader). Files are grouped by IDENTICAL header first, so a
-    * label staged as thousands of same-shape chunk files becomes a handful
-    * of multi-file scans united by name — not a thousands-deep unionByName
-    * plan (linear analysis cost, and Spark parallelizes within a multi-file
-    * scan). Per-group schemas still follow each group's own header order:
-    * different parsers may stage the same label with different column
-    * orders, and a shared positional schema would silently misbind them.
-    * The header probe reads one line per file on the driver — metadata-
-    * scale, and already the price of the previous per-file plan. */
+  /** Every staged node file of a label, one multi-file scan per header
+    * ([[StagedCsv.readAll]]); pass B's auto-mappings read it. */
   private[etl] def readStagedNodes(label: String, cfg: NodeConfig): DataFrame =
-    cfg.files.keys.toList
-      .map(f => store.nodesDir.resolve(f))
-      .groupBy(p => StagedCsv.header(p, cfg.properties_type.keys.toList))
-      .toList
-      .sortBy(_._2.head.toString) // deterministic union order
-      .map { case (cols, paths) => StagedCsv.read(spark, cols, cfg.properties_type, paths) }
-      .reduce(_.unionByName(_, allowMissingColumns = true))
+    StagedCsv.readAll(spark, cfg.files.keys.toSeq.map(store.nodesDir.resolve), cfg.properties_type)
 
   // ------------------------------------------------------------------
   // load (utils.py:156-175 → pipeline.py:125-199)
@@ -290,15 +273,18 @@ final class GraphEtl(
     *
     * The loader log lists the files an external database already holds,
     * so a resumed load skips them. It is read and written only for loaders
-    * whose state lives outside the JVM (Neo4j, TigerGraph), whose
-    * statements run inline, in catalog order. An [[InSessionLoader]] holds
-    * nothing from an earlier run and is offered every catalog file: each
-    * file is merged on this thread, in catalog order (so results never
-    * depend on thread timing), and its count runs as a concurrent Spark
-    * job, at most `defaultParallelism` in flight ([[BoundedJobs]]). The
-    * counts are added to the `loaded_*` stats in catalog order; a failed
-    * count is rethrown and records nothing, and no count is still running
-    * when `load` returns or throws.
+    * whose state lives outside the JVM (Neo4j, TigerGraph), which load file
+    * by file, inline, in catalog order. An [[InSessionLoader]] holds
+    * nothing from an earlier run and is offered every catalog file, a
+    * label's (an edge type's) files at once: each is merged on this thread,
+    * in catalog order (so results never depend on thread timing), and its
+    * rows are counted by one concurrent Spark job
+    * ([[InSessionLoader.count]]), at most `defaultParallelism` in flight
+    * ([[BoundedJobs]]). `loaded_nodes_<label>` is then the label's file
+    * rows before the merge's dedup on `id`, and `loaded_edges_<type>` the
+    * type's rows whose endpoints resolved. The counts are added to the
+    * stats in catalog order; a failed count is rethrown and records
+    * nothing, and no count is still running when `load` returns or throws.
     *
     * Dead-parameter parity note: the reference's `load` also declares a
     * `clear_source` flag (utils.py:156) that its own implementation never
@@ -308,64 +294,66 @@ final class GraphEtl(
   def load(loader: Loader): Unit = {
     if (!parsed && !Files.exists(store.configsPath)) parse()
     if (store.catalog.nodes.isEmpty) store.loadCatalog()
-    val external = !loader.isInstanceOf[InSessionLoader]
-    val loaded = if (external) store.loadedFiles else Set.empty[String]
     def record(stat: String, n: Long): Unit =
       store.stats(stat) = store.stats.getOrElse(stat, 0L) + n
-    def loadedInline(stat: String, fname: String, n: Long): Unit = {
-      record(stat, n)
-      store.logLoaded(fname)
-    }
-    val counts = new BoundedJobs[Long](spark)
-    val pending = mutable.ArrayBuffer.empty[(String, ThreadBridge.Pending[Long])]
-    def count(stat: String, rows: DataFrame): Unit = pending += stat -> counts.submit(rows.count())
+    def skipNode(label: String, info: NodeFileInfo): Boolean =
+      store.filter.exists(_.skipLoadNode(info.metadatas, label))
+    def skipEdge(edgeType: String, cfg: EdgeFileConfig): Boolean =
+      store.filter.exists(_.skipLoadEdge(cfg.metadatas, edgeType))
 
-    try {
-      store.catalog.nodes.foreach { case (label, cfg) =>
-        cfg.files.foreach { case (fname, info) =>
-          val path = store.nodesDir.resolve(fname).toString
-          val stat = s"loaded_nodes_$label"
-          if (store.filter.exists(_.skipLoadNode(info.metadatas, label))) loader match {
+    loader match {
+      case l: InSessionLoader =>
+        val counts = new BoundedJobs[Long](spark)
+        val pending = mutable.ArrayBuffer.empty[(String, ThreadBridge.Pending[Long])]
+        def count(stat: String, rows: DataFrame): Unit =
+          pending += stat -> counts.submit(InSessionLoader.count(rows))
+        try {
+          store.catalog.nodes.foreach { case (label, cfg) =>
+            val (skipped, kept) = cfg.files.toSeq.partition { case (_, info) => skipNode(label, info) }
             // a deliberately-excluded label is not a missing one: let the
-            // in-session loader treat later match-strategy edge references to
-            // it as empty (external-DB parity) instead of failing fast
-            case l: InSessionLoader => l.markNodesSkipped(label)
-            case _ => ()
-          } else if (!loaded.contains(fname)) loader match {
-            case l: InSessionLoader =>
-              count(stat, l.ingestNodes(path, label, cfg.primary_key, info.metadatas, cfg.properties_type))
-            case _ => loadedInline(stat, fname, loader.loadNodes(path, label, cfg.primary_key,
-              info.metadatas, cfg.properties_type, cfg.constraints, cfg.indexs))
+            // loader treat later match-strategy edge references to it as
+            // empty (external-DB parity) instead of failing fast
+            if (skipped.nonEmpty) l.markNodesSkipped(label)
+            if (kept.nonEmpty) count(s"loaded_nodes_$label", l.ingestNodes(
+              kept.map { case (f, info) => store.nodesDir.resolve(f).toString -> info.metadatas },
+              label, cfg.primary_key, cfg.properties_type))
           }
-        }
-      }
-      // a label referenced by edges but absent from the node catalog (e.g.
-      // its source produced zero rows) is not a load-order bug: declare it
-      // so match-strategy loads treat it as MATCH-finds-nothing
-      loader match {
-        case l: InSessionLoader =>
+          // a label referenced by edges but absent from the node catalog (e.g.
+          // its source produced zero rows) is not a load-order bug: declare it
+          // so match-strategy loads treat it as MATCH-finds-nothing
           store.catalog.edges.values.flatten.foreach { case (_, cfg) =>
             Seq(cfg.start, cfg.end).map(_.split(":")(0)).foreach { label =>
               if (!store.catalog.nodes.contains(label)) l.markNodesSkipped(label)
             }
           }
-        case _ => ()
-      }
-      store.catalog.edges.foreach { case (edgeType, files) =>
-        files.foreach { case (fname, cfg) =>
-          val path = store.edgesDir.resolve(fname).toString
-          val stat = s"loaded_edges_$edgeType"
-          if (!store.filter.exists(_.skipLoadEdge(cfg.metadatas, edgeType)) && !loaded.contains(fname))
-            loader match {
-              case l: InSessionLoader =>
-                count(stat, l.ingestEdges(path, edgeType, cfg.start, cfg.end, cfg.properties_type))
-              case _ => loadedInline(stat, fname, loader.loadEdges(path, edgeType, cfg.start, cfg.end,
-                cfg.metadatas, cfg.properties_type))
-            }
+          store.catalog.edges.foreach { case (edgeType, files) =>
+            val kept = files.toSeq.filterNot { case (_, cfg) => skipEdge(edgeType, cfg) }
+            if (kept.nonEmpty) count(s"loaded_edges_$edgeType", l.ingestEdges(
+              kept.map { case (f, cfg) => store.edgesDir.resolve(f).toString -> cfg }, edgeType))
+          }
+          pending.foreach { case (stat, job) => record(stat, job.await()) }
+        } finally counts.close()
+      case _ =>
+        val loaded = store.loadedFiles
+        def loadedInline(stat: String, fname: String, n: Long): Unit = {
+          record(stat, n)
+          store.logLoaded(fname)
         }
-      }
-      pending.foreach { case (stat, job) => record(stat, job.await()) }
-    } finally counts.close()
+        store.catalog.nodes.foreach { case (label, cfg) =>
+          cfg.files.foreach { case (fname, info) =>
+            if (!skipNode(label, info) && !loaded.contains(fname))
+              loadedInline(s"loaded_nodes_$label", fname, loader.loadNodes(store.nodesDir.resolve(fname).toString,
+                label, cfg.primary_key, info.metadatas, cfg.properties_type, cfg.constraints, cfg.indexs))
+          }
+        }
+        store.catalog.edges.foreach { case (edgeType, files) =>
+          files.foreach { case (fname, cfg) =>
+            if (!skipEdge(edgeType, cfg) && !loaded.contains(fname))
+              loadedInline(s"loaded_edges_$edgeType", fname, loader.loadEdges(store.edgesDir.resolve(fname).toString,
+                edgeType, cfg.start, cfg.end, cfg.metadatas, cfg.properties_type))
+          }
+        }
+    }
     store.callbacks.foreach(_.save(store.catalog, outputDir))
     store.clearLoaderLog()
   }

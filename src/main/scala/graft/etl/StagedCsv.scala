@@ -6,13 +6,14 @@ import org.apache.spark.sql.types._
 
 /** The one reader for staged `;`-separated CSV files, shared by the mapping
   * passes and the in-session loader. The schema comes from the catalog
-  * types, so a read runs no inference job. */
+  * types, so a read runs no inference job. A read keeps leading and
+  * trailing whitespace (the reader's default), as staging writes it. */
 private[etl] object StagedCsv {
 
   /** Header order from the file itself (cheap: one line on the driver),
     * falling back to the catalog key order — a header probe without a
     * data scan. */
-  def header(p: Path, fallback: => List[String]): List[String] =
+  private def header(p: Path, fallback: => List[String]): List[String] =
     if (Files.exists(p)) {
       val src = scala.io.Source.fromFile(p.toFile)
       try {
@@ -28,7 +29,7 @@ private[etl] object StagedCsv {
     * longer cause that: a mapping rewrite used to replace the live file
     * before the catalog recorded its new schema, and now a rewrite and its
     * schema are published by one catalog commit ([[StoreInfo]]). */
-  def read(
+  private def read(
       spark: SparkSession, cols: List[String],
       propertiesType: Map[String, String], paths: Seq[Path]): DataFrame = {
     val schema = StructType(cols.map(c =>
@@ -37,7 +38,20 @@ private[etl] object StagedCsv {
       .csv(paths.map(_.toString): _*)
   }
 
-  /** One staged file, read with a schema in its own header order. */
-  def readFile(spark: SparkSession, p: Path, propertiesType: Map[String, String]): DataFrame =
-    read(spark, header(p, propertiesType.keys.toList), propertiesType, Seq(p))
+  /** Every file of `paths` as one frame: the files are grouped by
+    * IDENTICAL header, each group read as one multi-file scan, and the
+    * scans united by name. So a label staged as thousands of same-shape
+    * chunk files is a handful of scans, not a thousands-deep `unionByName`
+    * plan (linear analysis cost; Spark parallelizes within a multi-file
+    * scan). Each group's schema follows its own header order: different
+    * parsers may stage one label with different column orders, and a shared
+    * positional schema would silently misbind them. The header probe reads
+    * one line per file on the driver. No paths (a `mapIds` frame with no
+    * rows stages none) read as an empty frame of the catalog columns. */
+  def readAll(spark: SparkSession, paths: Seq[Path], propertiesType: Map[String, String]): DataFrame =
+    paths.groupBy(p => header(p, propertiesType.keys.toList)).toSeq
+      .sortBy(_._2.head.toString) // deterministic union order
+      .map { case (cols, group) => read(spark, cols, propertiesType, group) }
+      .reduceOption(_.unionByName(_, allowMissingColumns = true))
+      .getOrElse(read(spark, propertiesType.keys.toList, propertiesType, Nil))
 }

@@ -174,13 +174,14 @@ object GraphOps {
 
   /** A session on `s`'s SparkContext, shared state and extensions with a
     * copy of `s`'s SQL conf plus `overrides` — the clone behind
-    * [[pinKeepingLayout]] and [[loopFrame]]. Built with `newSession`, not
+    * [[pinKeepingLayout]], [[loopFrame]] and the in-session loader's edge
+    * pins. Built with `newSession`, not
     * `cloneSession`: a cloned SessionState keeps its parent state and,
     * through it, the parent session reachable, so a clone cached under
     * its source session in a weak-keyed map would keep that key alive
     * for the JVM's life. Only conf matters to the frames re-bound here:
     * their plans arrive already analyzed. */
-  private def confClone(s: SparkSession, overrides: (String, String)*): SparkSession = {
+  private[graft] def confClone(s: SparkSession, overrides: (String, String)*): SparkSession = {
     val c = s.newSession()
     s.conf.getAll.foreach { case (k, v) => if (c.conf.isModifiable(k)) c.conf.set(k, v) }
     overrides.foreach { case (k, v) => c.conf.set(k, v) }

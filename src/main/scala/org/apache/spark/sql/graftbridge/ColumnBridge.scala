@@ -31,6 +31,15 @@ object DatasetBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       session.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** A frame over already-planned rows (`Dataset.queryExecution.toRdd`
+    * output, copied), with no `Row` conversion: its scan reads `rows`'
+    * partitions as they are, so a persisted `rows` is read from Spark's
+    * block cache with no columnar encode/decode. */
+  def fromInternalRows(session: org.apache.spark.sql.SparkSession,
+      rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
+    session.asInstanceOf[org.apache.spark.sql.classic.SparkSession].internalCreateDataFrame(rows, schema)
+
   /** Eager local checkpoint that records the physical plan's output
     * partitioning/ordering against QUALIFIER-NORMALIZED output
     * attributes — the layout-safe replacement for `Dataset

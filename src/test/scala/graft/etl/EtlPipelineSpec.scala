@@ -139,6 +139,21 @@ class EtlPipelineSpec extends SparkSpec {
     etl.clear()
   }
 
+  test("an explicit mapping with no rows stages no file and maps nothing") {
+    val etl = newEtl()
+    etl.parser("p3e", Map("source" -> "test")) { ctx =>
+      ctx.saveEdges(Seq((1L, "Tom")).toDF("start", "end"), "DRIVED_BY", "Car:id", "Person:id")
+      ctx.mapIds(Seq.empty[(Long, String)].toDF("old_value", "new_value"), "Car:id")
+    }
+    etl.parse()
+    assert(etl.store.catalog.mappings("Car:id").files.isEmpty)
+    val (fname, cfg) = etl.store.catalog.edges("DRIVED_BY").head
+    assert(cfg.count == 1 && cfg.mapped)
+    val rewritten = etl.readStagedEdges(fname, cfg)
+    assert(rewritten.select(col("start").cast("string")).as[String].collect().toSeq == Seq("1"))
+    etl.clear()
+  }
+
   test("ignore_mapping skips both mapping passes (pipeline.py:52,78)") {
     val etl = newEtl()
     etl.parser("p3i", Map("source" -> "test")) { ctx =>

@@ -4,10 +4,18 @@ import java.nio.file.Files
 import java.util.concurrent.CompletionException
 import java.util.concurrent.atomic.AtomicInteger
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 import graft.SparkSpec
 import graft.graph.GraphOps
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.aggregate.{Complete, Final}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.CacheEntries
 
@@ -25,6 +33,22 @@ class LoaderSpec extends SparkSpec {
     df.collect()
     new AdaptiveSparkPlanHelper {}.collectLeaves(df.queryExecution.executedPlan)
       .map(_.getClass.getSimpleName).filter(_.endsWith("ScanExec")).toSet
+  }
+
+  /** Every operator of the plan that filled a pinned frame's cache, through
+    * AQE stages. */
+  private def pinPlan(df: DataFrame): Seq[SparkPlan] = {
+    val cached = df.queryExecution.optimizedPlan.collectFirst {
+      case r: InMemoryRelation => r.cacheBuilder.cachedPlan
+    }
+    assert(cached.isDefined, "not a pinned frame")
+    new AdaptiveSparkPlanHelper {}.collect(cached.get) { case p => p }
+  }
+
+  /** The final (or single-stage) aggregates among `plan`: one per dedup. */
+  private def dedups(plan: Seq[SparkPlan]): Int = plan.count {
+    case a: BaseAggregateExec => a.aggregateExpressions.forall(e => e.mode == Final || e.mode == Complete)
+    case _ => false
   }
 
   private def staged(): (GraphEtl, String) = {
@@ -186,6 +210,122 @@ class LoaderSpec extends SparkSpec {
     }
   }
 
+  test("a single-file label's pin is the plain scan: no Exchange, no aggregate") {
+    val (etl, _) = staged()
+    val loader = new SparkGraphLoader(spark)
+    etl.load(loader)
+    Seq("Person", "Car").foreach { label =>
+      val plan = pinPlan(loader.nodeTable(label).get)
+      assert(plan.exists(_.isInstanceOf[FileSourceScanExec]), label)
+      assert(!plan.exists(p => p.isInstanceOf[Exchange] || p.isInstanceOf[BaseAggregateExec]), s"$label: $plan")
+      assert(etl.store.stats(s"loaded_nodes_$label") == 2)
+    }
+    etl.clear()
+  }
+
+  test("a Datetime primary key loads each staged text once") {
+    // two keys 1 µs apart are distinct values, so staging keeps both rows;
+    // it writes timestamps at millisecond precision, so both stage as one
+    // text. The same holds for a timestamp_ntz key.
+    Seq("timestamp" -> "Datetime", "timestamp_ntz" -> "timestamp_ntz").foreach { case (sqlType, catalogType) =>
+      val etl = new GraphEtl(spark, tempDir("graft-loader-ts").toString)
+      etl.parser("ts") { ctx =>
+        ctx.saveNodes(Seq((1L, "x"), (2L, "y")).toDF("us", "name").select(
+          timestamp_micros(lit(1700000000000000L) + col("us")).cast(sqlType).as("at"), col("name")),
+          "Event", primaryKey = "at")
+      }
+      etl.parse()
+      val cfg = etl.store.catalog.nodes("Event")
+      assert(cfg.properties_type("at") == catalogType)
+      assert(cfg.files.size == 1 && cfg.files.head._2.count == 2, catalogType)
+      val lines = Files.readAllLines(etl.store.nodesDir.resolve(cfg.files.head._1)).asScala.toSeq
+      val at = lines.head.split(";").indexOf("at")
+      val texts = lines.tail.map(_.split(";", -1)(at))
+      assert(texts.size == 2 && texts.distinct.size == 1, texts)
+      val loader = new SparkGraphLoader(spark)
+      etl.load(loader)
+      assert(loader.nodeTable("Event").get.select("id").as[String].collect().toSeq.size == 1, catalogType)
+      assert(etl.store.stats("loaded_nodes_Event") == 2) // the file's rows, before the dedup
+      etl.clear()
+    }
+  }
+
+  test("string keys stage verbatim: keys that differ only in whitespace stay four nodes") {
+    val etl = new GraphEtl(spark, tempDir("graft-loader-ws").toString)
+    val keys = Seq("a", " a", "a ", "b")
+    etl.parser("ws") { ctx =>
+      ctx.saveNodes(keys.zipWithIndex.map { case (k, i) => (k, i + 1L) }.toDF("id", "n"), "Person")
+      // addressed by the non-key `n`: pass B maps each endpoint to its key
+      ctx.saveEdges((1L to 4L).map(i => (i, i)).toDF("start", "end"), "SELF", "Person:n", "Person:n")
+    }
+    etl.parse()
+    val cfg = etl.store.catalog.nodes("Person")
+    val lines = Files.readAllLines(etl.store.nodesDir.resolve(cfg.files.head._1)).asScala.toSeq
+    assert(lines.head == "id;n")
+    assert(lines.tail.sorted == Seq("a;1", " a;2", "a ;3", "b;4").sorted)
+    assert(cfg.files.values.map(_.count).sum == 4)
+    val (fname, edgeCfg) = etl.store.catalog.edges("SELF").head
+    assert(edgeCfg.start == "Person:id" && edgeCfg.end == "Person:id")
+    assert(etl.readStagedEdges(fname, edgeCfg).select("start", "end").as[(String, String)]
+      .collect().toSet == keys.map(k => (k, k)).toSet)
+    val loader = new SparkGraphLoader(spark)
+    etl.load(loader)
+    assert(loader.nodeTable("Person").get.select("id").as[String].collect().sorted.toSeq == keys.sorted)
+    assert(loader.edgeTable("SELF").get.count() == 4)
+    etl.clear()
+  }
+
+  test("a label staged as 100 chunk files loads as one scan per header group") {
+    // the loader twin of EtlPipelineSpec's "100 staged chunk files collapse
+    // to per-header scans": 100 files of 5 rows plus one file with the
+    // other column order
+    val etl = new GraphEtl(spark, tempDir("graft-loader-chunks").toString, nodeChunkSize = 5)
+    etl.parser("many") { ctx =>
+      ctx.saveNodes((1 to 500).map(i => (i.toString, s"name_$i")).toDF("id", "name"), "Person")
+    }
+    etl.parser("other_order") { ctx =>
+      ctx.saveNodes(Seq(("N_501", "501")).toDF("name", "id"), "Person")
+    }
+    etl.parse()
+    val cfg = etl.store.catalog.nodes("Person")
+    assert(cfg.files.size == 101)
+    val loader = new SparkGraphLoader(spark)
+    etl.load(loader)
+    val persons = loader.nodeTable("Person").get
+    assert(persons.count() == 501)
+    assert(persons.where(col("id") === "501").select("name").as[String].head() == "N_501")
+    val plan = pinPlan(persons)
+    assert(plan.count(_.isInstanceOf[FileSourceScanExec]) <= 2, plan)
+    assert(dedups(plan) == 1, plan)
+    assert(etl.store.stats("loaded_nodes_Person") == cfg.files.values.map(_.count).sum)
+    etl.clear()
+  }
+
+  test("load runs at most one job per label and edge type, plus the endpoint broadcasts") {
+    val (etl, _) = staged()
+    val loader = new SparkGraphLoader(spark)
+    val tag = s"load-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("graft.test.tag") == tag) jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.test.tag", tag)
+    try etl.load(loader)
+    finally {
+      sc.setLocalProperty("graft.test.tag", null)
+      ListenerBusDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    val c = etl.store.catalog
+    // a match-strategy edge group semi-joins both endpoint labels' pins
+    val broadcasts = 2 * c.edges.size
+    assert(jobs.get > 0 && jobs.get <= c.nodes.size + c.edges.size + broadcasts, jobs.get)
+    etl.clear()
+  }
+
   test("as_edge: a later file's Metadata node reaches `nodes` past the pinned Metadata frame") {
     val etl = new GraphEtl(spark, tempDir("graft-loader-meta").toString)
     val loader = new SparkGraphLoader(spark, metadataStrategy = "as_edge")
@@ -209,18 +349,17 @@ class LoaderSpec extends SparkSpec {
     def failing = spark.range(3).where(raise_error(concat(lit("boom "), col("id").cast("string"))).isNull)
     val slow = udf { (x: Long) => Thread.sleep(200); LoaderSpec.slowRows.incrementAndGet(); x }
     LoaderSpec.slowRows.set(0)
-    // the second node file's rows fail when counted; the edge file's count
-    // is still running when that failure surfaces
+    // the second label's rows fail when counted; the edge type's count is
+    // still running when that failure surfaces
     val labels = mutable.ArrayBuffer.empty[String]
     val loader = new Loader with InSessionLoader {
       def markNodesSkipped(label: String): Unit = ()
-      def ingestNodes(filePath: String, label: String, primaryKey: String,
-          metadatas: Map[String, String], propertiesType: Map[String, String]): DataFrame = {
+      def ingestNodes(files: Seq[(String, Map[String, String])], label: String, primaryKey: String,
+          propertiesType: Map[String, String]): DataFrame = {
         labels += label
         if (labels.size == 2) failing.toDF() else spark.range(5).toDF()
       }
-      def ingestEdges(filePath: String, edgeType: String, start: String, end: String,
-          propertiesType: Map[String, String]): DataFrame =
+      def ingestEdges(files: Seq[(String, EdgeFileConfig)], edgeType: String): DataFrame =
         spark.range(4).where(slow(col("id")) >= 0).toDF()
       def loadNodes(filePath: String, label: String, primaryKey: String,
           metadatas: Map[String, String], propertiesType: Map[String, String],
